@@ -35,11 +35,13 @@ transport + downloader (the engine treats URLs as opaque).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph, script_nodes
 from nycdb_k8s_loader_spark.publish.validate import TableChecks
 from nycdb_k8s_loader_spark.registry import (
     DatasetDef,
@@ -497,42 +499,17 @@ builtin_registry = wow_registry
 def _run_scripts(
     spark, resolver, scripts, function_stmts, functions=None
 ) -> list[str]:
-    """Transpile + run every statement of each Postgres-dialect script;
-    function DDL is collected for post-publish replay (reference
-    wowutil.py:170-181). With ``functions`` (a FunctionRegistry),
-    table-function calls in FROM position are materialized to temp
-    views first, so reference scripts invoking
-    ``wow.get_assoc_addrs_from_bbl(...)`` run unmodified. Returns
-    created table names."""
-    from nycdb_k8s_loader_spark.publish.parse_created_tables import (
-        is_function_sql,
-        parse_created_tables,
-        split_statements,
-    )
-    from nycdb_k8s_loader_spark.publish.transpile import transpile_pg
-
-    created: list[str] = []
-    for script in scripts:
-        with open(script, encoding="utf-8") as fh:
-            raw = fh.read()
-        for stmt in split_statements(raw):
-            # classify BEFORE rewriting (matching engine.py's load
-            # loop): a CREATE FUNCTION body that itself calls a
-            # registered table function must pass through untouched —
-            # materializing it here would bake a temp-view reference
-            # (and an eager materialization) into the DDL replayed
-            # post-publish
-            if is_function_sql(stmt):
-                function_stmts.append(transpile_pg(stmt))
-                continue
-            if functions is not None:
-                stmt = functions.materialize_table_fn_calls(spark, stmt)
-            stmt = transpile_pg(stmt)
-            resolver.sql(stmt)
-            created += [
-                t for t in parse_created_tables(stmt) if t not in created
-            ]
-    return created
+    """Run every statement of each Postgres-dialect script through the
+    load scheduler (publish/scheduler.py: independent CTAS statements
+    overlap; barriers keep script order); function DDL is collected
+    for post-publish replay (reference wowutil.py:170-181). With
+    ``functions`` (a FunctionRegistry), table-function calls in FROM
+    position are materialized to temp views first, so reference
+    scripts invoking ``wow.get_assoc_addrs_from_bbl(...)`` run
+    unmodified. Returns created table names."""
+    nodes = script_nodes(spark, resolver, scripts, function_stmts, functions)
+    run_graph(nodes, spark.sparkContext.defaultParallelism, spark)
+    return list(dict.fromkeys(t for n in nodes for t in n.creates))
 
 
 def populate_landlords(spark: SparkSession, staging_db: str) -> None:
@@ -608,6 +585,8 @@ def _custom_pipeline(
     tables: list[str],
     pre_scripts: tuple | list = (),
     populate=None,
+    populate_creates: tuple | list | None = None,
+    populate_reads: tuple | list = (),
     post_scripts: tuple | list = (),
     extra_namespaces: tuple | list = (),
 ) -> list[str]:
@@ -619,11 +598,14 @@ def _custom_pipeline(
     list into the pipeline's own schema → function-DDL replay. The
     staging namespace always drops (success or error), so scaffolding
     tables never leak and a failed build leaves the published tables
-    untouched."""
-    import os as _os
+    untouched.
 
+    Ingest, statements and the populate hook form one dependency graph
+    (publish/scheduler.py): a step starts once the steps creating the
+    tables it names have finished. ``populate_creates`` /
+    ``populate_reads`` declare the hook's tables; an undeclared hook is
+    a barrier."""
     from nycdb_k8s_loader_spark.publish.protocol import Publisher
-    from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
 
     engine.notifier.safe_notify(f"Rebuilding {label}...")
     ds = engine.registry.get(name)
@@ -633,47 +615,30 @@ def _custom_pipeline(
     )
     function_stmts: list[str] = []
     with pub.staging(name) as staging_db:
-        # source ingest — same contract as the standard load's step 0-1
-        # (the reference's builders pull S3 objects themselves,
+        # source ingest — same contract as the standard load's (the
+        # reference's builders pull S3 objects themselves,
         # ocautil.py:56-61; here the engine's downloader/transport
         # abstraction covers s3:// via sources.readers.fetch_to_landing)
-        dest_paths: dict[str, str] = {}
-        for f in ds.files:
-            dest = _os.path.join(engine.landing_root, ds.name, f.dest)
-            _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-            engine.downloader(f.url, dest)
-            dest_paths[f.dest] = dest
-        from nycdb_k8s_loader_spark.sources.readers import read_source_table
-
-        formats = {f.dest: f.format for f in ds.files}
-        for t in ds.tables:
-            if t.schema is None or not dest_paths:
-                continue
-            df = read_source_table(spark, t, dest_paths, formats)
-            pub.write_staging_table(staging_db, t.name, df)
-
-        # ddl_db pins every CTAS/DROP target into THIS pipeline's
-        # staging db at rewrite time — no setCurrentDatabase, no lock:
-        # two custom pipelines in one dependency level overlap all of
-        # their Spark work (pre/post scripts AND populate), the round-3
-        # verdict's concurrency fix (#3: the old lock serialized
-        # populate()'s expensive jobs across same-level pipelines).
-        resolver = SearchPathResolver(
-            spark,
-            [staging_db, *extra_namespaces, *engine.search_path],
-            ddl_db=staging_db,
-            pointer=engine.version_pointer,
+        dest_paths = engine.land_sources(ds)
+        nodes = (
+            engine.staging_nodes(ds, pub, staging_db, dest_paths)
+            if dest_paths else []
         )
-        _run_scripts(
-            spark, resolver, pre_scripts, function_stmts,
-            functions=engine.functions,
+        resolver = engine.resolver(staging_db, *extra_namespaces)
+        nodes += script_nodes(
+            spark, resolver, pre_scripts, function_stmts, engine.functions
         )
         if populate is not None:
-            populate(spark, staging_db)
-        _run_scripts(
-            spark, resolver, post_scripts, function_stmts,
-            functions=engine.functions,
+            nodes.append(Node(
+                partial(populate, spark, staging_db),
+                creates=tuple(populate_creates or ()),
+                reads=tuple(populate_reads),
+                barrier=populate_creates is None,
+            ))
+        nodes += script_nodes(
+            spark, resolver, post_scripts, function_stmts, engine.functions
         )
+        run_graph(nodes, spark.sparkContext.defaultParallelism, spark)
         with engine.grants.save_and_reapply(target_schema, tables):
             published = pub.publish_tables(staging_db, tables)
 
@@ -706,6 +671,8 @@ def build_wow(spark: SparkSession, engine) -> list[str]:
         tables=WOW_TABLES,
         pre_scripts=WOW_PRE_SCRIPTS,
         populate=populate,
+        populate_creates=WOW_PYTHON_TABLES,
+        populate_reads=["wow_landlords_base"],
         post_scripts=WOW_POST_SCRIPTS,
     )
     update_landlord_search_index(engine)

@@ -6,8 +6,9 @@ Spark re-expression of /root/reference/load_dataset.py:308-381:
         │ changed
     download to landing dir
         │
-    staging namespace:  read typed sources → tables
+    staging namespace:  write typed source tables
                         run SQL transforms (search-path resolved)
+                        validate staging copies
         │
     atomic publish staging → target namespace
         │
@@ -18,6 +19,28 @@ the Spark job entirely (work avoidance, lastmod.py:49-62 +
 load_dataset.py:352-357); state is persisted only after a successful
 publish so a crashed load retries from scratch; custom datasets
 dispatch to registered builders (load_dataset.py:319-338).
+
+Concurrency. The reference runs all of this one statement at a time on
+one connection; here every step that starts Spark jobs is a node of
+one dependency scheduler (publish/scheduler.py), so independent jobs
+overlap and Spark interleaves them:
+
+- ``load_all``: a dataset starts once every dataset it depends on has
+  loaded;
+- inside a load: each typed staging write, each script statement, each
+  populate hook and each validation starts once the nodes creating the
+  tables it names have finished. A statement's reads are every
+  identifier it contains (a safe over-approximation); anything but a
+  plain ``CREATE TABLE … AS`` — ALTER/RENAME, DROP, INSERT, temp
+  functions, registered table-function calls — is a barrier that runs
+  alone in its script position. Names are resolved through the search
+  path only when the statement starts, so it always sees the staging
+  copy a predecessor made, never an older published one;
+- copy-mode publish: one concurrent copy per table.
+
+Failure semantics are the serial ones: after the first failure nothing
+new starts, running nodes finish before the staging namespace drops,
+the first error propagates, and nothing is published.
 """
 
 from __future__ import annotations
@@ -25,8 +48,8 @@ from __future__ import annotations
 import logging
 import threading
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -35,12 +58,11 @@ from nycdb_k8s_loader_spark.functions.registry import (
     default_registry,
 )
 from nycdb_k8s_loader_spark.publish.parse_created_tables import (
-    is_function_sql,
-    parse_created_tables,
-    split_statements,
+    parse_created_tables_in_dir,
 )
 from nycdb_k8s_loader_spark.publish.protocol import Publisher
 from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
+from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph, script_nodes
 from nycdb_k8s_loader_spark.registry import DatasetDef, Registry
 from nycdb_k8s_loader_spark.sources.readers import read_source_table
 from nycdb_k8s_loader_spark.state.lastmod import Transport, UrlModTracker, requests_transport
@@ -141,13 +163,12 @@ class Engine:
         # notified skip, never an error). Builders gate these through
         # state/export_gate.py on source lastmod.
         self.exporters = exporters or {}
-        # Concurrency guard for the parallel load_all: KV state is
+        # Concurrency guard for the concurrent load_all: KV state is
         # read-modify-write (a lost update would silently re-download
         # forever) so it serializes. Script execution does NOT — DDL
         # targets are qualified into each load's staging db by the
         # resolver (ddl_db), so no session-global state exists to
-        # protect and every Spark job (scans, CTAS, populate,
-        # publishes) runs concurrently across a dependency level.
+        # protect and every Spark job runs as soon as its inputs exist.
         self._state_lock = threading.Lock()
         # session-start registration (reference re-creates functions at
         # connect time via search-path scripts; O2/U2)
@@ -193,104 +214,64 @@ class Engine:
         self.notifier.safe_notify(f"Finished loading {name}.")
         return LoadResult(dataset=name, skipped=False, published=published)
 
-    def _standard_load(self, ds: DatasetDef) -> list[str]:
+    def land_sources(self, ds: DatasetDef) -> dict[str, str]:
+        """Refresh the landing copy of EVERY source file and return
+        ``{dest: landing path}``. The conditional-GET gate already
+        decided the dataset changed, so an existing landing file may
+        be stale — re-downloading only missing files would publish old
+        bytes and then persist the new validators, silently losing the
+        update forever."""
         import os
 
-        # 0. refresh the landing copy of EVERY source file. The
-        # conditional-GET gate already decided the dataset changed, so
-        # an existing landing file may be stale — re-downloading only
-        # missing files would publish old bytes and then persist the
-        # new validators, silently losing the update forever.
         dest_paths: dict[str, str] = {}
         for f in ds.files:
             dest = os.path.join(self.landing_root, ds.name, f.dest)
             os.makedirs(os.path.dirname(dest), exist_ok=True)
             self.downloader(f.url, dest)
             dest_paths[f.dest] = dest
+        return dest_paths
 
-        function_stmts: list[str] = []
+    def staging_nodes(
+        self, ds: DatasetDef, publisher: Publisher, staging_db: str,
+        dest_paths: dict[str, str],
+    ) -> list[Node]:
+        """One node per typed source table: read its files (format-
+        dispatched per source file: CSV scan / Excel workbook / ...)
+        and write the staging copy. Each table reads only the files
+        mapped to it (None = the whole dataset)."""
         formats = {f.dest: f.format for f in ds.files}
-        with self.publisher.staging(ds.name) as staging_db:
-            # 1. ingest typed source tables (each table reads only the
-            # files mapped to it; None = the whole dataset), format-
-            # dispatched per source file (CSV scan / Excel workbook)
-            for table in ds.tables:
-                if table.schema is None:
-                    continue  # derived table, produced by SQL below
-                df = read_source_table(
-                    self.spark, table, dest_paths, formats,
-                    csv_options=ds.csv_options,
-                )
-                self.publisher.write_staging_table(staging_db, table.name, df)
 
-            # 2. SQL transformation scripts, staging-first resolution.
-            # Function DDL is collected per-STATEMENT (a mixed script's
-            # CREATE TABLEs still run) and re-registered post-publish,
-            # the reference's pattern (load_dataset.py:372-376).
-            # ddl_db qualifies CTAS/DROP/RENAME targets into THIS
-            # load's staging namespace — no session-global
-            # setCurrentDatabase, so concurrent loads (parallel
-            # load_all levels) run their script Spark jobs fully
-            # overlapped instead of serializing on a lock.
-            resolver = SearchPathResolver(
-                self.spark,
-                [staging_db, *self.search_path],
-                ddl_db=staging_db,
-                pointer=self.version_pointer,
+        def stage(table) -> None:
+            df = read_source_table(
+                self.spark, table, dest_paths, formats,
+                csv_options=ds.csv_options,
             )
-            created: list[str] = [
-                t.name for t in ds.tables if t.schema is not None
-            ]
-            for script in ds.sql:
-                with open(script, encoding="utf-8") as fh:
-                    sql_text = fh.read()
-                for stmt in split_statements(sql_text):
-                    if is_function_sql(stmt):
-                        function_stmts.append(stmt)
-                    else:
-                        # table-function calls in FROM position become
-                        # materialized temp views (the reference's
-                        # SQL-invocable set-returning functions)
-                        stmt = self.functions.materialize_table_fn_calls(
-                            self.spark, stmt
-                        )
-                        resolver.sql(stmt)
-                for t in parse_created_tables(sql_text):
-                    if t not in created:
-                        created.append(t)
+            publisher.write_staging_table(staging_db, table.name, df)
 
-            # 2.5 validation gate: staging copies must pass their
-            # declared checks or the load raises HERE — the staging
-            # ctx drops on the way out and readers keep the last good
-            # version (publish/validate.py; one aggregation pass per
-            # checked table).
-            from nycdb_k8s_loader_spark.publish.validate import (
-                validate_or_raise,
-            )
+        return [
+            Node(partial(stage, t), creates=(t.name,))
+            for t in ds.tables
+            if t.schema is not None
+        ]
 
-            for table in ds.tables:
-                if table.checks is not None:
-                    validate_or_raise(
-                        table.name,
-                        self.spark.table(
-                            f"`{staging_db}`.`{table.name}`"
-                        ),
-                        table.checks,
-                    )
+    def resolver(self, staging_db: str, *namespaces: str) -> SearchPathResolver:
+        """Staging-first name resolution for a load's scripts. ddl_db
+        qualifies CTAS/DROP/RENAME targets into THIS load's staging
+        namespace — no session-global setCurrentDatabase, so
+        concurrent loads and concurrent statements share no state."""
+        return SearchPathResolver(
+            self.spark,
+            [staging_db, *namespaces, *self.search_path],
+            ddl_db=staging_db,
+            pointer=self.version_pointer,
+        )
 
-            # 3. atomic publish, grants snapshotted across the swap
-            with self.grants.save_and_reapply(
-                self.publisher.target_db, created
-            ):
-                published = self.publisher.publish_tables(
-                    staging_db, created
-                )
-
-        # 4. post-publish function re-registration (reference:
-        # load_dataset.py:372-376). Registry functions always re-apply;
-        # script-declared functions run if they are Spark-compatible
-        # DDL (CREATE TEMPORARY FUNCTION ... RETURN expr) — Postgres
-        # procedural bodies are logged and skipped.
+    def replay_functions(self, function_stmts: list[str]) -> None:
+        """Post-publish function re-registration (reference:
+        load_dataset.py:372-376). Registry functions always re-apply;
+        script-declared functions run if they are Spark-compatible DDL
+        (CREATE TEMPORARY FUNCTION ... RETURN expr) — Postgres
+        procedural bodies are logged and skipped."""
         self.functions.apply(self.spark)
         for stmt in function_stmts:
             try:
@@ -300,6 +281,48 @@ class Engine:
                     "function DDL is not Spark-compatible; register it "
                     "in the FunctionRegistry instead:\n%s", stmt[:200]
                 )
+
+    def _standard_load(self, ds: DatasetDef) -> list[str]:
+        from nycdb_k8s_loader_spark.publish.validate import validate_or_raise
+
+        dest_paths = self.land_sources(ds)
+        function_stmts: list[str] = []
+        with self.publisher.staging(ds.name) as staging_db:
+            # staging writes → SQL scripts (one node per statement,
+            # staging-first resolution; function DDL is collected per
+            # STATEMENT, so a mixed script's CREATE TABLEs still run)
+            # → validation gate, as one dependency graph: every Spark
+            # job starts once the tables it names exist. A failed
+            # check raises before anything publishes; the staging ctx
+            # drops and readers keep the last good version.
+            def validate(table) -> None:
+                validate_or_raise(
+                    table.name,
+                    self.spark.table(f"`{staging_db}`.`{table.name}`"),
+                    table.checks,
+                )
+
+            nodes = self.staging_nodes(ds, self.publisher, staging_db, dest_paths)
+            nodes += script_nodes(
+                self.spark, self.resolver(staging_db), ds.sql,
+                function_stmts, self.functions,
+            )
+            nodes += [
+                Node(partial(validate, t), reads=(t.name,))
+                for t in ds.tables
+                if t.checks is not None
+            ]
+            run_graph(nodes, self.spark.sparkContext.defaultParallelism, self.spark)
+
+            # atomic publish, grants snapshotted across the swap
+            created = _created_tables(ds)
+            with self.grants.save_and_reapply(
+                self.publisher.target_db, created
+            ):
+                published = self.publisher.publish_tables(
+                    staging_db, created
+                )
+        self.replay_functions(function_stmts)
         return published
 
     def load_streaming(
@@ -386,7 +409,8 @@ class Engine:
             return next(iter(fmts))
         pending_commits: list[tuple[str, str, list[str]]] = []
         with self.publisher.staging(ds.name) as staging_db:
-            for table in typed:
+
+            def stage(table) -> None:
                 stream_root = os.path.join(
                     self.landing_root, ds.name, "_stream", table.name
                 )
@@ -462,33 +486,22 @@ class Engine:
                 # (derived-table checks + publish) succeeds, so a
                 # failure anywhere leaves the store untouched
                 pending_commits.append((stream_root, store, batch_dirs))
-            # dataset-attached SQL runs against the refreshed staging
-            # copies exactly as in the batch load (step 2 of
-            # _standard_load) — without this, a streaming-loaded
-            # dataset would silently drop its derived tables (e.g.
+            # one node per typed table (stream → staging copy →
+            # validate), then the dataset-attached SQL against the
+            # refreshed staging copies exactly as in the batch load —
+            # without it, a streaming-loaded dataset would silently
+            # drop its derived tables (e.g.
             # hpd_registrations_grouped_by_bbl)
-            created = [t.name for t in typed]
             function_stmts: list[str] = []
-            resolver = SearchPathResolver(
-                self.spark,
-                [staging_db, *self.search_path],
-                ddl_db=staging_db,
-                pointer=self.version_pointer,
+            nodes = [
+                Node(partial(stage, t), creates=(t.name,))
+                for t in typed
+            ]
+            nodes += script_nodes(
+                self.spark, self.resolver(staging_db), ds.sql,
+                function_stmts, self.functions,
             )
-            for script in ds.sql:
-                with open(script, encoding="utf-8") as fh:
-                    sql_text = fh.read()
-                for stmt in split_statements(sql_text):
-                    if is_function_sql(stmt):
-                        function_stmts.append(stmt)
-                    else:
-                        stmt = self.functions.materialize_table_fn_calls(
-                            self.spark, stmt
-                        )
-                        resolver.sql(stmt)
-                for t in parse_created_tables(sql_text):
-                    if t not in created:
-                        created.append(t)
+            run_graph(nodes, self.spark.sparkContext.defaultParallelism, self.spark)
             for table in ds.tables:
                 if table.schema is None and table.checks is not None:
                     try:
@@ -514,6 +527,7 @@ class Engine:
                             "last validated data",
                         )
                         raise
+            created = _created_tables(ds)
             with self.grants.save_and_reapply(
                 self.publisher.target_db, created
             ):
@@ -527,15 +541,7 @@ class Engine:
             # (idempotent), then commits.
             for stream_root, store, batch_dirs in pending_commits:
                 self._commit_pending(store, batch_dirs)
-        self.functions.apply(self.spark)
-        for stmt in function_stmts:
-            try:
-                self.spark.sql(stmt)
-            except Exception:  # noqa: BLE001 - dialect gap, not fatal
-                log.warning(
-                    "function DDL is not Spark-compatible; register it "
-                    "in the FunctionRegistry instead:\n%s", stmt[:200]
-                )
+        self.replay_functions(function_stmts)
         return LoadResult(dataset=name, skipped=False, published=published)
 
     @staticmethod
@@ -623,32 +629,36 @@ class Engine:
         targets: list[str] | None = None,
         max_parallel: int = 4,
     ) -> list[LoadResult]:
-        """Dependency-ordered multi-dataset load (reference O4), with
-        independent datasets of each dependency level loaded
-        CONCURRENTLY from driver threads (Spark's scheduler interleaves
-        their jobs across the executor pool — the standard driver-side
-        concurrency pattern for many small independent jobs; one
-        dataset's ingest rarely saturates a cluster). Results are
-        returned in topo_order regardless of completion order; the
-        first failure propagates after its level drains, so no
-        dependent level ever starts on a broken prerequisite.
-        ``max_parallel=1`` restores strictly sequential loads."""
-        results: dict[str, LoadResult] = {}
-        for level in self.registry.topo_levels(targets):
-            if max_parallel <= 1 or len(level) == 1:
-                for n in level:
-                    results[n] = self.load(n)
-                continue
-            with ThreadPoolExecutor(
-                max_workers=min(max_parallel, len(level))
-            ) as pool:
-                futs = {n: pool.submit(self.load, n) for n in level}
-                errs = []
-                for n, fut in futs.items():
-                    try:
-                        results[n] = fut.result()
-                    except Exception as exc:  # noqa: BLE001 - re-raised
-                        errs.append((n, exc))
-                if errs:
-                    raise errs[0][1]
-        return [results[n] for n in self.registry.topo_order(targets)]
+        """Dependency-ordered multi-dataset load (reference O4). Each
+        dataset is one node of a dependency graph (edges from
+        ``depends_on``, publish/scheduler.py) and starts on one of up
+        to ``max_parallel`` driver threads as soon as every dataset it
+        depends on has loaded — independent datasets load
+        concurrently and Spark interleaves their jobs. Inside each
+        load, staging writes, script statements, validations and
+        per-table publish copies run concurrently in turn, ordered
+        only by the tables they create and read.
+
+        After the first failure no further dataset starts (so nothing
+        ever loads on a broken prerequisite), the loads already
+        running finish, and the first error is re-raised. Results are
+        returned in topo_order regardless of completion order.
+        ``max_parallel=1`` loads one dataset at a time."""
+        nodes = [
+            Node(
+                partial(self.load, n),
+                creates=(n,),
+                reads=tuple(self.registry.get(n).depends_on),
+            )
+            for n in self.registry.topo_order(targets)
+        ]
+        return run_graph(nodes, max_parallel, self.spark)
+
+
+def _created_tables(ds: DatasetDef) -> list[str]:
+    """Tables a standard load publishes: its typed source tables, then
+    every table its scripts create (renames applied)."""
+    created = [t.name for t in ds.tables if t.schema is not None]
+    return created + [
+        t for t in parse_created_tables_in_dir(ds.sql) if t not in created
+    ]

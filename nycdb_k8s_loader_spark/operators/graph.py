@@ -87,30 +87,40 @@ def release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def _rebind(df: DataFrame, session) -> DataFrame:
+    """``df``'s analyzed plan as a DataFrame of ``session`` (internal
+    ``Dataset.ofRows``; same JVM plan, other session's conf)."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    jvm_dataset = session._jvm.org.apache.spark.sql.classic.Dataset
+    plan = df._jdf.queryExecution().analyzed()
+    return _CDF(jvm_dataset.ofRows(session._jsparkSession, plan), session)
+
+
 def _clone_for_loop(*dfs: DataFrame):
     """Rebind ``dfs`` onto a fresh ``newSession()`` clone so the loop
     fences (:func:`_iteration_sized_shuffle`, :func:`_static_loop_plans`)
     mutate PRIVATE session conf (r14, judge item #7).
 
     Both fences set session-global SQL conf for the loop's duration —
-    AQE off, clamped shuffle partitions. The engine overlaps same-level
-    dataset loads in driver threads (guide §2.6), and a concurrent
-    query planned while a loop held the fence would silently plan
-    AQE-off with micro-shuffle partitions. ``SparkSession.newSession``
-    shares the SparkContext (block manager, executors — checkpoints
-    work unchanged) but owns an isolated SQLConf, so the fences become
-    invisible to every other planner. The input plans are rebased onto
-    the clone via ``Dataset.ofRows`` (same JVM analyzed plan, new
-    session) and the loop result is rebased BACK so downstream
-    composition plans under the caller's own conf exactly as before.
+    AQE off, clamped shuffle partitions. The engine runs independent
+    Spark jobs concurrently from driver threads (a CC loop beside
+    other CTAS statements of the same load, other datasets' loads),
+    and a concurrent query planned while a loop held the fence would
+    silently plan AQE-off with micro-shuffle partitions.
+    ``SparkSession.newSession`` shares the SparkContext (block
+    manager, executors — checkpoints work unchanged) but owns an
+    isolated SQLConf, so the fences become invisible to every other
+    planner. The input plans are rebased onto the clone via
+    ``Dataset.ofRows`` (same JVM analyzed plan, new session) and the
+    loop result is rebased BACK so downstream composition plans under
+    the caller's own conf exactly as before.
 
-    Returns ``(rebased_dfs, rebase_back_fn)``; on any failure of the
-    (internal) rebinding API it degrades to the r13 behavior — frames
-    unchanged, fences on the shared session."""
+    Returns ``(rebased_dfs, rebase_back_fn)``. If the (internal)
+    rebinding API fails this raises: fencing the shared session
+    instead would leak the loop's conf into every concurrent planner."""
     spark = dfs[0].sparkSession
     try:
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
         loop = spark.newSession()
         # newSession starts from the builder-time conf; carry over any
         # session-level deltas set since (e.g. the legacy nanos parquet
@@ -122,16 +132,13 @@ def _clone_for_loop(*dfs: DataFrame):
                 loop.conf.set(e._1(), e._2())
             except Exception:  # noqa: BLE001
                 pass  # static/core entries — context-level, shared anyway
-        jvm_dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
-
-        def _rebind(df: DataFrame, sess) -> DataFrame:
-            plan = df._jdf.queryExecution().analyzed()
-            return _CDF(jvm_dataset.ofRows(sess._jsparkSession, plan), sess)
-
         rebased = tuple(_rebind(df, loop) for df in dfs)
-        return rebased, (lambda df: _rebind(df, spark))
-    except Exception:  # noqa: BLE001 - internal API; degrade, don't break
-        return dfs, (lambda df: df)
+    except Exception as exc:
+        raise RuntimeError(
+            "cannot rebind the loop's input onto a private session; "
+            "refusing to fence the shared session"
+        ) from exc
+    return rebased, (lambda df: _rebind(df, spark))
 
 
 @contextmanager

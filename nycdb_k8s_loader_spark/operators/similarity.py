@@ -801,7 +801,7 @@ def _lloyd_refine(
     concurrent planners (clone), and the checkpoint is released the
     moment training ends — nothing downstream references it.
     Centroid math is untouched: trajectories are bit-identical
-    (pinned by the ab_lloyd harness and the oracle)."""
+    (pinned by the oracle)."""
     if lloyd_iters <= 0:
         return cents
     from nycdb_k8s_loader_spark.operators.graph import (

@@ -55,6 +55,7 @@ import re
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import partial
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # import cycle: validate imports nothing from here,
@@ -62,6 +63,8 @@ if TYPE_CHECKING:  # import cycle: validate imports nothing from here,
     from nycdb_k8s_loader_spark.publish.validate import TableChecks
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph
 
 STAGING_PREFIX = "staging_"
 
@@ -365,26 +368,38 @@ class Publisher:
         ``on_table_published(table)`` fires after each table lands
         (progress hooks; the versioned-mode atomicity test interleaves
         a reader here). With a :class:`VersionPointer` configured this
-        routes to the cross-table-atomic versioned publish."""
+        routes to the cross-table-atomic versioned publish.
+
+        The per-table modes copy every table concurrently: each table
+        is one node of the load scheduler (publish/scheduler.py) that
+        publishes that table alone through this method, so the tables
+        are independent and a failure stops every copy not yet
+        started."""
         if self.version_pointer is not None:
             return self._publish_tables_versioned(
                 staging_db, tables, layouts, on_table_published
             )
         self._sql(f"CREATE DATABASE IF NOT EXISTS `{self.target_db}`")
-        published = []
-        for t in tables:
-            if self._is_external(staging_db, t):
-                # metadata-only flip (the SET SCHEMA analog): target
-                # external table re-created at the staged files — no
-                # data movement; previous versions pruned AFTER.
-                path = self._table_location(staging_db, t)
-                self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
-                self._create_external(self.target_db, t, path)
-                self._prune_versions(t)
-                published.append(f"{self.target_db}.{t}")
-                if on_table_published:
-                    on_table_published(t)
-                continue
+        if len(tables) != 1:
+            nodes = [
+                Node(partial(
+                    self.publish_tables, staging_db, [t], layouts,
+                    on_table_published,
+                ), creates=(t,))
+                for t in tables
+            ]
+            width = self.spark.sparkContext.defaultParallelism
+            return [p for ps in run_graph(nodes, width, self.spark) for p in ps]
+        (t,) = tables
+        if self._is_external(staging_db, t):
+            # metadata-only flip (the SET SCHEMA analog): target
+            # external table re-created at the staged files — no data
+            # movement; previous versions pruned AFTER.
+            path = self._table_location(staging_db, t)
+            self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
+            self._create_external(self.target_db, t, path)
+            self._prune_versions(t)
+        else:
             self._reclaim_orphan_location(self.target_db, t)
             src = self.spark.table(f"`{staging_db}`.`{t}`")
             w = src.write.mode("overwrite")
@@ -399,10 +414,9 @@ class Publisher:
                     # atomic overwrite (files first, catalog flip last).
                     self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
             w.saveAsTable(f"`{self.target_db}`.`{t}`")
-            published.append(f"{self.target_db}.{t}")
-            if on_table_published:
-                on_table_published(t)
-        return published
+        if on_table_published:
+            on_table_published(t)
+        return [f"{self.target_db}.{t}"]
 
     # -- versioned (cross-table atomic) publish --------------------------------
 
@@ -520,12 +534,21 @@ class Publisher:
         )
 
         with self.staging(dataset) as db:
-            names = []
-            for table, build in builders.items():
+
+            def stage(table: str, build) -> None:
                 self.write_staging_table(db, table, build())
-                names.append(table)
-            for table, tc in (checks or {}).items():
+
+            def check(table: str, tc) -> None:
                 validate_or_raise(
                     table, self.spark.table(f"`{db}`.`{table}`"), tc
                 )
-            return self.publish_tables(db, names)
+
+            nodes = [
+                Node(partial(stage, t, b), creates=(t,))
+                for t, b in builders.items()
+            ] + [
+                Node(partial(check, t, tc), reads=(t,))
+                for t, tc in (checks or {}).items()
+            ]
+            run_graph(nodes, self.spark.sparkContext.defaultParallelism, self.spark)
+            return self.publish_tables(db, list(builders))

@@ -126,19 +126,3 @@ class Registry:
         for t in targets:
             visit(t)
         return out
-
-    def topo_levels(self, targets: list[str] | None = None) -> list[list[str]]:
-        """Group :meth:`topo_order` into dependency levels: every
-        dataset in level i depends only on datasets in levels < i, so
-        a level's members are safe to load concurrently (the engine's
-        parallel ``load_all``). Within a level, topo_order's
-        deterministic ordering is preserved."""
-        order = self.topo_order(targets)
-        depth: dict[str, int] = {}
-        for n in order:
-            deps = self.get(n).depends_on
-            depth[n] = 1 + max((depth[d] for d in deps), default=-1)
-        levels: list[list[str]] = [[] for _ in range(max(depth.values()) + 1)] if depth else []
-        for n in order:
-            levels[depth[n]].append(n)
-        return levels
