@@ -97,8 +97,10 @@ def _await_idle(threshold: float = 1.0, max_wait: float = 120.0) -> dict:
     an idle box). Sample the 1-min loadavg; if the machine is busy,
     wait up to ``max_wait`` seconds for it to settle before timing
     anything, and record the observed load in the output either way so
-    a contaminated number is self-describing instead of misleading."""
-    meta: dict = {"cpus": os.cpu_count()}
+    a contaminated number is self-describing instead of misleading.
+    The parallelism that ran comes from :func:`_parallelism` once the
+    session exists, not from the host's CPU count."""
+    meta: dict = {}
     try:
         load0 = os.getloadavg()[0]
     except OSError:  # pragma: no cover - non-POSIX
@@ -125,6 +127,20 @@ def _await_idle(threshold: float = 1.0, max_wait: float = 120.0) -> dict:
             file=sys.stderr,
         )
     return meta
+
+
+def _parallelism(spark) -> dict:
+    """The parallelism the measurement actually ran with: the session's
+    master URL and default parallelism, plus the ``SPARK_GRAFT_CPUS``
+    request that sized it (``None`` when unset). The host's CPU count
+    says nothing about either — a local[4] run on a 32-CPU box is a
+    4-way run."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+    }
 
 
 def _steal_jiffies() -> int:
@@ -426,6 +442,7 @@ def main(against: str | None = None) -> None:
 
     load_meta = _await_idle()
     spark = get_spark(app_name="nycdb-spark-bench")
+    load_meta.update(_parallelism(spark))
     qs = queries()
 
     # Warm the JVM/codegen once with a trivial job so query timings

@@ -44,7 +44,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import _await_idle  # noqa: E402
+from bench import _await_idle, _parallelism  # noqa: E402
 from nycdb_k8s_loader_spark.session import get_spark  # noqa: E402
 
 HEAVY = [
@@ -1251,6 +1251,7 @@ def main() -> None:
             "spark.ui.retainedJobs": "50000",
         },
     )
+    load_meta.update(_parallelism(spark))
     spark.range(1000).selectExpr("sum(id)").collect()
 
     from nycdb_k8s_loader_spark.plans.catalog import queries

@@ -16,11 +16,16 @@ all-pairs O(n^2) proximity search into one shuffle on the cell key
 with only in-neighborhood candidate pairs materialized — the same
 shape Sedona/GeoMesa/BigQuery GIS use (S2/geohash cells), built here
 from `floor`, `explode` and an equi-join.
+
+The polygon joins further down run their geometry work once per
+distinct footprint, not once per row: :func:`by_geometry_class` is the
+one place that dedups the inputs and joins the results back.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -446,6 +451,55 @@ def _bbox_overlap(a: str, b: str) -> Column:
     )
 
 
+def _require_disjoint(a: DataFrame, b: DataFrame) -> None:
+    """The two-frame polygon joins emit both frames' columns side by
+    side, so the column sets must not overlap."""
+    overlap = set(a.columns) & set(b.columns)
+    if overlap:
+        raise ValueError(f"rename overlapping columns first: {overlap}")
+
+
+def by_geometry_class(
+    op: Callable[..., DataFrame],
+    *sides: tuple[DataFrame, Sequence[str]],
+) -> DataFrame:
+    """Run ``op`` once per geometry CLASS instead of once per row.
+
+    Each side is a ``(frame, keys)`` pair whose ``keys`` columns (the
+    WKT, plus any other input the geometry work reads) determine
+    everything ``op`` computes for that side's rows. ``op`` receives
+    ``frame.select(*keys).distinct()`` for every side, in order, and
+    must return each side's keys. The rows re-attach by equi-joining
+    the first side, then every later side, back on its keys; the
+    output keeps ``op``'s column order, with each side's full column
+    list in place of its first key and its other keys dropped.
+
+    Row-for-row equal to ``op`` over the full frames when ``op``'s
+    per-row output is a pure function of the keys (pair membership,
+    clip areas, buffers: decide per class, then re-attach).
+    The aggregate joins group by every visible column, so over the
+    full frames two identical rows would merge and SUM their areas;
+    run per class, they aggregate per class pair and each duplicate
+    row re-attaches to that result. The geometry work drops by the
+    duplication factor when footprints repeat (templated or tiled
+    data, cadastral grids); the price is a distinct pass and a
+    join-back per side. Rows whose keys hold a NULL never re-attach —
+    the inner-join semantics the joins give unparseable WKT anyway."""
+    core = op(*(frame.select(*keys).distinct() for frame, keys in sides))
+    (first, first_keys), *rest = sides
+    out = first.join(core, list(first_keys))
+    for frame, keys in rest:
+        out = out.join(frame, list(keys))
+    cols: list[str] = []
+    for c in core.columns:
+        side = next((s for s in sides if c in s[1]), None)
+        if side is None:
+            cols.append(c)
+        elif c == side[1][0]:
+            cols.extend(side[0].columns)
+    return out.select(*cols)
+
+
 def polygon_intersection_join(
     polys_a: DataFrame,
     polys_b: DataFrame,
@@ -464,39 +518,32 @@ def polygon_intersection_join(
     pre-bin rings into grid cells by bbox (radius_self_join's
     pattern) and run this predicate residually per cell.
 
-    ``dedup_geoms=True`` (r14, guide §8): parse + predicate over the
-    DISTINCT B-side WKTs, expanded back to rows by the WKT string —
-    row-identical (pair membership is a pure function of the two
-    geometries)."""
-    overlap = set(polys_a.columns) & set(polys_b.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = polygon_intersection_join(
-            polys_a, polys_b.select(wkt_b).distinct(),
-            wkt_a=wkt_a, wkt_b=wkt_b, dedup_geoms=False,
-        )
-        return polys_b.join(core, wkt_b).select(
-            *polys_b.columns, *[c for c in polys_a.columns]
-        )
+    ``dedup_geoms=True`` runs the join per distinct B-side WKT
+    (:func:`by_geometry_class`)."""
+    _require_disjoint(polys_a, polys_b)
 
-    # r13: hoist each side's ring→edges build into its projection —
-    # the condition re-evaluates per candidate pair, so the inline
-    # form rebuilt BOTH edge arrays per bbox-surviving pair; hoisted,
-    # each row pays it once and the predicate folds allocation-free
-    # (_polygons_intersect_edges).
-    a = _with_bbox(polys_a, wkt_a, "__va").withColumn(
-        "__va_e", _ring_edges(F.col("__va"))
-    )
-    b = _with_bbox(polys_b, wkt_b, "__vb").withColumn(
-        "__vb_e", _ring_edges(F.col("__vb"))
-    )
-    bbox = _bbox_overlap("__va", "__vb")
-    cond = bbox & _polygons_intersect_edges(
-        F.col("__va_e"), F.col("__vb_e"), F.col("__va"), F.col("__vb")
-    )
-    hidden = [c for c in a.columns + b.columns if c.startswith("__v")]
-    return b.join(F.broadcast(a), cond, "inner").drop(*hidden)
+    def op(polys_b: DataFrame) -> DataFrame:
+        # r13: hoist each side's ring→edges build into its projection
+        # — the condition re-evaluates per candidate pair, so the
+        # inline form rebuilt BOTH edge arrays per bbox-surviving
+        # pair; hoisted, each row pays it once and the predicate
+        # folds allocation-free (_polygons_intersect_edges).
+        a = _with_bbox(polys_a, wkt_a, "__va").withColumn(
+            "__va_e", _ring_edges(F.col("__va"))
+        )
+        b = _with_bbox(polys_b, wkt_b, "__vb").withColumn(
+            "__vb_e", _ring_edges(F.col("__vb"))
+        )
+        bbox = _bbox_overlap("__va", "__vb")
+        cond = bbox & _polygons_intersect_edges(
+            F.col("__va_e"), F.col("__vb_e"), F.col("__va"), F.col("__vb")
+        )
+        hidden = [c for c in a.columns + b.columns if c.startswith("__v")]
+        return b.join(F.broadcast(a), cond, "inner").drop(*hidden)
+
+    if dedup_geoms:
+        return by_geometry_class(op, (polys_b, [wkt_b]))
+    return op(polys_b)
 
 
 def polygon_intersection_join_binned(
@@ -544,76 +591,67 @@ def polygon_intersection_join_binned(
     to a NULL bbox never enters the join (sequence(NULL) explodes to
     nothing) — inner-join semantics for unparseable rings.
 
-    ``dedup_geoms=True`` (r14, guide §8): run parse → bin → join →
-    predicate over the DISTINCT WKT values of each side and expand
-    back to rows by equi-joining on the WKT strings — row-identical
-    (pair membership is a pure function of the two geometries), and
-    the per-pair predicate work drops by the duplication factor when
-    footprints repeat (templated/tiled data). Off by default: two
-    distinct passes + two join-backs only pay when they deduplicate.
+    ``dedup_geoms=True`` runs the join per distinct WKT pair
+    (:func:`by_geometry_class`). Off by default: the two distinct
+    passes and two join-backs pay only when footprints repeat.
     """
-    overlap = set(polys_a.columns) & set(polys_b.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = polygon_intersection_join_binned(
-            polys_a.select(wkt_a).distinct(),
-            polys_b.select(wkt_b).distinct(),
-            wkt_a=wkt_a, wkt_b=wkt_b, cell_deg=cell_deg,
-            dedup_geoms=False,
+    _require_disjoint(polys_a, polys_b)
+
+    def op(polys_a: DataFrame, polys_b: DataFrame) -> DataFrame:
+        a = _with_bbox(polys_a, wkt_a, "__va")
+        b = _with_bbox(polys_b, wkt_b, "__vb")
+
+        cell = F.lit(float(_derive_cell_deg(
+            (a, "__va"), (b, "__vb"), cell_deg=cell_deg
+        )))
+        ab = _grid_binned(a, "__va", cell)
+        bb = _grid_binned(b, "__vb", cell)
+        joined = ab.hint("shuffle_hash").join(
+            bb,
+            (F.col("__va_cx") == F.col("__vb_cx"))
+            & (F.col("__va_cy") == F.col("__vb_cy")),
+            "inner",
         )
+        canonical = (
+            F.col("__va_cx")
+            == F.floor(F.greatest("__va_x0", "__vb_x0") / cell)
+        ) & (
+            F.col("__va_cy")
+            == F.floor(F.greatest("__va_y0", "__vb_y0") / cell)
+        )
+        # r13, tried and REVERTED on measurement: staging
+        # the residual's edge arrays into their own fenced
+        # per-candidate columns (the geo06/geo10 hoist) measured ×0.89
+        # HERE — each candidate row evaluates the predicate exactly
+        # once either way, so the stage saved only two small
+        # ring-builds while adding two interpreted (fence-carrying)
+        # projections and the UnsafeRow materialization of both edge
+        # arrays between them. The hoist pays where a row's structures
+        # are re-evaluated MANY times (broadcast conditions: |polys|
+        # evaluations/row) or where normalization re-ran per pair
+        # inside the fold (geo06/10/11/14); here once-per-row inline
+        # is the cheaper shape.
+        isect = F.when(
+            F.spark_partition_id() >= 0,
+            polygons_intersect(F.col("__va"), F.col("__vb")),
+        )
+        hidden = [
+            c
+            for c in joined.columns
+            if c.startswith("__va") or c.startswith("__vb")
+        ]
         return (
-            polys_a.join(core, wkt_a)
-            .join(polys_b, wkt_b)
-            .select(*polys_a.columns, *polys_b.columns)
+            joined.filter(_bbox_overlap("__va", "__vb") & canonical)
+            .withColumn("__isect", isect)
+            .filter(F.col("__isect"))
+            .drop("__isect", *hidden)
         )
 
-    a = _with_bbox(polys_a, wkt_a, "__va")
-    b = _with_bbox(polys_b, wkt_b, "__vb")
-
-    cell_deg = _derive_cell_deg((a, "__va"), (b, "__vb"),
-                                cell_deg=cell_deg)
-    cell = F.lit(float(cell_deg))
-    ab, bb = _grid_binned(a, "__va", cell), _grid_binned(b, "__vb", cell)
-    joined = ab.hint("shuffle_hash").join(
-        bb,
-        (F.col("__va_cx") == F.col("__vb_cx"))
-        & (F.col("__va_cy") == F.col("__vb_cy")),
-        "inner",
-    )
-    canonical = (
-        F.col("__va_cx")
-        == F.floor(F.greatest("__va_x0", "__vb_x0") / cell)
-    ) & (
-        F.col("__va_cy")
-        == F.floor(F.greatest("__va_y0", "__vb_y0") / cell)
-    )
-    # r13, tried and REVERTED on measurement (guide §1.1): staging
-    # the residual's edge arrays into their own fenced per-candidate
-    # columns (the geo06/geo10 hoist) measured ×0.89 HERE — each
-    # candidate row evaluates the predicate exactly once either way,
-    # so the stage saved only two small ring-builds while adding two
-    # interpreted (fence-carrying) projections and the UnsafeRow
-    # materialization of both edge arrays between them. The hoist
-    # pays where a row's structures are re-evaluated MANY times
-    # (broadcast conditions: |polys| evaluations/row) or where
-    # normalization re-ran per pair inside the fold (geo06/10/11/14);
-    # here once-per-row inline is the cheaper shape.
-    isect = F.when(
-        F.spark_partition_id() >= 0,
-        polygons_intersect(F.col("__va"), F.col("__vb")),
-    )
-    hidden = [
-        c
-        for c in joined.columns
-        if c.startswith("__va") or c.startswith("__vb")
-    ]
-    return (
-        joined.filter(_bbox_overlap("__va", "__vb") & canonical)
-        .withColumn("__isect", isect)
-        .filter(F.col("__isect"))
-        .drop("__isect", *hidden)
-    )
+    if dedup_geoms:
+        return by_geometry_class(
+            op, (polys_a, [wkt_a]), (polys_b, [wkt_b])
+        )
+    return op(polys_a, polys_b)
 
 
 # --- polygon clipping + area: geometry ALGEBRA, still pure expressions -------
@@ -729,75 +767,68 @@ def polygon_clip_area_join(
     rounds the area (cross-engine float hygiene for oracle compares);
     None keeps raw doubles.
 
-    ``dedup_geoms=True`` (r14, guide §8): run parse + clip over the
-    DISTINCT subject WKTs and re-attach per-row by equi-joining back
-    on the WKT string — row-identical (candidates and areas are pure
-    functions of the geometry pair); the interpreted clip folds drop
-    by the subject duplication factor. Off by default."""
-    overlap = set(polys.columns) & set(clips.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = polygon_clip_area_join(
-            polys.select(wkt_col).distinct(), clips,
-            wkt_col=wkt_col, clip_wkt_col=clip_wkt_col,
-            area_col=area_col, round_dp=round_dp, dedup_geoms=False,
+    ``dedup_geoms=True`` runs the join per distinct subject WKT
+    (:func:`by_geometry_class`). Off by default."""
+    _require_disjoint(polys, clips)
+
+    def op(polys: DataFrame) -> DataFrame:
+        # r13: each side's ring normalization is hoisted into its own
+        # fenced per-ROW projection — the fold below re-evaluates once
+        # per bbox-surviving pair, and the un-hoisted form re-ran
+        # open/CCW (two shoelace folds + slice/concat allocations) per
+        # pair on both rings. The fence keeps CollapseProject from
+        # inlining the (single-consumer, non-cheap) normalize back
+        # into the per-pair fold expression.
+        p = _with_bbox(polys, wkt_col, "__vp").withColumn(
+            "__vp_n",
+            F.when(
+                F.spark_partition_id() >= 0,
+                _ccw(_open_ring(F.col("__vp"))),
+            ),
         )
-        return polys.join(core, wkt_col).select(
-            *polys.columns,
-            *[c_ for c_ in core.columns if c_ != wkt_col],
+        c = _with_bbox(clips, clip_wkt_col, "__vc").withColumn(
+            "__vc_e",
+            F.when(
+                F.spark_partition_id() >= 0,
+                _ring_edges(_ccw(_open_ring(F.col("__vc")))),
+            ),
+        )
+        bbox = _bbox_overlap("__vp", "__vc")
+        # Pushdown BARRIER, load-bearing twice over. (1) Without it
+        # Catalyst pushes the `area > 0` filter into the nested-loop
+        # join condition and PREPENDS it, so the (interpreted-HOF,
+        # ~10³-node) clip fold runs for EVERY (poly, clip) pair BEFORE
+        # the bbox test prunes — measured as a full-CPU stall at sf3
+        # (11M folds instead of ~600k). (2) Fencing the FOLD ITSELF
+        # into its own `__clipped` column stops CollapseProject from
+        # inlining ~8 copies of the whole fold tree into ring_area's
+        # structural references — the inlined form cost ~16 s of
+        # fixed plan/codegen work per query (round-9 finding; the
+        # multipolygon twin paid ~110 s and OOM'd a 1 GiB driver).
+        # spark_partition_id() is non-deterministic, which blocks both
+        # PushPredicateThroughJoin and CollapseProject; the value is
+        # always the fold (partition ids are never negative).
+        fenced_clip = F.when(
+            F.spark_partition_id() >= 0,
+            convex_clip_ring_pre(F.col("__vp_n"), F.col("__vc_e")),
+        )
+        area = ring_area(F.col("__clipped"))
+        if round_dp is not None:
+            area = F.round(area, round_dp)
+        hidden = [
+            x for x in p.columns + c.columns if x.startswith("__v")
+        ]
+        return (
+            p.join(F.broadcast(c), bbox, "inner")
+            .withColumn("__clipped", fenced_clip)
+            .withColumn(area_col, area)
+            .filter(F.col(area_col) > 0)
+            .drop("__clipped", *hidden)
         )
 
-    # r13: each side's ring normalization is hoisted into its own
-    # fenced per-ROW projection — the fold below re-evaluates once
-    # per bbox-surviving pair, and the un-hoisted form re-ran
-    # open/CCW (two shoelace folds + slice/concat allocations) per
-    # pair on both rings. The fence keeps CollapseProject from
-    # inlining the (single-consumer, non-cheap) normalize back into
-    # the per-pair fold expression.
-    p = _with_bbox(polys, wkt_col, "__vp").withColumn(
-        "__vp_n",
-        F.when(
-            F.spark_partition_id() >= 0,
-            _ccw(_open_ring(F.col("__vp"))),
-        ),
-    )
-    c = _with_bbox(clips, clip_wkt_col, "__vc").withColumn(
-        "__vc_e",
-        F.when(
-            F.spark_partition_id() >= 0,
-            _ring_edges(_ccw(_open_ring(F.col("__vc")))),
-        ),
-    )
-    bbox = _bbox_overlap("__vp", "__vc")
-    # Pushdown BARRIER, load-bearing twice over. (1) Without it
-    # Catalyst pushes the `area > 0` filter into the nested-loop join
-    # condition and PREPENDS it, so the (interpreted-HOF, ~10³-node)
-    # clip fold runs for EVERY (poly, clip) pair BEFORE the bbox test
-    # prunes — measured as a full-CPU stall at sf3 (11M folds instead
-    # of ~600k). (2) Fencing the FOLD ITSELF into its own `__clipped`
-    # column stops CollapseProject from inlining ~8 copies of the
-    # whole fold tree into ring_area's structural references — the
-    # inlined form cost ~16 s of fixed plan/codegen work per query
-    # (round-9 finding; the multipolygon twin paid ~110 s and OOM'd a
-    # 1 GiB driver). spark_partition_id() is non-deterministic, which
-    # blocks both PushPredicateThroughJoin and CollapseProject; the
-    # value is always the fold (partition ids are never negative).
-    fenced_clip = F.when(
-        F.spark_partition_id() >= 0,
-        convex_clip_ring_pre(F.col("__vp_n"), F.col("__vc_e")),
-    )
-    area = ring_area(F.col("__clipped"))
-    if round_dp is not None:
-        area = F.round(area, round_dp)
-    hidden = [x for x in p.columns + c.columns if x.startswith("__v")]
-    return (
-        p.join(F.broadcast(c), bbox, "inner")
-        .withColumn("__clipped", fenced_clip)
-        .withColumn(area_col, area)
-        .filter(F.col(area_col) > 0)
-        .drop("__clipped", *hidden)
-    )
+    if dedup_geoms:
+        return by_geometry_class(op, (polys, [wkt_col]))
+    return op(polys)
 
 
 def tag_points_with_polygons(
@@ -1272,7 +1303,6 @@ def concave_clip_area_join(
     clip_wkt_col: str = "clip_wkt",
     area_col: str = "clip_area",
     round_dp: int | None = 6,
-    dedup_geoms: bool = False,
 ) -> DataFrame:
     """Intersection AREA between two ARBITRARY simple (multi/holed)
     polygon sets — no convexity requirement on EITHER side, the last
@@ -1297,37 +1327,24 @@ def concave_clip_area_join(
     are exactly 0), the fenced clip fold per surviving row, and one
     map-side-combinable groupBy summing int64 fixed-point terms
     (round(area·10⁸) — order-independent, and the ± terms cancel
-    exactly in fixed point).  Positive-overlap pairs only.
+    exactly in fixed point).  Positive-overlap pairs only, one output
+    row per (subject row, clip row) pair: the sum runs per WKT pair
+    (:func:`by_geometry_class`).
+    """
+    _require_disjoint(polys, clips)
 
-    The subject side groups by ALL its visible columns — pass narrow
-    (id, wkt) frames and join attributes back (the
-    multipolygon_clip_area_join corollary applies: duplicate subject
-    rows merge, keep a unique id).
-
-    ``dedup_geoms=True`` (r14, guide §8): parse + fan-clip over the
-    DISTINCT subject WKTs, re-attached per-row by the WKT string —
-    row-identical, fold work drops by the duplication factor."""
-    overlap = set(polys.columns) & set(clips.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = concave_clip_area_join(
-            polys.select(wkt_col).distinct(), clips,
-            wkt_col=wkt_col, clip_wkt_col=clip_wkt_col,
-            area_col=area_col, round_dp=round_dp, dedup_geoms=False,
-        )
-        return polys.join(core, wkt_col).select(
-            *polys.columns,
-            *[c_ for c_ in core.columns if c_ != wkt_col],
+    def op(polys: DataFrame, clips: DataFrame) -> DataFrame:
+        p = _with_geom_bbox(polys, wkt_col, "__gp")
+        c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
+        bbox = _bbox_overlap("__gp", "__gc")
+        cand = p.join(F.broadcast(c), bbox, "inner")
+        return _fan_clip_area_tail(
+            cand, list(polys.columns) + list(clips.columns),
+            area_col, round_dp,
         )
 
-    p = _with_geom_bbox(polys, wkt_col, "__gp")
-    c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
-    bbox = _bbox_overlap("__gp", "__gc")
-    cand = p.join(F.broadcast(c), bbox, "inner")
-    return _fan_clip_area_tail(
-        cand, list(polys.columns) + list(clips.columns),
-        area_col, round_dp,
+    return by_geometry_class(
+        op, (polys, [wkt_col]), (clips, [clip_wkt_col])
     )
 
 
@@ -1455,7 +1472,6 @@ def concave_clip_area_join_binned(
     area_col: str = "clip_area",
     round_dp: int | None = 6,
     cell_deg: float | None = None,
-    dedup_geoms: bool = False,
 ) -> DataFrame:
     """Intersection AREA between two DATA-SCALE arbitrary (concave/
     holed/multi) polygon sets — :func:`concave_clip_area_join`
@@ -1481,67 +1497,43 @@ def concave_clip_area_join_binned(
 
     ``cell_deg`` as in the binned intersection join (None derives the
     max bbox dimension across both sides; size it to the TYPICAL
-    geometry when outliers exist).  Same grouping corollary: keep
-    unique ids.  100 TB shape: one shuffle per side keyed by cell,
-    candidate volume tracks local density, the clip fold runs only on
-    canonical bbox-overlapping pairs.
+    geometry when outliers exist).  Same per-WKT-pair sum as the
+    broadcast form (:func:`by_geometry_class`).  100 TB shape: one
+    shuffle per side keyed by cell, candidate volume tracks local
+    density, the clip fold runs only on canonical bbox-overlapping
+    pairs.
+    """
+    _require_disjoint(polys, clips)
 
-    ``dedup_geoms=True`` (r14, guide §8: decide on a lightweight
-    proxy, pay the heavy work once per class): run the whole
-    parse → bin → clip machinery over the DISTINCT ``(wkt)`` values
-    of each side and re-attach the per-class areas to the original
-    rows by equi-joining back on the WKT string. Row-for-row
-    equivalent by construction — every output column this operator
-    computes (candidate membership via bbox/cells, the clip-area
-    sum) is a pure function of the two WKT strings. A huge win when
-    many rows share identical footprints (templated/tiled fixtures,
-    cadastral grids: geo14's corpus is 15k lots over 150 distinct
-    shapes × 150k parcels over 600 — the interpreted clip folds drop
-    ~99%); costs two distinct passes and two join-backs, so leave it
-    off when geometries are (near-)unique."""
-    overlap = set(polys.columns) & set(clips.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = concave_clip_area_join_binned(
-            polys.select(wkt_col).distinct(),
-            clips.select(clip_wkt_col).distinct(),
-            wkt_col=wkt_col,
-            clip_wkt_col=clip_wkt_col,
-            area_col=area_col,
-            round_dp=round_dp,
-            cell_deg=cell_deg,
-            dedup_geoms=False,
+    def op(polys: DataFrame, clips: DataFrame) -> DataFrame:
+        p = _with_geom_bbox(polys, wkt_col, "__gp")
+        c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
+        cell = F.lit(float(_derive_cell_deg(
+            (p, "__gp"), (c, "__gc"), cell_deg=cell_deg
+        )))
+        pb = _grid_binned(p, "__gp", cell)
+        cb = _grid_binned(c, "__gc", cell)
+        joined = pb.hint("shuffle_hash").join(
+            cb,
+            (F.col("__gp_cx") == F.col("__gc_cx"))
+            & (F.col("__gp_cy") == F.col("__gc_cy")),
+            "inner",
         )
-        return (
-            polys.join(core, wkt_col)
-            .join(clips, clip_wkt_col)
-            .select(*polys.columns, *clips.columns, area_col)
+        canonical = (
+            F.col("__gp_cx")
+            == F.floor(F.greatest("__gp_x0", "__gc_x0") / cell)
+        ) & (
+            F.col("__gp_cy")
+            == F.floor(F.greatest("__gp_y0", "__gc_y0") / cell)
+        )
+        cand = joined.filter(_bbox_overlap("__gp", "__gc") & canonical)
+        return _fan_clip_area_tail(
+            cand, list(polys.columns) + list(clips.columns),
+            area_col, round_dp,
         )
 
-    p = _with_geom_bbox(polys, wkt_col, "__gp")
-    c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
-    cell_deg = _derive_cell_deg((p, "__gp"), (c, "__gc"),
-                                cell_deg=cell_deg)
-    cell = F.lit(float(cell_deg))
-    pb, cb = _grid_binned(p, "__gp", cell), _grid_binned(c, "__gc", cell)
-    joined = pb.hint("shuffle_hash").join(
-        cb,
-        (F.col("__gp_cx") == F.col("__gc_cx"))
-        & (F.col("__gp_cy") == F.col("__gc_cy")),
-        "inner",
-    )
-    canonical = (
-        F.col("__gp_cx")
-        == F.floor(F.greatest("__gp_x0", "__gc_x0") / cell)
-    ) & (
-        F.col("__gp_cy")
-        == F.floor(F.greatest("__gp_y0", "__gc_y0") / cell)
-    )
-    cand = joined.filter(_bbox_overlap("__gp", "__gc") & canonical)
-    return _fan_clip_area_tail(
-        cand, list(polys.columns) + list(clips.columns),
-        area_col, round_dp,
+    return by_geometry_class(
+        op, (polys, [wkt_col]), (clips, [clip_wkt_col])
     )
 
 
@@ -1717,7 +1709,6 @@ def concave_union_area_join(
     clip_wkt_col: str = "clip_wkt",
     area_col: str = "union_area",
     round_dp: int | None = 6,
-    dedup_geoms: bool = False,
 ) -> DataFrame:
     """Pairwise UNION area for arbitrary (concave/holed/multi)
     polygon pairs — the ST_Union-area analog, by inclusion–exclusion
@@ -1727,56 +1718,52 @@ def concave_union_area_join(
     Emits ALL bbox-candidate pairs (disjoint pairs have union area =
     the plain sum; pairs whose bboxes never meet are not pairs a
     pairwise-union consumer asks about — a global cascaded union is a
-    different operator: iterate merge rounds or use Sedona).  Same
-    grouping corollary as the clip join: keep unique ids.
+    different operator: iterate merge rounds or use Sedona).  One
+    output row per (subject row, clip row) pair, computed per WKT
+    pair (:func:`by_geometry_class`); column sets must be disjoint.
+    """
+    _require_disjoint(polys, clips)
 
-    ``dedup_geoms=True`` (r14, guide §8): the candidate join, both
-    shoelace areas and the fan-clip intersection run over the
-    DISTINCT subject WKTs and re-attach per-row by the WKT string —
-    row-identical (every computed value is a pure function of the
-    geometry pair)."""
-    if dedup_geoms:
-        core = concave_union_area_join(
-            polys.select(wkt_col).distinct(), clips,
-            wkt_col=wkt_col, clip_wkt_col=clip_wkt_col,
-            area_col=area_col, round_dp=round_dp, dedup_geoms=False,
+    def op(polys: DataFrame, clips: DataFrame) -> DataFrame:
+        # r13 single-pass form: the old shape ran
+        # the bbox candidate join TWICE — once inside
+        # concave_clip_area_join for the intersection and once here
+        # for the a/b areas — then re-attached them with a third
+        # (left) join, so both sides were scanned and WKT-parsed twice
+        # (geo12's plan: 8 scans, 4 parse sites).  One candidate join
+        # now carries the per-side areas into the shared fan-clip tail
+        # in keep-all-pairs mode, whose 0.0 for absent/non-positive
+        # sums is exactly the old coalesce(left-join, 0) value —
+        # union = a + b − inter in one pass.
+        p = _with_geom_bbox(polys, wkt_col, "__gp")
+        c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
+        keys = list(polys.columns) + list(clips.columns)
+        cand = (
+            p.join(
+                F.broadcast(c), _bbox_overlap("__gp", "__gc"), "inner"
+            )
+            .select(
+                *keys,
+                multipolygon_area(F.col("__gp")).alias("__a"),
+                multipolygon_area(F.col("__gc")).alias("__b"),
+                "__gp",
+                "__gc",
+            )
         )
-        return polys.join(core, wkt_col).select(
-            *polys.columns,
-            *[c_ for c_ in core.columns if c_ != wkt_col],
+        joined = _fan_clip_area_tail(
+            cand, keys + ["__a", "__b"], "__inter", None,
+            keep_all_pairs=True,
         )
-    # r13 single-pass form (guide §2.4/§7.2): the old shape ran the
-    # bbox candidate join TWICE — once inside concave_clip_area_join
-    # for the intersection and once here for the a/b areas — then
-    # re-attached them with a third (left) join, so both sides were
-    # scanned and WKT-parsed twice (geo12's plan: 8 scans, 4 parse
-    # sites).  One candidate join now carries the per-side areas into
-    # the shared fan-clip tail in keep-all-pairs mode, whose 0.0 for
-    # absent/non-positive sums is exactly the old coalesce(left-join,
-    # 0) value — union = a + b − inter in one pass.
-    p = _with_geom_bbox(polys, wkt_col, "__gp")
-    c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
-    keys = list(polys.columns) + list(clips.columns)
-    cand = (
-        p.join(F.broadcast(c), _bbox_overlap("__gp", "__gc"), "inner")
-        .select(
-            *keys,
-            multipolygon_area(F.col("__gp")).alias("__a"),
-            multipolygon_area(F.col("__gc")).alias("__b"),
-            "__gp",
-            "__gc",
+        area = F.col("__a") + F.col("__b") - F.col("__inter")
+        if round_dp is not None:
+            area = F.round(area, round_dp)
+        return (
+            joined.withColumn(area_col, area)
+            .drop("__a", "__b", "__inter")
         )
-    )
-    joined = _fan_clip_area_tail(
-        cand, keys + ["__a", "__b"], "__inter", None,
-        keep_all_pairs=True,
-    )
-    area = F.col("__a") + F.col("__b") - F.col("__inter")
-    if round_dp is not None:
-        area = F.round(area, round_dp)
-    return (
-        joined.withColumn(area_col, area)
-        .drop("__a", "__b", "__inter")
+
+    return by_geometry_class(
+        op, (polys, [wkt_col]), (clips, [clip_wkt_col])
     )
 
 
@@ -1858,47 +1845,40 @@ def multipolygon_intersection_join(
     global-bbox short-circuit ANDed before the full predicate.
     Column sets must be disjoint.
 
-    ``dedup_geoms=True`` (r14, guide §8): the parse + predicate runs
-    over the DISTINCT B-side WKTs and expands back to rows by
-    equi-joining on the WKT string — row-identical (pair membership
-    is a pure function of the two geometries)."""
-    overlap = set(polys_a.columns) & set(polys_b.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = multipolygon_intersection_join(
-            polys_a, polys_b.select(wkt_b).distinct(),
-            wkt_a=wkt_a, wkt_b=wkt_b, dedup_geoms=False,
-        )
-        return polys_b.join(core, wkt_b).select(
-            *polys_b.columns, *[c for c in polys_a.columns]
-        )
+    ``dedup_geoms=True`` runs the join per distinct B-side WKT
+    (:func:`by_geometry_class`)."""
+    _require_disjoint(polys_a, polys_b)
 
-    # r13: hoist the flat edge arrays (edge-cross branch) and the
-    # per-component edge structures (containment branch) into each
-    # side's projection — built once per row instead of once per
-    # bbox-surviving candidate pair.
-    a = (
-        _with_geom_bbox(polys_a, wkt_a, "__ga")
-        .withColumn("__ga_f", _flat_geom_edges(F.col("__ga")))
-        .withColumn("__ga_p", _geom_poly_edges(F.col("__ga")))
-    )
-    b = (
-        _with_geom_bbox(polys_b, wkt_b, "__gb")
-        .withColumn("__gb_f", _flat_geom_edges(F.col("__gb")))
-        .withColumn("__gb_p", _geom_poly_edges(F.col("__gb")))
-    )
-    bbox = _bbox_overlap("__ga", "__gb")
-    cond = bbox & _multipolygons_intersect_edges(
-        F.col("__ga_f"),
-        F.col("__gb_f"),
-        F.col("__ga_p"),
-        F.col("__gb_p"),
-        F.col("__ga"),
-        F.col("__gb"),
-    )
-    hidden = [c for c in a.columns + b.columns if c.startswith("__g")]
-    return b.join(F.broadcast(a), cond, "inner").drop(*hidden)
+    def op(polys_b: DataFrame) -> DataFrame:
+        # r13: hoist the flat edge arrays (edge-cross branch) and the
+        # per-component edge structures (containment branch) into each
+        # side's projection — built once per row instead of once per
+        # bbox-surviving candidate pair.
+        a = (
+            _with_geom_bbox(polys_a, wkt_a, "__ga")
+            .withColumn("__ga_f", _flat_geom_edges(F.col("__ga")))
+            .withColumn("__ga_p", _geom_poly_edges(F.col("__ga")))
+        )
+        b = (
+            _with_geom_bbox(polys_b, wkt_b, "__gb")
+            .withColumn("__gb_f", _flat_geom_edges(F.col("__gb")))
+            .withColumn("__gb_p", _geom_poly_edges(F.col("__gb")))
+        )
+        bbox = _bbox_overlap("__ga", "__gb")
+        cond = bbox & _multipolygons_intersect_edges(
+            F.col("__ga_f"),
+            F.col("__gb_f"),
+            F.col("__ga_p"),
+            F.col("__gb_p"),
+            F.col("__ga"),
+            F.col("__gb"),
+        )
+        hidden = [c for c in a.columns + b.columns if c.startswith("__g")]
+        return b.join(F.broadcast(a), cond, "inner").drop(*hidden)
+
+    if dedup_geoms:
+        return by_geometry_class(op, (polys_b, [wkt_b]))
+    return op(polys_b)
 
 
 def multipolygon_clip_area_join(
@@ -1908,7 +1888,6 @@ def multipolygon_clip_area_join(
     clip_wkt_col: str = "clip_wkt",
     area_col: str = "clip_area",
     round_dp: int | None = 6,
-    dedup_geoms: bool = False,
 ) -> DataFrame:
     """polygon_clip_area_join for holed/multi CLIP geometry (every
     clip ring convex — rectangles/convex district cells): all columns
@@ -1932,85 +1911,71 @@ def multipolygon_clip_area_join(
     (``sign · round(area·10⁶)`` — the s11 fixed-point rule) before
     the SUM, so the result is independent of aggregation order;
     ``area_col`` therefore carries 6 dp resolution regardless of
-    ``round_dp``. The subject side groups by ALL its visible columns
-    — at data scale pass a narrow (id, wkt) frame and join attributes
-    back after. Corollary of the groupBy: two IDENTICAL subject rows
-    merge into one output row with their areas SUMMED (the geo06
-    join would emit two rows) — keep a unique id column in the
-    subject frame.
+    ``round_dp``. The groupBy runs per WKT pair
+    (:func:`by_geometry_class`), so every (subject row, clip row)
+    pair gets its own output row, as in the geo06 join.
+    """
+    _require_disjoint(polys, clips)
 
-    ``dedup_geoms=True`` (r14, guide §8): parse + per-ring clip over
-    the DISTINCT subject WKTs, re-attached per-row by the WKT string
-    — row-identical (and the duplicate-merge corollary above cannot
-    trigger: the deduped subject is unique by construction)."""
-    overlap = set(polys.columns) & set(clips.columns)
-    if overlap:
-        raise ValueError(f"rename overlapping columns first: {overlap}")
-    if dedup_geoms:
-        core = multipolygon_clip_area_join(
-            polys.select(wkt_col).distinct(), clips,
-            wkt_col=wkt_col, clip_wkt_col=clip_wkt_col,
-            area_col=area_col, round_dp=round_dp, dedup_geoms=False,
+    def op(polys: DataFrame, clips: DataFrame) -> DataFrame:
+        # r13: the subject's open/CCW normalization and the clip ring's
+        # normalized edge build are hoisted into per-ROW fenced
+        # projections (subject side / exploded-ring broadcast side), so
+        # the per-pair evaluation below is the clip fold alone.
+        p = _with_bbox(polys, wkt_col, "__vp").withColumn(
+            "__vp_n",
+            F.when(
+                F.spark_partition_id() >= 0,
+                _ccw(_open_ring(F.col("__vp"))),
+            ),
         )
-        return polys.join(core, wkt_col).select(
-            *polys.columns,
-            *[c_ for c_ in core.columns if c_ != wkt_col],
+        signed = _signed_clip_rings(parse_wkt_geometry(clip_wkt_col))
+        c0 = clips.select("*", F.explode(signed).alias("__cr"))
+        ring = F.col("__cr").getField("ring")
+        xs = F.transform(ring, lambda pt: pt["x"])
+        ys = F.transform(ring, lambda pt: pt["y"])
+        c = c0.select(
+            "*",
+            F.when(
+                F.spark_partition_id() >= 0,
+                _ring_edges(_ccw(_open_ring(ring))),
+            ).alias("__cr_e"),
+            F.array_min(xs).alias("__cr_x0"),
+            F.array_max(xs).alias("__cr_x1"),
+            F.array_min(ys).alias("__cr_y0"),
+            F.array_max(ys).alias("__cr_y1"),
+        )
+        bbox = _bbox_overlap("__vp", "__cr")
+        # TWO fenced projection steps, deliberately: the barrier (a) keeps
+        # the clip fold out of the join condition (the geo06 prepend trap)
+        # and (b) BLOCKS CollapseProject, so ring_area's ~8 structural
+        # references to its input bind to the `__clipped` ATTRIBUTE
+        # instead of inlining 8 copies of the whole fold tree — measured:
+        # the inlined form cost ~110 s of fixed plan/codegen work per
+        # query (7x geo06) and OOM'd a 1 GiB driver at 8 threads.
+        fenced_clip = F.when(
+            F.spark_partition_id() >= 0,
+            convex_clip_ring_pre(F.col("__vp_n"), F.col("__cr_e")),
+        )
+        term = (
+            F.col("__cr").getField("sign").cast("long")
+            * F.round(ring_area(F.col("__clipped")) * 1e6).cast("long")
+        )
+        group_cols = list(polys.columns) + list(clips.columns)
+        area = F.col("__sum_micro") / F.lit(1e6)
+        if round_dp is not None:
+            area = F.round(area, round_dp)
+        return (
+            p.join(F.broadcast(c), bbox, "inner")
+            .withColumn("__clipped", fenced_clip)
+            .withColumn("__term", term)
+            .groupBy(*group_cols)  # hidden __vp/__cr cols fall away here
+            .agg(F.sum("__term").alias("__sum_micro"))
+            .withColumn(area_col, area)
+            .filter(F.col(area_col) > 0)
+            .drop("__sum_micro")
         )
 
-    # r13: the subject's open/CCW normalization and the clip ring's
-    # normalized edge build are hoisted into per-ROW fenced
-    # projections (subject side / exploded-ring broadcast side), so
-    # the per-pair evaluation below is the clip fold alone.
-    p = _with_bbox(polys, wkt_col, "__vp").withColumn(
-        "__vp_n",
-        F.when(
-            F.spark_partition_id() >= 0,
-            _ccw(_open_ring(F.col("__vp"))),
-        ),
-    )
-    signed = _signed_clip_rings(parse_wkt_geometry(clip_wkt_col))
-    c0 = clips.select("*", F.explode(signed).alias("__cr"))
-    ring = F.col("__cr").getField("ring")
-    xs = F.transform(ring, lambda pt: pt["x"])
-    ys = F.transform(ring, lambda pt: pt["y"])
-    c = c0.select(
-        "*",
-        F.when(
-            F.spark_partition_id() >= 0,
-            _ring_edges(_ccw(_open_ring(ring))),
-        ).alias("__cr_e"),
-        F.array_min(xs).alias("__cr_x0"),
-        F.array_max(xs).alias("__cr_x1"),
-        F.array_min(ys).alias("__cr_y0"),
-        F.array_max(ys).alias("__cr_y1"),
-    )
-    bbox = _bbox_overlap("__vp", "__cr")
-    # TWO fenced projection steps, deliberately: the barrier (a) keeps
-    # the clip fold out of the join condition (the geo06 prepend trap)
-    # and (b) BLOCKS CollapseProject, so ring_area's ~8 structural
-    # references to its input bind to the `__clipped` ATTRIBUTE
-    # instead of inlining 8 copies of the whole fold tree — measured:
-    # the inlined form cost ~110 s of fixed plan/codegen work per
-    # query (7x geo06) and OOM'd a 1 GiB driver at 8 threads.
-    fenced_clip = F.when(
-        F.spark_partition_id() >= 0,
-        convex_clip_ring_pre(F.col("__vp_n"), F.col("__cr_e")),
-    )
-    term = (
-        F.col("__cr").getField("sign").cast("long")
-        * F.round(ring_area(F.col("__clipped")) * 1e6).cast("long")
-    )
-    group_cols = list(polys.columns) + list(clips.columns)
-    area = F.col("__sum_micro") / F.lit(1e6)
-    if round_dp is not None:
-        area = F.round(area, round_dp)
-    return (
-        p.join(F.broadcast(c), bbox, "inner")
-        .withColumn("__clipped", fenced_clip)
-        .withColumn("__term", term)
-        .groupBy(*group_cols)  # hidden __vp/__cr cols fall away here
-        .agg(F.sum("__term").alias("__sum_micro"))
-        .withColumn(area_col, area)
-        .filter(F.col(area_col) > 0)
-        .drop("__sum_micro")
+    return by_geometry_class(
+        op, (polys, [wkt_col]), (clips, [clip_wkt_col])
     )

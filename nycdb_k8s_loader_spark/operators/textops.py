@@ -700,6 +700,13 @@ def pii_scrub(df: DataFrame, text_col: str = "text",
     )
 
 
+_GOPHER_OUTPUTS = (
+    "n_words", "mean_word_len", "alpha_word_frac", "stopword_hits",
+    "ok_word_count", "ok_mean_word_len", "ok_alpha_frac", "ok_stopwords",
+    "keep",
+)
+
+
 def gopher_quality_rules(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -729,8 +736,14 @@ def gopher_quality_rules(
     ``passthrough`` names input columns to carry verbatim onto the
     output (r14): fused consumers (the c07/c08 verdict spine) ride the
     SAME corpus pass for the verdict AND the survivor payload instead
-    of re-scanning the corpus to fetch it.
+    of re-scanning the corpus to fetch it. A passthrough name equal to
+    the id, an output statistic or an internal column raises
+    ``ValueError`` instead of emitting an ambiguous duplicate column.
     """
+    taken = {id_col, "__ws", "__nonspace", *_GOPHER_OUTPUTS}
+    clash = sorted(taken.intersection(passthrough))
+    if clash:
+        raise ValueError(f"passthrough collides with output columns: {clash}")
     text = F.col(text_col)
     staged = df.select(
         F.col(id_col),

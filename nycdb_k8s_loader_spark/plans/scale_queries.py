@@ -947,10 +947,8 @@ def geo10(spark: SparkSession, sf_dir: str) -> DataFrame:
     districts = _donut_district_fixture(spark, sf_dir).select(
         "ntacode", F.col("district_wkt").alias("clip_wkt")
     )
-    # dedup_geoms (r14): 50 distinct lot shapes — per-ring clip
-    # folds run once per distinct (lot, district-ring) pair.
     return multipolygon_clip_area_join(
-        lots, districts, wkt_col="lot_wkt", dedup_geoms=True,
+        lots, districts, wkt_col="lot_wkt"
     ).select("c_custkey", "ntacode", "clip_area")
 
 
@@ -1072,9 +1070,8 @@ def geo11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     districts, lots = _l_shape_fixture(spark, sf_dir)
-    # dedup_geoms (r14): 15k L-lots tile over 150 distinct shapes.
     return concave_clip_area_join(
-        lots, districts, wkt_col="lot_wkt", dedup_geoms=True,
+        lots, districts, wkt_col="lot_wkt"
     ).select("c_custkey", "ntacode", "clip_area")
 
 
@@ -1135,9 +1132,8 @@ def geo12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     districts, lots = _l_shape_fixture(spark, sf_dir)
-    # dedup_geoms (r14): 15k L-lots tile over 150 distinct shapes.
     return concave_union_area_join(
-        lots, districts, wkt_col="lot_wkt", dedup_geoms=True,
+        lots, districts, wkt_col="lot_wkt"
     ).select("c_custkey", "ntacode", "union_area")
 
 
@@ -1173,34 +1169,36 @@ def geo12(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def geo13(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nycdb_k8s_loader_spark.operators.geo import (
+        by_geometry_class,
         ring_area,
         with_miter_buffer,
     )
 
     _, lots = _district_lot_fixture(spark, sf_dir)
-    r = ((F.col("c_custkey") % 4) + 1) * 0.125
+    radius = (F.col("__rk") + 1) * 0.125
     xs = F.transform(F.col("__buf"), lambda p: p["x"])
     ys = F.transform(F.col("__buf"), lambda p: p["y"])
-    # dedup by (wkt, r) class (r14, guide §8): the buffer ring — and
-    # every output except the id — is a pure function of (lot_wkt, r),
-    # and the fixture tiles 15k lots over 100 distinct classes; the
-    # parse + offset-intersect fold runs once per class and the
-    # per-row values re-attach by the class key (row-identical).
-    keyed = lots.select("c_custkey", "lot_wkt", r.alias("r"))
-    per_class = with_miter_buffer(
-        keyed.select("lot_wkt", "r").distinct(),
-        "lot_wkt",
-        F.col("r"),
-        out_col="__buf",
-    ).select(
-        "lot_wkt",
-        "r",
-        F.round(ring_area(F.col("__buf")), 6).alias("buf_area"),
-        F.round(F.array_min(xs), 6).alias("min_x"),
-        F.round(F.array_min(ys), 6).alias("min_y"),
+
+    # every output but the id is a pure function of (lot_wkt, radius
+    # class): the fixture tiles 15k lots over 100 classes, so the
+    # parse + offset-intersect fold runs once per class, keyed on the
+    # integer class rather than the derived double radius
+    def op(classes: DataFrame) -> DataFrame:
+        return with_miter_buffer(
+            classes, "lot_wkt", radius, out_col="__buf"
+        ).select(
+            "lot_wkt",
+            "__rk",
+            F.round(ring_area(F.col("__buf")), 6).alias("buf_area"),
+            F.round(F.array_min(xs), 6).alias("min_x"),
+            F.round(F.array_min(ys), 6).alias("min_y"),
+        )
+
+    keyed = lots.select(
+        "c_custkey", "lot_wkt", (F.col("c_custkey") % 4).alias("__rk")
     )
-    return keyed.join(per_class, ["lot_wkt", "r"]).select(
-        "c_custkey", "r", "buf_area", "min_x", "min_y"
+    return by_geometry_class(op, (keyed, ["lot_wkt", "__rk"])).select(
+        "c_custkey", radius.alias("r"), "buf_area", "min_x", "min_y"
     )
 
 
@@ -1286,11 +1284,6 @@ def geo14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, lots = _l_shape_fixture(spark, sf_dir)
     parcels = _l_parcel_fixture(spark, sf_dir)
-    # dedup_geoms (r14): the L fixtures tile — 15k lots share 150
-    # distinct shapes, 150k parcels share 600 — so the parse + clip
-    # machinery runs once per distinct WKT pair and the per-row areas
-    # re-attach by the WKT key (row-identical; guide §8).
     return concave_clip_area_join_binned(
-        lots, parcels, wkt_col="lot_wkt", clip_wkt_col="parcel_wkt",
-        dedup_geoms=True,
+        lots, parcels, wkt_col="lot_wkt", clip_wkt_col="parcel_wkt"
     ).select("c_custkey", "o_orderkey", "clip_area")

@@ -2509,6 +2509,24 @@ class TestCurationPack:
         # 2 alpha words of 60 -> 0.0333
         assert r[4]["alpha_word_frac"] == 0.0333
 
+    def test_gopher_passthrough_collision_raises(self, spark):
+        """A passthrough name equal to an output statistic, the id or
+        an internal staging column would emit duplicate-named columns
+        and ambiguous references downstream: it must raise."""
+        from nycdb_k8s_loader_spark.operators.textops import (
+            gopher_quality_rules,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "the a word", "x")],
+            "doc_id long, text string, keep string",
+        )
+        for name in ("keep", "n_words", "doc_id", "__ws", "__nonspace"):
+            with pytest.raises(ValueError, match=name):
+                gopher_quality_rules(docs, passthrough=(name,))
+        out = gopher_quality_rules(docs, passthrough=("text",))
+        assert out.columns[-1] == "text"
+
     def test_gopher_rules_empty_and_whitespace_docs(self, spark):
         """A quality filter must survive junk docs: empty / blank text
         has n_words == 0, and under Spark 4's default ANSI mode a bare
@@ -4532,16 +4550,26 @@ class TestMultipolygonGeometry:
         # r13 single-pass pin: ONE candidate join total — the old
         # two-pass form ran the bbox join twice (intersection pass +
         # a/b-area pass) and re-attached them with a third left join,
-        # scanning and parsing both sides twice.
+        # scanning and parsing both sides twice. The only other joins
+        # are by_geometry_class's two key join-backs, one per side.
         # (logical plan: the executed-plan string under AQE prints
         # Final + Initial sections and double-counts)
+        import re
+
         plan = out._jdf.queryExecution().optimizedPlan().toString()
-        n_joins = sum(
-            line.strip().startswith("Join ")
-            or line.lstrip("+-: ").startswith("Join ")
+        joins = [
+            line.lstrip("+-: ")
             for line in plan.splitlines()
+            if line.lstrip("+-: ").startswith("Join ")
+        ]
+        join_backs = [
+            j for j in joins
+            if re.fullmatch(r"Join Inner, \((\w+)#\d+ = \1#\d+\)", j)
+        ]
+        assert len(join_backs) == 2, joins
+        assert len(joins) - len(join_backs) == 1, (
+            f"union must be single-pass; got {joins}"
         )
-        assert n_joins == 1, f"union must be single-pass; got {n_joins} joins"
 
     def test_miter_buffer_ring(self, spark):
         """Exact miter offsets: a square grows by r each side; a
@@ -4761,14 +4789,15 @@ class TestBinnedPolygonJoin:
 
 
 class TestDedupGeoms:
-    """r14: the ``dedup_geoms`` fast path (distinct-WKT core + join-
-    back) must be row-for-row identical to the direct path on frames
-    whose geometries repeat — including rows sharing a WKT under
-    different ids."""
+    """``geo.by_geometry_class``: the row-preserving joins' opt-in
+    ``dedup_geoms`` path (distinct-WKT core + join-back) must be
+    row-for-row identical to the direct path on frames whose
+    geometries repeat — including rows sharing a WKT under different
+    ids — and the aggregate joins, which always run per class, must
+    keep one output row per input row pair."""
 
     def _lots(self, spark):
-        # 6 rows over 2 distinct squares; ids unique (the operators'
-        # documented contract)
+        # 6 rows over 2 distinct squares
         sq = "POLYGON (({0} 0, {1} 0, {1} 2, {0} 2, {0} 0))"
         rows = [(i, sq.format(i % 2, i % 2 + 2)) for i in range(6)]
         return spark.createDataFrame(rows, "lid long, lw string")
@@ -4780,22 +4809,26 @@ class TestDedupGeoms:
         )
 
     def test_clip_area_join_paths_agree(self, spark):
-        from nycdb_k8s_loader_spark.operators.geo import (
-            polygon_clip_area_join,
-        )
+        from nycdb_k8s_loader_spark.operators import geo
 
         lots, clips = self._lots(spark), self._clips(spark)
-        direct = polygon_clip_area_join(
-            lots, clips, wkt_col="lw", clip_wkt_col="cw"
-        )
-        fast = polygon_clip_area_join(
-            lots, clips, wkt_col="lw", clip_wkt_col="cw",
-            dedup_geoms=True,
-        )
-        assert direct.columns == fast.columns
-        assert sorted(map(tuple, direct.collect())) == sorted(
-            map(tuple, fast.collect())
-        )
+        # (operator, subject/B frame, clip/A frame, kwargs): the lots
+        # are the deduped side in every case
+        cases = [
+            (geo.polygon_clip_area_join, lots, clips,
+             dict(wkt_col="lw", clip_wkt_col="cw")),
+            (geo.polygon_intersection_join, clips, lots,
+             dict(wkt_a="cw", wkt_b="lw")),
+            (geo.multipolygon_intersection_join, clips, lots,
+             dict(wkt_a="cw", wkt_b="lw")),
+        ]
+        for op, first, second, kw in cases:
+            direct = op(first, second, **kw)
+            fast = op(first, second, dedup_geoms=True, **kw)
+            assert direct.columns == fast.columns, op.__name__
+            rows = sorted(map(tuple, direct.collect()))
+            assert len(rows) == 6, op.__name__
+            assert rows == sorted(map(tuple, fast.collect())), op.__name__
 
     def test_binned_intersection_paths_agree(self, spark):
         from nycdb_k8s_loader_spark.operators.geo import (
@@ -4823,7 +4856,11 @@ class TestDedupGeoms:
         )
 
     def test_concave_binned_paths_agree(self, spark):
+        """The binned form's candidate discovery (grid cells +
+        canonical-cell rule) must find exactly the broadcast form's
+        pairs on repeated concave geometry."""
         from nycdb_k8s_loader_spark.operators.geo import (
+            concave_clip_area_join,
             concave_clip_area_join_binned,
         )
 
@@ -4844,17 +4881,46 @@ class TestDedupGeoms:
                   "0.5 0.5))")],
             "pid long, pw string",
         )
-        direct = concave_clip_area_join_binned(
-            lots, parcels, wkt_col="lw", clip_wkt_col="pw"
+        kw = dict(wkt_col="lw", clip_wkt_col="pw")
+        broadcast = concave_clip_area_join(lots, parcels, **kw)
+        binned = concave_clip_area_join_binned(lots, parcels, **kw)
+        assert broadcast.columns == binned.columns
+        rows = sorted(map(tuple, broadcast.collect()))
+        assert len(rows) == 8
+        assert rows == sorted(map(tuple, binned.collect()))
+
+    @pytest.mark.parametrize(
+        "name, area_col, area",
+        [
+            ("multipolygon_clip_area_join", "clip_area", 1.0),
+            ("concave_clip_area_join", "clip_area", 1.0),
+            ("concave_clip_area_join_binned", "clip_area", 1.0),
+            # union = 4 + 4 - 1
+            ("concave_union_area_join", "union_area", 7.0),
+        ],
+    )
+    def test_aggregate_joins_keep_duplicate_rows(
+        self, spark, name, area_col, area
+    ):
+        """The aggregate joins group by every visible column: over the
+        raw rows, two identical subject rows against two identical
+        clip rows merged into ONE row carrying the summed area (4x).
+        Per geometry class, each of the 4 row pairs keeps its own
+        row and the single-pair area."""
+        from nycdb_k8s_loader_spark.operators import geo
+
+        a = "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
+        b = "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"
+        subs = spark.createDataFrame(
+            [(1, a), (1, a)], "pid long, geom_wkt string"
         )
-        fast = concave_clip_area_join_binned(
-            lots, parcels, wkt_col="lw", clip_wkt_col="pw",
-            dedup_geoms=True,
+        clips = spark.createDataFrame(
+            [(10, b), (10, b)], "cid long, clip_wkt string"
         )
-        assert direct.columns == fast.columns
-        assert sorted(map(tuple, direct.collect())) == sorted(
-            map(tuple, fast.collect())
-        )
+        out = getattr(geo, name)(subs, clips)
+        assert out.columns == ["pid", "geom_wkt", "cid", "clip_wkt",
+                               area_col]
+        assert sorted(map(tuple, out.collect())) == [(1, a, 10, b, area)] * 4
 
 
 class TestConvexClipArea:

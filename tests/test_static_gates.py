@@ -63,6 +63,24 @@ def test_module_compiles_and_imports_are_used(path, tmp_path):
     assert unused == []
 
 
+def test_geo_operators_do_not_recurse():
+    """The per-distinct-geometry rewrite lives in one helper,
+    ``geo.by_geometry_class``: no function in the geo module calls
+    itself (the operators used to re-enter themselves on deduped
+    frames, one hand-written copy per operator)."""
+    tree = ast.parse(open(os.path.join(PKG, "operators", "geo.py")).read())
+    recursive = sorted(
+        f"{fn.name}:{call.lineno}"
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Name)
+        and call.func.id == fn.name
+    )
+    assert recursive == []
+
+
 class TestScaleGate:
     """bench_scale's structural linearity gate (round-7 verdict #2):
     shuffle-byte growth is the primary signal, wall growth gates only
