@@ -102,12 +102,19 @@ def cmd_load(args, engine_factory=None) -> int:
     return 0
 
 
+def _catalog_tables(spark, db: str) -> list[str]:
+    """Tables of ``db``. ``listTables`` also returns the session's temp
+    views (e.g. the ``__tablefn_*`` views of table-function calls),
+    which do not live in ``db``."""
+    return [t.name for t in spark.catalog.listTables(db) if not t.isTemporary]
+
+
 def cmd_rowcounts(args) -> int:
     from nycdb_k8s_loader_spark.session import get_spark
 
     spark = get_spark(app_name="nycdb-cli")
     db = args.database
-    tables = args.tables or [t.name for t in spark.catalog.listTables(db)]
+    tables = args.tables or _catalog_tables(spark, db)
     for t in sorted(tables):
         n = spark.table(f"`{db}`.`{t}`").count()
         print(f"{db}.{t}\t{n}")
@@ -188,7 +195,7 @@ def cmd_grant_schema_read(args) -> int:
 
     spark = get_spark(app_name="nycdb-cli")
     reg = GrantRegistry(_default_kv())
-    for t in sorted(t.name for t in spark.catalog.listTables(args.database)):
+    for t in sorted(_catalog_tables(spark, args.database)):
         g = Grant(args.database, t, args.user, ("SELECT",))
         reg.add(g)
         print(g.sql)

@@ -645,9 +645,7 @@ def _custom_pipeline(
     # Function DDL replay after the swap (wowutil.py:170-181: the temp
     # schema's functions died with it; re-create against the published
     # namespace).
-    engine.functions.apply(spark)
-    for stmt in function_stmts:
-        spark.sql(stmt)
+    engine.replay_functions(function_stmts)
     engine.notifier.safe_notify(f"Finished rebuilding {label}.")
     return published
 

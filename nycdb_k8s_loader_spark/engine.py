@@ -36,7 +36,8 @@ overlap and Spark interleaves them:
   alone in its script position. Names are resolved through the search
   path only when the statement starts, so it always sees the staging
   copy a predecessor made, never an older published one;
-- copy-mode publish: one concurrent copy per table.
+- publish: one concurrent metadata flip per table (a directory
+  rename plus DROP/CREATE; publish/protocol.py).
 
 Failure semantics are the serial ones: after the first failure nothing
 new starts, running nodes finish before the staging namespace drops,
@@ -113,11 +114,11 @@ class Engine:
         self.spark = spark
         self.registry = registry
         self.kv = kv
-        # publish_external_root opts into the metadata-only publish
-        # (versioned path + external-table pointer flip — zero data
-        # copy; see publish/protocol.py module docstring). The 100 TB
-        # default; copy mode remains for warehouses where the catalog
-        # must own the files.
+        # Every publish moves the staged files into a version dir and
+        # re-points the target at them (publish/protocol.py module
+        # docstring). publish_external_root keeps staging and version
+        # dirs under <root> instead of the warehouse: the data lives
+        # outside the catalog's ownership.
         self.publish_external_root = publish_external_root
         # versioned_publish opts into CROSS-TABLE-atomic publish: all
         # of a load's tables land in one fresh version database and
@@ -636,7 +637,7 @@ class Engine:
         depends on has loaded — independent datasets load
         concurrently and Spark interleaves their jobs. Inside each
         load, staging writes, script statements, validations and
-        per-table publish copies run concurrently in turn, ordered
+        per-table publish flips run concurrently in turn, ordered
         only by the tables they create and read.
 
         After the first failure no further dataset starts (so nothing

@@ -6,40 +6,49 @@ Capability twin of the reference's temporary-schema dance
 the results into the target namespace; on any error the staging
 namespace is dropped and readers never saw a thing.
 
-Spark mapping (SURVEY.md §2 K3/O1): Spark's catalog cannot move a
-table across databases (`ALTER TABLE ... SET SCHEMA` has no
-equivalent), so publish is one of two modes:
+Publish moves files; it never rewrites them (SURVEY.md §2 K3/O1).
+Spark's catalog cannot move a table across databases (``ALTER TABLE
+... SET SCHEMA`` has no equivalent), but the filesystem can move the
+table's directory. Every staged table publishes the same way:
 
-- **copy mode** (default): per-table ``saveAsTable`` overwrite from
-  staging into the target. Each table swap is atomic (new data files
-  written first, catalog pointer flipped last) but the data is
-  WRITTEN TWICE — fine for small/derived tables, wrong as the only
-  option at 100 TB.
-- **external mode** (``external_root=...``): source data is written
-  ONCE to a versioned location
-  ``<root>/<target_db>/<table>/v_<epoch>``, the staging table is an
-  external pointer at it, and publish re-points an external table in
-  the target database at the same files — two catalog statements,
-  ZERO data movement. This is the true Spark analog of the
-  reference's metadata-only ``ALTER TABLE ... SET SCHEMA``
-  (load_dataset.py:244-252): both have the same brief reader gap
-  between drop and re-create, and both leave the previous version's
-  files on disk until pruned (prune runs only AFTER the flip, so a
-  crash strands extra files, never live-table data). Derived CTAS
-  tables created inside the staging db are managed and publish via
-  copy mode automatically — mixed datasets just work.
+1. one catalog lookup of the staged table: location, schema,
+   partition and bucket spec;
+2. one Hadoop ``FileSystem.rename`` of its directory into a fresh
+   version dir ``<db location>/<table>/v_<epoch>_<seq>_<nonce>``
+   (``<external_root>/<target_db>/<table>/v_…`` when a root is set).
+   Readers keep the old version meanwhile. A failed rename raises;
+   nothing is copied instead (an object store's own rename is a
+   server-side copy, still without a Spark job);
+3. ``DROP TABLE`` of the target (metadata only: published tables are
+   external tables at their version dirs) and one explicit-schema
+   ``CREATE TABLE … LOCATION`` from the staged table's own DDL — the
+   shape ``SHOW CREATE TABLE`` prints: columns, ``PARTITIONED BY``,
+   ``CLUSTERED BY … SORTED BY … INTO n BUCKETS``. Partitioned tables
+   also recover their partitions;
+4. after the flip, old version dirs are pruned through the same
+   FileSystem API (object-store warehouses included). A crash strands
+   files, never live data.
 
-Cross-*table* atomicity in these two modes is weaker than the
+No Spark job runs and no byte is rewritten: the Spark analog of the
+reference's metadata-only ``ALTER TABLE ... SET SCHEMA``
+(load_dataset.py:244-252), with the same brief reader gap between drop
+and re-create. A managed target (an older layout) is dropped BEFORE the
+rename, because dropping a managed table deletes its directory — the
+one the new version moves into. With ``external_root`` set, the
+staging database and the version dirs both live under the root, so the
+rename never crosses filesystems.
+
+Cross-*table* atomicity of these per-table flips is weaker than the
 reference's single-schema swap (a reader between per-table flips can
 see table A new + table B old). **Versioned mode** restores the
 reference's all-tables-one-commit semantics
 (/root/reference/load_dataset.py:244-252 — every ALTER TABLE SET
 SCHEMA shares ONE ``conn.commit()``): construct the Publisher with a
-:class:`VersionPointer` and every publish writes ALL tables into a
-fresh ``<target>__v_<epoch>_<seq>`` database, then flips ONE pointer
-(an atomic KV write — ParquetKVStore's temp-file + ``os.replace``).
-Readers resolve the logical database through the pointer
-(:meth:`VersionPointer.resolve`, honored by
+:class:`VersionPointer` and every publish moves ALL tables, the same
+way, into a fresh ``<target>__v_<epoch>_<seq>`` database, then flips
+ONE pointer (an atomic KV write — ParquetKVStore's temp-file +
+``os.replace``). Readers resolve the logical database through the
+pointer (:meth:`VersionPointer.resolve`, honored by
 ``SearchPathResolver(pointer=...)``), so mid-publish they keep the
 previous version in full and post-flip they see the new version in
 full — never a mix. Old version databases are pruned AFTER the flip,
@@ -51,8 +60,10 @@ a load is a deterministic overwrite — same inputs, same tables.
 
 from __future__ import annotations
 
+import itertools
 import re
 import time
+import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
@@ -71,9 +82,9 @@ STAGING_PREFIX = "staging_"
 
 @dataclass
 class TableLayout:
-    """Physical layout for a published table — the Spark substitute for
-    the reference's CREATE INDEX tuning (wow_2021 sql:130-131; SURVEY
-    §2 K7). ``partition_by`` prunes scans on the partition predicate;
+    """Physical layout for a staged table, carried into the published
+    table by its DDL — the Spark substitute for the reference's CREATE
+    INDEX tuning (wow_2021 sql:130-131; SURVEY §2 K7). ``partition_by`` prunes scans on the partition predicate;
     ``bucket_by`` pre-shuffles on the hot join/agg key so downstream
     equi-joins between co-bucketed tables run with ZERO exchange
     (verified in tests/test_publish_engine.py)."""
@@ -154,6 +165,11 @@ def parse_staging_dataset(db: str) -> str | None:
     return m.group(1) if m else None
 
 
+def _literal(text: str) -> str:
+    """``text`` escaped for a single-quoted SQL string literal."""
+    return text.replace("\\", "\\\\").replace("'", "\\'")
+
+
 class Publisher:
     def __init__(
         self,
@@ -167,15 +183,12 @@ class Publisher:
         self.target_db = target_db
         self.external_root = external_root.rstrip("/") if external_root else None
         self.keep_versions = max(1, keep_versions)
-        # versioned mode: publishes write a fresh version DATABASE and
-        # commit with one pointer flip (cross-table atomic — see the
-        # module docstring); None keeps the per-table modes.
+        # versioned mode: publishes move into a fresh version DATABASE
+        # and commit with one pointer flip (cross-table atomic — see
+        # the module docstring); None keeps the per-table flips.
         self.version_pointer = version_pointer
-        # per-write version sequence: a reload in the same second must
-        # NEVER overwrite the dir the live table points at (lexical
-        # sort order is the prune order, so zero-pad the counter)
-        import itertools
-
+        # version names sort by (second, sequence) — the prune order;
+        # the random suffix keeps two Publishers apart in one second
         self._version_seq = itertools.count()
 
     # -- namespace management (K5) -------------------------------------------
@@ -201,10 +214,16 @@ class Publisher:
     def staging(self, dataset: str):
         """Create a staging namespace; always drop it on exit — success
         or failure (reference: create_and_enter_temporary_schema,
-        load_dataset.py:209-241, rollback at :230-232)."""
+        load_dataset.py:209-241, rollback at :230-232). With an
+        external root it lives under the root, so every staged table
+        renames into its version dir within one filesystem."""
         db = staging_db_name(dataset)
         self.drop_db(db)
-        self._sql(f"CREATE DATABASE `{db}`")
+        where = (
+            f" LOCATION '{_literal(f'{self.external_root}/_staging/{db}.db')}'"
+            if self.external_root else ""
+        )
+        self._sql(f"CREATE DATABASE `{db}`{where}")
         try:
             yield db
         finally:
@@ -227,9 +246,7 @@ class Publisher:
             loc = self.spark.catalog.getDatabase(db).locationUri
         except Exception:  # noqa: BLE001 - db missing: nothing to do
             return
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(f"{loc}/{table}")
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        path, fs = self._hpath(f"{loc}/{table}")
         fs.delete(path, True)
 
     def write_staging_table(
@@ -239,184 +256,153 @@ class Publisher:
         df: DataFrame,
         layout: TableLayout | None = None,
     ) -> None:
-        """Stage one source table. Copy mode: managed saveAsTable in
-        the staging db. External mode: ONE parquet write to the next
-        version dir + an external staging table pointing at it (the
-        same files the publish flip will re-point the target at —
-        the staging DROP DATABASE CASCADE removes only metadata).
-        Bucketed layouts force copy mode: Spark cannot attach a
-        bucketing spec to a path-first write."""
+        """Stage one source table as a catalog table that carries its
+        own layout — publish re-creates the target from it."""
         self._reclaim_orphan_location(db, table)
-        if self.external_root and not (layout and layout.bucket_by):
-            path = self._version_path(table)
-            w = df.write.mode("overwrite")
-            if layout and layout.partition_by:
-                w = w.partitionBy(*layout.partition_by)
-            w.parquet(path)
-            self._sql(f"DROP TABLE IF EXISTS `{db}`.`{table}`")
-            self._create_external(db, table, path)
-            return
         w = df.write.mode("overwrite")
         if layout:
             w = layout.apply(w)
         w.saveAsTable(f"`{db}`.`{table}`")
 
-    # -- external (metadata-only) publish machinery ---------------------------
+    # -- the flip: rename + explicit DDL ----------------------------------------
 
-    def _version_path(self, table: str) -> str:
+    def _version_name(self) -> str:
         return (
-            f"{self.external_root}/{self.target_db}/{table}/"
-            f"v_{int(time.time())}_{next(self._version_seq):06d}"
+            f"v_{int(time.time())}_{next(self._version_seq):06d}_"
+            f"{uuid.uuid4().hex[:8]}"
         )
 
-    def _create_external(self, db: str, table: str, path: str) -> None:
-        # partition discovery: a partitioned path needs MSCK-style
-        # repair; USING PARQUET LOCATION infers both schema and
-        # partitions at create time for the unpartitioned case, and
-        # partitioned dirs are handled by recoverPartitions below.
-        self._sql(
-            f"CREATE TABLE `{db}`.`{table}` USING PARQUET "
-            f"LOCATION '{path}'"
-        )
-        try:
-            self.spark.catalog.recoverPartitions(f"`{db}`.`{table}`")
-        except Exception:  # noqa: BLE001 - unpartitioned table
-            pass
+    def _version_root(self, db: str) -> str:
+        """Directory holding ``<table>/v_*`` for tables published into
+        ``db``: the external root's ``<target_db>`` dir, else ``db``'s
+        own location."""
+        if self.external_root:
+            return f"{self.external_root}/{self.target_db}"
+        return self.spark.catalog.getDatabase(db).locationUri
+
+    def _hpath(self, uri):
+        """(Hadoop Path, its FileSystem) for ``uri``."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(uri)
+        return path, path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+
+    def _catalog_table(self, db: str, table: str):
+        """The catalog's metadata of ``db.table`` (a JVM CatalogTable:
+        type, location, schema, partition and bucket spec), or None —
+        one catalog lookup, no SQL statement."""
+        state = self.spark._jsparkSession.sessionState()
+        ident = state.sqlParser().parseTableIdentifier(f"`{db}`.`{table}`")
+        catalog = state.catalog()
+        return catalog.getTableMetadata(ident) if catalog.tableExists(ident) else None
 
     def _table_location(self, db: str, table: str) -> str | None:
-        if not self.spark.catalog.tableExists(f"`{db}`.`{table}`"):
-            return None
-        rows = self.spark.sql(
-            f"DESCRIBE TABLE EXTENDED `{db}`.`{table}`"
-        ).collect()
-        for r in rows:
-            if r["col_name"] == "Location":
-                return r["data_type"]
-        return None
+        meta = self._catalog_table(db, table)
+        return str(meta.location()) if meta is not None else None
 
-    @staticmethod
-    def _fs_path(uri: str) -> str:
-        """file:/x, file:///x and /x all normalize to /x (DESCRIBE and
-        input_file_name disagree on slash count)."""
-        from urllib.parse import urlparse
+    def _create_sql(self, meta, db: str, table: str, location: str) -> str:
+        """``CREATE TABLE db.table … LOCATION`` re-creating ``meta``'s
+        columns and layout at ``location`` (SHOW CREATE TABLE's shape).
+        The explicit schema spares the schema-inference job an
+        inferred ``CREATE TABLE … LOCATION`` runs."""
+        as_list = self.spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
 
-        parsed = urlparse(uri)
-        return parsed.path if parsed.scheme else uri
+        def names(seq) -> str:
+            return ", ".join(f"`{c}`" for c in as_list(seq))
 
-    def _is_external(self, db: str, table: str) -> bool:
-        loc = self._table_location(db, table)
-        return bool(
-            loc
-            and self.external_root
-            and self._fs_path(loc).startswith(self.external_root)
+        ddl = (
+            f"CREATE TABLE `{db}`.`{table}` ({meta.schema().toDDL()}) "
+            f"USING {meta.provider().get()}"
         )
+        if meta.partitionColumnNames().nonEmpty():
+            ddl += f" PARTITIONED BY ({names(meta.partitionColumnNames())})"
+        if meta.bucketSpec().isDefined():
+            spec = meta.bucketSpec().get()
+            ddl += f" CLUSTERED BY ({names(spec.bucketColumnNames())})"
+            if spec.sortColumnNames().nonEmpty():
+                ddl += f" SORTED BY ({names(spec.sortColumnNames())})"
+            ddl += f" INTO {spec.numBuckets()} BUCKETS"
+        return f"{ddl} LOCATION '{_literal(location)}'"
 
-    def _prune_versions(
-        self, table: str, protect: set[str] | None = None
-    ) -> None:
-        """Delete version dirs beyond keep_versions, oldest first,
-        never the one the live table points at. Runs only after the
-        pointer flip: a crash strands extra files, never live data.
-        Local-FS/NFS only (os.listdir): on an object-store root this
-        is a silent no-op and version GC belongs to a lifecycle rule
-        on the bucket — stranded versions are still never wrong, just
-        unreclaimed.
+    def _flip(
+        self, staging_db: str, table: str, db: str, root: str,
+        replace: bool,
+    ) -> str:
+        """Publish staged ``table`` into ``db`` (module docstring steps
+        1-3) and return its version dir's name. ``replace`` looks up
+        and drops a target already there (the versioned mode's fresh
+        database has none)."""
+        staged = self._catalog_table(staging_db, table)
+        if staged is None:
+            raise ValueError(f"`{staging_db}`.`{table}` was never staged")
+        live = self._catalog_table(db, table) if replace else None
+        if live is not None and live.tableType().name() == "MANAGED":
+            # dropping a managed table deletes its directory: the base
+            # the new version is about to move into
+            self._sql(f"DROP TABLE `{db}`.`{table}`")
+            live = None
+        base, fs = self._hpath(f"{root}/{table}")
+        dst = self.spark._jvm.org.apache.hadoop.fs.Path(base, self._version_name())
+        fs.mkdirs(base)
+        if not fs.rename(self._hpath(staged.location())[0], dst):
+            raise OSError(f"publish {table}: could not move {staged.location()} to {dst}")
+        if live is not None:
+            self._sql(f"DROP TABLE `{db}`.`{table}`")
+        self._sql(self._create_sql(staged, db, table, dst.toString()))
+        if staged.partitionColumnNames().nonEmpty():
+            self.spark.catalog.recoverPartitions(f"`{db}`.`{table}`")
+        return dst.getName()
 
-        ``protect`` (versioned mode): the set of absolute paths still
-        referenced by any SURVIVING version database — every v_ dir
-        outside it is dropped, every dir inside it kept regardless of
-        count. The default per-table resolution (``target_db.table``'s
-        location) does not exist in versioned mode, so the caller must
-        supply the reference set."""
-        import os
-        import shutil
-
-        base = f"{self.external_root}/{self.target_db}/{table}"
-        if not os.path.isdir(base):
+    def _prune(self, base: str, keep: set[str], spare: int = 0) -> None:
+        """Delete every entry of the version base ``base`` except the
+        names in ``keep`` and the ``spare`` newest other ``v_`` dirs —
+        old versions, and orphan files a forgotten managed table of an
+        earlier session left there. Runs only after the flip."""
+        path, fs = self._hpath(base)
+        if not fs.exists(path):
             return
-        versions = sorted(
-            d for d in os.listdir(base) if d.startswith("v_")
+        entries = [st.getPath() for st in fs.listStatus(path)]
+        older = sorted(
+            p.getName() for p in entries
+            if p.getName().startswith("v_") and p.getName() not in keep
         )
-        if protect is not None:
-            for v in versions:
-                path = os.path.abspath(os.path.join(base, v))
-                if path not in protect:
-                    shutil.rmtree(path, ignore_errors=True)
-            return
-        live = self._fs_path(
-            self._table_location(self.target_db, table) or ""
-        )
-        excess = versions[: -self.keep_versions] if len(
-            versions
-        ) > self.keep_versions else []
-        for v in excess:
-            path = os.path.join(base, v)
-            if os.path.abspath(path) != os.path.abspath(live):
-                shutil.rmtree(path, ignore_errors=True)
+        keep = keep | set(older[len(older) - spare:] if spare else ())
+        for p in entries:
+            if p.getName() not in keep:
+                fs.delete(p, True)
 
     def publish_tables(
         self,
         staging_db: str,
         tables: list[str],
-        layouts: dict[str, TableLayout] | None = None,
         on_table_published=None,
     ) -> list[str]:
-        """Move results staging → target: drop-and-replace per table
+        """Move results staging → target, one flip per table
         (reference: drop_tables_if_they_exist + change_table_schemas,
-        load_dataset.py:163-169, 244-252). ``layouts`` re-applies
-        per-table partitioning/bucketing on the published copy.
+        load_dataset.py:163-169, 244-252). The staged table's layout
+        (partitioning, bucketing) carries over with its DDL.
         ``on_table_published(table)`` fires after each table lands
         (progress hooks; the versioned-mode atomicity test interleaves
         a reader here). With a :class:`VersionPointer` configured this
         routes to the cross-table-atomic versioned publish.
 
-        The per-table modes copy every table concurrently: each table
-        is one node of the load scheduler (publish/scheduler.py) that
-        publishes that table alone through this method, so the tables
-        are independent and a failure stops every copy not yet
-        started."""
+        Per-table flips run concurrently, one node of the load
+        scheduler (publish/scheduler.py) per table: a failure stops
+        every flip not yet started."""
+        self._sql(f"CREATE DATABASE IF NOT EXISTS `{self.target_db}`")
         if self.version_pointer is not None:
             return self._publish_tables_versioned(
-                staging_db, tables, layouts, on_table_published
+                staging_db, tables, on_table_published
             )
-        self._sql(f"CREATE DATABASE IF NOT EXISTS `{self.target_db}`")
-        if len(tables) != 1:
-            nodes = [
-                Node(partial(
-                    self.publish_tables, staging_db, [t], layouts,
-                    on_table_published,
-                ), creates=(t,))
-                for t in tables
-            ]
-            width = self.spark.sparkContext.defaultParallelism
-            return [p for ps in run_graph(nodes, width, self.spark) for p in ps]
-        (t,) = tables
-        if self._is_external(staging_db, t):
-            # metadata-only flip (the SET SCHEMA analog): target
-            # external table re-created at the staged files — no data
-            # movement; previous versions pruned AFTER.
-            path = self._table_location(staging_db, t)
-            self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
-            self._create_external(self.target_db, t, path)
-            self._prune_versions(t)
-        else:
-            self._reclaim_orphan_location(self.target_db, t)
-            src = self.spark.table(f"`{staging_db}`.`{t}`")
-            w = src.write.mode("overwrite")
-            if layouts and t in layouts:
-                w = layouts[t].apply(w)
-                if layouts[t].bucket_by:
-                    # saveAsTable cannot overwrite across a bucketing-
-                    # spec change, so bucketed publishes drop first.
-                    # This narrows per-table atomicity (reader gap +
-                    # loss-on-crash window) — accepted ONLY for tables
-                    # that opted into bucketing; plain tables keep the
-                    # atomic overwrite (files first, catalog flip last).
-                    self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
-            w.saveAsTable(f"`{self.target_db}`.`{t}`")
-        if on_table_published:
-            on_table_published(t)
-        return [f"{self.target_db}.{t}"]
+        root = self._version_root(self.target_db)
+
+        def publish(t: str) -> None:
+            version = self._flip(staging_db, t, self.target_db, root, replace=True)
+            self._prune(f"{root}/{t}", {version}, self.keep_versions - 1)
+            if on_table_published:
+                on_table_published(t)
+
+        nodes = [Node(partial(publish, t), creates=(t,)) for t in tables]
+        run_graph(nodes, self.spark.sparkContext.defaultParallelism, self.spark)
+        return [f"{self.target_db}.{t}" for t in tables]
 
     # -- versioned (cross-table atomic) publish --------------------------------
 
@@ -424,42 +410,28 @@ class Publisher:
         self,
         staging_db: str,
         tables: list[str],
-        layouts: dict[str, TableLayout] | None = None,
         on_table_published=None,
     ) -> list[str]:
-        """All-tables-one-commit publish: land EVERY table in a fresh
-        version database (external tables re-point at the staged files
-        — metadata only; managed tables copy), then commit with ONE
+        """All-tables-one-commit publish: flip EVERY table into a fresh
+        version database, then commit with ONE
         :meth:`VersionPointer.flip`. Readers resolving through the
         pointer see the previous version in full until the flip and
         the new version in full after it — the reference's
         single-transaction schema swap (load_dataset.py:244-252),
-        which the per-table modes above cannot give.
+        which the per-table flips above cannot give.
 
         The logical database keeps existing (empty) so unpointed
         readers fail on a missing table instead of a missing database;
         returned names are LOGICAL (``target.table``) — callers
         address tables through the pointer, not the version db."""
-        self._sql(f"CREATE DATABASE IF NOT EXISTS `{self.target_db}`")
         phys = version_db_name(
             self.target_db, int(time.time()), next(self._version_seq)
         )
         self._sql(f"CREATE DATABASE `{phys}`")
+        root = self._version_root(phys)
         try:
             for t in tables:
-                if self._is_external(staging_db, t):
-                    path = self._table_location(staging_db, t)
-                    self._create_external(phys, t, path)
-                else:
-                    # a same-named version db from a crashed PREVIOUS
-                    # session can leave orphaned warehouse dirs
-                    self._reclaim_orphan_location(phys, t)
-                    w = self.spark.table(
-                        f"`{staging_db}`.`{t}`"
-                    ).write.mode("overwrite")
-                    if layouts and t in layouts:
-                        w = layouts[t].apply(w)
-                    w.saveAsTable(f"`{phys}`.`{t}`")
+                self._flip(staging_db, t, phys, root, replace=False)
                 if on_table_published:
                     on_table_published(t)
         except BaseException:
@@ -469,22 +441,17 @@ class Publisher:
             raise
         self.version_pointer.flip(self.target_db, phys)  # THE commit
         survivors = self._prune_version_dbs()
-        # external-table FILE versions: a dropped version db leaves
-        # its files behind (DROP on an external table is metadata
-        # only) — delete every v_ dir no surviving version database
-        # still references, and never one that is
+        # version dirs under an external root outlive DROP DATABASE:
+        # delete every one no surviving version database references
+        # (without a root they live in their database's directory and
+        # go with it)
         if self.external_root:
-            import os
-
             for t in tables:
-                if not self._is_external(phys, t):
-                    continue
-                protect = set()
-                for db in survivors:
-                    loc = self._table_location(db, t)
-                    if loc:
-                        protect.add(os.path.abspath(self._fs_path(loc)))
-                self._prune_versions(t, protect=protect)
+                refs = {self._table_location(db, t) for db in survivors}
+                self._prune(
+                    f"{root}/{t}",
+                    {loc.rstrip("/").rsplit("/", 1)[-1] for loc in refs if loc},
+                )
         return [f"{self.target_db}.{t}" for t in tables]
 
     def _prune_version_dbs(self) -> list[str]:

@@ -12,7 +12,7 @@ have finished. One scheduler serves every level of a load:
   ``depends_on`` datasets;
 - a load's staging writes, validations, script statements and populate
   hooks (:func:`script_nodes` turns scripts into statement nodes);
-- ``Publisher.publish_tables`` in copy mode: one node per table.
+- ``Publisher.publish_tables``: one node per table flip.
 
 Ordering rule. Nodes are given in their serial order, and node ``j``
 waits for an earlier node ``i`` when ``i`` creates a name ``j`` reads

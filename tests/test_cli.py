@@ -31,6 +31,21 @@ def test_rowcounts(spark, cli_db, capsys):
     assert "cli_test.t1\t3" in out and "cli_test.t2\t5" in out
 
 
+def test_table_listings_skip_session_temp_views(spark, cli_db, kv, capsys):
+    """listTables(db) also returns the session's temp views (such as
+    the __tablefn_* views of table-function calls); they are not
+    tables of ``db``."""
+    spark.range(2).createOrReplaceTempView("__tablefn_cli_probe")
+    try:
+        assert cli.main(["rowcounts", cli_db]) == 0
+        assert cli.main(["grant-schema-read", cli_db, "readonly"]) == 0
+    finally:
+        spark.catalog.dropTempView("__tablefn_cli_probe")
+    out = capsys.readouterr().out
+    assert "cli_test.t1\t3" in out
+    assert "__tablefn_cli_probe" not in out
+
+
 def test_sql_statement(spark, cli_db, capsys):
     assert (
         cli.main(

@@ -344,7 +344,7 @@ class TestTableLayouts:
         with pub.staging("layoutds") as db:
             pub.write_staging_table(db, "ta", a, layout)
             pub.write_staging_table(db, "tb", b, layout)
-            pub.publish_tables(db, ["ta", "tb"], {"ta": layout, "tb": layout})
+            pub.publish_tables(db, ["ta", "tb"])
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             joined = spark.table("layout_test.ta").join(
@@ -369,9 +369,7 @@ class TestTableLayouts:
             pub.write_staging_table(
                 db, "tp", df, TableLayout(partition_by=["part"])
             )
-            pub.publish_tables(
-                db, ["tp"], {"tp": TableLayout(partition_by=["part"])}
-            )
+            pub.publish_tables(db, ["tp"])
         try:
             q = spark.table("layout_test2.tp").filter("part = 2")
             plan = q._jdf.queryExecution().executedPlan().toString()
@@ -383,6 +381,156 @@ class TestTableLayouts:
             assert "= 2" in part_filters
         finally:
             pub.drop_db("layout_test2")
+
+
+class TestMoveFlip:
+    """publish_tables moves each staged directory into a fresh version
+    dir and re-creates the target from the staged table's DDL: no
+    Spark job, no second copy of the data."""
+
+    @staticmethod
+    def _base(spark, db: str, table: str) -> str:
+        from urllib.parse import urlparse
+
+        return os.path.join(
+            urlparse(spark.catalog.getDatabase(db).locationUri).path, table
+        )
+
+    def test_publish_runs_no_spark_job(self, spark):
+        from nycdb_k8s_loader_spark.publish.protocol import TableLayout
+
+        pub = Publisher(spark, target_db="flip_jobs")
+        sc = spark.sparkContext
+        df = spark.range(40).selectExpr("id AS k", "id % 4 AS part")
+        layouts = {
+            "plain": None,
+            "parted": TableLayout(partition_by=["part"]),
+            "bucketed": TableLayout(bucket_by=["k"], n_buckets=4),
+        }
+        try:
+            with pub.staging("flipjobs") as db:
+                for t, layout in layouts.items():
+                    pub.write_staging_table(db, t, df, layout)
+                sc.setJobGroup("flip-jobs-probe", "publish_tables")
+                try:
+                    pub.publish_tables(db, list(layouts))
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+            jobs = sc.statusTracker().getJobIdsForGroup("flip-jobs-probe")
+            assert list(jobs) == []
+            for t in layouts:
+                assert spark.table(f"flip_jobs.{t}").count() == 40
+            assert spark.table("flip_jobs.parted").filter(
+                "part = 1"
+            ).count() == 10
+        finally:
+            pub.drop_db("flip_jobs")
+
+    def test_publish_over_managed_target_keeps_new_version(self, spark):
+        """Dropping a managed table deletes its directory, which is
+        where the new version dir goes: the new rows must survive."""
+        pub = Publisher(spark, target_db="flip_managed")
+        spark.sql("CREATE DATABASE IF NOT EXISTS flip_managed")
+        try:
+            spark.range(3).write.saveAsTable("flip_managed.t")
+            assert spark.catalog.getTable(
+                "flip_managed.t"
+            ).tableType == "MANAGED"
+            with pub.staging("flipmanaged") as db:
+                pub.write_staging_table(db, "t", spark.range(5))
+                pub.publish_tables(db, ["t"])
+            assert spark.table("flip_managed.t").count() == 5
+            entries = os.listdir(self._base(spark, "flip_managed", "t"))
+            assert len(entries) == 1 and entries[0].startswith("v_")
+        finally:
+            pub.drop_db("flip_managed")
+
+    def test_orphan_base_dir_is_not_read(self, spark):
+        """An earlier session's managed table the in-memory catalog
+        forgot leaves files in the table's base dir: the publish
+        neither fails on them nor serves them."""
+        pub = Publisher(spark, target_db="flip_orphan")
+        spark.sql("CREATE DATABASE IF NOT EXISTS flip_orphan")
+        base = self._base(spark, "flip_orphan", "t")
+        spark.range(100).write.parquet(base)
+        try:
+            with pub.staging("fliporphan") as db:
+                pub.write_staging_table(db, "t", spark.range(5))
+                pub.publish_tables(db, ["t"])
+            assert sorted(
+                r.id for r in spark.table("flip_orphan.t").collect()
+            ) == list(range(5))
+        finally:
+            pub.drop_db("flip_orphan")
+
+    def test_same_second_publishers_get_distinct_version_dirs(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Two Publishers (a custom pipeline builds one per run) in the
+        same second must not share a version dir: the second one's
+        staged files would overwrite those the live table reads."""
+        import types
+
+        from nycdb_k8s_loader_spark.publish import protocol
+
+        monkeypatch.setattr(
+            protocol, "time", types.SimpleNamespace(time=lambda: 1.7e9)
+        )
+        root = str(tmp_path / "ext")
+        a = Publisher(spark, "flip_same_second", external_root=root)
+        b = Publisher(spark, "flip_same_second", external_root=root)
+        try:
+            with a.staging("samesec") as db:
+                a.write_staging_table(db, "t", spark.range(3))
+                a.publish_tables(db, ["t"])
+            with b.staging("samesec") as db:
+                b.write_staging_table(db, "t", spark.range(7))
+                spark.catalog.refreshTable("flip_same_second.t")
+                assert spark.table("flip_same_second.t").count() == 3
+                b.publish_tables(db, ["t"])
+            assert spark.table("flip_same_second.t").count() == 7
+            assert len(os.listdir(f"{root}/flip_same_second/t")) == 1
+        finally:
+            a.drop_db("flip_same_second")
+
+
+class TestCustomPipelineFunctionReplay:
+    def test_non_spark_function_ddl_is_skipped_after_publish(
+        self, spark, tmp_path
+    ):
+        """A custom pipeline's plpgsql function is logged and skipped
+        at replay, as in a standard load — not raised after its tables
+        published, which would leave the tracker un-updated."""
+        from nycdb_k8s_loader_spark.datasets import _custom_pipeline
+
+        script = tmp_path / "post.sql"
+        script.write_text(
+            """
+            CREATE TABLE replay_t AS SELECT 1 AS a;
+            CREATE OR REPLACE FUNCTION replay_plpgsql(x int)
+            RETURNS int AS $$ BEGIN RETURN x; END; $$ LANGUAGE plpgsql;
+            """
+        )
+        reg = Registry()
+        reg.add(DatasetDef(
+            name="replayds",
+            builder=lambda sp, eng: _custom_pipeline(
+                sp, eng, name="replayds", label="replay",
+                target_schema="replay_db", tables=["replay_t"],
+                post_scripts=[str(script)],
+            ),
+        ))
+        eng = make_engine(
+            spark, reg, str(tmp_path / "landing"), db="replay_db"
+        )
+        try:
+            res = eng.load("replayds")
+            assert res.published == ["replay_db.replay_t"]
+            assert spark.table("replay_db.replay_t").count() == 1
+            assert eng.tracker.get_last_refresh("replayds") is not None
+        finally:
+            spark.sql("DROP DATABASE IF EXISTS replay_db CASCADE")
 
 
 class TestGrantRegistry:
@@ -683,17 +831,19 @@ class TestExternalPublish:
                 "ext_pub_test", "rentstab_summary"
             )
             assert root in loc
-            from nycdb_k8s_loader_spark.publish.protocol import (
-                Publisher as _P,
-            )
+            from urllib.parse import urlparse
+
+            def fs_path(uri: str) -> str:
+                # file:/x, file:///x and /x all normalize to /x
+                return urlparse(uri).path
 
             files = {
-                _P._fs_path(os.path.dirname(r[0]))
+                fs_path(os.path.dirname(r[0]))
                 for r in spark.table(tbl)
                 .selectExpr("input_file_name()")
                 .collect()
             }
-            assert files == {_P._fs_path(loc)}
+            assert files == {fs_path(loc)}
             assert spark.catalog.getTable(tbl).tableType == "EXTERNAL"
 
             # reload: a NEW version dir goes live; the old one is
@@ -706,7 +856,7 @@ class TestExternalPublish:
             assert loc2 != loc
             base = os.path.join(root, "ext_pub_test", "rentstab_summary")
             assert sorted(os.listdir(base)) == [
-                os.path.basename(_P._fs_path(loc2))
+                os.path.basename(fs_path(loc2))
             ]
         finally:
             spark.sql("DROP DATABASE IF EXISTS ext_pub_test CASCADE")
