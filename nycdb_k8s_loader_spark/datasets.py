@@ -1,4 +1,4 @@
-"""Concrete dataset registry entries + the WOW custom-dataset builder.
+"""Concrete dataset registry entries, the four custom pipelines included.
 
 The reference consumes ~36 loadable datasets from the nycdb registry
 (/root/reference/load_dataset.py:92-118) and layers four custom
@@ -6,15 +6,20 @@ pipelines on top (wow/oca/signature/good-cause, dispatch at
 load_dataset.py:319-338). This module ships the concrete
 :class:`~nycdb_k8s_loader_spark.registry.DatasetDef` entries for the
 WOW dependency closure — typed StructTypes, source-file manifests,
-dependency edges — plus :func:`build_wow`, the Spark re-expression of
-the reference's marquee pipeline (/root/reference/wowutil.py:144-186):
+dependency edges — and for the four custom pipelines, which the engine
+loads exactly like any other entry (``Engine._standard_load``). Each
+names its own target schema, notifier label and scratch tables; wow
+also carries :func:`build_wow`, the Python step of the reference's
+marquee pipeline (/root/reference/wowutil.py:144-186):
 
     pre-SQL (transpiled Postgres scripts, temp-schema scoped)
-      → populate_landlords  (name standardization, Python step)
-      → populate_portfolios (landlord graph → connected components)
+      → build_wow: populate_landlords  (name standardization)
+                   populate_portfolios (landlord graph → connected
+                                        components)
       → post-SQL (wow_bldgs rollup)
       → atomic publish into the ``wow`` namespace
       → re-register function DDL post-swap
+      → lastmod-gated landlord search-index export
 
 Scale notes (the 100 TB story the reference's driver-side networkx
 portfolio build cannot tell, wowutil.py:74-85):
@@ -35,16 +40,15 @@ transport + downloader (the engine treats URLs as opaque).
 from __future__ import annotations
 
 import os
-from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph, script_nodes
 from nycdb_k8s_loader_spark.publish.validate import TableChecks
 from nycdb_k8s_loader_spark.registry import (
     DatasetDef,
+    Populate,
     Registry,
     SourceFile,
     TableDef,
@@ -59,12 +63,6 @@ WOW_SCHEMA = "wow"
 OCA_SCHEMA = "oca"
 SIGNATURE_SCHEMA = "signature"
 
-WOW_PRE_SCRIPTS = [os.path.join(SQL_DIR, "wow_pre_landlords.sql")]
-WOW_POST_SCRIPTS = [os.path.join(SQL_DIR, "wow_post_bldgs.sql")]
-OCA_POST_SCRIPTS = [os.path.join(SQL_DIR, "oca_post_evictions.sql")]
-SIGNATURE_POST_SCRIPTS = [os.path.join(SQL_DIR, "signature_post.sql")]
-GCE_SCRIPTS = [os.path.join(SQL_DIR, "gce_screener.sql")]
-
 #: Tables produced by the Python populate steps rather than SQL —
 #: preserved across publishes like the reference's
 #: EXTRA_TABLES_TO_PRESERVE (wowutil.py:56).
@@ -73,9 +71,10 @@ WOW_PYTHON_TABLES = ["wow_landlords", "wow_portfolios"]
 #: Published-table contracts, mirroring the reference's explicit lists
 #: (wowutil parse_created_tables_in_dir + EXTRA, ocautil.py:42-46
 #: OCA_TABLES, signatureutil.py:43-50 SIGNATURE_TABLES,
-#: goodcauseutil.py:38 GOOD_CAUSE_TABLES). Staging scaffolds
+#: goodcauseutil.py:38 GOOD_CAUSE_TABLES). Each pipeline's scripts and
+#: hooks create exactly these plus its ``scratch`` scaffolds
 #: (wow_landlords_base, signature_loan_status_latest,
-#: gce_portfolio_sizes) die with the staging namespace.
+#: gce_portfolio_sizes), which die with the staging namespace.
 WOW_TABLES = WOW_PYTHON_TABLES + [
     "wow_deeds", "wow_lastsale", "wow_viol", "wow_comp",
     "wow_regowners", "wow_bldgs",
@@ -392,8 +391,9 @@ def _standard_defs() -> list[DatasetDef]:
 def wow_registry() -> Registry:
     """Registry shipping the WOW closure + all four custom pipelines
     (wow / oca_address / signature / good_cause_eviction — the
-    reference's builder surface, load_dataset.py:319-338), so
-    ``Engine(...).load_all([...])`` executes each end-to-end."""
+    reference's builder surface, load_dataset.py:319-338, here plain
+    entries with their own schema), so ``Engine(...).load_all([...])``
+    executes each end-to-end."""
     reg = Registry()
     for ds in _standard_defs():
         reg.add(ds)
@@ -412,9 +412,22 @@ def wow_registry() -> Registry:
             # (the reference rebuilds wow on schedule, wowutil.py:144).
             files=[],
             tables=[TableDef(t) for t in WOW_TABLES],
+            # build_wow is looked up here, per call, so a wrapper
+            # installed on the module attribute takes effect
+            sql=[
+                os.path.join(SQL_DIR, "wow_pre_landlords.sql"),
+                Populate(
+                    build_wow, creates=tuple(WOW_PYTHON_TABLES),
+                    reads=("wow_landlords_base",),
+                ),
+                os.path.join(SQL_DIR, "wow_post_bldgs.sql"),
+            ],
             depends_on=list(WOW_DEPENDENCIES),
             schedule="wow",
-            builder=build_wow,
+            schema=WOW_SCHEMA,
+            scratch=["wow_landlords_base"],
+            label="Who Owns What tables",
+            after_publish=update_landlord_search_index,
         )
     )
     reg.add(
@@ -442,9 +455,11 @@ def wow_registry() -> Registry:
                 TableDef("oca_addresses_with_bbl", OCA_ADDRESSES_SCHEMA),
                 *[TableDef(t) for t in OCA_TABLES[1:]],
             ],
+            sql=[os.path.join(SQL_DIR, "oca_post_evictions.sql")],
             depends_on=["oca"],
             schedule="oca_address",
-            builder=build_oca_address,
+            schema=OCA_SCHEMA,
+            label="OCA evictions tables",
         )
     )
     reg.add(
@@ -471,9 +486,12 @@ def wow_registry() -> Registry:
                 ),
                 *[TableDef(t) for t in SIGNATURE_TABLES[2:]],
             ],
+            sql=[os.path.join(SQL_DIR, "signature_post.sql")],
             depends_on=["hpd_violations"],
             schedule="signature",
-            builder=build_signature,
+            schema=SIGNATURE_SCHEMA,
+            scratch=["signature_loan_status_latest"],
+            label="Signature tables",
         )
     )
     reg.add(
@@ -481,9 +499,15 @@ def wow_registry() -> Registry:
             name="good_cause_eviction",
             files=[],
             tables=[TableDef(t) for t in GOOD_CAUSE_TABLES],
+            # derived from the published wow tables (found through
+            # wow's schema on the search path), published INTO the wow
+            # schema exactly like the reference (goodcauseutil.py:36,69)
+            sql=[os.path.join(SQL_DIR, "gce_screener.sql")],
             depends_on=["wow"],
             schedule="good_cause_eviction",
-            builder=build_good_cause,
+            schema=WOW_SCHEMA,
+            scratch=["gce_portfolio_sizes"],
+            label="Good Cause Eviction tables",
         )
     )
     return reg
@@ -493,23 +517,7 @@ def wow_registry() -> Registry:
 builtin_registry = wow_registry
 
 
-# -- the wow builder ----------------------------------------------------------
-
-
-def _run_scripts(
-    spark, resolver, scripts, function_stmts, functions=None
-) -> list[str]:
-    """Run every statement of each Postgres-dialect script through the
-    load scheduler (publish/scheduler.py: independent CTAS statements
-    overlap; barriers keep script order); function DDL is collected
-    for post-publish replay (reference wowutil.py:170-181). With
-    ``functions`` (a FunctionRegistry), table-function calls in FROM
-    position are materialized to temp views first, so reference
-    scripts invoking ``wow.get_assoc_addrs_from_bbl(...)`` run
-    unmodified. Returns created table names."""
-    nodes = script_nodes(spark, resolver, scripts, function_stmts, functions)
-    run_graph(nodes, spark.sparkContext.defaultParallelism, spark)
-    return list(dict.fromkeys(t for n in nodes for t in n.creates))
+# -- the wow populate step ----------------------------------------------------
 
 
 def populate_landlords(spark: SparkSession, staging_db: str) -> None:
@@ -575,106 +583,14 @@ def populate_portfolios(spark: SparkSession, staging_db: str) -> None:
     )
 
 
-def _custom_pipeline(
-    spark: SparkSession,
-    engine,
-    *,
-    name: str,
-    label: str,
-    target_schema: str,
-    tables: list[str],
-    pre_scripts: tuple | list = (),
-    populate=None,
-    populate_creates: tuple | list | None = None,
-    populate_reads: tuple | list = (),
-    post_scripts: tuple | list = (),
-    extra_namespaces: tuple | list = (),
-) -> list[str]:
-    """The skeleton all four reference custom pipelines share
-    (wowutil.py:144-186, ocautil.py:70-98, signatureutil.py:73-101,
-    goodcauseutil.py:53-81): staging namespace → source-CSV ingest
-    (typed, per the DatasetDef) → transpiled pre-SQL → Python populate
-    hook → post-SQL → grant-snapshot publish of the declared table
-    list into the pipeline's own schema → function-DDL replay. The
-    staging namespace always drops (success or error), so scaffolding
-    tables never leak and a failed build leaves the published tables
-    untouched.
-
-    Ingest, statements and the populate hook form one dependency graph
-    (publish/scheduler.py): a step starts once the steps creating the
-    tables it names have finished. ``populate_creates`` /
-    ``populate_reads`` declare the hook's tables; an undeclared hook is
-    a barrier."""
-    from nycdb_k8s_loader_spark.publish.protocol import Publisher
-
-    engine.notifier.safe_notify(f"Rebuilding {label}...")
-    ds = engine.registry.get(name)
-    pub = Publisher(
-        spark, target_schema,
-        external_root=engine.publish_external_root,
-    )
-    function_stmts: list[str] = []
-    with pub.staging(name) as staging_db:
-        # source ingest — same contract as the standard load's (the
-        # reference's builders pull S3 objects themselves,
-        # ocautil.py:56-61; here the engine's downloader/transport
-        # abstraction covers s3:// via sources.readers.fetch_to_landing)
-        dest_paths = engine.land_sources(ds)
-        nodes = (
-            engine.staging_nodes(ds, pub, staging_db, dest_paths)
-            if dest_paths else []
-        )
-        resolver = engine.resolver(staging_db, *extra_namespaces)
-        nodes += script_nodes(
-            spark, resolver, pre_scripts, function_stmts, engine.functions
-        )
-        if populate is not None:
-            nodes.append(Node(
-                partial(populate, spark, staging_db),
-                creates=tuple(populate_creates or ()),
-                reads=tuple(populate_reads),
-                barrier=populate_creates is None,
-            ))
-        nodes += script_nodes(
-            spark, resolver, post_scripts, function_stmts, engine.functions
-        )
-        run_graph(nodes, spark.sparkContext.defaultParallelism, spark)
-        with engine.grants.save_and_reapply(target_schema, tables):
-            published = pub.publish_tables(staging_db, tables)
-
-    # Function DDL replay after the swap (wowutil.py:170-181: the temp
-    # schema's functions died with it; re-create against the published
-    # namespace).
-    engine.replay_functions(function_stmts)
-    engine.notifier.safe_notify(f"Finished rebuilding {label}.")
-    return published
-
-
-def build_wow(spark: SparkSession, engine) -> list[str]:
-    """Custom-dataset builder for ``wow`` (reference build(),
-    wowutil.py:144-186): pre-SQL → landlord normalization → portfolio
-    connected components → post-SQL rollup → publish into WOW_SCHEMA →
-    lastmod-gated landlord-index export. Idempotent: rerunning
-    overwrites deterministically."""
-
-    def populate(spark, staging_db):
-        populate_landlords(spark, staging_db)
-        populate_portfolios(spark, staging_db)
-
-    published = _custom_pipeline(
-        spark, engine,
-        name="wow",
-        label="Who Owns What tables",
-        target_schema=WOW_SCHEMA,
-        tables=WOW_TABLES,
-        pre_scripts=WOW_PRE_SCRIPTS,
-        populate=populate,
-        populate_creates=WOW_PYTHON_TABLES,
-        populate_reads=["wow_landlords_base"],
-        post_scripts=WOW_POST_SCRIPTS,
-    )
-    update_landlord_search_index(engine)
-    return published
+def build_wow(spark: SparkSession, staging_db: str) -> None:
+    """wow's populate hook (reference build(), wowutil.py:144-186,
+    between the pre- and post-SQL): landlord normalization, then the
+    portfolio connected components, both written into the load's
+    staging namespace. Idempotent: rerunning overwrites
+    deterministically."""
+    populate_landlords(spark, staging_db)
+    populate_portfolios(spark, staging_db)
 
 
 def update_landlord_search_index(engine) -> bool:
@@ -705,48 +621,3 @@ def update_landlord_search_index(engine) -> bool:
             "Finished rebuilding landlord search index."
         )
     return ran
-
-
-def build_oca_address(spark: SparkSession, engine) -> list[str]:
-    """OCA evictions pipeline (reference ocautil.py:70-98): S3 address
-    table → monthly/per-building rollups → the ``oca`` schema. The
-    oca_index dependency table resolves from the published namespace
-    (depends_on=["oca"])."""
-    return _custom_pipeline(
-        spark, engine,
-        name="oca_address",
-        label="OCA evictions tables",
-        target_schema=OCA_SCHEMA,
-        tables=OCA_TABLES,
-        post_scripts=OCA_POST_SCRIPTS,
-    )
-
-
-def build_signature(spark: SparkSession, engine) -> list[str]:
-    """Signature dashboard pipeline (reference signatureutil.py:73-101):
-    S3 UNHP building/loan tables + the hpd_violations dependency →
-    building/collection rollups + chart series → the ``signature``
-    schema."""
-    return _custom_pipeline(
-        spark, engine,
-        name="signature",
-        label="Signature tables",
-        target_schema=SIGNATURE_SCHEMA,
-        tables=SIGNATURE_TABLES,
-        post_scripts=SIGNATURE_POST_SCRIPTS,
-    )
-
-
-def build_good_cause(spark: SparkSession, engine) -> list[str]:
-    """Good Cause Eviction screener (reference goodcauseutil.py:53-81):
-    derived from the published wow tables, published INTO the wow
-    schema exactly like the reference (goodcauseutil.py:36,69)."""
-    return _custom_pipeline(
-        spark, engine,
-        name="good_cause_eviction",
-        label="Good Cause Eviction tables",
-        target_schema=WOW_SCHEMA,
-        tables=GOOD_CAUSE_TABLES,
-        post_scripts=GCE_SCRIPTS,
-        extra_namespaces=(WOW_SCHEMA,),
-    )

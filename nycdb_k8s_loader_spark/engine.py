@@ -17,8 +17,11 @@ Spark re-expression of /root/reference/load_dataset.py:308-381:
 Boundary behavior mirrors the reference exactly: 304-everywhere skips
 the Spark job entirely (work avoidance, lastmod.py:49-62 +
 load_dataset.py:352-357); state is persisted only after a successful
-publish so a crashed load retries from scratch; custom datasets
-dispatch to registered builders (load_dataset.py:319-338).
+publish so a crashed load retries from scratch. The reference's custom
+datasets (wow/oca/signature/good-cause, load_dataset.py:319-338) run
+the same lifecycle: they are registry entries with their own target
+schema and Python populate hooks among their scripts, so every dataset
+validates, publishes and honours the version pointer in one place.
 
 Concurrency. The reference runs all of this one statement at a time on
 one connection; here every step that starts Spark jobs is a node of
@@ -64,7 +67,7 @@ from nycdb_k8s_loader_spark.publish.parse_created_tables import (
 from nycdb_k8s_loader_spark.publish.protocol import Publisher
 from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
 from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph, script_nodes
-from nycdb_k8s_loader_spark.registry import DatasetDef, Registry
+from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry
 from nycdb_k8s_loader_spark.sources.readers import read_source_table
 from nycdb_k8s_loader_spark.state.lastmod import Transport, UrlModTracker, requests_transport
 from nycdb_k8s_loader_spark.state.tracker import DatasetTracker
@@ -131,12 +134,10 @@ class Engine:
         self.version_pointer = (
             VersionPointer(kv) if versioned_publish else None
         )
-        self.publisher = Publisher(
-            spark,
-            target_db,
-            external_root=publish_external_root,
-            version_pointer=self.version_pointer,
-        )
+        # one Publisher per target database, all with this engine's
+        # external root and version pointer (publisher_for)
+        self._publishers: dict[str, Publisher] = {}
+        self.publisher = self.publisher_for(target_db)
         self.landing_root = landing_root
         self.transport = transport
         self.downloader = downloader or self._download
@@ -158,7 +159,9 @@ class Engine:
             register_reference_fns,
         )
 
-        register_reference_fns(self.functions, target_db=target_db)
+        register_reference_fns(
+            self.functions, target_db=target_db, pointer=self.version_pointer
+        )
         # Named downstream exporters (reference: the Algolia landlord-
         # index client, wowutil.py:101-110 — "not configured" is a
         # notified skip, never an error). Builders gate these through
@@ -172,7 +175,9 @@ class Engine:
         # protect and every Spark job runs as soon as its inputs exist.
         self._state_lock = threading.Lock()
         # session-start registration (reference re-creates functions at
-        # connect time via search-path scripts; O2/U2)
+        # connect time via search-path scripts; O2/U2). Temp functions
+        # are session-scoped and survive every publish, so this is the
+        # only time the registry is applied.
         self.functions.apply(spark)
 
     @staticmethod
@@ -180,6 +185,21 @@ class Engine:
         import urllib.request
 
         urllib.request.urlretrieve(url, dest)
+
+    def publisher_for(self, db: str | None) -> Publisher:
+        """The Publisher for target database ``db`` (None → the
+        engine's target_db)."""
+        db = db or self.publisher.target_db
+        if db not in self._publishers:
+            # setdefault, not assignment: two loads starting at once
+            # into one new schema must share one Publisher (its
+            # sequence keeps their version names apart)
+            self._publishers.setdefault(db, Publisher(
+                self.spark, db,
+                external_root=self.publish_external_root,
+                version_pointer=self.version_pointer,
+            ))
+        return self._publishers[db]
 
     def read_published(self, table: str):
         """Read a published table the way a downstream consumer should:
@@ -203,12 +223,7 @@ class Engine:
             self.notifier.safe_notify(f"{name} is unchanged; skipping load.")
             return LoadResult(dataset=name, skipped=True)
 
-        if ds.builder is not None:
-            # Custom-dataset dispatch (load_dataset.py:319-338).
-            published = ds.builder(self.spark, self)
-        else:
-            published = self._standard_load(ds)
-
+        published = self._standard_load(ds)
         with self._state_lock:
             modtracker.update_lastmods()
             self.tracker.update_tracker(name)
@@ -255,25 +270,47 @@ class Engine:
             if t.schema is not None
         ]
 
-    def resolver(self, staging_db: str, *namespaces: str) -> SearchPathResolver:
-        """Staging-first name resolution for a load's scripts. ddl_db
-        qualifies CTAS/DROP/RENAME targets into THIS load's staging
-        namespace — no session-global setCurrentDatabase, so
-        concurrent loads and concurrent statements share no state."""
-        return SearchPathResolver(
+    def sql_nodes(
+        self, ds: DatasetDef, staging_db: str, function_stmts: list[str]
+    ) -> list[Node]:
+        """One node per statement of each script in ``ds.sql`` and one
+        per populate hook, in list order. Names resolve staging first,
+        then through the target schema of every dataset ``ds`` depends
+        on, then the engine's search path; ddl_db qualifies
+        CTAS/DROP/RENAME targets into THIS load's staging namespace —
+        no session-global setCurrentDatabase, so concurrent loads and
+        concurrent statements share no state."""
+        deps = [self.registry.get(d).schema for d in ds.depends_on]
+        resolver = SearchPathResolver(
             self.spark,
-            [staging_db, *namespaces, *self.search_path],
+            list(dict.fromkeys(
+                [staging_db, *filter(None, deps), *self.search_path]
+            )),
             ddl_db=staging_db,
             pointer=self.version_pointer,
         )
+        nodes: list[Node] = []
+        for entry in ds.sql:
+            if isinstance(entry, Populate):
+                nodes.append(Node(
+                    partial(entry.run, self.spark, staging_db),
+                    creates=entry.creates, reads=entry.reads,
+                ))
+            else:
+                nodes += script_nodes(
+                    self.spark, resolver, [entry], function_stmts,
+                    self.functions,
+                )
+        return nodes
 
     def replay_functions(self, function_stmts: list[str]) -> None:
-        """Post-publish function re-registration (reference:
-        load_dataset.py:372-376). Registry functions always re-apply;
-        script-declared functions run if they are Spark-compatible DDL
-        (CREATE TEMPORARY FUNCTION ... RETURN expr) — Postgres
-        procedural bodies are logged and skipped."""
-        self.functions.apply(self.spark)
+        """Post-publish registration of the function DDL a load's
+        scripts declare (reference: load_dataset.py:372-376): it runs
+        if it is Spark-compatible DDL (CREATE TEMPORARY FUNCTION ...
+        RETURN expr) — Postgres procedural bodies are logged and
+        skipped. The FunctionRegistry is not re-applied: its temp
+        functions were registered when the engine started and outlive
+        every publish."""
         for stmt in function_stmts:
             try:
                 self.spark.sql(stmt)
@@ -284,18 +321,26 @@ class Engine:
                 )
 
     def _standard_load(self, ds: DatasetDef) -> list[str]:
+        """The load of every registry dataset (the reference's custom
+        builders included, wowutil.py:144-186): land → staging writes
+        → scripts and populate hooks → validation → grant-snapshot
+        publish → function-DDL replay → ``after_publish``."""
         from nycdb_k8s_loader_spark.publish.validate import validate_or_raise
 
+        if ds.label:
+            self.notifier.safe_notify(f"Rebuilding {ds.label}...")
         dest_paths = self.land_sources(ds)
+        publisher = self.publisher_for(ds.schema)
         function_stmts: list[str] = []
-        with self.publisher.staging(ds.name) as staging_db:
+        with publisher.staging(ds.name) as staging_db:
             # staging writes → SQL scripts (one node per statement,
             # staging-first resolution; function DDL is collected per
             # STATEMENT, so a mixed script's CREATE TABLEs still run)
-            # → validation gate, as one dependency graph: every Spark
-            # job starts once the tables it names exist. A failed
-            # check raises before anything publishes; the staging ctx
-            # drops and readers keep the last good version.
+            # and populate hooks → validation gate, as one dependency
+            # graph: every Spark job starts once the tables it names
+            # exist. A failed check raises before anything publishes;
+            # the staging ctx drops and readers keep the last good
+            # version.
             def validate(table) -> None:
                 validate_or_raise(
                     table.name,
@@ -303,11 +348,8 @@ class Engine:
                     table.checks,
                 )
 
-            nodes = self.staging_nodes(ds, self.publisher, staging_db, dest_paths)
-            nodes += script_nodes(
-                self.spark, self.resolver(staging_db), ds.sql,
-                function_stmts, self.functions,
-            )
+            nodes = self.staging_nodes(ds, publisher, staging_db, dest_paths)
+            nodes += self.sql_nodes(ds, staging_db, function_stmts)
             nodes += [
                 Node(partial(validate, t), reads=(t.name,))
                 for t in ds.tables
@@ -317,13 +359,13 @@ class Engine:
 
             # atomic publish, grants snapshotted across the swap
             created = _created_tables(ds)
-            with self.grants.save_and_reapply(
-                self.publisher.target_db, created
-            ):
-                published = self.publisher.publish_tables(
-                    staging_db, created
-                )
+            with self.grants.save_and_reapply(publisher.target_db, created):
+                published = publisher.publish_tables(staging_db, created)
         self.replay_functions(function_stmts)
+        if ds.label:
+            self.notifier.safe_notify(f"Finished rebuilding {ds.label}.")
+        if ds.after_publish is not None:
+            ds.after_publish(self)
         return published
 
     def load_streaming(
@@ -392,6 +434,7 @@ class Engine:
         )
 
         ds = self.registry.get(name)
+        publisher = self.publisher_for(ds.schema)
         formats = {f.dest: f.format for f in ds.files}
         typed = [t for t in ds.tables if t.schema is not None]
 
@@ -409,7 +452,7 @@ class Engine:
                 )
             return next(iter(fmts))
         pending_commits: list[tuple[str, str, list[str]]] = []
-        with self.publisher.staging(ds.name) as staging_db:
+        with publisher.staging(ds.name) as staging_db:
 
             def stage(table) -> None:
                 stream_root = os.path.join(
@@ -458,7 +501,7 @@ class Engine:
                 accumulated = self.spark.read.schema(table.schema).parquet(
                     store, *batch_dirs
                 )
-                self.publisher.write_staging_table(
+                publisher.write_staging_table(
                     staging_db, table.name, accumulated
                 )
                 if table.checks is not None:
@@ -498,10 +541,7 @@ class Engine:
                 Node(partial(stage, t), creates=(t.name,))
                 for t in typed
             ]
-            nodes += script_nodes(
-                self.spark, self.resolver(staging_db), ds.sql,
-                function_stmts, self.functions,
-            )
+            nodes += self.sql_nodes(ds, staging_db, function_stmts)
             run_graph(nodes, self.spark.sparkContext.defaultParallelism, self.spark)
             for table in ds.tables:
                 if table.schema is None and table.checks is not None:
@@ -529,12 +569,8 @@ class Engine:
                         )
                         raise
             created = _created_tables(ds)
-            with self.grants.save_and_reapply(
-                self.publisher.target_db, created
-            ):
-                published = self.publisher.publish_tables(
-                    staging_db, created
-                )
+            with self.grants.save_and_reapply(publisher.target_db, created):
+                published = publisher.publish_tables(staging_db, created)
             # everything validated and the publish succeeded — commit
             # the increments into the durable stores. A crash between
             # publish and here just leaves the batches pending; the
@@ -657,9 +693,14 @@ class Engine:
 
 
 def _created_tables(ds: DatasetDef) -> list[str]:
-    """Tables a standard load publishes: its typed source tables, then
-    every table its scripts create (renames applied)."""
+    """Tables a load publishes: its typed source tables, then every
+    table its scripts (renames applied) and populate hooks create, in
+    ``sql`` order — minus the dataset's scratch tables."""
     created = [t.name for t in ds.tables if t.schema is not None]
-    return created + [
-        t for t in parse_created_tables_in_dir(ds.sql) if t not in created
-    ]
+    for entry in ds.sql:
+        made = (
+            entry.creates if isinstance(entry, Populate)
+            else parse_created_tables_in_dir([entry])
+        )
+        created += [t for t in made if t not in created]
+    return [t for t in created if t not in ds.scratch]

@@ -170,23 +170,6 @@ def radius_self_join(
     )
 
 
-def grid_density(
-    points: DataFrame, lat: str, lng: str, edge_deg: float
-) -> DataFrame:
-    """Points-per-cell density with cell centroids — the aggregation
-    twin of the bin join (one shuffle on the cell key; partial counts
-    map-side)."""
-    return (
-        with_grid_cell(points, lat, lng, edge_deg)
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.avg(lat).alias("centroid_lat"),
-            F.avg(lng).alias("centroid_lng"),
-        )
-    )
-
-
 # --- WKT polygons: parse + point-in-polygon, pure expressions ----------------
 
 
@@ -1095,30 +1078,6 @@ def _signed_clip_rings(geom: Column) -> Column:
     )
 
 
-def multipolygon_clip_area(subject: Column, polys: Column) -> Column:
-    """Area of (subject ring ∩ holed multipolygon) where every RING
-    of the multipolygon is CONVEX (Sutherland–Hodgman's standard
-    precondition, as geo06): one fold over the signed-ring
-    decomposition, ``Σ sign · area(subject clipped to ring)``.
-
-    SCALE WARNING: this is an expression-level fold whose every step
-    runs the (interpreted-HOF) clip fold — measured allocation-heavy
-    enough to exhaust a 1 GiB executor around ~10⁴ rows × 3 rings.
-    It exists for row-at-a-time geometry math on SMALL frames; any
-    data-scale workload must use :func:`multipolygon_clip_area_join`,
-    which moves the inclusion–exclusion into the relational layer
-    (explode + groupBy) and runs only the proven single-level geo06
-    expression per candidate."""
-    signed = _signed_clip_rings(polys)
-    return F.aggregate(
-        signed,
-        F.lit(0.0),
-        lambda acc, sr: acc
-        + sr["sign"].cast("double")
-        * ring_area(convex_clip_ring(subject, sr["ring"])),
-    )
-
-
 def _signed_fan_triangles(geom: Column) -> Column:
     """Holed multipolygon → flat ``array<struct<ring, w>>`` of
     fan triangles ``[v_0, v_i, v_i+1]`` with weights w ∈ {−1,+1}
@@ -1275,25 +1234,6 @@ def _enriched_fan_tris(tris: Column) -> Column:
         )
 
     return F.transform(ccwed, fin)
-
-
-def _ring_bbox_overlap(a: Column, b: Column) -> Column:
-    """Strict bbox-overlap of two vertex rings (any sizes) — the
-    codegen-cheap pregate in front of the clip fold: disjoint pairs
-    clip to area 0, so dropping them (including exact-touch pairs,
-    also area 0) never changes the signed sum."""
-    def xs(r):
-        return F.transform(r, lambda p: p["x"])
-
-    def ys(r):
-        return F.transform(r, lambda p: p["y"])
-
-    return (
-        (F.array_min(xs(a)) < F.array_max(xs(b)))
-        & (F.array_min(xs(b)) < F.array_max(xs(a)))
-        & (F.array_min(ys(a)) < F.array_max(ys(b)))
-        & (F.array_min(ys(b)) < F.array_max(ys(a)))
-    )
 
 
 def concave_clip_area_join(

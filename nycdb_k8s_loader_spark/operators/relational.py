@@ -71,12 +71,6 @@ def count_where(cond: Column) -> Column:
     return F.count(F.when(cond, F.lit(1)))
 
 
-def sum_where(col: Column | str, cond: Column) -> Column:
-    """``SUM(col) FILTER (WHERE cond)`` (wow_2021 sql:116-117 shape)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(F.when(cond, c))
-
-
 def min_where(col: Column | str, cond: Column) -> Column:
     """``MIN(col) FILTER (WHERE cond)`` (wow_2021 sql:116-117)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -87,25 +81,6 @@ def coalesce_int(col: Column | str, default: int = 0) -> Column:
     """``coalesce(x, 0)::int`` (wow_2021 sql:69-72)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.coalesce(c, F.lit(default)).cast("int")
-
-
-def ordered_string_agg(
-    value: Column,
-    order: Column,
-    sep: str = ", ",
-    ascending: bool = True,
-) -> Column:
-    """Deterministic ``string_agg(value, sep ORDER BY order)``.
-
-    Reference: lib/db_perms.py:36 (`string_agg(privilege_type, ', ')`)
-    and the ordered `json_agg` at wow_2021 sql:43-46. Spark's
-    ``collect_list`` is order-nondeterministic, so we collect
-    (order, value) structs, ``sort_array``, then join — explicit
-    ordering instead of relying on input order (SURVEY.md §2 A8/A11).
-    """
-    pairs = F.collect_list(F.struct(order.alias("o"), value.alias("v")))
-    sorted_pairs = F.sort_array(pairs, asc=ascending)
-    return F.array_join(F.transform(sorted_pairs, lambda s: s["v"]), sep)
 
 
 def ordered_json_agg(

@@ -7,9 +7,13 @@ plus the dependency ordering its derived pipelines assert
 (tests/test_wowutil.py:9-11, tests/test_signatureutil.py:34-57).
 
 A dataset entry drives the whole load: source files → typed tables →
-SQL transformation scripts → publish. Custom datasets (the reference's
-wow/oca/signature/good_cause bypass, load_dataset.py:319-338) register
-a builder callable instead.
+SQL transformation scripts and populate hooks → validation → publish.
+The reference's four custom pipelines (wow/oca/signature/good_cause,
+dispatched around the standard load at load_dataset.py:319-338) share
+that skeleton — temp schema → SQL → swap — so here they are plain
+entries too: they name their own target ``schema``, put their Python
+steps in ``sql`` as :class:`Populate` hooks, and list the ``scratch``
+tables that die with the staging namespace.
 """
 
 from __future__ import annotations
@@ -42,15 +46,42 @@ class TableDef:
     checks: object | None = None
 
 
+@dataclass(frozen=True)
+class Populate:
+    """A Python step at its position in a dataset's ``sql`` list (the
+    reference's populate_landlords/populate_portfolios between wow's
+    pre- and post-SQL, wowutil.py:144-186). ``run(spark, staging_db)``
+    writes the tables it ``creates`` into the load's staging
+    namespace; ``reads`` names every staging table it reads, so the
+    load scheduler starts it once those exist."""
+
+    run: Callable[..., None]
+    creates: tuple[str, ...]
+    reads: tuple[str, ...] = ()
+
+
 @dataclass
 class DatasetDef:
     name: str
     files: list[SourceFile] = field(default_factory=list)
     tables: list[TableDef] = field(default_factory=list)
-    sql: list[str] = field(default_factory=list)  # ordered script paths
+    #: ordered script paths and :class:`Populate` hooks; every table
+    #: they create publishes, except ``scratch`` ones
+    sql: list[str | Populate] = field(default_factory=list)
     depends_on: list[str] = field(default_factory=list)
     schedule: str | None = None  # key into scheduling.SCHEDULES
-    builder: Callable | None = None  # custom dataset escape hatch
+    #: database the load publishes into; None → the engine's target_db
+    schema: str | None = None
+    #: staging-only tables the scripts or hooks create and later steps
+    #: read; they never publish (the reference's builders drop them
+    #: with the temp schema)
+    scratch: list[str] = field(default_factory=list)
+    #: notifier text: "Rebuilding <label>..." / "Finished rebuilding
+    #: <label>." around the load, as the reference's builders report
+    label: str | None = None
+    #: ``fn(engine)`` run after a successful publish (wow's
+    #: lastmod-gated landlord search-index export)
+    after_publish: Callable[..., object] | None = None
     #: per-dataset CSV parse policy, merged into every CSV scan this
     #: dataset's tables make (r12 verdict #5 — real NYC open-data
     #: files carry BOMs, embedded newlines, short rows, type junk).

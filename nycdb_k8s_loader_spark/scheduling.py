@@ -39,15 +39,6 @@ class Schedule(Enum):
         return self.value
 
 
-#: Datasets built by custom pipelines rather than plain registry loads
-#: (reference scheduling.py:45-50; dispatch load_dataset.py:319-338).
-CUSTOM_DATASET_NAMES: list[str] = [
-    "wow",
-    "oca_address",
-    "signature",
-    "good_cause_eviction",
-]
-
 #: If a dataset has no explicit slot, refresh yearly (reference
 #: scheduling.py:60-61).
 DEFAULT_SCHEDULE = Schedule.YEARLY

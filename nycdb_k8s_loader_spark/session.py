@@ -74,11 +74,6 @@ def get_spark(
     return spark
 
 
-def testdata_dir(sf: str = "0.01") -> str:
-    """Path to driver-generated synthetic parquet (TESTDATA.md)."""
-    return os.environ.get("SPARK_GRAFT_SF_DIR", f"/root/testdata/sf{sf}")
-
-
 def _normalize_events_ts(df):
     """Normalize the ``ts`` column of an events DataFrame (batch OR
     streaming) to a plain session-tz ``timestamp``.
@@ -166,18 +161,3 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Read every synthetic table in ``sf_dir`` as a DataFrame dict."""
-    return {
-        t: read_table(spark, sf_dir, t)
-        for t in TPCH_TABLES
-        if os.path.exists(f"{sf_dir}/{t}.parquet")
-    }
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for the SQL-facing operators."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

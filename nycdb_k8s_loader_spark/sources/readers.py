@@ -337,9 +337,3 @@ def fetch_to_landing(url: str, dest: str, s3_client=None) -> None:
     import urllib.request
 
     urllib.request.urlretrieve(url, dest)  # pragma: no cover - network
-
-
-def landing_path(root: str, dataset: str, dest: str) -> str:
-    """Local/object-store landing location for a downloaded source file
-    (reference stages into /var/nycdb, load_dataset.py:29)."""
-    return f"{root.rstrip('/')}/{dataset}/{dest}"

@@ -28,7 +28,7 @@ from fixture_gen import (csv_bytes, shapefile_zip_from_schema,
                          synth_rows, xlsx_bytes)
 
 _REG = wow_registry()
-STANDARD = [n for n in _REG.names() if _REG.get(n).builder is None]
+STANDARD = [n for n in _REG.names() if _REG.get(n).schema is None]
 
 TARGET_DB = "catalog_e2e"
 

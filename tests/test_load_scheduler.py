@@ -286,7 +286,7 @@ class TestEngineThroughScheduler:
         """A failing statement beside a running populate hook: the hook
         completes, its staging write succeeds, then staging drops and
         nothing publishes."""
-        from nycdb_k8s_loader_spark.datasets import _custom_pipeline
+        from nycdb_k8s_loader_spark.registry import Populate
 
         sql = tmp_path / "post.sql"
         sql.write_text("CREATE TABLE broken AS SELECT * FROM no_such_table;")
@@ -297,16 +297,11 @@ class TestEngineThroughScheduler:
             spark.range(3).write.saveAsTable(f"`{staging_db}`.`pop`")
             finished.append("populate")
 
-        def builder(spark, engine):
-            return _custom_pipeline(
-                spark, engine, name="popfail", label="popfail",
-                target_schema="sched_pop", tables=["pop", "broken"],
-                populate=populate, populate_creates=["pop"],
-                post_scripts=[str(sql)],
-            )
-
         reg = Registry()
-        reg.add(DatasetDef(name="popfail", builder=builder))
+        reg.add(DatasetDef(
+            name="popfail", schema="sched_pop", label="popfail",
+            sql=[Populate(populate, creates=("pop",)), str(sql)],
+        ))
         eng = Engine(
             spark, reg, DictKVStore(), target_db="sched_pop",
             landing_root=str(tmp_path / "landing"),

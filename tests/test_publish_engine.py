@@ -233,6 +233,64 @@ class TestEngineLifecycle:
         finally:
             Publisher(spark, "fntest").drop_db("fntest")
 
+    def test_function_registry_applies_once_per_engine(
+        self, spark, registry, landing, monkeypatch
+    ):
+        """Temp functions are session-scoped and survive a publish:
+        the engine applies its FunctionRegistry when it starts and
+        never again, however many loads follow."""
+        from nycdb_k8s_loader_spark.functions.registry import FunctionRegistry
+
+        eng = make_engine(spark, registry, landing, db="fnonce")
+        calls: list[int] = []
+        apply = FunctionRegistry.apply
+        monkeypatch.setattr(
+            FunctionRegistry, "apply",
+            lambda self, sp: calls.append(1) or apply(self, sp),
+        )
+        try:
+            eng.load("bldgs")
+            eng.load("bldgs", force=True)
+            assert calls == []
+            assert spark.sql(
+                "SELECT slugify(' A b ') AS v"
+            ).first()["v"] == "a-b"
+        finally:
+            Publisher(spark, "fnonce").drop_db("fnonce")
+
+    def test_dependency_schema_is_on_the_search_path(
+        self, spark, landing, tmp_path
+    ):
+        """A dataset reads its dependencies' tables by bare name: the
+        target schema of every dataset it depends on is on its search
+        path, and each publishes into its own schema."""
+        from nycdb_k8s_loader_spark.registry import Populate
+
+        def populate(sp, staging_db):
+            sp.range(4).write.saveAsTable(f"`{staging_db}`.`base_t`")
+
+        script = tmp_path / "down.sql"
+        script.write_text("CREATE TABLE down_t AS SELECT id FROM base_t;")
+        reg = Registry()
+        reg.add(DatasetDef(
+            name="up", schema="dep_up",
+            sql=[Populate(populate, creates=("base_t",))],
+        ))
+        reg.add(DatasetDef(
+            name="down", schema="dep_down", depends_on=["up"],
+            sql=[str(script)],
+        ))
+        eng = make_engine(spark, reg, landing, db="dep_main")
+        try:
+            results = eng.load_all(["down"])
+            assert [r.published for r in results] == [
+                ["dep_up.base_t"], ["dep_down.down_t"],
+            ]
+            assert spark.table("dep_down.down_t").count() == 4
+        finally:
+            for db in ("dep_up", "dep_down", "dep_main"):
+                Publisher(spark, db).drop_db(db)
+
     def test_topo_order(self):
         reg = Registry()
         reg.add(DatasetDef(name="a"))
@@ -467,7 +525,7 @@ class TestMoveFlip:
     def test_same_second_publishers_get_distinct_version_dirs(
         self, spark, tmp_path, monkeypatch
     ):
-        """Two Publishers (a custom pipeline builds one per run) in the
+        """Two Publishers (an engine builds one per target schema) in the
         same second must not share a version dir: the second one's
         staged files would overwrite those the live table reads."""
         import types
@@ -502,8 +560,6 @@ class TestCustomPipelineFunctionReplay:
         """A custom pipeline's plpgsql function is logged and skipped
         at replay, as in a standard load — not raised after its tables
         published, which would leave the tracker un-updated."""
-        from nycdb_k8s_loader_spark.datasets import _custom_pipeline
-
         script = tmp_path / "post.sql"
         script.write_text(
             """
@@ -514,12 +570,8 @@ class TestCustomPipelineFunctionReplay:
         )
         reg = Registry()
         reg.add(DatasetDef(
-            name="replayds",
-            builder=lambda sp, eng: _custom_pipeline(
-                sp, eng, name="replayds", label="replay",
-                target_schema="replay_db", tables=["replay_t"],
-                post_scripts=[str(script)],
-            ),
+            name="replayds", schema="replay_db", label="replay",
+            sql=[str(script)],
         ))
         eng = make_engine(
             spark, reg, str(tmp_path / "landing"), db="replay_db"
@@ -531,6 +583,30 @@ class TestCustomPipelineFunctionReplay:
             assert eng.tracker.get_last_refresh("replayds") is not None
         finally:
             spark.sql("DROP DATABASE IF EXISTS replay_db CASCADE")
+
+
+class TestPublishedSurfaces:
+    def test_every_dataset_publishes_its_declared_tables(self):
+        """Every registry dataset publishes exactly the tables it
+        declares; the four custom pipelines publish exactly the
+        reference's lists, in order, and never their scratch tables."""
+        from nycdb_k8s_loader_spark import datasets as D
+        from nycdb_k8s_loader_spark.engine import _created_tables
+
+        reg = D.wow_registry()
+        for name in reg.names():
+            assert set(_created_tables(reg.get(name))) == set(
+                reg.tables_for(name)
+            ), name
+        for name, tables in (
+            ("wow", D.WOW_TABLES),
+            ("oca_address", D.OCA_TABLES),
+            ("signature", D.SIGNATURE_TABLES),
+            ("good_cause_eviction", D.GOOD_CAUSE_TABLES),
+        ):
+            ds = reg.get(name)
+            assert ds.schema is not None
+            assert _created_tables(ds) == tables
 
 
 class TestGrantRegistry:

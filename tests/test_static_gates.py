@@ -98,6 +98,25 @@ def test_publish_protocol_has_no_copy_path():
     assert writes == []
 
 
+def test_one_load_path():
+    """Every load publishes through a Publisher the Engine built with
+    its external root and version pointer: inside the package only
+    engine.py (and the operator CLI's staging cleanup in cli.py)
+    construct one, and a dataset cannot bring its own load function."""
+    import dataclasses
+    import re
+
+    from nycdb_k8s_loader_spark.registry import DatasetDef
+
+    constructs = sorted(
+        os.path.relpath(path, PKG)
+        for path in _modules()
+        if re.search(r"\bPublisher\(", open(path).read())
+    )
+    assert constructs == ["cli.py", "engine.py"]
+    assert "builder" not in {f.name for f in dataclasses.fields(DatasetDef)}
+
+
 class TestScaleGate:
     """bench_scale's structural linearity gate (round-7 verdict #2):
     shuffle-byte growth is the primary signal, wall growth gates only

@@ -221,6 +221,129 @@ class TestEngineVersionedPublish:
                     spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
 
 
+    def test_custom_dataset_publishes_in_one_version(self, spark, tmp_path):
+        """A dataset with its own schema and a populate hook publishes
+        every table into ONE version db of that schema and commits by
+        moving that schema's pointer; scratch tables never publish."""
+        from nycdb_k8s_loader_spark.engine import Engine
+        from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry
+        from nycdb_k8s_loader_spark.state.lastmod import FetchResult
+
+        def populate(sp, staging_db):
+            sp.range(3).write.saveAsTable(f"`{staging_db}`.`vc_pop`")
+
+        script = tmp_path / "post.sql"
+        script.write_text(
+            "CREATE TABLE vc_scratch AS SELECT id FROM vc_pop;\n"
+            "CREATE TABLE vc_post AS SELECT id * 2 AS v FROM vc_scratch;\n"
+        )
+        reg = Registry()
+        reg.add(DatasetDef(
+            name="vcust", schema="vcust_db", label="vcust",
+            sql=[Populate(populate, creates=("vc_pop",)), str(script)],
+            scratch=["vc_scratch"],
+        ))
+        eng = Engine(
+            spark, reg, DictKVStore(), target_db="vcust_main",
+            landing_root=str(tmp_path / "landing"),
+            transport=lambda url, headers: FetchResult(200),
+            downloader=lambda url, dest: None,
+            versioned_publish=True,
+        )
+
+        def tables(db):
+            return sorted(
+                t.name for t in spark.catalog.listTables(db)
+                if not t.isTemporary
+            )
+
+        try:
+            res = eng.load("vcust")
+            assert res.published == ["vcust_db.vc_pop", "vcust_db.vc_post"]
+            v1 = eng.version_pointer.current("vcust_db")
+            assert v1 and parse_version_db(v1) == "vcust_db"
+            assert tables(v1) == ["vc_pop", "vc_post"]
+            assert tables("vcust_db") == []
+            assert eng.version_pointer.current("vcust_main") is None
+            eng.load("vcust", force=True)
+            v2 = eng.version_pointer.current("vcust_db")
+            assert v2 != v1 and tables(v2) == ["vc_pop", "vc_post"]
+            assert spark.table(f"`{v2}`.`vc_post`").count() == 3
+        finally:
+            for d in spark.catalog.listDatabases():
+                if d.name.startswith("vcust"):
+                    spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
+
+    def test_reference_table_functions_read_through_pointer(
+        self, spark, tmp_path
+    ):
+        """Under versioned publish the reference-named table functions
+        read the pointed-at version of ``hpd_contacts`` and of the wow
+        tables, not the (empty) logical databases."""
+        from nycdb_k8s_loader_spark.engine import Engine
+        from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry
+        from nycdb_k8s_loader_spark.state.lastmod import FetchResult
+
+        def contacts(sp, staging_db):
+            sp.createDataFrame(
+                [(7, "CorporateOwner", "Vee Corp", "1", "Main St")],
+                "registrationid int, type string, corporationname string, "
+                "businesshousenumber string, businessstreetname string",
+            ).write.saveAsTable(f"`{staging_db}`.`hpd_contacts`")
+
+        def wow_tables(sp, staging_db):
+            sp.createDataFrame(
+                [("VB1", "VEE", "1 MAIN"), ("VB2", "DUB", "2 SIDE")],
+                "bbl string, name string, bizaddr string",
+            ).write.saveAsTable(f"`{staging_db}`.`wow_landlords`")
+            sp.createDataFrame(
+                [("VEE", "P1"), ("DUB", "P1")],
+                "name string, portfolio_id string",
+            ).write.saveAsTable(f"`{staging_db}`.`wow_portfolios`")
+
+        reg = Registry()
+        reg.add(DatasetDef(
+            name="vcontacts",
+            sql=[Populate(contacts, creates=("hpd_contacts",))],
+        ))
+        reg.add(DatasetDef(
+            name="vwow", schema="wow",
+            sql=[Populate(
+                wow_tables, creates=("wow_landlords", "wow_portfolios"),
+            )],
+        ))
+        had_wow = spark.catalog.databaseExists("wow")
+        eng = Engine(
+            spark, reg, DictKVStore(), target_db="vfn_main",
+            landing_root=str(tmp_path / "landing"),
+            transport=lambda url, headers: FetchResult(200),
+            downloader=lambda url, dest: None,
+            versioned_publish=True,
+        )
+        try:
+            eng.load_all(["vcontacts", "vwow"])
+            owner = eng.functions.table_fn(
+                "get_corporate_owner_info_for_regid"
+            )(spark, 7).collect()
+            assert [(r["name"], r["bizaddr"]) for r in owner] == [
+                ("Vee Corp", "1 MAIN ST")
+            ]
+            assoc = eng.functions.table_fn("wow.get_assoc_addrs_from_bbl")(
+                spark, "VB1"
+            ).collect()
+            assert sorted((r["bbl"], r["portfolio_id"]) for r in assoc) == [
+                ("VB1", "P1"), ("VB2", "P1"),
+            ]
+        finally:
+            for d in spark.catalog.listDatabases():
+                if d.name.startswith("vfn_main") or (
+                    parse_version_db(d.name) == "wow"
+                ):
+                    spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
+            if not had_wow:
+                spark.sql("DROP DATABASE IF EXISTS wow CASCADE")
+
+
 class TestResolverHonorsPointer:
     def test_search_path_resolves_to_pointed_version(self, spark):
         pointer = VersionPointer(DictKVStore())

@@ -346,9 +346,9 @@ def test_same_level_custom_pipelines_overlap(spark, tmp_path):
     and the test fails instead of deadlocking."""
     import threading
 
-    from nycdb_k8s_loader_spark.datasets import _custom_pipeline
     from nycdb_k8s_loader_spark.registry import (
         DatasetDef,
+        Populate,
         Registry,
         TableDef,
     )
@@ -365,18 +365,10 @@ def test_same_level_custom_pipelines_overlap(spark, tmp_path):
                 f"`{staging_db}`.`{table}`"
             )
 
-        def builder(spark, engine):
-            return _custom_pipeline(
-                spark, engine,
-                name=name, label=name,
-                target_schema="cp_overlap",
-                tables=[table],
-                populate=populate,
-            )
-
         reg.add(
             DatasetDef(name=name, files=[], tables=[TableDef(table)],
-                       builder=builder)
+                       sql=[Populate(populate, creates=(table,))],
+                       schema="cp_overlap", label=name)
         )
 
     make("cp_a")
@@ -507,10 +499,11 @@ def test_table_fn_sql_invocable_end_to_end(spark, wow_engine, tmp_path):
     table functions INSIDE SQL (``SELECT ... FROM
     wow.get_assoc_addrs_from_bbl('xxx')``, reference
     tests/test_wowutil.py:42-44). A script containing the call must
-    run end-to-end through _run_scripts: the engine materializes the
-    function result as a temp view and substitutes the reference."""
-    from nycdb_k8s_loader_spark.datasets import _run_scripts
+    run end-to-end through the load scheduler's statement nodes: the
+    engine materializes the function result as a temp view and
+    substitutes the reference."""
     from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
+    from nycdb_k8s_loader_spark.publish.scheduler import run_graph, script_nodes
 
     eng, _ = wow_engine
     eng.load_all(["wow"])
@@ -524,9 +517,9 @@ def test_table_fn_sql_invocable_end_to_end(spark, wow_engine, tmp_path):
     spark.sql("CREATE DATABASE IF NOT EXISTS tfn_out")
     resolver = SearchPathResolver(spark, ["tfn_out"], ddl_db="tfn_out")
     try:
-        created = _run_scripts(
-            spark, resolver, [str(script)], [], functions=eng.functions
-        )
+        nodes = script_nodes(spark, resolver, [str(script)], [], eng.functions)
+        run_graph(nodes, spark.sparkContext.defaultParallelism, spark)
+        created = [t for n in nodes for t in n.creates]
         assert created == ["assoc_out"]
         rows = spark.table("tfn_out.assoc_out").collect()
         # BBL1's landlord X bridges through A1/A2 into the X-Y-Z
@@ -542,14 +535,14 @@ def test_table_fn_sql_invocable_end_to_end(spark, wow_engine, tmp_path):
 def test_function_ddl_passes_run_scripts_unrewritten(
     spark, wow_engine, tmp_path
 ):
-    """r5 ADVICE: _run_scripts must classify function DDL BEFORE the
+    """r5 ADVICE: script_nodes must classify function DDL BEFORE the
     table-fn materialization pass (matching engine.py's load loop) —
     a CREATE FUNCTION whose body calls a registered table function is
     DDL to replay post-publish, and rewriting it would bake a
     session-temporary view name into the collected statement (and
     eagerly materialize the view during script execution)."""
-    from nycdb_k8s_loader_spark.datasets import _run_scripts
     from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
+    from nycdb_k8s_loader_spark.publish.scheduler import run_graph, script_nodes
 
     eng, _ = wow_engine
     eng.load_all(["wow"])
@@ -564,10 +557,11 @@ def test_function_ddl_passes_run_scripts_unrewritten(
     resolver = SearchPathResolver(spark, ["fn_ddl_out"], ddl_db="fn_ddl_out")
     fn_stmts: list[str] = []
     try:
-        created = _run_scripts(
-            spark, resolver, [str(script)], fn_stmts,
-            functions=eng.functions,
+        nodes = script_nodes(
+            spark, resolver, [str(script)], fn_stmts, eng.functions
         )
+        run_graph(nodes, spark.sparkContext.defaultParallelism, spark)
+        created = [t for n in nodes for t in n.creates]
         assert created == []
         assert len(fn_stmts) == 1
         # the table-fn call survives verbatim — no __v temp-view name
