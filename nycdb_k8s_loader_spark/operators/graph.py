@@ -34,14 +34,43 @@ generation the moment the next one is materialized. Only frames that
 no RETURNED plan references are released — unpersisting a
 localCheckpoint that a live plan still needs would fail later actions
 (localCheckpoint truncates lineage; its blocks ARE the data).
+
+Loop session: every iterative operator here (and similarity's Lloyd
+rounds) materializes its input on the caller's session, then runs its
+loop on a ``newSession()`` clone of the caller (:func:`_on_loop_session`)
+and rebinds the result back, so downstream composition plans under the
+caller's conf. The clone shares the SparkContext (block manager,
+executors — checkpoints work unchanged) but owns its SQLConf, which is
+written once, when the clone is made: the caller's conf with
+``spark.sql.shuffle.partitions`` clamped to
+:func:`~..session.small_shuffle_partitions`. A loop runs 2-3 tiny
+shuffles per round, and at the batch default task scheduling, not
+data, is the bottleneck (wow portfolio CC 2.8 s → 1.6 s at sf0.1 by
+32 → 8); the clamp never exceeds the caller's setting, so big-graph
+sessions keep their width. The engine plans independent jobs
+concurrently from driver threads, so clamping the caller's own conf
+would leak into them; on the clone no other planner sees it, and
+concurrent loops share it.
+
+AQE stays as the caller set it. The loops' checkpoints are keyed for a
+static plan (r13): ``localCheckpoint`` captures the executed plan's
+output partitioning into its LogicalRDD and a statically planned
+join/aggregate downstream skips the exchange, while an AQE plan reports
+Unknown partitioning (r13 probe: AQE-on checkpoint → 1 exchange per
+consumer, AQE-off → 0). Turning AQE off on the loop session saved less
+than run noise on the benchmark's graphs, so it was dropped (numbers at
+:func:`_on_loop_session`).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import threading
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from nycdb_k8s_loader_spark.session import small_shuffle_partitions
 
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -97,109 +126,49 @@ def _rebind(df: DataFrame, session) -> DataFrame:
     return _CDF(jvm_dataset.ofRows(session._jsparkSession, plan), session)
 
 
-def _clone_for_loop(*dfs: DataFrame):
-    """Rebind ``dfs`` onto a fresh ``newSession()`` clone so the loop
-    fences (:func:`_iteration_sized_shuffle`, :func:`_static_loop_plans`)
-    mutate PRIVATE session conf (r14, judge item #7).
+# caller session -> (its conf when the clone was made, the clone).
+# Measured before AQE was left on (perfbench, 4 vCPUs, seeds 101-110,
+# traced, 10 alternating pairs, AQE off vs on): refresh
+# operators.graph.self_s median 1.446 vs 1.496 s (AQE-off IQR 0.235),
+# analytics plans.build_s.d09_fuzzy_dedup_e2e 0.078 vs 0.086 s (IQR
+# 0.010); AQE off bought less than its IQR on both, so it was dropped.
+_LOOP_SESSIONS: WeakKeyDictionary = WeakKeyDictionary()
+_LOOP_SESSIONS_LOCK = threading.Lock()
 
-    Both fences set session-global SQL conf for the loop's duration —
-    AQE off, clamped shuffle partitions. The engine runs independent
-    Spark jobs concurrently from driver threads (a CC loop beside
-    other CTAS statements of the same load, other datasets' loads),
-    and a concurrent query planned while a loop held the fence would
-    silently plan AQE-off with micro-shuffle partitions.
-    ``SparkSession.newSession`` shares the SparkContext (block
-    manager, executors — checkpoints work unchanged) but owns an
-    isolated SQLConf, so the fences become invisible to every other
-    planner. The input plans are rebased onto the clone via
-    ``Dataset.ofRows`` (same JVM analyzed plan, new session) and the
-    loop result is rebased BACK so downstream composition plans under
-    the caller's own conf exactly as before.
 
-    Returns ``(rebased_dfs, rebase_back_fn)``. If the (internal)
-    rebinding API fails this raises: fencing the shared session
-    instead would leak the loop's conf into every concurrent planner."""
+def _on_loop_session(*dfs: DataFrame) -> tuple[DataFrame, ...]:
+    """``dfs`` rebound onto the loop session of their caller session
+    (module docstring, "Loop session"): one cached ``newSession()``
+    clone per caller, whose conf is the caller's with the clamped
+    shuffle width, written once at creation. When the caller's conf has changed since
+    (e.g. the lazily set legacy nanos parquet switch) a new clone
+    replaces the cached one; loops still running keep the old clone,
+    whose conf nobody writes again. Raises if the (internal) rebinding
+    API fails: fencing the shared session instead would leak the
+    loop's conf into every concurrent planner."""
     spark = dfs[0].sparkSession
     try:
-        loop = spark.newSession()
-        # newSession starts from the builder-time conf; carry over any
-        # session-level deltas set since (e.g. the legacy nanos parquet
-        # switch) so the loop plans under the caller's semantics.
-        entries = spark._jsparkSession.conf().getAll().iterator()
-        while entries.hasNext():
-            e = entries.next()
-            try:
-                loop.conf.set(e._1(), e._2())
-            except Exception:  # noqa: BLE001
-                pass  # static/core entries — context-level, shared anyway
-        rebased = tuple(_rebind(df, loop) for df in dfs)
+        seen = spark._jsparkSession.conf().getAll().toString()
+        with _LOOP_SESSIONS_LOCK:
+            made, loop = _LOOP_SESSIONS.get(spark, (None, None))
+            if made != seen:
+                loop = spark.newSession()
+                for key, value in spark.conf.getAll.items():
+                    try:
+                        loop.conf.set(key, value)
+                    except Exception:  # noqa: BLE001
+                        pass  # static/core entries — context-level, shared anyway
+                loop.conf.set(
+                    "spark.sql.shuffle.partitions",
+                    str(small_shuffle_partitions(spark)),
+                )
+                _LOOP_SESSIONS[spark] = (seen, loop)
+        return tuple(_rebind(df, loop) for df in dfs)
     except Exception as exc:
         raise RuntimeError(
             "cannot rebind the loop's input onto a private session; "
             "refusing to fence the shared session"
         ) from exc
-    return rebased, (lambda df: _rebind(df, spark))
-
-
-@contextmanager
-def _iteration_sized_shuffle(df: DataFrame, partitions: int | None):
-    """Clamp ``spark.sql.shuffle.partitions`` for an iterative
-    operator's lifetime (mirrors streaming's state_sized_shuffle).
-
-    Iterative graph ops run MANY tiny shuffles (2-3 jobs per round ×
-    diameter rounds); at the batch default every round schedules
-    hundreds of near-empty tasks and task latency, not data, becomes
-    the bottleneck (measured: wow portfolio CC 2.8 s → 1.6 s at sf0.1
-    just by 32 → 8). AQE coalesces within a stage but cannot remove
-    per-round scheduling floors. Heuristic: max(8, defaultParallelism
-    // 2), never above the session's setting — on a 1000-executor
-    cluster defaultParallelism scales with the cluster, so big-graph
-    callers keep their width (or pass ``partitions`` explicitly)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    n = partitions
-    if n is None:
-        n = max(8, spark.sparkContext.defaultParallelism // 2)
-        try:
-            n = min(n, int(prev))
-        except (TypeError, ValueError):
-            pass  # 'auto' etc. — keep the heuristic
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-@contextmanager
-def _static_loop_plans(spark):
-    """AQE off for an iterative loop's fixed-size micro-shuffles —
-    so checkpointed loop state KEEPS its partitioning (r13).
-
-    ``localCheckpoint`` captures the executed plan's output
-    partitioning into the LogicalRDD (LogicalRDD.fromDataset), and a
-    statically-planned downstream join/aggregate recognizes it and
-    skips the exchange; under AQE the executed plan is an
-    AdaptiveSparkPlanExec whose partitioning reports Unknown, so
-    every round re-shuffled the label table TWICE (probe-join side +
-    update-join side) even though each generation was written
-    node-partitioned by the previous round's join. Measured on the
-    probe harness: AQE-on checkpoint → 1 exchange per consumer;
-    AQE-off → 0.
-
-    The loop's shuffles are already clamped to a fixed partition
-    count by :func:`_iteration_sized_shuffle` (so AQE's coalescing
-    has nothing left to do here) and the loop joins are
-    shuffle_hash-pinned (so no strategy is lost); the expensive
-    UPSTREAM edge pipeline still materializes under the session's
-    normal adaptive config because the sym checkpoint executes
-    BEFORE this fence opens."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def connected_components(
@@ -207,7 +176,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(node, component) where component = min node id in the
     component. Nodes are every id present in the edge list; edges are
@@ -216,117 +184,114 @@ def connected_components(
     # checkpoint the ENTIRE upstream pipeline that produced it (e.g.
     # the shingled-Jaccard pair build feeding g01) re-executes once
     # per iteration — measured 3× the total g01 runtime at sf0.1.
-    (edges,), rebase_back = _clone_for_loop(edges)
-    with _iteration_sized_shuffle(edges, shuffle_partitions):
-        raw = _symmetrized(edges, src, dst).localCheckpoint(eager=True)
-        return rebase_back(_label_propagation_loop(raw, max_iterations))
+    raw = _symmetrized(edges, src, dst).localCheckpoint(eager=True)
+    (raw,) = _on_loop_session(raw)
+    return _rebind(
+        _label_propagation_loop(raw, max_iterations), edges.sparkSession
+    )
 
 
 def _label_propagation_loop(
     raw: DataFrame, max_iterations: int
 ) -> DataFrame:
     """Min-label propagation over a checkpointed symmetric edge view
-    — the loop body of :func:`connected_components`, run under the
-    static-plan fence so checkpointed loop state keeps its
-    partitioning (see :func:`_static_loop_plans`).
+    — the loop body of :func:`connected_components`, run on the loop
+    session.
 
-    The edge dedup moved INSIDE the fence onto a b-keyed repartition
+    The edge dedup moved INSIDE the loop onto a b-keyed repartition
     (r13): hash-partitioning on ``b`` co-locates every duplicate of
     an (a, b) edge (partitioning on a subset of the dedup keys), so
     the dedup rides the SAME exchange that keys the edge table for
-    the per-round probe join — and because the checkpoint preserves
-    that partitioning under the fence, the probe join never
+    the per-round probe join — and because the checkpoint records
+    that partitioning, a statically planned probe join never
     re-shuffles the edge table in ANY round (previously: one full
     edge-table exchange per round). The upstream (often expensive)
-    edge pipeline still materializes under adaptive config in the
-    ``raw`` checkpoint above; this job only re-keys the edge list."""
-    with _static_loop_plans(raw.sparkSession):
-        n_shuffle = int(
-            raw.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    edge pipeline materializes on the caller's session in the ``raw``
+    checkpoint; this job only re-keys the edge list."""
+    n_shuffle = int(raw.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sym = (
+        raw.repartition(n_shuffle, "b")
+        .dropDuplicates(["a", "b"])
+        .localCheckpoint(eager=True)
+    )
+    release_local_checkpoint(raw)
+    # Fused init (r13, guide §2.4): under identity labels, round
+    # 1's neighbor-min join degenerates to min(b) per a — so the
+    # init job emits the ROUND-1 labels directly
+    # (least(node, min neighbor)), one groupBy exchange replacing
+    # the old distinct exchange (same shuffle shape) PLUS the
+    # whole first label round (a labels⋈sym shuffle join + left
+    # join + checkpoint job per CC call). Node set unchanged:
+    # every node of sym appears as `a` (symmetrized), and min(b)
+    # over a node's neighbors is never null. The groupBy's output
+    # partitioning (a → node) rides the checkpoint into round 1.
+    labels = (
+        sym.groupBy("a")
+        .agg(F.min("b").alias("__mb"))
+        .select(
+            F.col("a").alias("node"),
+            F.least(F.col("a"), F.col("__mb")).alias("component"),
         )
-        sym = (
-            raw.repartition(n_shuffle, "b")
-            .dropDuplicates(["a", "b"])
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(raw)
-        # Fused init (r13, guide §2.4): under identity labels, round
-        # 1's neighbor-min join degenerates to min(b) per a — so the
-        # init job emits the ROUND-1 labels directly
-        # (least(node, min neighbor)), one groupBy exchange replacing
-        # the old distinct exchange (same shuffle shape) PLUS the
-        # whole first label round (a labels⋈sym shuffle join + left
-        # join + checkpoint job per CC call). Node set unchanged:
-        # every node of sym appears as `a` (symmetrized), and min(b)
-        # over a node's neighbors is never null. The groupBy's output
-        # partitioning (a → node) rides the checkpoint into round 1.
-        labels = (
-            sym.groupBy("a")
-            .agg(F.min("b").alias("__mb"))
-            .select(
-                F.col("a").alias("node"),
-                F.least(F.col("a"), F.col("__mb")).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        .localCheckpoint(eager=True)
+    )
 
-        for _ in range(max_iterations):
-            # labels is checkpointed (huge default size estimate) while
-            # sym inherits the edge scan's tiny one — without a hint
-            # Catalyst would BROADCAST the full edge list every round
-            # (PERFORMANCE.md round-7: derived-size broadcast bomb)
-            neighbor_min = (
-                sym.hint("shuffle_hash").join(labels, sym.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("component").alias("nbr_component"))
+    for _ in range(max_iterations):
+        # labels is checkpointed (huge default size estimate) while
+        # sym inherits the edge scan's tiny one — without a hint
+        # Catalyst would BROADCAST the full edge list every round
+        # (PERFORMANCE.md round-7: derived-size broadcast bomb)
+        neighbor_min = (
+            sym.hint("shuffle_hash").join(labels, sym.b == labels.node)
+            .groupBy("a")
+            .agg(F.min("component").alias("nbr_component"))
+        )
+        # Convergence detection rides the SAME job as the label
+        # update (r13, guide §1/§2.4): an Observation on the
+        # pre-projection frame counts label changes while the
+        # checkpoint materializes — the previous separate
+        # convergence job (new ⋈ old on node + filter + count, a
+        # full label-table shuffle join PER ROUND) is gone.
+        # `nbr < component` is exactly `least(...) != component`;
+        # a null nbr (isolated node this round) compares to null
+        # and is not counted.
+        obs = Observation()
+        # shuffle_hash on the (per-partition-bounded) neighbor-min
+        # side; statically planned, NEITHER side re-shuffles —
+        # labels carries node-partitioning from its checkpoint,
+        # neighbor_min is already a-partitioned by its groupBy —
+        # so the update join is exchange-free and its output
+        # stays node-partitioned for the NEXT round's checkpoint.
+        new_labels = (
+            labels.join(
+                neighbor_min.hint("shuffle_hash"),
+                labels.node == neighbor_min.a,
+                "left",
             )
-            # Convergence detection rides the SAME job as the label
-            # update (r13, guide §1/§2.4): an Observation on the
-            # pre-projection frame counts label changes while the
-            # checkpoint materializes — the previous separate
-            # convergence job (new ⋈ old on node + filter + count, a
-            # full label-table shuffle join PER ROUND) is gone.
-            # `nbr < component` is exactly `least(...) != component`;
-            # a null nbr (isolated node this round) compares to null
-            # and is not counted.
-            obs = Observation()
-            # shuffle_hash on the (per-partition-bounded) neighbor-min
-            # side; under the static fence NEITHER side re-shuffles —
-            # labels carries node-partitioning from its checkpoint,
-            # neighbor_min is already a-partitioned by its groupBy —
-            # so the update join is exchange-free and its output
-            # stays node-partitioned for the NEXT round's checkpoint.
-            new_labels = (
-                labels.join(
-                    neighbor_min.hint("shuffle_hash"),
-                    labels.node == neighbor_min.a,
-                    "left",
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(
-                            F.col("nbr_component"), F.col("component")
-                        ),
-                    ).alias("component"),
-                    (F.col("nbr_component") < F.col("component")).alias(
-                        "__chg"
+            .select(
+                "node",
+                F.least(
+                    F.col("component"),
+                    F.coalesce(
+                        F.col("nbr_component"), F.col("component")
                     ),
-                )
-                .observe(
-                    obs,
-                    F.count(F.when(F.col("__chg"), 1)).alias("n_changed"),
-                )
-                .select("node", "component")
-                .localCheckpoint(eager=True)
+                ).alias("component"),
+                (F.col("nbr_component") < F.col("component")).alias(
+                    "__chg"
+                ),
             )
-            changed = obs.get["n_changed"]
-            release_local_checkpoint(labels)  # superseded generation
-            labels = new_labels
-            if changed == 0:
-                release_local_checkpoint(sym)  # result is labels-only
-                return labels
+            .observe(
+                obs,
+                F.count(F.when(F.col("__chg"), 1)).alias("n_changed"),
+            )
+            .select("node", "component")
+            .localCheckpoint(eager=True)
+        )
+        changed = obs.get["n_changed"]
+        release_local_checkpoint(labels)  # superseded generation
+        labels = new_labels
+        if changed == 0:
+            release_local_checkpoint(sym)  # result is labels-only
+            return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
         "rounds — the graph is deeper than min-label propagation "
@@ -383,7 +348,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 30,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     contractions (Kiveris et al., "Connected Components in MapReduce
@@ -396,14 +360,6 @@ def connected_components_star(
     component minima), and every round localCheckpoints to keep
     lineage flat. Convergence = edge list unchanged by a full round.
     """
-    (edges,), rebase_back = _clone_for_loop(edges)
-    with _iteration_sized_shuffle(edges, shuffle_partitions):
-        return rebase_back(_star_rounds(edges, src, dst, max_rounds))
-
-
-def _star_rounds(
-    edges: DataFrame, src: str, dst: str, max_rounds: int
-) -> DataFrame:
     # ONE materialization of the (often expensive, lazy) upstream
     # edge plan; cur and all_nodes both derive from the checkpointed
     # raw projection (r13 — previously each of the two init
@@ -411,6 +367,7 @@ def _star_rounds(
     raw = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=True)
+    (raw,) = _on_loop_session(raw)
     # Canonicalize ONCE at init (r13): every later generation is
     # already greatest/least-canonical by construction (the star
     # steps only ever emit node → smaller-node edges), so the
@@ -418,34 +375,32 @@ def _star_rounds(
     # re-canonicalizing it through an extra distinct exchange each
     # round. Orientation is irrelevant to the star rounds (the loop
     # re-symmetrizes), and merging (a,b)/(b,a) duplicates here only
-    # shrinks the first round's input. Init runs INSIDE the static
-    # fence (second r13 pass) so round 1's convergence join sees
-    # cur's (u,v) checkpoint partitioning like every later round;
-    # |cur| rides the init checkpoint as an Observation — the seed
-    # for the size half of the set-equality test.
-    with _static_loop_plans(edges.sparkSession):
-        obs0 = Observation()
-        cur = (
-            raw.filter(F.col("u") != F.col("v"))
-            .select(
-                F.greatest("u", "v").alias("u"),
-                F.least("u", "v").alias("v"),
-            )
-            .distinct()
-            .observe(obs0, F.count(F.lit(1)).alias("n_edges"))
-            .localCheckpoint(eager=True)
+    # shrinks the first round's input. Init runs on the loop session
+    # (second r13 pass) so round 1's convergence join plans like
+    # every later round; |cur| rides the init checkpoint as an
+    # Observation — the seed for the size half of the set-equality
+    # test.
+    obs0 = Observation()
+    cur = (
+        raw.filter(F.col("u") != F.col("v"))
+        .select(
+            F.greatest("u", "v").alias("u"),
+            F.least("u", "v").alias("v"),
         )
-        all_nodes = (
-            raw.select(
-                F.explode(F.array(F.col("u"), F.col("v"))).alias("node")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(raw)  # both derivations materialized
-        return _star_loop(
-            cur, int(obs0.get["n_edges"]), all_nodes, max_rounds
-        )
+        .distinct()
+        .observe(obs0, F.count(F.lit(1)).alias("n_edges"))
+        .localCheckpoint(eager=True)
+    )
+    all_nodes = (
+        raw.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    release_local_checkpoint(raw)  # both derivations materialized
+    return _rebind(
+        _star_loop(cur, int(obs0.get["n_edges"]), all_nodes, max_rounds),
+        edges.sparkSession,
+    )
 
 
 # checkpoint the large-star output only when the generation is big
@@ -459,10 +414,9 @@ _LS_CKPT_MIN_EDGES = 50_000
 def _star_loop(
     cur: DataFrame, n_cur: int, all_nodes: DataFrame, max_rounds: int
 ) -> DataFrame:
-    """The contraction loop of :func:`connected_components_star`,
-    under the static-plan fence (:func:`_static_loop_plans`): each
-    (u,v)-canonical edge generation keeps its checkpoint partitioning
-    into the next round's convergence join.
+    """The contraction loop of :func:`connected_components_star`, on
+    the loop session: each (u,v)-canonical edge generation keeps its
+    checkpoint partitioning into the next round's convergence join.
 
     Second r13 pass (guide §1/§2.4 — the label-propagation lesson
     applied here):
@@ -478,7 +432,7 @@ def _star_loop(
       checkpoint: ``cur`` and ``nxt`` are both canonical DISTINCT
       sets, so ``nxt == cur  ⟺  nxt∖cur = ∅  ∧  |nxt| = |cur|`` —
       a left join of nxt against cur on (u,v) (both sides carry
-      (u,v) hash-partitioning under the fence: nxt from its
+      (u,v) hash-partitioning in a static plan: nxt from its
       distinct, cur from its checkpoint → the join plans ZERO
       exchanges) with an Observation counting rows and non-matches
       while the checkpoint materializes. The previous per-round
@@ -567,7 +521,6 @@ def bfs_reachable(
     dst: str = "dst",
     seed_col: str = "node",
     max_hops: int = 20,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(node, hops) for every node reachable from ``seeds`` over the
     undirected edge list, hops = BFS distance (0 for the seeds).
@@ -583,32 +536,19 @@ def bfs_reachable(
     frame is a fraction of the graph — this is the shape GraphFrames'
     BFS uses underneath.
     """
-    (edges, seeds), rebase_back = _clone_for_loop(edges, seeds)
-    with _iteration_sized_shuffle(edges, shuffle_partitions):
-        return rebase_back(
-            _bfs_rounds(edges, seeds, src, dst, seed_col, max_hops)
-        )
-
-
-def _bfs_rounds(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str,
-    dst: str,
-    seed_col: str,
-    max_hops: int,
-) -> DataFrame:
     sym = (
         _symmetrized(edges, src, dst)
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # static fence (r13, see _static_loop_plans): each hop's frontier
-    # checkpoint keeps its node-partitioning, so the expand join's
-    # frontier side and the anti-join's distinct side plan
-    # exchange-free; sym materialized above under adaptive config.
-    with _static_loop_plans(edges.sparkSession):
-        return _bfs_hops(sym, seeds, seed_col, max_hops)
+    # the hops run on the loop session, sym materialized above on the
+    # caller's. Each hop's frontier checkpoint is node-partitioned, so
+    # in a static plan the expand join's frontier side and the
+    # anti-join's distinct side need no exchange (r13).
+    sym, seeds = _on_loop_session(sym, seeds)
+    return _rebind(
+        _bfs_hops(sym, seeds, seed_col, max_hops), edges.sparkSession
+    )
 
 
 def _bfs_hops(
@@ -666,7 +606,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list — the
     iterative-propagation family beyond components (g01) and BFS
@@ -687,84 +626,71 @@ def pagerank(
     round k replans rounds 1..k-1. Rounds are FIXED (power iteration),
     so there is no convergence-test job per round; at 100 TB the
     per-round cost is two shuffles of (node, double).
+
+    The upstream edge dedup (``e``) materializes on the caller's
+    session; the loop runs on the loop session. The loop-invariant
+    frames are checkpointed PARTITIONED ON THEIR PER-ROUND JOIN KEYS
+    (nodes by node, e_deg by u — each falls out of its own build, no
+    extra repartition) and each rank generation inherits
+    node-partitioning from the join that produced it, so in a static
+    plan a round's only exchange is the inflow groupBy on ``v``.
     """
-    (edges,), rebase_back = _clone_for_loop(edges)
-    spark = edges.sparkSession
-    with _iteration_sized_shuffle(edges, shuffle_partitions):
-        e = edges.select(src, dst).distinct().localCheckpoint(eager=True)
-        return rebase_back(
-            _pagerank_rounds(spark, e, iterations, damping, src, dst)
+    e = edges.select(src, dst).distinct().localCheckpoint(eager=True)
+    (e,) = _on_loop_session(e)
+    nodes = (
+        e.select(
+            F.explode(F.array(F.col(src), F.col(dst))).alias("node")
         )
-
-
-def _pagerank_rounds(
-    spark,
-    e: DataFrame,
-    iterations: int,
-    damping: float,
-    src: str,
-    dst: str,
-) -> DataFrame:
-    """The loop half of :func:`pagerank`, run under the static-plan
-    fence (:func:`_static_loop_plans`): the loop-invariant frames are
-    checkpointed PARTITIONED ON THEIR PER-ROUND JOIN KEYS (nodes by
-    node, e_deg by u — each falls out of its own build, no extra
-    repartition) and each rank generation inherits node-partitioning
-    from the join that produced it, so a round's only exchange is the
-    inflow groupBy on ``v``. The upstream edge dedup (``e``) still
-    materializes under the session's adaptive config."""
-    with _static_loop_plans(spark):
-        nodes = (
-            e.select(
-                F.explode(F.array(F.col(src), F.col(dst))).alias("node")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n_nodes = nodes.count()
+    outdeg = e.groupBy(src).agg(F.count("*").alias("outdeg"))
+    # edge list annotated with its source's out-degree: invariant
+    # across rounds, checkpoint once.
+    e_deg = (
+        e.join(outdeg, src)
+        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
+        .localCheckpoint(eager=True)
+    )
+    base = (1.0 - damping) / n_nodes
+    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
+    prev_ranks: DataFrame | None = None
+    for _ in range(iterations):
+        contrib = (
+            e_deg.join(
+                ranks.withColumnRenamed("node", "u"), "u"
             )
-            .distinct()
+            .groupBy("v")
+            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("inflow"))
+        )
+        ranks = (
+            nodes.join(
+                contrib.withColumnRenamed("v", "node"), "node", "left"
+            )
+            .select(
+                "node",
+                (F.lit(base)
+                 + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
+                 ).alias("rank"),
+            )
             .localCheckpoint(eager=True)
         )
-        n_nodes = nodes.count()
-        outdeg = e.groupBy(src).agg(F.count("*").alias("outdeg"))
-        # edge list annotated with its source's out-degree: invariant
-        # across rounds, checkpoint once.
-        e_deg = (
-            e.join(outdeg, src)
-            .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
-            .localCheckpoint(eager=True)
-        )
-        base = (1.0 - damping) / n_nodes
-        ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-        prev_ranks: DataFrame | None = None
-        for _ in range(iterations):
-            contrib = (
-                e_deg.join(
-                    ranks.withColumnRenamed("node", "u"), "u"
-                )
-                .groupBy("v")
-                .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("inflow"))
-            )
-            ranks = (
-                nodes.join(
-                    contrib.withColumnRenamed("v", "node"), "node", "left"
-                )
-                .select(
-                    "node",
-                    (F.lit(base)
-                     + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                     ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if prev_ranks is not None:
-                release_local_checkpoint(prev_ranks)
-            prev_ranks = ranks
-        # the final ranks checkpoint is self-contained, so the
-        # loop-invariant frames are no longer referenced by the
-        # returned plan — but ONLY once the loop ran: at iterations=0
-        # the returned plan is still a select over nodes' checkpoint,
-        # and releasing it would drop the blocks the result IS
         if prev_ranks is not None:
-            for invariant in (e, nodes, e_deg):
-                release_local_checkpoint(invariant)
-        return ranks.select("node", F.round("rank", 6).alias("rank"))
+            release_local_checkpoint(prev_ranks)
+        prev_ranks = ranks
+    # the final ranks checkpoint is self-contained, so the
+    # loop-invariant frames are no longer referenced by the
+    # returned plan — but ONLY once the loop ran: at iterations=0
+    # the returned plan is still a select over nodes' checkpoint,
+    # and releasing it would drop the blocks the result IS
+    if prev_ranks is not None:
+        for invariant in (e, nodes, e_deg):
+            release_local_checkpoint(invariant)
+    return _rebind(
+        ranks.select("node", F.round("rank", 6).alias("rank")),
+        edges.sparkSession,
+    )
 
 
 # --- incremental connected components (g04): persisted CC state --------------
@@ -775,7 +701,6 @@ def components_state(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 30,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """The persistable connected-components state — the graph plane's
     :func:`~..dedup.dedup_signature_state` (round-8 verdict #4): just
@@ -786,9 +711,7 @@ def components_state(
     (/root/reference/wowutil.py:74-85, driver-side networkx);
     persisting the assignment makes each increment
     O(batch + touched components) instead of O(graph)."""
-    return connected_components_star(
-        edges, src, dst, max_rounds, shuffle_partitions
-    )
+    return connected_components_star(edges, src, dst, max_rounds)
 
 
 def incremental_components_from_state(

@@ -791,59 +791,45 @@ def _lloyd_refine(
     (metadata-scale; one aggregate job per round).
 
     r14 (guide §2.4/§1): the rounds run like the graph loops — the
-    training frame is checkpointed ONCE (each round previously
-    re-executed the scan + spread exchange; Spark ML's own KMeans
-    persists its input for the same reason) and the per-round
-    aggregate queries plan on a PRIVATE session clone under the
-    static fence (AQE off + iteration-sized shuffle): every round's
-    output is k×dim rows, so adaptive stage jobs and wide shuffles
-    are pure scheduling overhead here. The fence cannot leak into
-    concurrent planners (clone), and the checkpoint is released the
-    moment training ends — nothing downstream references it.
-    Centroid math is untouched: trajectories are bit-identical
-    (pinned by the oracle)."""
+    training frame is checkpointed ONCE on the caller's session (each
+    round previously re-executed the scan + spread exchange; Spark
+    ML's own KMeans persists its input for the same reason) and the
+    per-round aggregate queries plan on the caller's loop session
+    (graph module docstring, "Loop session"): every round's output is
+    k×dim rows, so wide shuffles are pure scheduling overhead here.
+    The checkpoint is released the moment training ends — nothing
+    downstream references it. Centroid math is untouched:
+    trajectories are bit-identical (pinned by the oracle)."""
     if lloyd_iters <= 0:
         return cents
     from nycdb_k8s_loader_spark.operators.graph import (
-        _clone_for_loop,
-        _iteration_sized_shuffle,
-        _static_loop_plans,
+        _on_loop_session,
         release_local_checkpoint,
     )
 
-    (lv,), _rb = _clone_for_loop(vecs)
-    with _iteration_sized_shuffle(lv, None):
-        ck = lv.localCheckpoint(eager=True)
-        try:
-            with _static_loop_plans(ck.sparkSession):
-                for _ in range(lloyd_iters):
-                    # + 0.0 folds IEEE -0.0 to +0.0 (kmeans_lloyd_step's
-                    # cross-engine convention)
-                    means = (
-                        _assign_flat(ck, cents)
-                        .select(
-                            "cid", F.posexplode("v").alias("pos", "x")
-                        )
-                        .groupBy("cid", "pos")
-                        .agg(
-                            (F.round(F.avg("x"), 4) + F.lit(0.0)).alias(
-                                "m"
-                            )
-                        )
-                        .collect()
-                    )
-                    # empty clusters carry over
-                    new_cents = [list(c) for c in cents]
-                    by_cid: dict[int, list] = {}
-                    for r in means:
-                        by_cid.setdefault(r["cid"], []).append(
-                            (r["pos"], r["m"])
-                        )
-                    for cid, pm in by_cid.items():
-                        new_cents[cid] = [m for _pos, m in sorted(pm)]
-                    cents = new_cents
-        finally:
-            release_local_checkpoint(ck)
+    ck = vecs.localCheckpoint(eager=True)
+    try:
+        (lck,) = _on_loop_session(ck)
+        for _ in range(lloyd_iters):
+            # + 0.0 folds IEEE -0.0 to +0.0 (kmeans_lloyd_step's
+            # cross-engine convention)
+            means = (
+                _assign_flat(lck, cents)
+                .select("cid", F.posexplode("v").alias("pos", "x"))
+                .groupBy("cid", "pos")
+                .agg((F.round(F.avg("x"), 4) + F.lit(0.0)).alias("m"))
+                .collect()
+            )
+            # empty clusters carry over
+            new_cents = [list(c) for c in cents]
+            by_cid: dict[int, list] = {}
+            for r in means:
+                by_cid.setdefault(r["cid"], []).append((r["pos"], r["m"]))
+            for cid, pm in by_cid.items():
+                new_cents[cid] = [m for _pos, m in sorted(pm)]
+            cents = new_cents
+    finally:
+        release_local_checkpoint(ck)
     return cents
 
 

@@ -47,8 +47,10 @@ SCHEMA shares ONE ``conn.commit()``): construct the Publisher with a
 :class:`VersionPointer` and every publish moves ALL tables, the same
 way, into a fresh ``<target>__v_<epoch>_<seq>`` database, then flips
 ONE pointer (an atomic KV write — ParquetKVStore's temp-file +
-``os.replace``). Readers resolve the logical database through the
-pointer (:meth:`VersionPointer.resolve`, honored by
+``os.replace``). The logical database's other tables carry over from
+the pointed-at version by metadata alone, so datasets sharing a
+database never hide each other. Readers resolve the logical database
+through the pointer (:meth:`VersionPointer.resolve`, honored by
 ``SearchPathResolver(pointer=...)``), so mid-publish they keep the
 previous version in full and post-flip they see the new version in
 full — never a mix. Old version databases are pruned AFTER the flip,
@@ -62,6 +64,7 @@ from __future__ import annotations
 
 import itertools
 import re
+import threading
 import time
 import uuid
 from contextlib import contextmanager
@@ -190,6 +193,9 @@ class Publisher:
         # version names sort by (second, sequence) — the prune order;
         # the random suffix keeps two Publishers apart in one second
         self._version_seq = itertools.count()
+        # versioned publishes into one database read the pointed-at
+        # version and flip the pointer: serialize them so none is lost
+        self._versioned_lock = threading.Lock()
 
     # -- namespace management (K5) -------------------------------------------
 
@@ -272,13 +278,14 @@ class Publisher:
             f"{uuid.uuid4().hex[:8]}"
         )
 
-    def _version_root(self, db: str) -> str:
-        """Directory holding ``<table>/v_*`` for tables published into
-        ``db``: the external root's ``<target_db>`` dir, else ``db``'s
-        own location."""
+    def _version_root(self) -> str:
+        """Directory holding ``<table>/v_*`` for every table published
+        into ``target_db`` (its version databases' included): the
+        external root's ``<target_db>`` dir, else ``target_db``'s own
+        location."""
         if self.external_root:
             return f"{self.external_root}/{self.target_db}"
-        return self.spark.catalog.getDatabase(db).locationUri
+        return self.spark.catalog.getDatabase(self.target_db).locationUri
 
     def _hpath(self, uri):
         """(Hadoop Path, its FileSystem) for ``uri``."""
@@ -392,7 +399,7 @@ class Publisher:
             return self._publish_tables_versioned(
                 staging_db, tables, on_table_published
             )
-        root = self._version_root(self.target_db)
+        root = self._version_root()
 
         def publish(t: str) -> None:
             version = self._flip(staging_db, t, self.target_db, root, replace=True)
@@ -420,33 +427,51 @@ class Publisher:
         single-transaction schema swap (load_dataset.py:244-252),
         which the per-table flips above cannot give.
 
+        The pointed-at version's other tables (other datasets
+        publishing into the same logical database) are re-created in
+        the new version at their existing dirs — metadata only, no
+        rename and no job. Version dirs therefore live under the
+        logical database's directory (or the external root), never
+        inside a version database, so a carried table's dir outlives
+        the version database that first held it.
+
         The logical database keeps existing (empty) so unpointed
         readers fail on a missing table instead of a missing database;
         returned names are LOGICAL (``target.table``) — callers
         address tables through the pointer, not the version db."""
-        phys = version_db_name(
-            self.target_db, int(time.time()), next(self._version_seq)
-        )
-        self._sql(f"CREATE DATABASE `{phys}`")
-        root = self._version_root(phys)
-        try:
-            for t in tables:
-                self._flip(staging_db, t, phys, root, replace=False)
-                if on_table_published:
-                    on_table_published(t)
-        except BaseException:
-            # abort: the pointer never flipped, readers never saw the
-            # partial version — drop it and re-raise
-            self.drop_db(phys)
-            raise
-        self.version_pointer.flip(self.target_db, phys)  # THE commit
-        survivors = self._prune_version_dbs()
-        # version dirs under an external root outlive DROP DATABASE:
-        # delete every one no surviving version database references
-        # (without a root they live in their database's directory and
-        # go with it)
-        if self.external_root:
-            for t in tables:
+        root = self._version_root()
+        with self._versioned_lock:
+            prev = self.version_pointer.current(self.target_db)
+            carried = []
+            if prev and self.spark.catalog.databaseExists(prev):
+                carried = [
+                    t.name for t in self.spark.catalog.listTables(prev)
+                    if not t.isTemporary and t.name not in tables
+                ]
+            phys = version_db_name(
+                self.target_db, int(time.time()), next(self._version_seq)
+            )
+            self._sql(f"CREATE DATABASE `{phys}`")
+            try:
+                for t in tables:
+                    self._flip(staging_db, t, phys, root, replace=False)
+                    if on_table_published:
+                        on_table_published(t)
+                for t in carried:
+                    meta = self._catalog_table(prev, t)
+                    self._sql(self._create_sql(meta, phys, t, str(meta.location())))
+                    if meta.partitionColumnNames().nonEmpty():
+                        self.spark.catalog.recoverPartitions(f"`{phys}`.`{t}`")
+            except BaseException:
+                # abort: the pointer never flipped, readers never saw the
+                # partial version — drop it and re-raise
+                self.drop_db(phys)
+                raise
+            self.version_pointer.flip(self.target_db, phys)  # THE commit
+            survivors = self._prune_version_dbs()
+            # version dirs outlive DROP DATABASE: delete every one no
+            # surviving version database references
+            for t in tables + carried:
                 refs = {self._table_location(db, t) for db in survivors}
                 self._prune(
                     f"{root}/{t}",

@@ -21,6 +21,19 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def small_shuffle_partitions(spark: SparkSession) -> int:
+    """Shuffle width for many tiny shuffles (iterative loops, streaming
+    state stores): ``max(8, defaultParallelism // 2)``, never above the
+    session's ``spark.sql.shuffle.partitions``. Per-partition overhead,
+    not data, dominates those shuffles at the batch default; a cluster's
+    defaultParallelism scales with its size, so big jobs keep width."""
+    n = max(8, spark.sparkContext.defaultParallelism // 2)
+    try:
+        return min(n, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    except (TypeError, ValueError):
+        return n  # 'auto' etc. — keep the heuristic
+
+
 def get_spark(
     app_name: str = "nycdb_k8s_loader_spark",
     master: str | None = None,

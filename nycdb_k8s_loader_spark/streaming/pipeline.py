@@ -34,10 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nycdb_k8s_loader_spark.session import small_shuffle_partitions
+
 
 @contextmanager
-def state_sized_shuffle(spark: SparkSession, partitions: int | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` for a streaming query's
+def state_sized_shuffle(spark: SparkSession):
+    """Pin ``spark.sql.shuffle.partitions`` to
+    :func:`~..session.small_shuffle_partitions` for a streaming query's
     lifetime (start → awaitTermination), then restore.
 
     Stateful operators materialize one state-store instance PER
@@ -47,24 +50,16 @@ def state_sized_shuffle(spark: SparkSession, partitions: int | None = None):
     (measured at sf0.1: st04 27 s → 3.7 s on 8 cores; 12.6/5.5/3.3/
     2.3 s at 64/32/16/8 partitions on 32 cores — per-partition store
     overhead dominates until per-partition state stops fitting in
-    memory). Heuristic: clamp DOWN to max(8, cores/2), never above the
-    session's setting — at deploy scale pass ``partitions`` explicitly
-    and size for state volume; the count is BAKED INTO the checkpoint,
-    so pick for the target deployment, not the laptop. Batch queries
-    are unaffected: AQE coalesces their small shuffles, but streaming
-    state partitioning is fixed at query start and AQE never touches
-    it.
+    memory). The count is BAKED INTO the checkpoint, so at deploy
+    scale size the session's own setting for state volume. Batch
+    queries are unaffected: AQE coalesces their small shuffles, but
+    streaming state partitioning is fixed at query start and AQE never
+    touches it.
     """
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if partitions is not None:
-        n = partitions
-    else:
-        n = max(8, spark.sparkContext.defaultParallelism // 2)
-        try:
-            n = min(n, int(prev))
-        except (TypeError, ValueError):
-            pass  # 'auto' etc. — keep the heuristic
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(small_shuffle_partitions(spark))
+    )
     try:
         yield
     finally:

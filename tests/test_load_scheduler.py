@@ -333,6 +333,9 @@ class TestEngineThroughScheduler:
 
 
 def test_loop_clone_raises_when_rebind_fails(spark, monkeypatch):
+    """A loop whose input cannot be rebound onto the loop session
+    raises instead of fencing the shared session; the caller's conf is
+    untouched."""
     from nycdb_k8s_loader_spark.operators import graph
 
     def broken(df, session):
@@ -340,7 +343,9 @@ def test_loop_clone_raises_when_rebind_fails(spark, monkeypatch):
 
     monkeypatch.setattr(graph, "_rebind", broken)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    width = spark.conf.get("spark.sql.shuffle.partitions")
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(RuntimeError, match="private session"):
         graph.connected_components(edges)
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width

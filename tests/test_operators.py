@@ -65,13 +65,13 @@ class TestConnectedComponents:
         assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
     def test_loop_fences_isolated_from_caller_session(self, spark, monkeypatch):
-        """r14 (judge item #7): the loop fences (AQE off + clamped
-        shuffle partitions) must run on a PRIVATE cloned session so a
-        concurrent query planned on the caller's session keeps its own
-        conf. The spy runs while ``_iteration_sized_shuffle`` is held:
-        the caller session's conf must be untouched, the loop frame
-        must live on a different session with the clamp applied, and
-        the returned frame must be rebased back onto the caller."""
+        """The loop fence (clamped shuffle partitions) lives on a
+        PRIVATE cloned session so a concurrent query planned on the
+        caller's session keeps its own conf. The spy runs inside the
+        loop: the caller session's conf must be untouched, the loop
+        frame must live on a different session with the clamp applied
+        and the caller's AQE setting, and the returned frame must be
+        rebased back onto the caller."""
         from nycdb_k8s_loader_spark.operators import graph
 
         edges = spark.createDataFrame(
@@ -91,11 +91,9 @@ class TestConnectedComponents:
             seen["loop_sp"] = raw.sparkSession.conf.get(
                 "spark.sql.shuffle.partitions"
             )
-            with graph._static_loop_plans(raw.sparkSession):
-                # AQE fence held on the clone: caller still untouched
-                seen["caller_aqe_during_fence"] = spark.conf.get(
-                    "spark.sql.adaptive.enabled", "true"
-                )
+            seen["loop_aqe"] = raw.sparkSession.conf.get(
+                "spark.sql.adaptive.enabled"
+            )
             return orig(raw, max_iterations)
 
         monkeypatch.setattr(graph, "_label_propagation_loop", spy)
@@ -106,9 +104,109 @@ class TestConnectedComponents:
         assert seen["loop_is_clone"]
         assert seen["caller_sp"] == prev_sp
         assert seen["caller_aqe"] == prev_aqe
-        assert seen["caller_aqe_during_fence"] == prev_aqe
+        assert seen["loop_aqe"] == prev_aqe
         assert int(seen["loop_sp"]) <= int(prev_sp)
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
+        assert spark.conf.get("spark.sql.adaptive.enabled", "true") == prev_aqe
+
+    def test_repeated_loops_share_one_clone(self, spark, monkeypatch):
+        """Three loops on one caller session create ONE loop session
+        (a clone per call used to be created and never released)."""
+        from nycdb_k8s_loader_spark.operators import graph
+
+        graph._LOOP_SESSIONS.pop(spark, None)
+        made = []
+        new_session = spark.newSession
+
+        def counting():
+            made.append(new_session())
+            return made[-1]
+
+        monkeypatch.setattr(spark, "newSession", counting)
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "src bigint, dst bigint"
+        )
+        for _ in range(3):
+            comp = {
+                r["node"]: r["component"]
+                for r in graph.connected_components(edges).collect()
+            }
+            assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+        assert len(made) == 1
+
+    def test_concurrent_loops_on_one_caller(self, spark, monkeypatch):
+        """More threads than cores run connected_components on one
+        caller session at once: every answer is right, they share ONE
+        clone (a lost update of the cache would make more), and the
+        caller's conf is never written."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        from nycdb_k8s_loader_spark.operators import graph
+
+        graph._LOOP_SESSIONS.pop(spark, None)
+        made = []
+        new_session = spark.newSession
+
+        def counting():
+            made.append(new_session())
+            return made[-1]
+
+        monkeypatch.setattr(spark, "newSession", counting)
+        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+
+        def run(i):
+            base = 100 * i
+            edges = spark.createDataFrame(
+                [(base, base + 1), (base + 1, base + 2), (base + 50, base + 51)],
+                "src bigint, dst bigint",
+            )
+            return {
+                r["node"]: r["component"]
+                for r in graph.connected_components(edges).collect()
+            }
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(6) as pool:
+                futures = [pool.submit(run, i) for i in range(6)]
+                results = [f.result(timeout=300) for f in futures]
+        finally:
+            sys.setswitchinterval(interval)
+        for i, comp in enumerate(results):
+            b = 100 * i
+            assert comp == {
+                b: b, b + 1: b, b + 2: b, b + 50: b + 50, b + 51: b + 50
+            }
+        assert len(made) == 1
+        assert prev_aqe == "true"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
+
+    def test_caller_conf_change_reaches_next_loop(self, spark, monkeypatch):
+        """A caller conf set after a loop ran (e.g. the lazily set
+        legacy nanos parquet switch) is visible to the next loop."""
+        from nycdb_k8s_loader_spark.operators import graph
+
+        key = "spark.graft.test.loopConfMarker"
+        seen = []
+        orig = graph._label_propagation_loop
+
+        def spy(raw, max_iterations):
+            seen.append(raw.sparkSession.conf.get(key, None))
+            return orig(raw, max_iterations)
+
+        monkeypatch.setattr(graph, "_label_propagation_loop", spy)
+        edges = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+        try:
+            graph.connected_components(edges).collect()
+            spark.conf.set(key, "set-after-first-loop")
+            graph.connected_components(edges).collect()
+        finally:
+            spark.conf.unset(key)
+        assert seen == [None, "set-after-first-loop"]
 
     def test_cluster_assignments_shape(self, spark):
         pairs = spark.createDataFrame([(5, 7), (7, 9)], "doc_a bigint, doc_b bigint")

@@ -117,6 +117,44 @@ def test_one_load_path():
     assert "builder" not in {f.name for f in dataclasses.fields(DatasetDef)}
 
 
+def test_loop_fences_set_in_one_place():
+    """Loops plan on one cached session clone per caller whose conf is
+    written once, at creation: inside the package only
+    operators/graph.py clones a session, and AQE and the shuffle width
+    are set only by the loop-session helper and streaming's
+    ``state_sized_shuffle`` (no per-call set/restore fences)."""
+    import re
+
+    fences = {"spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"}
+    clones, setters = [], set()
+    for path in _modules():
+        rel = os.path.relpath(path, PKG)
+        src = open(path).read()
+        if re.search(r"\bnewSession\(", src):
+            clones.append(rel)
+        tree = ast.parse(src)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for call in ast.walk(fn):
+                if (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "set"
+                    and isinstance(call.func.value, ast.Attribute)
+                    and call.func.value.attr == "conf"
+                    and call.args
+                    and isinstance(call.args[0], ast.Constant)
+                    and call.args[0].value in fences
+                ):
+                    setters.add(f"{rel}::{fn.name}")
+    assert clones == [os.path.join("operators", "graph.py")]
+    assert setters == {
+        os.path.join("operators", "graph.py") + "::_on_loop_session",
+        os.path.join("streaming", "pipeline.py") + "::state_sized_shuffle",
+    }
+
+
 class TestScaleGate:
     """bench_scale's structural linearity gate (round-7 verdict #2):
     shuffle-byte growth is the primary signal, wall growth gates only

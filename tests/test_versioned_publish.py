@@ -159,6 +159,36 @@ class TestCrossTableAtomicity:
                     spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
 
 
+    def test_concurrent_publishes_into_one_db_keep_every_table(self, spark):
+        """More threads than cores publish one table each into ONE
+        logical database through one Publisher: the pointed-at version
+        holds every table (a lost pointer update would drop some)."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        pointer = VersionPointer(DictKVStore())
+        pub = Publisher(spark, target_db="vconc", version_pointer=pointer)
+
+        def publish(i):
+            with pub.staging(f"ds{i}") as db:
+                _stage(pub, db, f"t{i}", i)
+                pub.publish_tables(db, [f"t{i}"])
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(6) as pool:
+                for f in [pool.submit(publish, i) for i in range(6)]:
+                    f.result(timeout=300)
+            for i in range(6):
+                assert _read_val(spark, pointer, "vconc", f"t{i}") == i
+        finally:
+            sys.setswitchinterval(interval)
+            for d in spark.catalog.listDatabases():
+                if d.name.startswith("vconc"):
+                    spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
+
+
 class TestEngineVersionedPublish:
     def test_engine_e2e_load_and_read_through_pointer(self, spark, tmp_path):
         """Engine(versioned_publish=True): a standard dataset load
@@ -272,6 +302,58 @@ class TestEngineVersionedPublish:
         finally:
             for d in spark.catalog.listDatabases():
                 if d.name.startswith("vcust"):
+                    spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
+
+    def test_datasets_sharing_a_db_never_hide_each_other(
+        self, spark, tmp_path
+    ):
+        """Two one-table datasets publish into ONE logical database:
+        each new version carries the other dataset's table, so
+        read_published returns both after every publish — including
+        after the prune has dropped the version db that first held
+        the carried table."""
+        from nycdb_k8s_loader_spark.engine import Engine
+        from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry
+        from nycdb_k8s_loader_spark.state.lastmod import FetchResult
+
+        def populate(table, rows):
+            def run(sp, staging_db):
+                sp.range(rows).write.saveAsTable(f"`{staging_db}`.`{table}`")
+            return Populate(run, creates=(table,))
+
+        reg = Registry()
+        reg.add(DatasetDef(name="vsh_a", label="a", sql=[populate("ta", 2)]))
+        reg.add(DatasetDef(name="vsh_b", label="b", sql=[populate("tb", 3)]))
+        eng = Engine(
+            spark, reg, DictKVStore(), target_db="vshared",
+            landing_root=str(tmp_path / "landing"),
+            transport=lambda url, headers: FetchResult(200),
+            downloader=lambda url, dest: None,
+            versioned_publish=True,
+        )
+
+        def versions():
+            return sorted(
+                d.name for d in spark.catalog.listDatabases()
+                if parse_version_db(d.name) == "vshared"
+            )
+
+        try:
+            eng.load("vsh_a")
+            eng.load("vsh_b")
+            first_with_tb = eng.version_pointer.current("vshared")
+            assert eng.read_published("ta").count() == 2
+            assert eng.read_published("tb").count() == 3
+            for _ in range(3):
+                eng.load("vsh_a", force=True)
+                assert eng.read_published("ta").count() == 2
+                assert eng.read_published("tb").count() == 3
+            # the prune ran and dropped the version db tb was published in
+            assert first_with_tb not in versions()
+            assert len(versions()) == 2
+        finally:
+            for d in spark.catalog.listDatabases():
+                if d.name.startswith("vshared"):
                     spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
 
     def test_reference_table_functions_read_through_pointer(
