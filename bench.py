@@ -64,7 +64,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nycdb_k8s_loader_spark.plans.catalog import queries  # noqa: E402
-from nycdb_k8s_loader_spark.session import get_spark  # noqa: E402
+from nycdb_k8s_loader_spark.session import (  # noqa: E402
+    get_spark,
+    stage_ledger,
+)
 
 HEADLINE = [
     "flagship_bldgs",
@@ -320,10 +323,10 @@ def _measure_query(
     :func:`_measure_pass` for the protocol rationale)."""
     import statistics
 
-    best = None  # (steal_delta, bracket_sec, runs, b_runs, e_runs)
+    best = None  # (steal_delta, bracket_sec, runs, b_runs, e_runs, s_runs)
     attempts = 0
     for attempt in range(max_attempts):
-        runs, b_runs, e_runs = [], [], []
+        runs, b_runs, e_runs, s_runs = [], [], [], []
         s0 = _steal_jiffies()
         w0 = time.perf_counter()
         for _ in range(n_runs):
@@ -337,18 +340,25 @@ def _measure_query(
             # recorded separately (round-9 verdict #5): ``exec``
             # keeps its pre-r9 semantics, so round-over-round
             # comparability survives the honesty fix.
+            # the stage ledger names and times the eager stage
+            # boundaries inside the build
             t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
+            with stage_ledger() as records:
+                df = qs[name](spark, sf_dir)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             runs.append(t2 - t0)
             b_runs.append(t1 - t0)
             e_runs.append(t2 - t1)
+            stages: dict[str, float] = {}
+            for stage_name, secs in records:
+                stages[stage_name] = stages.get(stage_name, 0.0) + secs
+            s_runs.append(stages)
         bracket_sec = time.perf_counter() - w0
         s_delta = _steal_jiffies() - s0
         if best is None or s_delta < best[0]:
-            best = (s_delta, bracket_sec, runs, b_runs, e_runs)
+            best = (s_delta, bracket_sec, runs, b_runs, e_runs, s_runs)
         attempts = attempt + 1
         gate = max(clean_jiffies, int(clean_rate_jps * bracket_sec))
         if s_delta <= gate:
@@ -361,12 +371,18 @@ def _measure_query(
             file=sys.stderr,
         )
         time.sleep(5.0)
-    s_delta, bracket_sec, runs, b_runs, e_runs = best
+    s_delta, bracket_sec, runs, b_runs, e_runs, s_runs = best
     gate = max(clean_jiffies, int(clean_rate_jps * bracket_sec))
     steady = slice(1, None) if len(runs) > 1 else slice(None)
+    build = statistics.median(b_runs[steady])
+    # the ledger of the steady run whose build is nearest the median
+    _, stages = min(
+        zip(b_runs[steady], s_runs[steady]), key=lambda r: abs(r[0] - build)
+    )
     return {
         "total": round(statistics.median(runs[steady]), 3),
-        "build": round(statistics.median(b_runs[steady]), 3),
+        "build": round(build, 3),
+        "stages": {k: round(v, 3) for k, v in stages.items()},
         "exec": round(statistics.median(e_runs[steady]), 3),
         "cold": round(runs[0], 3),
         "steal": s_delta,
@@ -382,6 +398,7 @@ def _assemble_pass(recs: dict[str, dict]) -> dict:
     return {
         "queries": {n: r["total"] for n, r in recs.items()},
         "build_queries": {n: r["build"] for n, r in recs.items()},
+        "stages_queries": {n: r["stages"] for n, r in recs.items()},
         "exec_queries": {n: r["exec"] for n, r in recs.items()},
         "cold": {n: r["cold"] for n, r in recs.items()},
         "steal_jiffies_per_query": {n: r["steal"] for n, r in recs.items()},
@@ -513,6 +530,7 @@ def main(against: str | None = None) -> None:
         "unit": "sec",
         "queries": timings,
         "build_queries": build,
+        "stages_queries": hp["stages_queries"],
         "exec_queries": execs,
         "build_total_sec": round(sum(build.values()), 3),
         "exec_total_sec": round(sum(execs.values()), 3),
@@ -589,6 +607,32 @@ def main(against: str | None = None) -> None:
         sys.exit(3)
 
 
+def vhash(pdf) -> str:
+    """Order-insensitive value hash of a pandas frame: columns sorted
+    by name, timestamps at microseconds, floats at 6 decimals, rows
+    sorted — the compare the external driver runs against each
+    query's DuckDB oracle."""
+    import hashlib
+    import math
+
+    import pandas as pd
+
+    pdf = pdf[sorted(pdf.columns)]
+    for c in pdf.columns:
+        if pd.api.types.is_datetime64_any_dtype(pdf[c]):
+            pdf[c] = pdf[c].astype("datetime64[us]")
+    rows = [
+        "|".join(
+            "%.6f" % v
+            if isinstance(v, float) and not math.isnan(v)
+            else str(v)
+            for v in r
+        )
+        for r in pdf.itertuples(index=False)
+    ]
+    return hashlib.md5("\n".join(sorted(rows)).encode()).hexdigest()
+
+
 def profile_all() -> None:
     """``python bench.py --all``: time EVERY catalog query once at the
     bench scale factor and print one JSON line (slowest first). Not
@@ -634,11 +678,7 @@ def oracle_sweep(out_path: str | None = None) -> None:
     catalog (the driver samples ~50 per round, so without this a
     query can go rounds with no correctness signal). Commit the output
     as SWEEP_r{N}.json."""
-    import hashlib
-    import math
-
     import duckdb
-    import pandas as pd
 
     sf_dir = os.environ.get("SPARK_GRAFT_SWEEP_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="nycdb-spark-sweep")
@@ -652,22 +692,6 @@ def oracle_sweep(out_path: str | None = None) -> None:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    def vhash(pdf: "pd.DataFrame") -> str:
-        pdf = pdf[sorted(pdf.columns)]
-        for c in pdf.columns:
-            if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-                pdf[c] = pdf[c].astype("datetime64[us]")
-        rows = [
-            "|".join(
-                "%.6f" % v
-                if isinstance(v, float) and not math.isnan(v)
-                else str(v)
-                for v in r
-            )
-            for r in pdf.itertuples(index=False)
-        ]
-        return hashlib.md5("\n".join(sorted(rows)).encode()).hexdigest()
 
     out: dict[str, dict] = {}
     for name, spec in sorted(QUERIES.items()):

@@ -45,7 +45,10 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import _await_idle, _parallelism  # noqa: E402
-from nycdb_k8s_loader_spark.session import get_spark  # noqa: E402
+from nycdb_k8s_loader_spark.session import (  # noqa: E402
+    get_spark,
+    materialize,
+)
 
 HEAVY = [
     "d03_minhash_band_candidates",
@@ -764,7 +767,7 @@ def _c09_lifecycle_state_setup(spark, sf_dir):
     corpus = _docs(spark, sf_dir).filter(
         sample_bucket(F.col("doc_id")) < 500_000
     )
-    cpre = _pseudo_sentence_docs(corpus).localCheckpoint(eager=True)
+    cpre = materialize(_pseudo_sentence_docs(corpus), "c09.sentences")
     sentence_dedup_state(
         cpre, min_docs=2, min_words=3, with_counts=True
     ).write.mode("overwrite").parquet(_os.path.join(root, "st3"))

@@ -22,6 +22,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nycdb_k8s_loader_spark.session import stage
+
 
 def normalized_text(col: str = "text") -> F.Column:
     """Shared normalization: lower + trim (the dedup equivalence class)."""
@@ -679,6 +681,7 @@ def simhash_near_pairs(
     )
 
 
+@stage("dedup.fuzzy")
 def fuzzy_dedup(
     df: DataFrame,
     threshold: float = 0.7,

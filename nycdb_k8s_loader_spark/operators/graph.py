@@ -17,40 +17,16 @@ O(graph diameter) rounds — near-dup clusters and landlord portfolios
 are shallow (diameter ≲ 10). For adversarial deep graphs, swap in
 large-star/small-star (Kiveris et al.) — same DataFrame skeleton.
 
-Every iteration localCheckpoints the labels frame: without it the
-lineage doubles per round and the planner, not the job, becomes the
-bottleneck.
-
-Checkpoint hygiene (round 7): every eager localCheckpoint pins blocks
-in the block manager, and Spark's ContextCleaner only reclaims them
-after a DRIVER GC collects the superseded reference — by default up to
-``spark.cleaner.periodicGC.interval`` = 30 MINUTES later. An iterative
-operator that checkpoints per round therefore leaks (rounds - 1)
-generations of state into every long-lived session; measured at sf3,
-queries running after a few graph/dedup calls slowed 2-10× purely from
-that accumulated storage (d11: 12 s clean vs 117 s in a leaky
-session). Fix: :func:`release_local_checkpoint` frees each superseded
-generation the moment the next one is materialized. Only frames that
-no RETURNED plan references are released — unpersisting a
-localCheckpoint that a live plan still needs would fail later actions
-(localCheckpoint truncates lineage; its blocks ARE the data).
+Every iteration materializes the labels frame as a named checkpoint
+(:func:`~..session.materialize`, which also owns releasing each
+superseded generation): without it the lineage doubles per round and
+the planner, not the job, becomes the bottleneck.
 
 Loop session: every iterative operator here (and similarity's Lloyd
 rounds) materializes its input on the caller's session, then runs its
-loop on a ``newSession()`` clone of the caller (:func:`_on_loop_session`)
+loop on the caller's loop session (:func:`~..session._on_loop_session`)
 and rebinds the result back, so downstream composition plans under the
-caller's conf. The clone shares the SparkContext (block manager,
-executors — checkpoints work unchanged) but owns its SQLConf, which is
-written once, when the clone is made: the caller's conf with
-``spark.sql.shuffle.partitions`` clamped to
-:func:`~..session.small_shuffle_partitions`. A loop runs 2-3 tiny
-shuffles per round, and at the batch default task scheduling, not
-data, is the bottleneck (wow portfolio CC 2.8 s → 1.6 s at sf0.1 by
-32 → 8); the clamp never exceeds the caller's setting, so big-graph
-sessions keep their width. The engine plans independent jobs
-concurrently from driver threads, so clamping the caller's own conf
-would leak into them; on the clone no other planner sees it, and
-concurrent loops share it.
+caller's conf.
 
 AQE stays as the caller set it. The loops' checkpoints are keyed for a
 static plan (r13): ``localCheckpoint`` captures the executed plan's
@@ -59,18 +35,20 @@ join/aggregate downstream skips the exchange, while an AQE plan reports
 Unknown partitioning (r13 probe: AQE-on checkpoint → 1 exchange per
 consumer, AQE-off → 0). Turning AQE off on the loop session saved less
 than run noise on the benchmark's graphs, so it was dropped (numbers at
-:func:`_on_loop_session`).
+``session._LOOP_SESSIONS``).
 """
 
 from __future__ import annotations
 
-import threading
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from nycdb_k8s_loader_spark.session import small_shuffle_partitions
+from nycdb_k8s_loader_spark.session import (
+    _on_loop_session,
+    _rebind,
+    materialize,
+    release,
+)
 
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -95,82 +73,6 @@ def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return edges.select(pair.alias("e")).select("e.a", "e.b")
 
 
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind a SUPERSEDED eager
-    localCheckpoint without waiting for the driver's next full GC +
-    ContextCleaner sweep (default periodicGC interval: 30 min).
-
-    The checkpointed Dataset's analyzed plan is a ``LogicalRDD``
-    wrapping the persisted RDD; unpersisting that RDD drops its
-    blocks. Safe ONLY for frames nothing downstream will execute
-    again — a localCheckpoint's blocks ARE its data (lineage is
-    truncated), so releasing a frame a returned plan still references
-    would fail later actions with 'checkpoint block not found'.
-    Wrapped defensively: the LogicalRDD handle is internal API, and a
-    no-op release just means the ContextCleaner reclaims the blocks
-    on its own schedule instead.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 - best-effort storage hygiene
-        pass
-
-
-def _rebind(df: DataFrame, session) -> DataFrame:
-    """``df``'s analyzed plan as a DataFrame of ``session`` (internal
-    ``Dataset.ofRows``; same JVM plan, other session's conf)."""
-    from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-    jvm_dataset = session._jvm.org.apache.spark.sql.classic.Dataset
-    plan = df._jdf.queryExecution().analyzed()
-    return _CDF(jvm_dataset.ofRows(session._jsparkSession, plan), session)
-
-
-# caller session -> (its conf when the clone was made, the clone).
-# Measured before AQE was left on (perfbench, 4 vCPUs, seeds 101-110,
-# traced, 10 alternating pairs, AQE off vs on): refresh
-# operators.graph.self_s median 1.446 vs 1.496 s (AQE-off IQR 0.235),
-# analytics plans.build_s.d09_fuzzy_dedup_e2e 0.078 vs 0.086 s (IQR
-# 0.010); AQE off bought less than its IQR on both, so it was dropped.
-_LOOP_SESSIONS: WeakKeyDictionary = WeakKeyDictionary()
-_LOOP_SESSIONS_LOCK = threading.Lock()
-
-
-def _on_loop_session(*dfs: DataFrame) -> tuple[DataFrame, ...]:
-    """``dfs`` rebound onto the loop session of their caller session
-    (module docstring, "Loop session"): one cached ``newSession()``
-    clone per caller, whose conf is the caller's with the clamped
-    shuffle width, written once at creation. When the caller's conf has changed since
-    (e.g. the lazily set legacy nanos parquet switch) a new clone
-    replaces the cached one; loops still running keep the old clone,
-    whose conf nobody writes again. Raises if the (internal) rebinding
-    API fails: fencing the shared session instead would leak the
-    loop's conf into every concurrent planner."""
-    spark = dfs[0].sparkSession
-    try:
-        seen = spark._jsparkSession.conf().getAll().toString()
-        with _LOOP_SESSIONS_LOCK:
-            made, loop = _LOOP_SESSIONS.get(spark, (None, None))
-            if made != seen:
-                loop = spark.newSession()
-                for key, value in spark.conf.getAll.items():
-                    try:
-                        loop.conf.set(key, value)
-                    except Exception:  # noqa: BLE001
-                        pass  # static/core entries — context-level, shared anyway
-                loop.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(small_shuffle_partitions(spark)),
-                )
-                _LOOP_SESSIONS[spark] = (seen, loop)
-        return tuple(_rebind(df, loop) for df in dfs)
-    except Exception as exc:
-        raise RuntimeError(
-            "cannot rebind the loop's input onto a private session; "
-            "refusing to fence the shared session"
-        ) from exc
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -184,7 +86,7 @@ def connected_components(
     # checkpoint the ENTIRE upstream pipeline that produced it (e.g.
     # the shingled-Jaccard pair build feeding g01) re-executes once
     # per iteration — measured 3× the total g01 runtime at sf0.1.
-    raw = _symmetrized(edges, src, dst).localCheckpoint(eager=True)
+    raw = materialize(_symmetrized(edges, src, dst), "graph.cc.edges")
     (raw,) = _on_loop_session(raw)
     return _rebind(
         _label_propagation_loop(raw, max_iterations), edges.sparkSession
@@ -209,12 +111,11 @@ def _label_propagation_loop(
     edge pipeline materializes on the caller's session in the ``raw``
     checkpoint; this job only re-keys the edge list."""
     n_shuffle = int(raw.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        raw.repartition(n_shuffle, "b")
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=True)
+    sym = materialize(
+        raw.repartition(n_shuffle, "b").dropDuplicates(["a", "b"]),
+        "graph.cc.sym",
+        release=(raw,),
     )
-    release_local_checkpoint(raw)
     # Fused init (r13, guide §2.4): under identity labels, round
     # 1's neighbor-min join degenerates to min(b) per a — so the
     # init job emits the ROUND-1 labels directly
@@ -225,14 +126,14 @@ def _label_propagation_loop(
     # every node of sym appears as `a` (symmetrized), and min(b)
     # over a node's neighbors is never null. The groupBy's output
     # partitioning (a → node) rides the checkpoint into round 1.
-    labels = (
+    labels = materialize(
         sym.groupBy("a")
         .agg(F.min("b").alias("__mb"))
         .select(
             F.col("a").alias("node"),
             F.least(F.col("a"), F.col("__mb")).alias("component"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "graph.cc.init",
     )
 
     for _ in range(max_iterations):
@@ -261,7 +162,7 @@ def _label_propagation_loop(
         # neighbor_min is already a-partitioned by its groupBy —
         # so the update join is exchange-free and its output
         # stays node-partitioned for the NEXT round's checkpoint.
-        new_labels = (
+        labels = materialize(
             labels.join(
                 neighbor_min.hint("shuffle_hash"),
                 labels.node == neighbor_min.a,
@@ -283,14 +184,12 @@ def _label_propagation_loop(
                 obs,
                 F.count(F.when(F.col("__chg"), 1)).alias("n_changed"),
             )
-            .select("node", "component")
-            .localCheckpoint(eager=True)
+            .select("node", "component"),
+            "graph.cc.round",
+            release=(labels,),  # superseded generation
         )
-        changed = obs.get["n_changed"]
-        release_local_checkpoint(labels)  # superseded generation
-        labels = new_labels
-        if changed == 0:
-            release_local_checkpoint(sym)  # result is labels-only
+        if obs.get["n_changed"] == 0:
+            release(sym)  # result is labels-only
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
@@ -364,9 +263,10 @@ def connected_components_star(
     # edge plan; cur and all_nodes both derive from the checkpointed
     # raw projection (r13 — previously each of the two init
     # checkpoints re-executed the full upstream edge build).
-    raw = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    raw = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        "graph.star.edges",
+    )
     (raw,) = _on_loop_session(raw)
     # Canonicalize ONCE at init (r13): every later generation is
     # already greatest/least-canonical by construction (the star
@@ -381,22 +281,22 @@ def connected_components_star(
     # Observation — the seed for the size half of the set-equality
     # test.
     obs0 = Observation()
-    cur = (
+    cur = materialize(
         raw.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"),
             F.least("u", "v").alias("v"),
         )
         .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n_edges"))
-        .localCheckpoint(eager=True)
+        .observe(obs0, F.count(F.lit(1)).alias("n_edges")),
+        "graph.star.init",
     )
-    all_nodes = (
+    all_nodes = materialize(
         raw.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "graph.star.nodes",
+        release=(raw,),  # both derivations materialized
     )
-    release_local_checkpoint(raw)  # both derivations materialized
     return _rebind(
         _star_loop(cur, int(obs0.get["n_edges"]), all_nodes, max_rounds),
         edges.sparkSession,
@@ -454,10 +354,10 @@ def _star_loop(
         ls = _large_star(sym)
         ls_ckpt = n_cur >= _LS_CKPT_MIN_EDGES
         if ls_ckpt:
-            ls = ls.localCheckpoint(eager=True)
+            ls = materialize(ls, "graph.star.large")
         nxt_set = _small_star(ls)
         obs = Observation()
-        nxt = (
+        nxt = materialize(
             nxt_set.join(
                 cur.withColumn("__old", F.lit(True)).hint("shuffle_hash"),
                 ["u", "v"],
@@ -470,14 +370,14 @@ def _star_loop(
                     F.when(F.col("__old").isNull(), 1)
                 ).alias("n_new"),
             )
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+            .select("u", "v"),
+            "graph.star.round",
+            # the superseded edge generation, and ls (consumed by
+            # nxt's job) when it was checkpointed
+            release=(cur, ls) if ls_ckpt else (cur,),
         )
         n_nxt = int(obs.get["n_edges"])
         unchanged = int(obs.get["n_new"]) == 0 and n_nxt == n_cur
-        release_local_checkpoint(cur)  # superseded edge generation
-        if ls_ckpt:
-            release_local_checkpoint(ls)  # consumed by nxt's job
         cur, n_cur = nxt, n_nxt
         if unchanged:
             break
@@ -536,10 +436,8 @@ def bfs_reachable(
     frame is a fraction of the graph — this is the shape GraphFrames'
     BFS uses underneath.
     """
-    sym = (
-        _symmetrized(edges, src, dst)
-        .distinct()
-        .localCheckpoint(eager=True)
+    sym = materialize(
+        _symmetrized(edges, src, dst).distinct(), "graph.bfs.edges"
     )
     # the hops run on the loop session, sym materialized above on the
     # caller's. Each hop's frontier checkpoint is node-partitioned, so
@@ -555,28 +453,29 @@ def _bfs_hops(
     sym: DataFrame, seeds: DataFrame, seed_col: str, max_hops: int
 ) -> DataFrame:
     frontier = seeds.select(F.col(seed_col).alias("node")).distinct()
-    visited = frontier.withColumn("hops", F.lit(0)).localCheckpoint(eager=True)
+    visited = materialize(
+        frontier.withColumn("hops", F.lit(0)), "graph.bfs.seeds"
+    )
     hop = 1
     while True:
         # the frontier-exhausted test rides the checkpoint job as an
         # Observation (second r13 pass — the star/label-prop lesson):
         # the previous isEmpty() was one extra job per hop
         obs = Observation()
-        nxt = (
+        nxt = materialize(
             sym.join(frontier, sym.a == F.col("node"))
             .select(F.col("b").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .observe(obs, F.count(F.lit(1)).alias("n")),
+            "graph.bfs.hop",
         )
         if int(obs.get["n"]) == 0:
-            release_local_checkpoint(nxt)
-            release_local_checkpoint(sym)  # result is visited-only
-            # the last productive frontier was folded into visited at
-            # the previous union (first-round exit: frontier is the
-            # caller's un-checkpointed seeds — release is a no-op)
-            release_local_checkpoint(frontier)
+            # sym: the result is visited-only; the last productive
+            # frontier was folded into visited at the previous union
+            # (first-round exit: frontier is the caller's
+            # un-checkpointed seeds — release is a no-op)
+            release(nxt, sym, frontier)
             return visited
         if hop > max_hops:
             # Still discovering nodes past the cap: raise rather than
@@ -588,14 +487,13 @@ def _bfs_hops(
                 f"{max_hops} hops — raise max_hops (depth needed = "
                 "eccentricity of the seed set)."
             )
-        prev_visited, prev_frontier = visited, frontier
-        visited = visited.unionByName(
-            nxt.withColumn("hops", F.lit(hop))
-        ).localCheckpoint(eager=True)
-        # the union checkpoint materialized both inputs' rows, so the
-        # prior generations (and the folded-in frontier) are garbage
-        release_local_checkpoint(prev_visited)
-        release_local_checkpoint(prev_frontier)
+        # the union checkpoint materializes both inputs' rows, so the
+        # prior generation (and the folded-in frontier) are garbage
+        visited = materialize(
+            visited.unionByName(nxt.withColumn("hops", F.lit(hop))),
+            "graph.bfs.visited",
+            release=(visited, frontier),
+        )
         frontier = nxt
         hop += 1
 
@@ -635,28 +533,26 @@ def pagerank(
     node-partitioning from the join that produced it, so in a static
     plan a round's only exchange is the inflow groupBy on ``v``.
     """
-    e = edges.select(src, dst).distinct().localCheckpoint(eager=True)
+    e = materialize(edges.select(src, dst).distinct(), "graph.pagerank.edges")
     (e,) = _on_loop_session(e)
-    nodes = (
+    nodes = materialize(
         e.select(
             F.explode(F.array(F.col(src), F.col(dst))).alias("node")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct(),
+        "graph.pagerank.nodes",
     )
     n_nodes = nodes.count()
     outdeg = e.groupBy(src).agg(F.count("*").alias("outdeg"))
     # edge list annotated with its source's out-degree: invariant
     # across rounds, checkpoint once.
-    e_deg = (
+    e_deg = materialize(
         e.join(outdeg, src)
-        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
-        .localCheckpoint(eager=True)
+        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg"),
+        "graph.pagerank.degrees",
     )
     base = (1.0 - damping) / n_nodes
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    prev_ranks: DataFrame | None = None
-    for _ in range(iterations):
+    for i in range(iterations):
         contrib = (
             e_deg.join(
                 ranks.withColumnRenamed("node", "u"), "u"
@@ -664,29 +560,27 @@ def pagerank(
             .groupBy("v")
             .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("inflow"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(
                 contrib.withColumnRenamed("v", "node"), "node", "left"
-            )
-            .select(
+            ).select(
                 "node",
                 (F.lit(base)
                  + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
                  ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "graph.pagerank.round",
+            # round 0 supersedes no checkpoint: ranks is a lazy
+            # select over nodes
+            release=(ranks,) if i else (),
         )
-        if prev_ranks is not None:
-            release_local_checkpoint(prev_ranks)
-        prev_ranks = ranks
     # the final ranks checkpoint is self-contained, so the
     # loop-invariant frames are no longer referenced by the
     # returned plan — but ONLY once the loop ran: at iterations=0
     # the returned plan is still a select over nodes' checkpoint,
     # and releasing it would drop the blocks the result IS
-    if prev_ranks is not None:
-        for invariant in (e, nodes, e_deg):
-            release_local_checkpoint(invariant)
+    if iterations > 0:
+        release(e, nodes, e_deg)
     return _rebind(
         ranks.select("node", F.round("rank", 6).alias("rank")),
         edges.sparkSession,

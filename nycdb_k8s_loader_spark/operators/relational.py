@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nycdb_k8s_loader_spark.session import materialize
+
 
 def latest_per_group(
     df: DataFrame,
@@ -164,10 +166,10 @@ def distributed_rank(
             n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except (ValueError, TypeError):
             n = max(df.rdd.getNumPartitions(), 1)
-    parted = (
+    parted = materialize(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .withColumn("__pid", F.spark_partition_id()),
+        "relational.rank.ranges",
     )
     counts = parted.groupBy("__pid").agg(F.count("*").alias("__cnt"))
     w_off = (

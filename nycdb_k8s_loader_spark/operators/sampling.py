@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nycdb_k8s_loader_spark.session import materialize
+
 # key * _MIX_PRIME must stay < 2^63 for the largest key in the data:
 # safe for keys < ~9.2e14 — far beyond any synthetic or housing id.
 _MIX_PRIME = 9973
@@ -196,13 +198,12 @@ def temperature_mixture(
         if token_count_col
         else _ws_tokens(F.col(text_col)).cast("long")
     )
-    per = (
-        df.groupBy(source_col)
-        .agg(
+    per = materialize(
+        df.groupBy(source_col).agg(
             F.count("*").alias("n_docs"),
             F.sum(n_tokens).alias("n_tokens"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "sampling.temperature.per_source",
     )
     tot = per.agg(F.sum("n_tokens").alias("__tot"))
     scored = per.crossJoin(F.broadcast(tot)).withColumn(

@@ -795,19 +795,20 @@ def _lloyd_refine(
     round previously re-executed the scan + spread exchange; Spark
     ML's own KMeans persists its input for the same reason) and the
     per-round aggregate queries plan on the caller's loop session
-    (graph module docstring, "Loop session"): every round's output is
+    (:func:`~..session._on_loop_session`): every round's output is
     k×dim rows, so wide shuffles are pure scheduling overhead here.
     The checkpoint is released the moment training ends — nothing
     downstream references it. Centroid math is untouched:
     trajectories are bit-identical (pinned by the oracle)."""
     if lloyd_iters <= 0:
         return cents
-    from nycdb_k8s_loader_spark.operators.graph import (
+    from nycdb_k8s_loader_spark.session import (
         _on_loop_session,
-        release_local_checkpoint,
+        materialize,
+        release,
     )
 
-    ck = vecs.localCheckpoint(eager=True)
+    ck = materialize(vecs, "similarity.lloyd.train")
     try:
         (lck,) = _on_loop_session(ck)
         for _ in range(lloyd_iters):
@@ -829,7 +830,7 @@ def _lloyd_refine(
                 new_cents[cid] = [m for _pos, m in sorted(pm)]
             cents = new_cents
     finally:
-        release_local_checkpoint(ck)
+        release(ck)
     return cents
 
 

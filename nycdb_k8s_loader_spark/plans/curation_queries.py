@@ -31,6 +31,12 @@ from nycdb_k8s_loader_spark.operators.sampling import sample_bucket_sql
 from nycdb_k8s_loader_spark.operators.similarity import _spread_small_scan
 from nycdb_k8s_loader_spark.operators.textops import STOPWORDS
 from nycdb_k8s_loader_spark.plans.catalog import register
+from nycdb_k8s_loader_spark.session import (
+    _on_loop_session,
+    materialize,
+    materialize_all,
+    stage,
+)
 
 # c08/st14 sampling channels: the corpus/batch split stays on the
 # default channel (salt 0); the frozen-rate mixture keep MUST be an
@@ -888,6 +894,7 @@ _C07_SQL = f"""
     """
 
 
+@stage("curation.spine")
 def _verdict_spine(
     spark: SparkSession, docs: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -936,7 +943,7 @@ def _verdict_spine(
         *carry,
     )
     url = F.lower(F.expr(_T22_URL_SQL))
-    return (
+    return materialize(
         g.withColumn("__url", F.when(F.col("keep_g"), url))
         .withColumn(
             "__dom",
@@ -957,8 +964,8 @@ def _verdict_spine(
                 ),
             ).alias("keep_u"),
             *carry,
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "curation.spine",
     )
 
 
@@ -995,6 +1002,7 @@ def c07(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation_pipeline(spark, sf_dir, hashed=False)
 
 
+@stage("curation.pipeline")
 def curation_pipeline(
     spark: SparkSession, sf_dir: str, hashed: bool = False
 ) -> DataFrame:
@@ -1047,19 +1055,25 @@ def curation_pipeline(
     )
 
     # stage 3: sentence dedup among survivors (t20's segmentation)
-    c3 = sentence_dedup(
-        _pseudo_sentence_docs(s2), min_docs=2, min_words=3,
-        hashed_keys=hashed,
-    ).localCheckpoint(eager=True)
+    c3 = materialize(
+        sentence_dedup(
+            _pseudo_sentence_docs(s2), min_docs=2, min_words=3,
+            hashed_keys=hashed,
+        ),
+        "c07.sentences",
+    )
 
     # stage 4: exact-substring scrub of the boilerplate-cleaned text
     # (string grams are the oracle pin; the hashed production form
     # shuffles 8-byte gram keys — the t13 sf3 lesson)
-    c4 = exact_substring_scrub(
-        c3.select("doc_id", F.col("cleaned_text").alias("text")),
-        ngram=8,
-        hashed_grams=hashed,
-    ).localCheckpoint(eager=True)
+    c4 = materialize(
+        exact_substring_scrub(
+            c3.select("doc_id", F.col("cleaned_text").alias("text")),
+            ngram=8,
+            hashed_grams=hashed,
+        ),
+        "c07.scrub",
+    )
 
     # stage 5: fuzzy dedup of non-empty cleaned docs (oracle pins
     # d09's banding; production resolves by the bands_for policy);
@@ -1069,10 +1083,11 @@ def curation_pipeline(
         "doc_id", F.col("cleaned_text").alias("text")
     )
     banding = {} if hashed else dict(num_hashes=8, bands=4)
-    f5 = (
-        fuzzy_dedup(s5, threshold=0.7, shingles=3, **banding)
-        .select("doc_id", "is_kept")
-        .localCheckpoint(eager=True)
+    f5 = materialize(
+        fuzzy_dedup(s5, threshold=0.7, shingles=3, **banding).select(
+            "doc_id", "is_kept"
+        ),
+        "c07.fuzzy",
     )
 
     # stage 6: token-budget mixture over fuzzy-kept docs, budgeted in
@@ -1082,10 +1097,10 @@ def curation_pipeline(
     # base frame three times (per-source totals, corpus total, final
     # filter) — lazy, that would re-run the source fetch (and at 100 TB
     # re-scan the corpus) three times
-    s6 = (
+    s6 = materialize(
         s5.join(f5.filter("is_kept").hint("shuffle_hash"), "doc_id")
-        .join(spine.select("doc_id", "source"), "doc_id")
-        .localCheckpoint(eager=True)
+        .join(spine.select("doc_id", "source"), "doc_id"),
+        "c07.mixture_input",
     )
     m6 = token_budget_mixture(
         s6, shares, budget_ppm_of_corpus=400_000
@@ -1514,22 +1529,6 @@ def c08(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incremental_curation(spark, batch, states)
 
 
-def _eager_all(*dfs: DataFrame) -> list[DataFrame]:
-    """Materialize several INDEPENDENT eager localCheckpoints
-    concurrently (r14, guide §2.6: actions are only sequential
-    because driver code calls them sequentially — submitting the
-    independent state builds from a small thread pool lets each
-    job's tail back-fill the others' idle executors). Used for the
-    c08/c09 published-state quartets, whose four builds share only
-    the already-materialized ``cpre`` checkpoint."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return list(
-            ex.map(lambda df: df.localCheckpoint(eager=True), dfs)
-        )
-
-
 def _c08_states(
     spark: SparkSession,
     sf_dir: str,
@@ -1571,7 +1570,7 @@ def _c08_states(
         corpus = _docs(spark, sf_dir).filter(
             sample_bucket(F.col("doc_id")) < 500_000
         )
-    cpre = _pseudo_sentence_docs(corpus).localCheckpoint(eager=True)
+    cpre = materialize(_pseudo_sentence_docs(corpus), "c08.sentences")
     # hashed=True is the production key form (8-byte sentence keys;
     # the gram state is string-identical either way — the hashed
     # frequency pass re-verifies exact strings); the catalog pins
@@ -1589,13 +1588,13 @@ def _c08_states(
     )
     # the four published states share only the cpre checkpoint —
     # materialize them concurrently (guide §2.6)
-    st3, st4, st5, rates = _eager_all(
-        sentence_dedup_state(
+    st3, st4, st5, rates = materialize_all(
+        ("c08.st3", sentence_dedup_state(
             cpre, min_docs=2, min_words=3, hashed_keys=hashed
-        ),
-        duplicated_gram_state(cpre, ngram=8, hashed_grams=hashed),
-        dedup_signature_state(cpre, shingles=3, **st5_banding),
-        _frozen_rates(tok),
+        )),
+        ("c08.st4", duplicated_gram_state(cpre, ngram=8, hashed_grams=hashed)),
+        ("c08.st5", dedup_signature_state(cpre, shingles=3, **st5_banding)),
+        ("c08.rates", _frozen_rates(tok)),
     )
     return {"st3": st3, "st4": st4, "st5": st5, "rates": rates}
 
@@ -1680,25 +1679,32 @@ def _incremental_curation(
         "doc_id", "text", "source"
     )
 
-    c3 = sentence_dedup_from_state(
-        states["st3"],
-        _pseudo_sentence_docs(s2),
-        min_words=3,
-        hashed_keys=hashed,
-    ).localCheckpoint(eager=True)
+    c3 = materialize(
+        sentence_dedup_from_state(
+            states["st3"],
+            _pseudo_sentence_docs(s2),
+            min_words=3,
+            hashed_keys=hashed,
+        ),
+        "curation.inc.sentences",
+    )
 
-    c4 = exact_substring_scrub_from_state(
-        states["st4"],
-        c3.select("doc_id", F.col("cleaned_text").alias("text")),
-        ngram=8,
-    ).localCheckpoint(eager=True)
+    c4 = materialize(
+        exact_substring_scrub_from_state(
+            states["st4"],
+            c3.select("doc_id", F.col("cleaned_text").alias("text")),
+            ngram=8,
+        ),
+        "curation.inc.scrub",
+    )
 
     s5 = c4.filter(F.col("n_tokens") - F.col("dup_tokens") > 0).select(
         "doc_id", F.col("cleaned_text").alias("text")
     )
-    v5 = incremental_dedup_from_state(
-        states["st5"], s5, threshold=0.7
-    ).localCheckpoint(eager=True)
+    v5 = materialize(
+        incremental_dedup_from_state(states["st5"], s5, threshold=0.7),
+        "curation.inc.fuzzy",
+    )
 
     kept5 = v5.filter(F.col("verdict") == "keep").select("doc_id")
     # mixture keep on an INDEPENDENT channel from the corpus/batch
@@ -1847,7 +1853,6 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nycdb_k8s_loader_spark.streaming.pipeline import (
         foreach_batch_upsert,
         read_upsert_sink,
-        state_sized_shuffle,
     )
 
     states = _c08_pinned_states(spark, sf_dir)
@@ -1864,15 +1869,15 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
     def probe(mb, batch_id):
         upsert(_incremental_curation(spark, mb, states), batch_id)
 
-    with state_sized_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    (stream,) = _on_loop_session(stream)
+    q = (
+        stream.writeStream.foreachBatch(probe)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return read_upsert_sink(spark, f"{tmp}/sink").select(
         "doc_id", "stage", "n_tokens_raw", "sentences_removed",
         "dup_tokens", "n_tokens_clean",
@@ -2024,7 +2029,7 @@ def _c09_compacted_states(spark: SparkSession, sf_dir: str) -> dict:
     corpus = _docs(spark, sf_dir).filter(
         sample_bucket(F.col("doc_id")) < 500_000
     )
-    cpre = _pseudo_sentence_docs(corpus).localCheckpoint(eager=True)
+    cpre = materialize(_pseudo_sentence_docs(corpus), "c09.sentences")
     takedown = (
         sample_bucket(F.col("doc_id"), salt=_C09_TAKEDOWN_SALT)
         < _C09_TAKEDOWN_PPM
@@ -2052,15 +2057,17 @@ def _c09_compacted_states(spark: SparkSession, sf_dir: str) -> dict:
     )
     # the four build+compact chains are independent past cpre —
     # materialize them concurrently (r14, guide §2.6)
-    st3c, st4c, st5c, rates = _eager_all(
-        sentence_dedup_state_compact(
+    st3c, st4c, st5c, rates = materialize_all(
+        ("c09.st3", sentence_dedup_state_compact(
             st3, retired_pre, min_docs=2, min_words=3
-        ),
-        duplicated_gram_state_compact(
+        )),
+        ("c09.st4", duplicated_gram_state_compact(
             st4, retired_pre, ngram=8, min_count=2
-        ),
-        dedup_signature_state_compact(st5, retired_pre.select("doc_id")),
-        _frozen_rates(tokc),
+        )),
+        ("c09.st5", dedup_signature_state_compact(
+            st5, retired_pre.select("doc_id")
+        )),
+        ("c09.rates", _frozen_rates(tokc)),
     )
     return {"st3": st3c, "st4": st4c, "st5": st5c, "rates": rates}
 
@@ -2156,7 +2163,6 @@ def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nycdb_k8s_loader_spark.streaming.pipeline import (
         foreach_batch_upsert,
         read_upsert_sink,
-        state_sized_shuffle,
     )
 
     states = _c09_pinned_states(spark, sf_dir)
@@ -2175,15 +2181,15 @@ def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
     def probe(mb, batch_id):
         upsert(_incremental_curation(spark, mb, states), batch_id)
 
-    with state_sized_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    (stream,) = _on_loop_session(stream)
+    q = (
+        stream.writeStream.foreachBatch(probe)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return read_upsert_sink(spark, f"{tmp}/sink").select(
         "doc_id", "stage", "n_tokens_raw", "sentences_removed",
         "dup_tokens", "n_tokens_clean",

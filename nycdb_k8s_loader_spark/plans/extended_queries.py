@@ -29,7 +29,12 @@ from nycdb_k8s_loader_spark.operators.multimodal import (
     synthetic_media,
 )
 from nycdb_k8s_loader_spark.plans.catalog import register
-from nycdb_k8s_loader_spark.session import events_stream
+from nycdb_k8s_loader_spark.session import (
+    _on_loop_session,
+    _rebind,
+    events_stream,
+    materialize,
+)
 from nycdb_k8s_loader_spark.streaming.pipeline import windowed_event_counts
 
 _JACCARD_EDGES_08 = """
@@ -67,25 +72,24 @@ _JACCARD_EDGES_08 = """
 
 
 def _run_memory_stream(spark, stream_df, prefix: str, mode: str):
-    """Start an availableNow memory-sink query with state-store
-    partitioning sized to the machine (state_sized_shuffle: one store
-    instance per shuffle partition — the batch default of 200 pays
-    hundreds of store commits per micro-batch for zero benefit)."""
-    from nycdb_k8s_loader_spark.streaming.pipeline import (
-        state_sized_shuffle,
-    )
-
+    """Run an availableNow memory-sink query on the caller's loop
+    session, whose narrow shuffle width sizes the state store (one
+    store instance per shuffle partition — the batch default of 200
+    pays hundreds of store commits per micro-batch for zero benefit;
+    :func:`~..session._on_loop_session`). The sink registers its view
+    in the session that started the query, so it is read back there
+    and rebound onto the caller."""
+    (stream_df,) = _on_loop_session(stream_df)
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with state_sized_shuffle(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return _rebind(stream_df.sparkSession.table(name), spark)
 
 
 @register(
@@ -522,23 +526,19 @@ def st06(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     tmp = f"{tempfile.gettempdir()}/spark_graft_st06_{digest}"
-    from nycdb_k8s_loader_spark.streaming.pipeline import (
-        state_sized_shuffle,
-    )
-
-    with state_sized_shuffle(spark):
-        q = (
-            windowed.writeStream.foreachBatch(
-                foreach_batch_upsert(
-                    f"{tmp}/sink", ["window_start", "event_type"]
-                )
+    (windowed,) = _on_loop_session(windowed)
+    q = (
+        windowed.writeStream.foreachBatch(
+            foreach_batch_upsert(
+                f"{tmp}/sink", ["window_start", "event_type"]
             )
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return read_upsert_sink(spark, f"{tmp}/sink").select(
         "window_start", "event_type", "n", "total_value"
     )
@@ -623,10 +623,12 @@ def g02(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nycdb_k8s_loader_spark.operators.graph import bfs_reachable
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    edges = (
-        ngram_jaccard_pairs(docs, threshold=0.8, shingles=3, exact_allpairs=True)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)  # reused by seed agg AND every hop
+    # reused by the seed agg AND every hop
+    edges = materialize(
+        ngram_jaccard_pairs(
+            docs, threshold=0.8, shingles=3, exact_allpairs=True
+        ).select("doc_a", "doc_b"),
+        "g02.edges",
     )
     # Seed = lowest doc id in any edge, as a one-row DataFrame — no
     # driver collect; zero edges (possible at other thresholds/scales)

@@ -31,6 +31,7 @@ from nycdb_k8s_loader_spark.operators.textops import (
     token_stats,
 )
 from nycdb_k8s_loader_spark.plans.catalog import register
+from nycdb_k8s_loader_spark.session import _on_loop_session
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2505,7 +2506,6 @@ def st12(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nycdb_k8s_loader_spark.streaming.pipeline import (
         foreach_batch_upsert,
         read_upsert_sink,
-        state_sized_shuffle,
     )
 
     state = _d11_pinned_state(spark, sf_dir)
@@ -2535,15 +2535,15 @@ def st12(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id,
         )
 
-    with state_sized_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    (stream,) = _on_loop_session(stream)
+    q = (
+        stream.writeStream.foreachBatch(probe)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return read_upsert_sink(spark, f"{tmp}/sink").select(
         "doc_id", "verdict"
     )
@@ -2606,7 +2606,6 @@ def st13(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nycdb_k8s_loader_spark.streaming.pipeline import (
         foreach_batch_upsert,
         read_upsert_sink,
-        state_sized_shuffle,
     )
 
     state = _d14_pinned_state(spark, sf_dir)
@@ -2630,15 +2629,15 @@ def st13(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id,
         )
 
-    with state_sized_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    (stream,) = _on_loop_session(stream)
+    q = (
+        stream.writeStream.foreachBatch(probe)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return read_upsert_sink(spark, f"{tmp}/sink").select(
         "vec_id", "cluster_id", "is_kept"
     )

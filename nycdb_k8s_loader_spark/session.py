@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory, eager stage boundaries and the loop session.
 
 The reference opens one psycopg2 connection per job
 (load_dataset.py:343-344 in /root/reference); our unit of execution is
@@ -10,13 +10,30 @@ one SparkSession per job. Defaults are tuned so the same code runs on
 - shuffle partitions sized to the environment, not the 200 default.
 - Arrow enabled for the few pandas-UDF paths (dedup/similarity pack).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+Every eager stage boundary in the package goes through one primitive,
+:func:`materialize` (a named, timed ``localCheckpoint`` that also
+releases the generation it supersedes) or its pool form
+:func:`materialize_all`; :func:`stage` names the driver-side plan
+building around them in the heavy builders. Each stage runs under its
+name as the Spark job description and, while a :func:`stage_ledger`
+collector is open, leaves a ``(name, seconds)`` record. Iterative
+loops and stateful streams plan on the caller's loop session
+(:func:`_on_loop_session`), a cached clone with a narrow shuffle
+width, so the caller's own conf is never written.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import time
+from contextlib import contextmanager
+from functools import partial
+from weakref import WeakKeyDictionary
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -71,9 +88,9 @@ def get_spark(
         # superseded localCheckpoint blocks from iterative operators
         # pile up for that long in any long-lived session and tax
         # every later query (measured 2-10x at sf3; see
-        # operators/graph.py checkpoint hygiene). Operators release
-        # their own superseded generations; this bounds whatever a
-        # plain `.cache()`-happy caller leaks anyway.
+        # :func:`materialize`). Operators release their own
+        # superseded generations; this bounds whatever a plain
+        # `.cache()`-happy caller leaks anyway.
         "spark.cleaner.periodicGC.interval": "5min",
     }
     if warehouse_dir:
@@ -85,6 +102,226 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# --- eager stage boundaries --------------------------------------------------
+
+# open stage_ledger collectors, keyed by id(records)
+_COLLECTORS: dict[int, list] = {}
+_COLLECTORS_LOCK = threading.Lock()
+# per thread: seconds spent in nested stages, one entry per open stage
+_OPEN = threading.local()
+_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def stage_ledger():
+    """Collect ``(name, seconds)`` for every :func:`stage` and
+    :func:`materialize` that finishes, on any thread, while the block
+    is open: ``with stage_ledger() as records: ...``. With no
+    collector open nothing is recorded, so a long-lived session never
+    grows a ledger. Recording adds no plan node and no Spark job."""
+    records: list[tuple[str, float]] = []
+    with _COLLECTORS_LOCK:
+        _COLLECTORS[id(records)] = records
+    try:
+        yield records
+    finally:
+        with _COLLECTORS_LOCK:
+            del _COLLECTORS[id(records)]
+
+
+@contextmanager
+def stage(name: str):
+    """Run the block as the stage ``name``: its Spark jobs carry
+    ``name`` as their job description (the caller's description is
+    restored afterwards) and its time goes to every open
+    :func:`stage_ledger`.
+
+    A stage's record is its wall time minus the stages nested inside
+    it on the same thread, so a build's records partition the time it
+    spent in stages: a block around an operator's plan construction
+    and its checkpoints records the driver-side plan building, and
+    each checkpoint records its own job. Stages run concurrently by
+    :func:`materialize_all` overlap, so their sum can exceed the wall
+    time. As a decorator, ``@stage(name)`` runs every call of the
+    function as the stage."""
+    sc = SparkContext._active_spark_context
+    prev = sc.getLocalProperty(_DESCRIPTION) if sc else None
+    if sc:
+        sc.setJobDescription(name)
+    nested = _OPEN.__dict__.setdefault("nested", [])
+    nested.append(0.0)
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        wall = time.perf_counter() - t0
+        inner = nested.pop()
+        if nested:
+            nested[-1] += wall
+        if sc:
+            sc.setLocalProperty(_DESCRIPTION, prev)
+    if _COLLECTORS:
+        with _COLLECTORS_LOCK:
+            for records in _COLLECTORS.values():
+                records.append((name, wall - inner))
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the block-manager storage behind SUPERSEDED eager
+    localCheckpoints without waiting for the driver's next full GC +
+    ContextCleaner sweep (see :func:`materialize`).
+
+    The checkpointed Dataset's analyzed plan is a ``LogicalRDD``
+    wrapping the persisted RDD; unpersisting that RDD drops its
+    blocks. Safe ONLY for frames nothing downstream will execute
+    again — a localCheckpoint's blocks ARE its data (lineage is
+    truncated), so releasing a frame a returned plan still references
+    would fail later actions with 'checkpoint block not found'.
+    Wrapped defensively: the LogicalRDD handle is internal API, and a
+    no-op release (also what a frame that is not a checkpoint gets)
+    just means the ContextCleaner reclaims the blocks on its own
+    schedule instead.
+    """
+    for df in dfs:
+        try:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        except Exception:  # noqa: BLE001 - best-effort storage hygiene
+            pass
+
+
+_release = release
+
+
+def materialize(
+    df: DataFrame, name: str, release: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """``df`` as an eager localCheckpoint, run as the stage ``name``
+    (:func:`stage`); then each frame in ``release`` — the generations
+    this checkpoint supersedes — is released.
+
+    A checkpoint is the in-session analog of a published stage table:
+    it truncates lineage (an iterative loop's plan would otherwise
+    double per round, and the planner, not the job, becomes the
+    bottleneck) and keeps N consumers of a stage from re-running its
+    upstream pipeline N times.
+
+    Checkpoint hygiene (round 7): every eager localCheckpoint pins
+    blocks in the block manager, and Spark's ContextCleaner only
+    reclaims them after a DRIVER GC collects the superseded reference
+    — by default up to ``spark.cleaner.periodicGC.interval`` = 30
+    MINUTES later. An iterative operator that checkpoints per round
+    therefore leaks (rounds - 1) generations of state into every
+    long-lived session; measured at sf3, queries running after a few
+    graph/dedup calls slowed 2-10× purely from that accumulated
+    storage (d11: 12 s clean vs 117 s in a leaky session). So each
+    generation is released the moment its successor is materialized.
+    Only frames that no RETURNED plan references may be released
+    (:func:`release`)."""
+    with stage(name):
+        out = df.localCheckpoint(eager=True)
+    _release(*release)
+    return out
+
+
+def materialize_all(*stages: tuple[str, DataFrame]) -> list[DataFrame]:
+    """:func:`materialize` several INDEPENDENT ``(name, frame)``
+    stages concurrently; the checkpoints come back in argument order.
+
+    Actions are only sequential because driver code calls them
+    sequentially: submitting independent builds from driver threads
+    lets each job's tail back-fill the others' idle executors (r14,
+    c09 15.4 → 12.9 s). The threads are the load scheduler's
+    (:func:`~.publish.scheduler.run_graph`), which gives each one the
+    caller's Spark local properties, so the jobs stay in the caller's
+    job group."""
+    from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph
+
+    nodes = [Node(run=partial(materialize, df, name)) for name, df in stages]
+    return run_graph(nodes, width=len(nodes), spark=stages[0][1].sparkSession)
+
+
+# --- the loop session -------------------------------------------------------
+
+
+def _rebind(df: DataFrame, session) -> DataFrame:
+    """``df``'s analyzed plan as a DataFrame of ``session`` (internal
+    ``Dataset.ofRows``; same JVM plan, other session's conf)."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    jvm_dataset = session._jvm.org.apache.spark.sql.classic.Dataset
+    plan = df._jdf.queryExecution().analyzed()
+    return _CDF(jvm_dataset.ofRows(session._jsparkSession, plan), session)
+
+
+# caller session -> (its conf when the clone was made, the clone).
+# Measured before AQE was left on (perfbench, 4 vCPUs, seeds 101-110,
+# traced, 10 alternating pairs, AQE off vs on): refresh
+# operators.graph.self_s median 1.446 vs 1.496 s (AQE-off IQR 0.235),
+# analytics plans.build_s.d09_fuzzy_dedup_e2e 0.078 vs 0.086 s (IQR
+# 0.010); AQE off bought less than its IQR on both, so it was dropped.
+_LOOP_SESSIONS: WeakKeyDictionary = WeakKeyDictionary()
+_LOOP_SESSIONS_LOCK = threading.Lock()
+
+
+def _on_loop_session(*dfs: DataFrame) -> tuple[DataFrame, ...]:
+    """``dfs`` rebound onto the loop session of their caller session.
+
+    The loop session is one cached ``newSession()`` clone per caller.
+    It shares the SparkContext (block manager, executors — checkpoints
+    work unchanged) but owns its SQLConf, which is written once, when
+    the clone is made: the caller's conf with
+    ``spark.sql.shuffle.partitions`` clamped to
+    :func:`small_shuffle_partitions`. Two kinds of plan run there:
+
+    - iterative loops (graph operators, similarity's Lloyd rounds)
+      run 2-3 tiny shuffles per round, and at the batch default task
+      scheduling, not data, is the bottleneck (wow portfolio CC
+      2.8 s → 1.6 s at sf0.1 by 32 → 8); they rebind their result
+      back, so downstream composition plans under the caller's conf;
+    - stateful streams materialize one state-store instance PER
+      shuffle partition, and every micro-batch pays an open/commit
+      per instance — with the batch default (200) a stream-stream
+      join runs 400 store commits per batch regardless of data volume
+      (measured at sf0.1: st04 27 s → 3.7 s on 8 cores; 12.6/5.5/3.3/
+      2.3 s at 64/32/16/8 partitions on 32 cores). The count is BAKED
+      INTO the checkpoint, so at deploy scale size the session's own
+      setting for state volume.
+
+    The engine plans independent jobs concurrently from driver
+    threads, so clamping the caller's own conf would leak into them;
+    on the clone no other planner sees it, and concurrent loops and
+    streams share it. AQE stays as the caller set it (the A/B above).
+    When the caller's conf has changed since the clone was made (e.g.
+    the lazily set legacy nanos parquet switch) a new clone replaces
+    the cached one; plans still running keep the old clone, whose
+    conf nobody writes again. Raises if the (internal) rebinding API
+    fails: fencing the shared session instead would leak the clamp
+    into every concurrent planner."""
+    spark = dfs[0].sparkSession
+    try:
+        seen = spark._jsparkSession.conf().getAll().toString()
+        with _LOOP_SESSIONS_LOCK:
+            made, loop = _LOOP_SESSIONS.get(spark, (None, None))
+            if made != seen:
+                loop = spark.newSession()
+                for key, value in spark.conf.getAll.items():
+                    try:
+                        loop.conf.set(key, value)
+                    except Exception:  # noqa: BLE001
+                        pass  # static/core entries — context-level, shared anyway
+                loop.conf.set(
+                    "spark.sql.shuffle.partitions",
+                    str(small_shuffle_partitions(spark)),
+                )
+                _LOOP_SESSIONS[spark] = (seen, loop)
+        return tuple(_rebind(df, loop) for df in dfs)
+    except Exception as exc:
+        raise RuntimeError(
+            "cannot rebind the loop's input onto a private session; "
+            "refusing to fence the shared session"
+        ) from exc
 
 
 def _normalize_events_ts(df):

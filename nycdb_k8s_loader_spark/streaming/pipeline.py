@@ -28,42 +28,9 @@ and must live on durable shared storage on a real cluster.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from nycdb_k8s_loader_spark.session import small_shuffle_partitions
-
-
-@contextmanager
-def state_sized_shuffle(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` to
-    :func:`~..session.small_shuffle_partitions` for a streaming query's
-    lifetime (start → awaitTermination), then restore.
-
-    Stateful operators materialize one state-store instance PER
-    shuffle partition, and every micro-batch pays an open/commit per
-    instance — with the batch-oriented default (200) a stream-stream
-    join runs 400 store commits per batch regardless of data volume
-    (measured at sf0.1: st04 27 s → 3.7 s on 8 cores; 12.6/5.5/3.3/
-    2.3 s at 64/32/16/8 partitions on 32 cores — per-partition store
-    overhead dominates until per-partition state stops fitting in
-    memory). The count is BAKED INTO the checkpoint, so at deploy
-    scale size the session's own setting for state volume. Batch
-    queries are unaffected: AQE coalesces their small shuffles, but
-    streaming state partitioning is fixed at query start and AQE never
-    touches it.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(small_shuffle_partitions(spark))
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def incremental_csv_source(

@@ -336,12 +336,13 @@ def test_loop_clone_raises_when_rebind_fails(spark, monkeypatch):
     """A loop whose input cannot be rebound onto the loop session
     raises instead of fencing the shared session; the caller's conf is
     untouched."""
+    from nycdb_k8s_loader_spark import session
     from nycdb_k8s_loader_spark.operators import graph
 
     def broken(df, session):
         raise AttributeError("Dataset.ofRows is gone")
 
-    monkeypatch.setattr(graph, "_rebind", broken)
+    monkeypatch.setattr(session, "_rebind", broken)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     width = spark.conf.get("spark.sql.shuffle.partitions")
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")

@@ -112,9 +112,10 @@ class TestConnectedComponents:
     def test_repeated_loops_share_one_clone(self, spark, monkeypatch):
         """Three loops on one caller session create ONE loop session
         (a clone per call used to be created and never released)."""
+        from nycdb_k8s_loader_spark import session
         from nycdb_k8s_loader_spark.operators import graph
 
-        graph._LOOP_SESSIONS.pop(spark, None)
+        session._LOOP_SESSIONS.pop(spark, None)
         made = []
         new_session = spark.newSession
 
@@ -142,9 +143,10 @@ class TestConnectedComponents:
         import sys
         from concurrent.futures import ThreadPoolExecutor
 
+        from nycdb_k8s_loader_spark import session
         from nycdb_k8s_loader_spark.operators import graph
 
-        graph._LOOP_SESSIONS.pop(spark, None)
+        session._LOOP_SESSIONS.pop(spark, None)
         made = []
         new_session = spark.newSession
 
@@ -2899,6 +2901,44 @@ class TestCheckpointHygiene:
         out = bfs_reachable(edges, seeds)
         assert out.count() == 11
         assert self._n_persisted(spark) <= base + 1
+
+    @pytest.mark.parametrize("ls_min_edges", [None, 0])
+    def test_connected_components_star_keeps_only_result(
+        self, spark, monkeypatch, ls_min_edges
+    ):
+        """g04's path: the result references the node set and the last
+        edge generation; every earlier generation, the raw edges and
+        (when the size gate checkpoints it) each large-star output are
+        released in-loop."""
+        from nycdb_k8s_loader_spark.operators import graph
+
+        if ls_min_edges is not None:
+            monkeypatch.setattr(graph, "_LS_CKPT_MIN_EDGES", ls_min_edges)
+        base = self._drain(spark, 0)
+        rows = [(i, i + 1) for i in range(12)] + [(50, 51), (51, 52)]
+        edges = spark.createDataFrame(rows, "src long, dst long")
+        comp = {
+            r["node"]: r["component"]
+            for r in graph.connected_components_star(edges).collect()
+        }
+        assert comp == {
+            **{i: 0 for i in range(13)}, 50: 50, 51: 50, 52: 50
+        }
+        assert self._n_persisted(spark) <= base + 2
+
+    def test_lloyd_refine_keeps_nothing(self, spark):
+        """d12's path: the training checkpoint is released when the
+        rounds end (the centroids are driver-side lists)."""
+        from nycdb_k8s_loader_spark.operators.similarity import _lloyd_refine
+
+        base = self._drain(spark, 0)
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 3), float(i % 5)]) for i in range(30)],
+            "vid long, v array<double>",
+        )
+        cents = _lloyd_refine(vecs, [[0.0, 0.0], [2.0, 4.0]], 3)
+        assert len(cents) == 2
+        assert self._n_persisted(spark) <= base
 
     def test_released_result_still_collectable(self, spark):
         """The returned frame must survive its op's internal releases:

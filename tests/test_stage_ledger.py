@@ -1,0 +1,199 @@
+"""The stage primitive (``session.materialize``/``materialize_all``/
+``stage``), its ledger, and the loop session that iterative operators
+and stateful streams plan on."""
+
+from __future__ import annotations
+
+import threading
+
+from conftest import SF_SMALL
+
+from nycdb_k8s_loader_spark import session
+
+
+def _names(records):
+    return [name for name, _secs in records]
+
+
+def _cc_edges(spark):
+    # 1-2-3-4 needs three label rounds after the fused init; 10-11 one
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "src bigint, dst bigint"
+    )
+
+
+def test_connected_components_ledger_names_each_round(spark):
+    from nycdb_k8s_loader_spark.operators.graph import connected_components
+
+    with session.stage_ledger() as records:
+        out = connected_components(_cc_edges(spark))
+    assert _names(records) == [
+        "graph.cc.edges", "graph.cc.sym", "graph.cc.init",
+        "graph.cc.round", "graph.cc.round", "graph.cc.round",
+    ]
+    assert all(secs > 0 for _name, secs in records)
+    comp = {r["node"]: r["component"] for r in out.collect()}
+    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
+def test_nothing_recorded_without_a_collector(spark):
+    with session.stage_ledger() as closed:
+        pass
+    assert session._COLLECTORS == {}
+    df = session.materialize(spark.range(10), "test.no_collector")
+    with session.stage("test.no_collector"):
+        pass
+    assert df.count() == 10
+    assert closed == [] and session._COLLECTORS == {}
+
+
+def test_nested_collectors_both_record(spark):
+    with session.stage_ledger() as outer:
+        session.materialize(spark.range(3), "test.outer")
+        with session.stage_ledger() as inner:
+            session.materialize(spark.range(3), "test.inner")
+    assert _names(outer) == ["test.outer", "test.inner"]
+    assert _names(inner) == ["test.inner"]
+
+
+def test_nested_stage_records_its_own_time(spark):
+    """An enclosing stage records its wall time minus the nested
+    stages, so a build's records add up to its time in stages."""
+    import time
+
+    with session.stage_ledger() as records:
+        with session.stage("test.outer"):
+            time.sleep(0.2)
+            with session.stage("test.inner"):
+                time.sleep(0.4)
+    got = dict(records)
+    assert list(got) == ["test.inner", "test.outer"]
+    assert 0.4 <= got["test.inner"] < 0.6
+    assert 0.2 <= got["test.outer"] < 0.4
+
+
+def test_pool_form_records_every_stage(spark):
+    """Six concurrent stages each leave one record, and the
+    checkpoints come back in argument order."""
+    stages = [
+        (f"test.pool.{i}", spark.range(100 * (i + 1)).selectExpr("id % 7 AS k"))
+        for i in range(6)
+    ]
+    with session.stage_ledger() as records:
+        out = session.materialize_all(*stages)
+    assert sorted(_names(records)) == sorted(name for name, _df in stages)
+    assert [df.count() for df in out] == [100 * (i + 1) for i in range(6)]
+
+
+def test_caller_job_description_restored(spark):
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    try:
+        sc.setJobDescription("the caller's description")
+        session.materialize(spark.range(5), "test.describe")
+        assert sc.getLocalProperty(key) == "the caller's description"
+        sc.setLocalProperty(key, None)
+        session.materialize(spark.range(5), "test.describe")
+        assert sc.getLocalProperty(key) is None
+    finally:
+        sc.setLocalProperty(key, None)
+
+
+def test_materialize_releases_superseded_frames(spark):
+    first = session.materialize(spark.range(20), "test.gen0")
+    rdd_id = first._jdf.queryExecution().analyzed().rdd().id()
+
+    def persisted():
+        return {i.id() for i in spark._jsc.sc().getRDDStorageInfo()}
+
+    assert rdd_id in persisted()
+    second = session.materialize(
+        first.selectExpr("id + 1 AS id"), "test.gen1", release=(first,)
+    )
+    assert rdd_id not in persisted()
+    assert second.count() == 20
+
+
+def _job_ids_between(spark, build):
+    """Ids of every Spark job ``build`` started, bracketed by two
+    probes in their own groups (job ids are sequential)."""
+    sc = spark.sparkContext
+
+    def probe(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    try:
+        first = max(probe("ledger-probe-before"))
+        sc.setJobGroup("ledger-state-build", "c08 states")
+        build()
+        last = min(probe("ledger-probe-after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return set(range(first + 1, last))
+
+
+def test_c08_state_quartet_stays_in_caller_job_group(spark):
+    """The four concurrently built c08 states run their jobs in the
+    caller's job group, so ``cancelJobGroup`` reaches them (a plain
+    thread pool starts with empty local properties under PySpark's
+    pinned-thread mode)."""
+    from nycdb_k8s_loader_spark.plans.curation_queries import _c08_states
+
+    jobs = _job_ids_between(
+        spark, lambda: _c08_states(spark, SF_SMALL)
+    )
+    grouped = set(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(
+            "ledger-state-build"
+        )
+    )
+    assert len(jobs) >= 5  # the shared checkpoint + four states
+    assert jobs - grouped == set()
+
+
+def test_memory_stream_never_writes_caller_shuffle_width(spark, tmp_path):
+    """A stateful memory-sink stream sizes its state store on the loop
+    session: a second thread reading the caller's shuffle width while
+    the query runs never sees it change, and the result comes back on
+    the caller's session."""
+    from pyspark.sql import functions as F
+
+    from nycdb_k8s_loader_spark.plans.extended_queries import (
+        _run_memory_stream,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(200).selectExpr("id", "id % 5 AS k").write.parquet(src)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")  # wider than the loop session's clamp
+    seen: set[str] = set()
+    reads = 0
+    done = threading.Event()
+
+    def watch():
+        nonlocal reads
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            reads += 1
+
+    watcher = threading.Thread(target=watch)
+    try:
+        stream = (
+            spark.readStream.schema("id long, k long").parquet(src)
+            .groupBy("k").agg(F.count("*").alias("n"))
+        )
+        watcher.start()
+        out = _run_memory_stream(spark, stream, "fence", "complete")
+        done.set()
+        watcher.join()
+        rows = sorted((r["k"], r["n"]) for r in out.collect())
+    finally:
+        done.set()
+        spark.conf.set(key, prev)
+    assert reads > 0 and seen == {"16"}
+    assert out.sparkSession is spark
+    assert rows == [(k, 40) for k in range(5)]

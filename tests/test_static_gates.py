@@ -118,11 +118,11 @@ def test_one_load_path():
 
 
 def test_loop_fences_set_in_one_place():
-    """Loops plan on one cached session clone per caller whose conf is
-    written once, at creation: inside the package only
-    operators/graph.py clones a session, and AQE and the shuffle width
-    are set only by the loop-session helper and streaming's
-    ``state_sized_shuffle`` (no per-call set/restore fences)."""
+    """Loops and stateful streams plan on one cached session clone per
+    caller whose conf is written once, at creation: inside the package
+    only session.py clones a session, and AQE and the shuffle width
+    are set only by the loop-session helper (no per-call set/restore
+    fences)."""
     import re
 
     fences = {"spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"}
@@ -148,11 +148,26 @@ def test_loop_fences_set_in_one_place():
                     and call.args[0].value in fences
                 ):
                     setters.add(f"{rel}::{fn.name}")
-    assert clones == [os.path.join("operators", "graph.py")]
-    assert setters == {
-        os.path.join("operators", "graph.py") + "::_on_loop_session",
-        os.path.join("streaming", "pipeline.py") + "::state_sized_shuffle",
-    }
+    assert clones == ["session.py"]
+    assert setters == {"session.py::_on_loop_session"}
+
+
+def test_one_stage_primitive():
+    """Every eager checkpoint goes through ``session.materialize`` and
+    every driver thread pool is the load scheduler's: inside the
+    package ``.localCheckpoint(`` appears only in session.py and
+    ``ThreadPoolExecutor`` only in publish/scheduler.py."""
+    def users(token):
+        return sorted(
+            os.path.relpath(path, PKG)
+            for path in _modules()
+            if token in open(path).read()
+        )
+
+    assert users(".localCheckpoint(") == ["session.py"]
+    assert users("ThreadPoolExecutor") == [
+        os.path.join("publish", "scheduler.py")
+    ]
 
 
 class TestScaleGate:

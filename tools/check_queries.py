@@ -9,35 +9,16 @@ Usage: python tools/check_queries.py q1 q2 ...   [env SPARK_GRAFT_SWEEP_DIR]
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def vhash(pdf) -> str:
-    import pandas as pd
-
-    pdf = pdf[sorted(pdf.columns)]
-    for c in pdf.columns:
-        if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("datetime64[us]")
-    rows = [
-        "|".join(
-            "%.6f" % v
-            if isinstance(v, float) and not math.isnan(v)
-            else str(v)
-            for v in r
-        )
-        for r in pdf.itertuples(index=False)
-    ]
-    return hashlib.md5("\n".join(sorted(rows)).encode()).hexdigest()
-
-
 def main() -> None:
     import duckdb
+
+    from bench import vhash
 
     from nycdb_k8s_loader_spark.plans.catalog import QUERIES, _load_all
     from nycdb_k8s_loader_spark.session import get_spark
