@@ -25,9 +25,10 @@ Scale notes (the 100 TB story the reference's driver-side networkx
 portfolio build cannot tell, wowutil.py:74-85):
 
 - Every step is a DataFrame plan: the landlord graph is an edge
-  DataFrame, components come from distributed min-label propagation
-  (operators/graph.py), and the per-address pair expansion is bounded
-  by contacts-per-address (tiny, Zipf-capped in practice).
+  DataFrame, components come from operators/graph.py (driver
+  union-find while the edge checkpoint is small, distributed min-label
+  propagation above that), and the per-address pair expansion is
+  bounded by contacts-per-address (tiny, Zipf-capped in practice).
 - The rollup SQL left-join pipeline aggregates each dimension table on
   the join key before joining — map-side combinable, dim results stay
   small relative to the registrations spine, AQE broadcasts them.
@@ -547,11 +548,14 @@ def populate_portfolios(spark: SparkSession, staging_db: str) -> None:
     edges; connected components are portfolios, labeled by the minimum
     member name.
 
-    The reference materializes this graph driver-side with networkx —
-    a non-starter at data scale. Here: per-address pair expansion
-    (bounded by contacts-per-address) → distributed min-label
-    propagation (operators/graph.py:26). Names not in any edge keep a
-    singleton portfolio via the left-join coalesce."""
+    The reference materializes this graph driver-side with networkx.
+    Here: per-address pair expansion (bounded by contacts-per-address)
+    → :func:`~.operators.graph.connected_components`, which takes the
+    reference's driver shape (stdlib union-find) while the edge
+    checkpoint is small — the wow graph's is a few thousand rows — and
+    runs distributed min-label propagation above that size. Names not
+    in any edge keep a singleton portfolio via the left-join
+    coalesce."""
     from nycdb_k8s_loader_spark.operators.graph import connected_components
 
     ll = (

@@ -5,8 +5,14 @@ Capability twin of the reference's landlord-portfolio graph
 → connected portfolios via networkx, driver-side) and the recursive
 ``get_assoc_addrs_from_bbl`` traversal (tests/test_wowutil.py:42-44).
 
-Spark-first: the reference materializes the whole graph in driver
-memory — a non-starter at 100 TB. We use distributed min-label
+Two shapes, chosen per call by the size of the edge checkpoint. A
+small graph (at most ``_DRIVER_CC_MAX_EDGES`` checkpointed edge rows,
+with integral or binary-collated string ids) takes the reference's own
+shape: the edges are collected and stdlib union-find solves them on
+the driver (:func:`_driver_components`), because each distributed
+round pays several Spark job floors for a few thousand edges. Every
+larger graph stays distributed — the reference materializes the whole
+graph in driver memory, a non-starter at 100 TB — with min-label
 propagation over an edge DataFrame:
 
     label(v) ← min(label(v), min over neighbors' labels)
@@ -40,14 +46,18 @@ than run noise on the benchmark's graphs, so it was dropped (numbers at
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from nycdb_k8s_loader_spark.session import (
     _on_loop_session,
     _rebind,
     materialize,
     release,
+    stage,
 )
 
 
@@ -73,6 +83,105 @@ def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return edges.select(pair.alias("e")).select("e.a", "e.b")
 
 
+# Largest edge checkpoint, in rows (CC's holds both orientations of
+# each edge, the star's one), that connected components collect and
+# solve on the driver instead of running the distributed loop.
+# Sweep of connected_components (4 vCPUs, local[4], warm; long and
+# string ids; 8-node stars and 13-node chains): the driver path wins
+# on every shape up to 1e5 edges (2e5 rows: stars 0.96-1.55 s vs
+# 1.27-1.92 s, chains 1.00-1.55 s vs 5.6-8.4 s) and loses on stars
+# from 3e5 edges (4.3-5.0 s vs 3.9-4.6 s). connected_components_star
+# at the gate (2e5 edges, 2e5 rows): driver 1.24-2.00 s vs 3.1-11.2 s.
+# 2e5 rows are a few MB, far below spark.driver.maxResultSize.
+_DRIVER_CC_MAX_EDGES = 200_000
+
+_DRIVER_ORDERED = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _driver_ordered(dtype: T.DataType) -> bool:
+    """Whether Python orders ``dtype``'s values as Spark does, so a
+    driver-side ``min`` is Spark's ``least``: integral types, and
+    strings under the default collation (UTF-8 byte order is code
+    point order). Doubles (NaN, -0.0), decimals, binary and collated
+    strings keep the distributed path."""
+    if isinstance(dtype, T.StringType):
+        return dtype.collation == "UTF8_BINARY"
+    return isinstance(dtype, _DRIVER_ORDERED)
+
+
+def _edge_checkpoint(
+    df: DataFrame, a: str, b: str, name: str
+) -> tuple[DataFrame, bool]:
+    """``df`` materialized as the stage ``name``, and whether its
+    components go to :func:`_driver_components`: both endpoint columns
+    share one driver-ordered type and the checkpoint holds at most
+    ``_DRIVER_CC_MAX_EDGES`` rows. The row count rides the checkpoint
+    job as an Observation, so the decision adds no job."""
+    obs = Observation()
+    ckpt = materialize(
+        df.observe(obs, F.count(F.lit(1)).alias("n_rows")), name
+    )
+    ta, tb = ckpt.schema[a].dataType, ckpt.schema[b].dataType
+    small = (
+        ta == tb
+        and _driver_ordered(ta)
+        and int(obs.get["n_rows"]) <= _DRIVER_CC_MAX_EDGES
+    )
+    return ckpt, small
+
+
+def _driver_components(
+    edges: DataFrame, a: str, b: str, name: str
+) -> DataFrame:
+    """(node, component = min id) of the checkpointed edge list
+    ``edges`` (columns ``a``, ``b``), solved on the driver as the stage
+    ``name``: the rows are collected, stdlib union-find links each
+    edge's roots under the smaller id, and the answer comes back as a
+    local relation on the caller's session with the distributed loop's
+    output schema. A NULL endpoint is not a node; the other endpoint
+    still gets its row. Exact at any graph depth. Releases ``edges``."""
+    with stage(name):
+        table = edges.toArrow()
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]  # path halving
+                x = parent[x]
+            return x
+
+        for x, y in zip(
+            table.column(a).to_pylist(), table.column(b).to_pylist()
+        ):
+            if x is not None:
+                parent.setdefault(x, x)
+            if y is not None:
+                parent.setdefault(y, y)
+            if x is not None and y is not None:
+                rx, ry = find(x), find(y)
+                if rx != ry:
+                    parent[max(rx, ry)] = min(rx, ry)
+        dtype = edges.schema[a].dataType
+        nullable = edges.schema[a].nullable or edges.schema[b].nullable
+        arrow_type = to_arrow_type(dtype)
+        out = edges.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(list(parent), arrow_type),
+                    "component": pa.array(map(find, parent), arrow_type),
+                }
+            ),
+            T.StructType(
+                [
+                    T.StructField("node", dtype, nullable),
+                    T.StructField("component", dtype, nullable),
+                ]
+            ),
+        )
+    release(edges)
+    return out
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -80,13 +189,24 @@ def connected_components(
     max_iterations: int = 20,
 ) -> DataFrame:
     """(node, component) where component = min node id in the
-    component. Nodes are every id present in the edge list; edges are
-    treated as undirected."""
+    component. Nodes are every non-NULL id present in the edge list (a
+    NULL endpoint is not a node; the other endpoint still gets its
+    row); edges are treated as undirected.
+
+    A graph whose symmetric edge checkpoint is small solves on the
+    driver (:func:`_driver_components`), exactly, at any depth; only
+    the distributed loop is bounded by ``max_iterations`` and raises
+    past it."""
     # The edge list is re-joined every round; without an eager
     # checkpoint the ENTIRE upstream pipeline that produced it (e.g.
     # the shingled-Jaccard pair build feeding g01) re-executes once
     # per iteration — measured 3× the total g01 runtime at sf0.1.
-    raw = materialize(_symmetrized(edges, src, dst), "graph.cc.edges")
+    raw, small = _edge_checkpoint(
+        _symmetrized(edges, src, dst).filter(F.col("a").isNotNull()),
+        "a", "b", "graph.cc.edges",
+    )
+    if small:
+        return _driver_components(raw, "a", "b", "graph.cc.local")
     (raw,) = _on_loop_session(raw)
     return _rebind(
         _label_propagation_loop(raw, max_iterations), edges.sparkSession
@@ -252,7 +372,12 @@ def connected_components_star(
     contractions (Kiveris et al., "Connected Components in MapReduce
     and Beyond") — O(log² n) rounds regardless of graph diameter,
     where min-label propagation needs diameter rounds. Same output
-    contract as :func:`connected_components`: (node, component=min id).
+    contract as :func:`connected_components`: (node, component=min id),
+    with no row for a NULL endpoint.
+
+    A small edge checkpoint solves on the driver, like
+    :func:`connected_components`'s; only the contraction loop is
+    bounded by ``max_rounds`` and raises past it.
 
     Each round is two groupBy+join passes over the current edge list;
     the edge list only shrinks (toward star graphs centered at
@@ -263,10 +388,12 @@ def connected_components_star(
     # edge plan; cur and all_nodes both derive from the checkpointed
     # raw projection (r13 — previously each of the two init
     # checkpoints re-executed the full upstream edge build).
-    raw = materialize(
+    raw, small = _edge_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
-        "graph.star.edges",
+        "u", "v", "graph.star.edges",
     )
+    if small:
+        return _driver_components(raw, "u", "v", "graph.star.local")
     (raw,) = _on_loop_session(raw)
     # Canonicalize ONCE at init (r13): every later generation is
     # already greatest/least-canonical by construction (the star
@@ -293,6 +420,7 @@ def connected_components_star(
     )
     all_nodes = materialize(
         raw.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
+        .filter(F.col("node").isNotNull())
         .distinct(),
         "graph.star.nodes",
         release=(raw,),  # both derivations materialized

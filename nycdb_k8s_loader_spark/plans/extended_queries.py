@@ -2,7 +2,8 @@
 multimodal (stub-decoded).
 
 - g01: the WOW-portfolio capability (reference wowutil.py:74-85 builds
-  a networkx graph driver-side; we do distributed label propagation)
+  a networkx graph driver-side; we solve small graphs the same way with
+  stdlib union-find and larger ones by distributed label propagation)
   composed with the dedup pack: near-dup pairs → cluster ids.
 - f01: the pg_trgm capability (reference wowutil.py:68-71) as native
   array expressions.
@@ -108,8 +109,9 @@ def _run_memory_stream(spark, stream_df, prefix: str, mode: str):
     SELECT a AS doc_id, MIN(b)::BIGINT AS cluster_id FROM reach GROUP BY a
     """,
     doc="Connected-component dedup clusters over 0.8-Jaccard edges: "
-        "distributed min-label propagation (portfolio-graph capability, "
-        "wowutil.py:74-85, re-expressed without driver-side networkx). "
+        "connected components (portfolio-graph capability, "
+        "wowutil.py:74-85): driver union-find below the edge-size gate, "
+        "distributed min-label propagation above it. "
         "Oracle: recursive-CTE transitive closure.",
     tags=("graph", "dedup"),
 )

@@ -34,6 +34,15 @@ def spark(tmp_path_factory):
 
 
 @pytest.fixture()
+def distributed_cc(monkeypatch):
+    """Keep connected components on the distributed loop: no edge
+    checkpoint is small enough for the driver-side union-find exit."""
+    from nycdb_k8s_loader_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_DRIVER_CC_MAX_EDGES", -1)
+
+
+@pytest.fixture()
 def duck():
     con = duckdb.connect()
     yield con

@@ -332,7 +332,9 @@ class TestEngineThroughScheduler:
         assert sc.statusTracker().getJobIdsForGroup("sched-load-group")
 
 
-def test_loop_clone_raises_when_rebind_fails(spark, monkeypatch):
+def test_loop_clone_raises_when_rebind_fails(
+    spark, monkeypatch, distributed_cc
+):
     """A loop whose input cannot be rebound onto the loop session
     raises instead of fencing the shared session; the caller's conf is
     untouched."""

@@ -64,7 +64,9 @@ class TestConnectedComponents:
         }
         assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
-    def test_loop_fences_isolated_from_caller_session(self, spark, monkeypatch):
+    def test_loop_fences_isolated_from_caller_session(
+        self, spark, monkeypatch, distributed_cc
+    ):
         """The loop fence (clamped shuffle partitions) lives on a
         PRIVATE cloned session so a concurrent query planned on the
         caller's session keeps its own conf. The spy runs inside the
@@ -109,7 +111,9 @@ class TestConnectedComponents:
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
         assert spark.conf.get("spark.sql.adaptive.enabled", "true") == prev_aqe
 
-    def test_repeated_loops_share_one_clone(self, spark, monkeypatch):
+    def test_repeated_loops_share_one_clone(
+        self, spark, monkeypatch, distributed_cc
+    ):
         """Three loops on one caller session create ONE loop session
         (a clone per call used to be created and never released)."""
         from nycdb_k8s_loader_spark import session
@@ -135,7 +139,9 @@ class TestConnectedComponents:
             assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
         assert len(made) == 1
 
-    def test_concurrent_loops_on_one_caller(self, spark, monkeypatch):
+    def test_concurrent_loops_on_one_caller(
+        self, spark, monkeypatch, distributed_cc
+    ):
         """More threads than cores run connected_components on one
         caller session at once: every answer is right, they share ONE
         clone (a lost update of the cache would make more), and the
@@ -187,7 +193,9 @@ class TestConnectedComponents:
         assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
 
-    def test_caller_conf_change_reaches_next_loop(self, spark, monkeypatch):
+    def test_caller_conf_change_reaches_next_loop(
+        self, spark, monkeypatch, distributed_cc
+    ):
         """A caller conf set after a loop ran (e.g. the lazily set
         legacy nanos parquet switch) is visible to the next loop."""
         from nycdb_k8s_loader_spark.operators import graph
@@ -393,7 +401,7 @@ class TestSkewHelpers:
 
 
 class TestStarComponents:
-    def test_deep_path_graph(self, spark):
+    def test_deep_path_graph(self, spark, distributed_cc):
         """A 60-node path has diameter 59 — min-label propagation would
         need 59 rounds; large-star/small-star converges in O(log^2 n)."""
         from nycdb_k8s_loader_spark.operators.graph import (
@@ -408,7 +416,9 @@ class TestStarComponents:
         assert len(rows) == 60
         assert all(r["component"] == 0 for r in rows)
 
-    def test_matches_label_propagation_on_shallow_graph(self, spark):
+    def test_matches_label_propagation_on_shallow_graph(
+        self, spark, distributed_cc
+    ):
         from nycdb_k8s_loader_spark.operators.graph import (
             connected_components,
             connected_components_star,
@@ -422,7 +432,7 @@ class TestStarComponents:
         ss = {r["node"]: r["component"] for r in connected_components_star(edges).collect()}
         assert lp == ss == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
-    def test_label_propagation_raises_on_cap(self, spark):
+    def test_label_propagation_raises_on_cap(self, spark, distributed_cc):
         import pytest
 
         from nycdb_k8s_loader_spark.operators.graph import connected_components
@@ -2564,7 +2574,7 @@ class TestDerivedSizeBroadcastPins:
         assert "Window" in plan
         assert "BroadcastHashJoin" not in plan
 
-    def test_d09_never_broadcasts_postings(self, spark):
+    def test_d09_never_broadcasts_postings(self, spark, distributed_cc):
         from nycdb_k8s_loader_spark.plans.catalog import queries
 
         plan = self._plan(
@@ -2862,7 +2872,9 @@ class TestCheckpointHygiene:
             n = self._n_persisted(spark)
         return n
 
-    def test_connected_components_keeps_only_result(self, spark):
+    def test_connected_components_keeps_only_result(
+        self, spark, distributed_cc
+    ):
         from nycdb_k8s_loader_spark.operators.graph import (
             connected_components,
         )
@@ -2904,7 +2916,7 @@ class TestCheckpointHygiene:
 
     @pytest.mark.parametrize("ls_min_edges", [None, 0])
     def test_connected_components_star_keeps_only_result(
-        self, spark, monkeypatch, ls_min_edges
+        self, spark, monkeypatch, ls_min_edges, distributed_cc
     ):
         """g04's path: the result references the node set and the last
         edge generation; every earlier generation, the raw edges and
@@ -2926,6 +2938,19 @@ class TestCheckpointHygiene:
         }
         assert self._n_persisted(spark) <= base + 2
 
+    def test_driver_path_keeps_nothing(self, spark):
+        """Below the size gate the result is a local relation: both
+        operators release their edge checkpoint before returning."""
+        from nycdb_k8s_loader_spark.operators import graph
+
+        base = self._drain(spark, 0)
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "src long, dst long"
+        )
+        for op in (graph.connected_components, graph.connected_components_star):
+            assert op(edges).count() == 5
+        assert self._n_persisted(spark) <= base
+
     def test_lloyd_refine_keeps_nothing(self, spark):
         """d12's path: the training checkpoint is released when the
         rounds end (the centroids are driver-side lists)."""
@@ -2940,7 +2965,7 @@ class TestCheckpointHygiene:
         assert len(cents) == 2
         assert self._n_persisted(spark) <= base
 
-    def test_released_result_still_collectable(self, spark):
+    def test_released_result_still_collectable(self, spark, distributed_cc):
         """The returned frame must survive its op's internal releases:
         re-collect after the loop frames are gone."""
         from nycdb_k8s_loader_spark.operators.graph import (
@@ -3263,7 +3288,9 @@ class TestRound7ReviewFixes:
                 state, batch, num_hashes=8, bands=4, shingles=5
             )
 
-    def test_star_components_keep_only_result_frames(self, spark):
+    def test_star_components_keep_only_result_frames(
+        self, spark, distributed_cc
+    ):
         import time
 
         from nycdb_k8s_loader_spark.operators.graph import (

@@ -17,6 +17,7 @@ and hot keys.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -169,14 +170,30 @@ def test_asof_join_matches_naive_model(spark, left_rows, right_rows):
     assert got == expected
 
 
-_edges = st.lists(
-    st.tuples(st.integers(0, 11), st.integers(0, 11)),
-    min_size=1,
-    max_size=25,
+def _endpoint(ids):
+    return st.one_of(st.none(), ids)
+
+
+# int or string ids (never mixed within one graph), with NULL
+# endpoints; the strings differ in UTF-16 and code-point order
+# ("\uffef" < "😀" by code point, the reverse in UTF-16)
+_edges = st.one_of(
+    *(
+        st.lists(
+            st.tuples(_endpoint(ids), _endpoint(ids)),
+            min_size=1,
+            max_size=25,
+        )
+        for ids in (
+            st.integers(0, 11),
+            st.sampled_from(["a", "B", "ab", "é", "\uffef", "😀", "z"]),
+        )
+    )
 )
 
 
 def _union_find_components(edges):
+    """A NULL endpoint is not a node; the other endpoint still is."""
     parent = {}
 
     def find(x):
@@ -187,6 +204,11 @@ def _union_find_components(edges):
         return x
 
     for a, b in edges:
+        for n in (a, b):
+            if n is not None:
+                find(n)
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[ra] = rb
@@ -196,6 +218,7 @@ def _union_find_components(edges):
     return {n: min(members) for members in roots.values() for n in members}
 
 
+@pytest.mark.parametrize("path", ["driver", "distributed"])
 @given(edges=_edges)
 @settings(
     # iterative: each example runs diameter/log² rounds of Spark jobs
@@ -204,17 +227,27 @@ def _union_find_components(edges):
     suppress_health_check=[HealthCheck.too_slow],
     derandomize=True,
 )
-def test_connected_components_both_variants_match_union_find(spark, edges):
+def test_connected_components_both_variants_match_union_find(
+    spark, path, edges
+):
     """min-label propagation AND large-star/small-star both produce
     component = min node id, for any undirected edge multiset
-    (self-loops, duplicates, reversed duplicates included)."""
-    df = spark.createDataFrame(edges, schema="src int, dst int")
+    (self-loops, duplicates, reversed duplicates, NULL endpoints
+    included), on both sides of the driver-path size gate."""
+    from nycdb_k8s_loader_spark.operators import graph
+
+    ids = [n for e in edges for n in e if n is not None]
+    kind = "string" if ids and isinstance(ids[0], str) else "int"
+    df = spark.createDataFrame(edges, schema=f"src {kind}, dst {kind}")
     expected = _union_find_components(edges)
-    for impl in (connected_components, connected_components_star):
-        got = {
-            r["node"]: r["component"] for r in impl(df).collect()
-        }
-        assert got == expected, impl.__name__
+    gate = graph._DRIVER_CC_MAX_EDGES if path == "driver" else -1
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "_DRIVER_CC_MAX_EDGES", gate)
+        for impl in (connected_components, connected_components_star):
+            rows = impl(df).collect()
+            got = {r["node"]: r["component"] for r in rows}
+            assert got == expected, impl.__name__
+            assert len(rows) == len(got), impl.__name__
 
 
 def test_sketch_aggregates_bounded_error(spark):

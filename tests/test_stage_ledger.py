@@ -22,7 +22,9 @@ def _cc_edges(spark):
     )
 
 
-def test_connected_components_ledger_names_each_round(spark):
+def test_connected_components_ledger_names_each_round(
+    spark, distributed_cc
+):
     from nycdb_k8s_loader_spark.operators.graph import connected_components
 
     with session.stage_ledger() as records:
@@ -34,6 +36,67 @@ def test_connected_components_ledger_names_each_round(spark):
     assert all(secs > 0 for _name, secs in records)
     comp = {r["node"]: r["component"] for r in out.collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
+def test_small_graph_takes_the_driver_path(spark, monkeypatch):
+    """Below the size gate both CC operators collect their edge
+    checkpoint and solve it on the driver: the ledger names the
+    checkpoint and the local stage and no loop stage, and no loop
+    session is cloned."""
+    from nycdb_k8s_loader_spark.operators import graph
+
+    session._LOOP_SESSIONS.pop(spark, None)
+    made = []
+    monkeypatch.setattr(spark, "newSession", lambda: made.append(1))
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    for op, prefix in (
+        (graph.connected_components, "graph.cc"),
+        (graph.connected_components_star, "graph.star"),
+    ):
+        with session.stage_ledger() as records:
+            out = op(_cc_edges(spark))
+        assert _names(records) == [f"{prefix}.edges", f"{prefix}.local"]
+        assert out.sparkSession is spark
+        assert {r["node"]: r["component"] for r in out.collect()} == want
+    assert made == []
+
+
+def test_double_ids_take_the_distributed_path(spark):
+    """Python does not order doubles as Spark does (NaN, -0.0), so a
+    double-id graph runs the loop however small it is."""
+    from nycdb_k8s_loader_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(1.0, 2.0), (2.0, 3.0)], "src double, dst double"
+    )
+    with session.stage_ledger() as records:
+        out = connected_components(edges)
+    assert "graph.cc.local" not in _names(records)
+    assert "graph.cc.round" in _names(records)
+    assert {r["node"]: r["component"] for r in out.collect()} == {
+        1.0: 1.0, 2.0: 1.0, 3.0: 1.0
+    }
+
+
+def test_driver_path_output_schema_matches_the_loop(spark, monkeypatch):
+    """Both sides of the gate return the same schema, field for field
+    (type and nullability), for each id type the driver path takes."""
+    from nycdb_k8s_loader_spark.operators import graph
+
+    inputs = [
+        spark.createDataFrame([(1, 2), (3, None)], "src bigint, dst bigint"),
+        spark.createDataFrame([(1, 2)], "src smallint, dst smallint"),
+        spark.createDataFrame([("a", "b")], "src string, dst string"),
+        spark.range(3).selectExpr("id AS src", "id + 1 AS dst"),
+    ]
+    for op in (graph.connected_components, graph.connected_components_star):
+        for edges in inputs:
+            local = op(edges)
+            monkeypatch.setattr(graph, "_DRIVER_CC_MAX_EDGES", -1)
+            loop = op(edges)
+            monkeypatch.undo()
+            assert local.schema == loop.schema, (op.__name__, edges.schema)
+            assert sorted(local.collect()) == sorted(loop.collect())
 
 
 def test_nothing_recorded_without_a_collector(spark):

@@ -170,6 +170,38 @@ def test_one_stage_primitive():
     ]
 
 
+def test_graph_collects_in_one_place():
+    """Connected components leave Spark in one place: graph.py has one
+    driver collect (``collect``/``toArrow``/``toPandas``/
+    ``toLocalIterator``), inside the small-graph union-find helper,
+    and no module imports networkx."""
+    tree = ast.parse(open(os.path.join(PKG, "operators", "graph.py")).read())
+    sinks = {"collect", "toArrow", "toPandas", "toLocalIterator"}
+    collects = [
+        f"{fn.name}.{call.func.attr}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr in sinks
+    ]
+    assert collects == ["_driver_components.toArrow"]
+    importers = []
+    for path in _modules():
+        for node in ast.walk(ast.parse(open(path).read())):
+            names = (
+                [a.name for a in node.names]
+                if isinstance(node, ast.Import)
+                else [node.module or ""]
+                if isinstance(node, ast.ImportFrom)
+                else []
+            )
+            if any(n.split(".")[0] == "networkx" for n in names):
+                importers.append(os.path.relpath(path, PKG))
+    assert importers == []
+
+
 class TestScaleGate:
     """bench_scale's structural linearity gate (round-7 verdict #2):
     shuffle-byte growth is the primary signal, wall growth gates only
