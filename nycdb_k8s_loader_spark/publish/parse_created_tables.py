@@ -1,6 +1,6 @@
 """Discover which tables a SQL transformation script produces.
 
-Capability twin of /root/reference/lib/parse_created_tables.py:22-38,
+Capability twin of the reference's lib/parse_created_tables.py:22-38,
 which walks a sqlparse token stream applying exactly two rules:
 
 1. ``CREATE TABLE <name> ...`` adds <name>.
@@ -8,9 +8,10 @@ which walks a sqlparse token stream applying exactly two rules:
 
 The publish step needs this list to know what to move from staging to
 the public namespace (reference usage: load_dataset.py:98-103). We
-implement the same two rules with a comment-stripping tokenizer —
-no sqlparse dependency in this container, and the grammar needed is
-tiny and fully covered by the reference's own test fixtures
+implement the same two rules over the lexer's masked text (no sqlparse
+dependency in this container), so DDL inside string constants,
+comments and ``$$`` function bodies is never read; the grammar needed
+is tiny and fully covered by the reference's own test fixtures
 (tests/test_parse_created_tables.py:11-69).
 """
 
@@ -18,14 +19,10 @@ from __future__ import annotations
 
 import re
 
-
-def _strip_sql_comments(sql: str) -> str:
-    sql = re.sub(r"--[^\n]*", " ", sql)
-    sql = re.sub(r"/\*.*?\*/", " ", sql, flags=re.DOTALL)
-    # blank out string literals so DDL keywords inside them are ignored
-    sql = re.sub(r"'(?:[^']|'')*'", "''", sql)
-    return sql
-
+from nycdb_k8s_loader_spark.publish.lexer import (  # noqa: F401 - re-export
+    Masked,
+    split_statements,
+)
 
 _IDENT = r'(?:"[^"]+"|[A-Za-z_][\w$]*)(?:\s*\.\s*(?:"[^"]+"|[A-Za-z_][\w$]*))?'
 
@@ -47,7 +44,7 @@ def _norm(ident: str) -> str:
 
 def parse_created_tables(sql: str) -> list[str]:
     """Tables created by ``sql``, with renames applied in order."""
-    sql = _strip_sql_comments(sql)
+    sql = Masked(sql).code
     events: list[tuple[int, str, tuple[str, ...]]] = []
     for m in _CREATE_RE.finditer(sql):
         events.append((m.start(), "create", (_norm(m.group(1)),)))
@@ -84,84 +81,14 @@ def parse_created_tables_in_dir(paths: list[str]) -> list[str]:
     return tables
 
 
-_FUNCTION_RE = re.compile(r"CREATE\s+OR\s+REPLACE\s+FUNCTION", re.IGNORECASE)
+_FUNCTION_RE = re.compile(
+    r"\bCREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?FUNCTION\b",
+    re.IGNORECASE,
+)
 
 
 def is_function_sql(sql: str) -> bool:
-    """Whitespace-insensitive CREATE OR REPLACE FUNCTION detection
-    (reference: load_dataset.py:155-160 collapses whitespace and
-    substring-matches)."""
-    collapsed = re.sub(r"\s+", " ", _strip_sql_comments(sql))
-    return bool(_FUNCTION_RE.search(collapsed))
-
-
-def split_statements(sql: str) -> list[str]:
-    """Split a script into statements on ``;`` outside string literals
-    and line/block comments (the unit the reference executes one
-    ``cur.execute`` at a time — wowutil.py:59-65 runs whole files, but
-    Spark's parser wants one statement per call). Dollar-quoted bodies
-    (``$$...$$``, Postgres function DDL) are kept intact."""
-    out: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    in_str = in_line = in_block = in_dollar = False
-    while i < n:
-        ch = sql[i]
-        two = sql[i:i + 2]
-        if in_line:
-            if ch == "\n":
-                in_line = False
-            buf.append(ch)
-        elif in_block:
-            if two == "*/":
-                in_block = False
-                buf.append(two)
-                i += 2
-                continue
-            buf.append(ch)
-        elif in_str:
-            if ch == "'" and sql[i + 1:i + 2] == "'":
-                buf.append("''")
-                i += 2
-                continue
-            if ch == "'":
-                in_str = False
-            buf.append(ch)
-        elif in_dollar:
-            if two == "$$":
-                in_dollar = False
-                buf.append(two)
-                i += 2
-                continue
-            buf.append(ch)
-        else:
-            if two == "--":
-                in_line = True
-                buf.append(two)
-                i += 2
-                continue
-            if two == "/*":
-                in_block = True
-                buf.append(two)
-                i += 2
-                continue
-            if two == "$$":
-                in_dollar = True
-                buf.append(two)
-                i += 2
-                continue
-            if ch == "'":
-                in_str = True
-                buf.append(ch)
-            elif ch == ";":
-                stmt = "".join(buf).strip()
-                if stmt:
-                    out.append(stmt)
-                buf = []
-            else:
-                buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
-    return out
+    """``CREATE [OR REPLACE] [TEMPORARY] FUNCTION`` anywhere outside
+    string constants and comments (reference: load_dataset.py:155-160
+    collapses whitespace and substring-matches)."""
+    return bool(_FUNCTION_RE.search(Masked(sql).code))

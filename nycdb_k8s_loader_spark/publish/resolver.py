@@ -13,6 +13,11 @@ qualify it with the first namespace in the search path where the table
 exists. Names already qualified, CTE names, and temp views are left
 alone.
 
+Invariant: every rule here scans the lexer's masked text
+(publish/lexer.py), so a name inside a string constant, a comment or a
+``$$`` body is never qualified, and those pieces come back byte for
+byte.
+
 DDL targets: with ``ddl_db`` set, unqualified CREATE/ALTER/DROP TABLE
 targets (and RENAME TO destinations) are qualified into that database
 — Postgres's create-in-head-of-search-path rule made explicit. This
@@ -27,6 +32,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import SparkSession
+
+from nycdb_k8s_loader_spark.publish.lexer import Masked
 
 _TABLE_POS = re.compile(
     r"\b(?:(CREATE(?:\s+OR\s+REPLACE)?(?:\s+TEMP(?:ORARY)?)?|ALTER|DROP)\s+)?"
@@ -71,21 +78,13 @@ class SearchPathResolver:
         return name  # temp view / builtin — let Spark resolve it
 
     def rewrite(self, sql: str) -> str:
-        """Qualify unqualified table refs per the search path.
-
-        String literals and comments are masked first so quoted data
-        that happens to contain ``from <table>`` is never rewritten
-        (NUL-delimited placeholders can't match an identifier)."""
-        literals: list[str] = []
-
-        def _mask(m: re.Match) -> str:
-            literals.append(m.group(0))
-            return f"\x00{len(literals) - 1}\x00"
-
-        masked = re.sub(
-            r"'(?:[^']|'')*'|--[^\n]*|/\*.*?\*/", _mask, sql, flags=re.DOTALL
-        )
-        local_names = {m.group(1).lower() for m in _CTE_NAMES.finditer(masked)}
+        """Qualify unqualified table refs per the search path, scanning
+        the lexer's masked text: quoted data or a comment that happens
+        to contain ``from <table>`` is never rewritten."""
+        masked = Masked(sql)
+        local_names = {
+            m.group(1).lower() for m in _CTE_NAMES.finditer(masked.text)
+        }
 
         def sub(m: re.Match) -> str:
             ddl, kw, ifex, name = m.group(1), m.group(2), m.group(3), m.group(4)
@@ -103,7 +102,7 @@ class SearchPathResolver:
                 return m.group(0)
             return f"{kw} {self._resolve_one(name, local_names)}"
 
-        out = _TABLE_POS.sub(sub, masked)
+        out = _TABLE_POS.sub(sub, masked.text)
         if self.ddl_db:
             out = _RENAME_TO.sub(
                 lambda m: m.group(0)
@@ -111,7 +110,7 @@ class SearchPathResolver:
                 else f"{m.group(1)} `{self.ddl_db}`.`{m.group(2)}`",
                 out,
             )
-        return re.sub(r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], out)
+        return masked.unmask(out)
 
     def sql(self, query: str):
         return self.spark.sql(self.rewrite(query))

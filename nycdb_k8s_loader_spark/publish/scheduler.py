@@ -35,10 +35,10 @@ from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import partial
 
+from nycdb_k8s_loader_spark.publish.lexer import Masked, split_statements
 from nycdb_k8s_loader_spark.publish.parse_created_tables import (
     is_function_sql,
     parse_created_tables,
-    split_statements,
 )
 from nycdb_k8s_loader_spark.publish.transpile import (
     rewrite_table_fn_calls,
@@ -125,7 +125,6 @@ def _inherit(spark, fn: Callable) -> Callable:
 
 # -- script statements as nodes ------------------------------------------------
 
-_MASK = re.compile(r"'(?:[^']|'')*'|--[^\n]*|/\*.*?\*/", re.DOTALL)
 _WORD = re.compile(r"[A-Za-z_][\w$]*")
 _PLAIN_CTAS = re.compile(
     r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -144,9 +143,9 @@ def statement_node(
     that is not a plain ``CREATE TABLE … AS``, or that calls one of
     ``table_fns`` (a registered table function materializes a
     session-wide temp view), is a barrier."""
-    masked = _MASK.sub(" ", stmt)
+    masked = Masked(stmt).code
     creates = tuple(parse_created_tables(stmt))
-    # checked on the raw text, exactly as run_statement materializes
+    # checked before transpiling, exactly as run_statement materializes
     calls_table_fn = rewrite_table_fn_calls(
         stmt, lambda name, args: "_" if name in table_fns else None
     ) != stmt

@@ -15,16 +15,23 @@ this module rewrites the remaining Postgres-isms those scripts use:
 | ``SELECT DISTINCT ON (k) …``  | ranked-window rewrite (deterministic tiebreak required) |
 | ``json_build_object('k', v, …)`` | ``to_json(named_struct('k', v, …))`` |
 
-Scope: covers every construct in the reference's SQL fixtures
-(wow_2021_create_bldgs_table.sql etc.); it is a text-level rewriter,
-not a full parser — scripts with exotic quoting belong in the
-hand-ported DataFrame layer instead (§4.3 option (a), which the
-plans/ package implements).
+Invariant: every rewrite runs on the lexer's masked text
+(publish/lexer.py), so nothing inside a string constant, a comment or a
+``$$`` body is ever rewritten, and those pieces come back byte for
+byte. A rewrite that needs a literal's content (``= any('{…}')``,
+``~*`` patterns, table-function arguments) reads it through its
+placeholder and emits new literals through the same table. Scope: the
+constructs in the reference's SQL fixtures
+(wow_2021_create_bldgs_table.sql etc.); shapes beyond them belong in
+the hand-ported DataFrame layer (§4.3 option (a), which the plans/
+package implements).
 """
 
 from __future__ import annotations
 
 import re
+
+from nycdb_k8s_loader_spark.publish.lexer import LITERAL, Masked
 
 _TYPE_MAP = {
     "int": "INT",
@@ -47,22 +54,20 @@ _TYPE_MAP = {
 }
 
 # '3 YEARS'::INTERVAL  →  INTERVAL '3 YEARS'
-_INTERVAL_CAST = re.compile(r"('(?:[^']|'')*')\s*::\s*INTERVAL\b", re.IGNORECASE)
+_INTERVAL_CAST = re.compile(rf"({LITERAL})\s*::\s*INTERVAL\b", re.IGNORECASE)
 
 # expr::type for simple exprs: identifier/qualified/literal/closing paren
 _SIMPLE_CAST = re.compile(
     r"((?:[A-Za-z_][\w$]*\s*\.\s*)?[A-Za-z_][\w$]*(?:\([^()]*\))?"
-    r"|'(?:[^']|'')*'|\d+(?:\.\d+)?)\s*::\s*([A-Za-z_][\w]*)"
+    rf"|{LITERAL}|\d+(?:\.\d+)?)\s*::\s*([A-Za-z_][\w]*)"
 )
 
 # col = any('{A,B,C}')
-_EQ_ANY = re.compile(
-    r"=\s*any\s*\(\s*'\{([^}]*)\}'\s*\)", re.IGNORECASE
-)
+_EQ_ANY = re.compile(rf"=\s*any\s*\(\s*({LITERAL})\s*\)", re.IGNORECASE)
 
 # regex-match operators against a literal pattern
-_REGEX_CI = re.compile(r"(!?)~\*\s*('(?:[^']|'')*')")
-_REGEX_CS = re.compile(r"(!?)~\s*('(?:[^']|'')*')")
+_REGEX_CI = re.compile(rf"(!?)~\*\s*({LITERAL})")
+_REGEX_CS = re.compile(rf"(!?)~\s*({LITERAL})")
 
 _STRING_AGG_OPEN = re.compile(r"\bstring_agg\s*\(", re.IGNORECASE)
 
@@ -79,16 +84,8 @@ _PAREN_CAST = re.compile(r"\)\s*::\s*([A-Za-z_][\w]*)")
 def _rewrite_paren_casts(sql: str) -> str:
     """``(expr)::type`` → ``CAST((expr) AS TYPE)`` — the parenthesized
     form _SIMPLE_CAST can't reach (it has no backward paren matching).
-    String literals are masked first so quoted parens can't derail the
-    balance scan. A preceding function identifier is absorbed into the
-    cast operand so ``fn(nested(x))::int`` casts the whole call."""
-    literals: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00{len(literals) - 1}\x00"
-
-    sql = re.sub(r"'(?:[^']|'')*'", _mask, sql)
+    A preceding function identifier is absorbed into the cast operand
+    so ``fn(nested(x))::int`` casts the whole call."""
     while True:
         m = _PAREN_CAST.search(sql)
         if not m:
@@ -121,7 +118,7 @@ def _rewrite_paren_casts(sql: str) -> str:
         spark_type = _TYPE_MAP.get(pg_type, pg_type.upper())
         operand = sql[start : m.start() + 1]
         sql = f"{sql[:start]}CAST({operand} AS {spark_type}){sql[m.end():]}"
-    return re.sub(r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], sql)
+    return sql
 
 
 def _rewrite_casts(sql: str) -> str:
@@ -141,101 +138,72 @@ def _rewrite_casts(sql: str) -> str:
     return sql
 
 
-def _rewrite_any(sql: str) -> str:
+def _rewrite_any(sql: str, masked: Masked) -> str:
     def any_sub(m: re.Match) -> str:
-        items = [v.strip() for v in m.group(1).split(",") if v.strip()]
-        quoted = ", ".join("'" + v.strip("\"'") + "'" for v in items)
-        return f"IN ({quoted})"
+        array = masked.value(m.group(1))
+        if not (array.startswith("{") and array.endswith("}")):
+            return m.group(0)
+        items = [v.strip() for v in array[1:-1].split(",") if v.strip()]
+        return "IN (" + ", ".join(masked.hold(v.strip('"')) for v in items) + ")"
 
     return _EQ_ANY.sub(any_sub, sql)
 
 
-def _rewrite_regex_ops(sql: str) -> str:
+def _rewrite_regex_ops(sql: str, masked: Masked) -> str:
     def ci(m: re.Match) -> str:
-        neg, pat = m.group(1), m.group(2)
-        inner = pat[1:-1]
-        op = "NOT RLIKE" if neg else "RLIKE"
-        return f"{op} '(?i){inner}'"
-
-    sql = _REGEX_CI.sub(ci, sql)
+        pat = masked.hold("(?i)" + masked.value(m.group(2)))
+        return f"{'NOT RLIKE' if m.group(1) else 'RLIKE'} {pat}"
 
     def cs(m: re.Match) -> str:
-        neg, pat = m.group(1), m.group(2)
-        op = "NOT RLIKE" if neg else "RLIKE"
-        return f"{op} {pat}"
+        return f"{'NOT RLIKE' if m.group(1) else 'RLIKE'} {m.group(2)}"
 
-    return _REGEX_CS.sub(cs, sql)
+    return _REGEX_CS.sub(cs, _REGEX_CI.sub(ci, sql))
 
 
 def _scan_to_close(sql: str, start: int) -> int:
-    """Index just past the ')' matching the '(' before ``start``
-    (quote-aware)."""
-    depth, i, n = 1, start, len(sql)
-    while i < n and depth:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'" and (i + 1 >= n or sql[i + 1] != "'"):
-                    break
-                i += 2 if sql[i] == "'" else 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
+    """Index just past the ')' matching the '(' before ``start``."""
+    depth, i = 1, start
+    while i < len(sql) and depth:
+        depth += {"(": 1, ")": -1}.get(sql[i], 0)
         i += 1
     return i
 
 
 def _split_top_commas(args: str) -> list[str]:
-    out, depth, buf, i, n = [], 0, [], 0, len(args)
-    while i < n:
-        ch = args[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if args[j] == "'" and (j + 1 >= n or args[j + 1] != "'"):
-                    break
-                j += 2 if args[j] == "'" else 1
-            buf.append(args[i : j + 1])
-            i = j + 1
-            continue
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(args):
         if ch == "(":
             depth += 1
         elif ch == ")":
             depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    out.append("".join(buf))
-    return out
+        elif ch == "," and depth == 0:
+            out.append(args[start:i])
+            start = i + 1
+    return out + [args[start:]]
 
 
-def _rewrite_string_agg(sql: str) -> str:
-    """``string_agg(expr, sep [ORDER BY o])`` → ``listagg(expr, sep)
-    [WITHIN GROUP (ORDER BY o)]`` — paren-aware so nested calls
-    (json_build_object args etc.) survive."""
-    while True:
-        m = _STRING_AGG_OPEN.search(sql)
-        if not m:
-            return sql
+def _rewrite_calls(sql: str, opener: re.Pattern, build) -> str:
+    """Replace every ``opener …)`` call by ``build(args)``, outermost
+    first, until none is left (so nested calls are rewritten too)."""
+    while m := opener.search(sql):
         end = _scan_to_close(sql, m.end())
-        args = _split_top_commas(sql[m.end() : end - 1])
-        expr = args[0].strip()
-        rest = ",".join(args[1:]).strip()
-        om = re.search(r"\s+ORDER\s+BY\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
-        if om:
-            sep = rest[: om.start()].strip()
-            repl = (
-                f"listagg({expr}, {sep}) WITHIN GROUP "
-                f"(ORDER BY {om.group(1).strip()})"
-            )
-        else:
-            repl = f"listagg({expr}, {rest})"
-        sql = sql[: m.start()] + repl + sql[end:]
+        sql = sql[: m.start()] + build(sql[m.end() : end - 1]) + sql[end:]
+    return sql
+
+
+def _string_agg(args: str) -> str:
+    """``string_agg(expr, sep [ORDER BY o])`` → ``listagg(expr, sep)
+    [WITHIN GROUP (ORDER BY o)]``."""
+    expr, *seps = _split_top_commas(args)
+    rest = ",".join(seps).strip()
+    om = re.search(r"\s+ORDER\s+BY\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
+    if om:
+        sep = rest[: om.start()].strip()
+        return (
+            f"listagg({expr.strip()}, {sep}) WITHIN GROUP "
+            f"(ORDER BY {om.group(1).strip()})"
+        )
+    return f"listagg({expr.strip()}, {rest})"
 
 
 _JSON_AGG_OPEN = re.compile(r"\bjsonb?_agg\s*\(", re.IGNORECASE)
@@ -264,10 +232,11 @@ def _rewrite_json_agg(sql: str) -> str:
             expr, order = args[: om.start()].strip(), om.group(1).strip()
         else:
             expr, order = args.strip(), None
-        if expr.lower().startswith("to_json(") and expr.endswith(")"):
-            inner_expr = expr[len("to_json(") : -1]
-            if _balanced(inner_expr):
-                expr = inner_expr
+        if (
+            expr.lower().startswith("to_json(") and expr.endswith(")")
+            and _scan_to_close(expr, len("to_json(")) == len(expr)
+        ):
+            expr = expr[len("to_json(") : -1]
         filt, tail_start = "", end
         fm = _FILTER_OPEN.match(sql[end:])
         if fm:
@@ -297,18 +266,6 @@ def _rewrite_json_agg(sql: str) -> str:
         else:
             inner = f"collect_list({expr}){filt}"
         sql = f"{sql[:m.start()]}to_json({inner}){sql[tail_start:]}"
-
-
-def _balanced(s: str) -> bool:
-    depth = 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0
 
 
 def _rewrite_distinct_on(sql: str) -> str:
@@ -341,27 +298,6 @@ def _rewrite_distinct_on(sql: str) -> str:
         f"row_number() OVER (PARTITION BY {keys} ORDER BY {order}) AS __rn "
         f"{from_part}) WHERE __rn = 1"
     )
-
-
-def _rewrite_json_build(sql: str) -> str:
-    """json_build_object(...) → to_json(named_struct(...)). Argument
-    list is kept verbatim (same key/value alternation)."""
-    out, idx = [], 0
-    for m in _JSON_BUILD.finditer(sql):
-        start = m.end()
-        depth, i = 1, start
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        args = sql[start : i - 1]
-        out.append(sql[idx : m.start()])
-        out.append(f"to_json(named_struct({args}))")
-        idx = i
-    out.append(sql[idx:])
-    return "".join(out)
 
 
 _VESTIGIAL_USING = re.compile(
@@ -418,6 +354,8 @@ def rewrite_table_fn_calls(sql: str, resolve) -> str:
     table-function argument needs a lateral join, which belongs in the
     DataFrame layer."""
 
+    masked = Masked(sql)
+
     def sub(m: re.Match) -> str:
         kw, name, rawargs = m.group(1), m.group(2), m.group(3)
         name = re.sub(r"\s*\.\s*", ".", name)
@@ -426,8 +364,8 @@ def rewrite_table_fn_calls(sql: str, resolve) -> str:
             a = a.strip()
             if not a:
                 continue
-            if a.startswith("'") and a.endswith("'"):
-                args.append(a[1:-1].replace("''", "'"))
+            if re.fullmatch(LITERAL, a):
+                args.append(masked.value(a))
                 continue
             try:
                 args.append(int(a))
@@ -443,19 +381,23 @@ def rewrite_table_fn_calls(sql: str, resolve) -> str:
             return m.group(0)
         return f"{kw} {view}"
 
-    return _TABLE_FN_CALL.sub(sub, sql)
+    return masked.unmask(_TABLE_FN_CALL.sub(sub, masked.text))
 
 
 def transpile_pg(sql: str) -> str:
-    """Apply all rewrites. Order matters: interval-casts before simple
-    casts, DISTINCT ON last (it restructures the statement)."""
-    sql = _rewrite_drop_cascade(sql)
-    sql = _rewrite_vestigial_using(sql)
-    sql = _rewrite_casts(sql)
-    sql = _rewrite_any(sql)
-    sql = _rewrite_regex_ops(sql)
-    sql = _rewrite_string_agg(sql)
-    sql = _rewrite_json_build(sql)
-    sql = _rewrite_json_agg(sql)
-    sql = _rewrite_distinct_on(sql)
-    return sql
+    """Apply all rewrites to the masked statement. Order matters:
+    interval-casts before simple casts, DISTINCT ON last (it
+    restructures the statement)."""
+    masked = Masked(sql)
+    out = _rewrite_drop_cascade(masked.text)
+    out = _rewrite_vestigial_using(out)
+    out = _rewrite_casts(out)
+    out = _rewrite_any(out, masked)
+    out = _rewrite_regex_ops(out, masked)
+    out = _rewrite_calls(out, _STRING_AGG_OPEN, _string_agg)
+    out = _rewrite_calls(
+        out, _JSON_BUILD, lambda args: f"to_json(named_struct({args}))"
+    )
+    out = _rewrite_json_agg(out)
+    out = _rewrite_distinct_on(out)
+    return masked.unmask(out)

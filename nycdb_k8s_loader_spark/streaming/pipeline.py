@@ -60,9 +60,11 @@ def incremental_binary_source(
     file stream can read). The ``binaryFile`` source gives the same
     exactly-once new-files-only tracking the CSV stream gets from its
     checkpoint; each row is (path, modificationTime, length, content)
-    and a foreachBatch stage parses the bytes with the exact batch
-    readers (sources/readers.read_excel, shapefile.read_shapefile_zip)
-    — one ingestion semantics, two physical sources."""
+    and :func:`run_available_now_staged_binary_distributed` parses the
+    bytes on the executors with the batch readers' pure cores
+    (sources/readers.excel_string_rows,
+    shapefile.shapefile_string_rows) — one ingestion semantics, two
+    physical sources."""
     # the binaryFile format's FIXED schema — file streaming sources
     # require it stated explicitly
     reader = spark.readStream.format("binaryFile").schema(
@@ -91,13 +93,12 @@ def run_available_now_staged_binary_distributed(
     cast to ``schema`` and land as the same plain-parquet
     ``batch-<id>`` staging dirs as the CSV form.
 
-    Why this is the production form: the driver never materializes
-    file CONTENT — a 10k-workbook backlog parses with executor
-    parallelism and per-task memory, not a driver loop (the
-    driver-collect form is a documented small-file fast path). The
-    parser must be a pure picklable function (no SparkSession, no
-    driver state); a parse failure fails its task and therefore the
-    batch LOUDLY, before anything is staged — the same
+    Why this is the only form: the driver never materializes file
+    CONTENT — a 10k-workbook backlog parses with executor parallelism
+    and per-task memory, not a driver loop. The parser must be a pure
+    picklable function (no SparkSession, no driver state); a parse
+    failure fails its task and therefore the batch LOUDLY, before
+    anything is staged — the same
     validate-then-commit contract downstream. Overwrite-by-batch-id
     keeps checkpoint replays idempotent.
 

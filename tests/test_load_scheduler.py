@@ -16,6 +16,7 @@ from nycdb_k8s_loader_spark.publish.scheduler import (
     Node,
     dependencies,
     run_graph,
+    script_nodes,
     statement_node,
 )
 from nycdb_k8s_loader_spark.registry import DatasetDef, Registry, SourceFile, TableDef
@@ -84,6 +85,23 @@ class TestStatementDependencies:
             lambda: None,
         )
         assert not node.barrier
+
+
+def test_temporary_function_ddl_is_replayed_not_run(tmp_path):
+    """The function DDL the shipped wow script ends with (Spark's
+    ``CREATE OR REPLACE TEMPORARY FUNCTION``, after a comment) is
+    collected for post-publish replay and gets no statement node."""
+    ddl = (
+        "-- re-created post-publish\n"
+        "CREATE OR REPLACE TEMPORARY FUNCTION wow_normalize_name(s STRING)\n"
+        "RETURNS STRING RETURN trim(regexp_replace(upper(s), '[^A-Z0-9]+', ' '))"
+    )
+    script = tmp_path / "post.sql"
+    script.write_text(f"CREATE TABLE t AS SELECT 1 AS k;\n\n{ddl};\n")
+    function_stmts: list[str] = []
+    nodes = script_nodes(None, None, [str(script)], function_stmts)
+    assert [n.creates for n in nodes] == [("t",)]
+    assert function_stmts == [ddl]
 
 
 class TestRunGraph:

@@ -58,7 +58,22 @@ def test_string_containing_keywords():
     assert parse_created_tables(sql) == ["t"]
 
 
+def test_create_inside_dollar_body_ignored():
+    sql = (
+        "CREATE TABLE outer_t AS SELECT 1 AS x;\n"
+        "CREATE OR REPLACE FUNCTION f() RETURNS void AS $$\n"
+        "  CREATE TABLE inner_t (x int);\n"
+        "$$ LANGUAGE sql;"
+    )
+    assert parse_created_tables(sql) == ["outer_t"]
+
+
 def test_function_sql_detection():
     assert is_function_sql("CREATE OR REPLACE FUNCTION f() RETURNS int AS $$ 1 $$;")
     assert is_function_sql("create   or\nreplace\tfunction g() ...")
     assert not is_function_sql("CREATE TABLE f (x int);")
+    assert is_function_sql(
+        "-- replayed after publish\n"
+        "CREATE OR REPLACE TEMPORARY FUNCTION h(s STRING) RETURNS STRING RETURN s"
+    )
+    assert not is_function_sql("SELECT 'CREATE OR REPLACE FUNCTION f()' AS s")

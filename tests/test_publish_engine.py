@@ -8,9 +8,12 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from nycdb_k8s_loader_spark.engine import Engine
+from nycdb_k8s_loader_spark.publish.lexer import Masked
 from nycdb_k8s_loader_spark.publish.parse_created_tables import split_statements
 from nycdb_k8s_loader_spark.publish.protocol import Publisher, staging_db_name
 from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
@@ -318,6 +321,15 @@ class TestSplitStatements:
 
     def test_escaped_quote(self):
         assert split_statements("SELECT 'it''s; fine';") == ["SELECT 'it''s; fine'"]
+
+    @settings(max_examples=300, deadline=None, derandomize=True)
+    @given(st.text(alphabet="ab '-/*$;()\n", max_size=40))
+    def test_masking_is_lossless_and_hides_every_opener(self, sql):
+        """Whatever the quoting, the masked text holds no quote or
+        comment/body opener, and unmasking restores every byte."""
+        masked = Masked(sql)
+        assert masked.unmask(masked.text) == sql
+        assert not any(t in masked.text for t in ("'", "--", "/*", "$$"))
 
 
 class TestResolver:

@@ -170,6 +170,39 @@ def test_one_stage_primitive():
     ]
 
 
+def test_one_sql_lexer():
+    """What counts as a string literal, a comment or a ``$$`` body in
+    script SQL is decided in publish/lexer.py alone: no other module
+    holds the literal pattern (``[^']``), a comment or ``$$`` pattern,
+    or compares or prefix-tests text against a quote or comment
+    opener."""
+    patterns = ("[^']", "--[^", "/\\*", "\\$\\$")
+    openers = {"'", "''", "--", "/*", "$$"}
+
+    def scans(node) -> bool:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return any(p in node.value for p in patterns)
+        if isinstance(node, ast.Compare):
+            operands = [node.left, *node.comparators]
+        elif (
+            isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("startswith", "endswith")
+        ):
+            operands = node.args
+        else:
+            return False
+        return any(
+            isinstance(o, ast.Constant) and o.value in openers for o in operands
+        )
+
+    users = sorted(
+        os.path.relpath(path, PKG)
+        for path in _modules()
+        if any(scans(n) for n in ast.walk(ast.parse(open(path).read())))
+    )
+    assert users == [os.path.join("publish", "lexer.py")]
+
+
 def test_graph_collects_in_one_place():
     """Connected components leave Spark in one place: graph.py has one
     driver collect (``collect``/``toArrow``/``toPandas``/

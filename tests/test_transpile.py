@@ -104,6 +104,23 @@ class TestTextRewrites:
         # the inner to_json was unwrapped: elements are structs
         assert out.count("to_json(") == 1
 
+    @pytest.mark.parametrize(
+        "pg, expected",
+        [
+            # literal content is data: never rewritten
+            ("select 'string_agg(a, b)' as x from t",
+             "select 'string_agg(a, b)' as x from t"),
+            ("select 'a::int' as x from t", "select 'a::int' as x from t"),
+            # a call name inside a literal argument is not a call
+            ("json_build_object('k', 'json_build_object(1)')",
+             "to_json(named_struct('k', 'json_build_object(1)'))"),
+            # nor is anything inside a comment
+            ("select a -- a::int\nfrom t", "select a -- a::int\nfrom t"),
+        ],
+    )
+    def test_literals_and_comments_are_opaque(self, pg, expected):
+        assert transpile_pg(pg) == expected
+
     def test_vestigial_from_using_dropped(self):
         # wow_2021 sql:60: FROM <table> USING(col) with no JOIN
         out = transpile_pg("SELECT a FROM joined_view USING(complaintid)")
