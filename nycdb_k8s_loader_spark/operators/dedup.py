@@ -22,7 +22,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nycdb_k8s_loader_spark.session import stage
+from nycdb_k8s_loader_spark.session import memoized, stage
 
 
 def normalized_text(col: str = "text") -> F.Column:
@@ -32,16 +32,10 @@ def normalized_text(col: str = "text") -> F.Column:
 
 def tokenize_distinct(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Distinct (doc_id, word) posting list: split on single space,
-    drop empties. Matches DuckDB ``unnest(string_split(...))`` exactly
-    so oracles are byte-identical."""
-    return (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(normalized_text(text_col), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .distinct()
-    )
+    drop empties (:func:`shingle_postings` of single words). Matches
+    DuckDB ``unnest(string_split(...))`` exactly so oracles are
+    byte-identical."""
+    return shingle_postings(df, 1, id_col, text_col)
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -161,16 +155,20 @@ def _shingle_explode(
             F.col(id_col),
             F.explode(F.split(normalized_text(text_col), " ")).alias("w"),
         ).filter(F.col("w") != "")
-    words = df.select(
-        F.col(id_col),
-        F.filter(
-            F.split(normalized_text(text_col), " "), lambda w: w != ""
-        ).alias("words"),
-    )
-    return words.select(
-        F.col(id_col),
-        F.explode(shingle_array(F.col("words"), shingles)).alias("w"),
-    )
+    key, words, grams, each = _shingle_columns(id_col, text_col, shingles)
+    return df.select(key, words).select(key, each)
+
+
+@memoized
+def _shingle_columns(id_col: str, text_col: str, shingles: int) -> tuple:
+    """The id column, the ``__words`` array (its own staged select,
+    see :func:`shingle_array`), its shingles and those exploded as
+    ``w``."""
+    words = F.filter(
+        F.split(normalized_text(text_col), " "), lambda w: w != ""
+    ).alias("__words")
+    grams = shingle_array(F.col("__words"), shingles)
+    return F.col(id_col), words, grams, F.explode(grams).alias("w")
 
 
 def shingle_postings(
@@ -410,41 +408,26 @@ def band_keys(
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     assert num_hashes <= len(MINHASH_PERMS), "extend MINHASH_PERMS"
-    rows_per_band = num_hashes // bands
+    out = df
+    for cols in _band_stages(id_col, text_col, shingles, num_hashes, bands):
+        out = out.select(*cols)
+    return out
 
-    # Staged selects so each array is materialized once per row (see
-    # shingle_array docstring): words → shingles → 60-bit base hashes.
-    base = (
-        df.select(
-            F.col(id_col),
-            F.filter(F.split(normalized_text(text_col), " "),
-                     lambda w: w != "").alias("__words"),
-        )
-        .select(
-            F.col(id_col),
-            shingle_array(F.col("__words"), shingles).alias("__shingles"),
-        )
-        .select(
-            F.col(id_col),
-            F.transform(
-                F.col("__shingles"),
-                lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-                .cast("long"),
-            ).alias("__base"),
-        )
-    )
+
+@memoized
+def _band_stages(
+    id_col: str, text_col: str, shingles: int, num_hashes: int, bands: int
+) -> tuple[tuple[F.Column, ...], ...]:
+    """:func:`band_keys`' staged selects, each array materialized once
+    per row (see :func:`shingle_array`): words → shingles → 60-bit base
+    hashes → signatures → one explode over a bands-array of structs."""
+    rows_per_band = num_hashes // bands
+    key, words, grams, _ = _shingle_columns(id_col, text_col, shingles)
 
     def perm(i: int):
         a, b = MINHASH_PERMS[i]
         return lambda x: ((x % _MERSENNE31) * a + b) % _MERSENNE31
 
-    sig_cols = [
-        F.array_min(F.transform(F.col("__base"), perm(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = base.select(F.col(id_col), *sig_cols)
-
-    # One explode over a bands-array of structs (not N unioned scans).
     band_structs = F.array(
         *[
             F.struct(
@@ -461,12 +444,21 @@ def band_keys(
             for b in range(bands)
         ]
     )
-    return sigs.select(
-        F.col(id_col), F.explode(band_structs).alias("bk")
-    ).select(
-        F.col(id_col),
-        F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"),
+    return (
+        (key, words),
+        (key, grams.alias("__shingles")),
+        (key, F.transform(
+            F.col("__shingles"),
+            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
+            .cast("long"),
+        ).alias("__base")),
+        (key, *[
+            F.array_min(F.transform(F.col("__base"), perm(i))).alias(f"h{i}")
+            for i in range(num_hashes)
+        ]),
+        (key, F.explode(band_structs).alias("bk")),
+        (key, F.col("bk.band").alias("band"),
+         F.col("bk.band_key").alias("band_key")),
     )
 
 
@@ -520,8 +512,19 @@ def minhash_signatures(
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
+    return (
+        buckets.select(_bucket_pairs())
+        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        .distinct()
+    )
+
+
+@memoized
+def _bucket_pairs() -> F.Column:
+    """In-bucket pair expansion of :func:`minhash_signatures` over a
+    sorted ``ids`` array, exploded as the struct ``p``."""
     n = F.size(F.col("ids"))
-    pairs = F.flatten(
+    return F.explode(F.flatten(
         F.transform(
             F.sequence(F.lit(1), n - 1),
             lambda i: F.transform(
@@ -532,12 +535,7 @@ def minhash_signatures(
                 ),
             ),
         )
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    )).alias("p")
 
 
 def simhash_fingerprints(

@@ -26,9 +26,12 @@ from __future__ import annotations
 
 import math
 from collections.abc import Callable, Sequence
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from nycdb_k8s_loader_spark.session import memoized
 
 EARTH_RADIUS_KM = 6371.0088  # IUGG mean Earth radius
 # Degree length used for SIZING grid cells. The haversine sphere's
@@ -392,11 +395,31 @@ def _polygons_intersect_edges(
     )
 
 
-def _with_bbox(df: DataFrame, wkt: str, vcol: str) -> DataFrame:
-    """Parse a WKT column into a vertex ring plus its bounding box —
-    the shared pregate frame of every polygon join here (the bbox
-    comparisons are the cheap conjunct that must run before any
-    edge/containment/clip expression).
+@memoized
+def _bbox_columns(wkt: str, vcol: str, multi: bool) -> tuple:
+    """The fenced parse column and the four bbox columns of
+    :func:`_with_bbox`, built once per SparkContext."""
+    parse = parse_wkt_geometry if multi else parse_wkt_polygon
+    parsed = F.when(F.spark_partition_id() >= 0, parse(wkt)).alias(vcol)
+    verts = F.flatten(F.flatten(F.col(vcol))) if multi else F.col(vcol)
+    xs = F.transform(verts, lambda p: p["x"])
+    ys = F.transform(verts, lambda p: p["y"])
+    return parsed, (
+        F.array_min(xs).alias(f"{vcol}_x0"),
+        F.array_max(xs).alias(f"{vcol}_x1"),
+        F.array_min(ys).alias(f"{vcol}_y0"),
+        F.array_max(ys).alias(f"{vcol}_y1"),
+    )
+
+
+def _with_bbox(
+    df: DataFrame, wkt: str, vcol: str, multi: bool = False
+) -> DataFrame:
+    """Parse a WKT column into a vertex ring (``multi``: the
+    (MULTI)POLYGON geometry type) plus its bounding box — the shared
+    pregate frame of every polygon join here (the bbox comparisons are
+    the cheap conjunct that must run before any edge/containment/clip
+    expression).
 
     The parse is FENCED (spark_partition_id barrier — the geo06 clip
     idiom, see polygon_clip_area_join) and staged through its own
@@ -409,21 +432,11 @@ def _with_bbox(df: DataFrame, wkt: str, vcol: str) -> DataFrame:
     subexpression elimination cannot merge across Filter/Project).
     Fenced, the parse materializes exactly once per row; the bbox
     min/max read the materialized array."""
-    verts = F.when(
-        F.spark_partition_id() >= 0, parse_wkt_polygon(wkt)
-    )
-    staged = df.select("*", verts.alias(vcol))
-    xs = F.transform(F.col(vcol), lambda p: p["x"])
-    ys = F.transform(F.col(vcol), lambda p: p["y"])
-    return staged.select(
-        "*",
-        F.array_min(xs).alias(f"{vcol}_x0"),
-        F.array_max(xs).alias(f"{vcol}_x1"),
-        F.array_min(ys).alias(f"{vcol}_y0"),
-        F.array_max(ys).alias(f"{vcol}_y1"),
-    )
+    parsed, bbox = _bbox_columns(wkt, vcol, multi)
+    return df.select("*", parsed).select("*", *bbox)
 
 
+@memoized
 def _bbox_overlap(a: str, b: str) -> Column:
     """Strict bbox overlap between two _with_bbox prefixes."""
     return (
@@ -562,7 +575,8 @@ def polygon_intersection_join_binned(
        cheap bbox/canonical conjuncts (the geo06 lesson).
 
     ``cell_deg=None`` derives the cell edge as the LARGEST bbox
-    dimension across both sides (two metadata-scale aggregates): with
+    dimension across both sides (one Spark job, one aggregate over
+    both sides' unioned dimensions; :func:`_derive_cell_deg`): with
     edge ≥ every bbox, a ring lands in at most 4 cells and candidate
     volume tracks local density. One continent-sized outlier ring
     inflates every cell — pass an explicit ``cell_deg`` sized to the
@@ -581,26 +595,9 @@ def polygon_intersection_join_binned(
     _require_disjoint(polys_a, polys_b)
 
     def op(polys_a: DataFrame, polys_b: DataFrame) -> DataFrame:
-        a = _with_bbox(polys_a, wkt_a, "__va")
-        b = _with_bbox(polys_b, wkt_b, "__vb")
-
-        cell = F.lit(float(_derive_cell_deg(
-            (a, "__va"), (b, "__vb"), cell_deg=cell_deg
-        )))
-        ab = _grid_binned(a, "__va", cell)
-        bb = _grid_binned(b, "__vb", cell)
-        joined = ab.hint("shuffle_hash").join(
-            bb,
-            (F.col("__va_cx") == F.col("__vb_cx"))
-            & (F.col("__va_cy") == F.col("__vb_cy")),
-            "inner",
-        )
-        canonical = (
-            F.col("__va_cx")
-            == F.floor(F.greatest("__va_x0", "__vb_x0") / cell)
-        ) & (
-            F.col("__va_cy")
-            == F.floor(F.greatest("__va_y0", "__vb_y0") / cell)
+        cand = _binned_candidates(
+            _with_bbox(polys_a, wkt_a, "__va"), "__va",
+            _with_bbox(polys_b, wkt_b, "__vb"), "__vb", cell_deg,
         )
         # r13, tried and REVERTED on measurement: staging
         # the residual's edge arrays into their own fenced
@@ -614,18 +611,9 @@ def polygon_intersection_join_binned(
         # evaluations/row) or where normalization re-ran per pair
         # inside the fold (geo06/10/11/14); here once-per-row inline
         # is the cheaper shape.
-        isect = F.when(
-            F.spark_partition_id() >= 0,
-            polygons_intersect(F.col("__va"), F.col("__vb")),
-        )
-        hidden = [
-            c
-            for c in joined.columns
-            if c.startswith("__va") or c.startswith("__vb")
-        ]
+        hidden = [c for c in cand.columns if c.startswith(("__va", "__vb"))]
         return (
-            joined.filter(_bbox_overlap("__va", "__vb") & canonical)
-            .withColumn("__isect", isect)
+            cand.withColumn("__isect", _intersect_residual("__va", "__vb"))
             .filter(F.col("__isect"))
             .drop("__isect", *hidden)
         )
@@ -1274,8 +1262,8 @@ def concave_clip_area_join(
     _require_disjoint(polys, clips)
 
     def op(polys: DataFrame, clips: DataFrame) -> DataFrame:
-        p = _with_geom_bbox(polys, wkt_col, "__gp")
-        c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
+        p = _with_bbox(polys, wkt_col, "__gp", multi=True)
+        c = _with_bbox(clips, clip_wkt_col, "__gc", multi=True)
         bbox = _bbox_overlap("__gp", "__gc")
         cand = p.join(F.broadcast(c), bbox, "inner")
         return _fan_clip_area_tail(
@@ -1436,7 +1424,8 @@ def concave_clip_area_join_binned(
       fixed-point sum.
 
     ``cell_deg`` as in the binned intersection join (None derives the
-    max bbox dimension across both sides; size it to the TYPICAL
+    max bbox dimension across both sides in one Spark job; size it to
+    the TYPICAL
     geometry when outliers exist).  Same per-WKT-pair sum as the
     broadcast form (:func:`by_geometry_class`).  100 TB shape: one
     shuffle per side keyed by cell, candidate volume tracks local
@@ -1446,27 +1435,11 @@ def concave_clip_area_join_binned(
     _require_disjoint(polys, clips)
 
     def op(polys: DataFrame, clips: DataFrame) -> DataFrame:
-        p = _with_geom_bbox(polys, wkt_col, "__gp")
-        c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
-        cell = F.lit(float(_derive_cell_deg(
-            (p, "__gp"), (c, "__gc"), cell_deg=cell_deg
-        )))
-        pb = _grid_binned(p, "__gp", cell)
-        cb = _grid_binned(c, "__gc", cell)
-        joined = pb.hint("shuffle_hash").join(
-            cb,
-            (F.col("__gp_cx") == F.col("__gc_cx"))
-            & (F.col("__gp_cy") == F.col("__gc_cy")),
-            "inner",
+        cand = _binned_candidates(
+            _with_bbox(polys, wkt_col, "__gp", multi=True), "__gp",
+            _with_bbox(clips, clip_wkt_col, "__gc", multi=True), "__gc",
+            cell_deg,
         )
-        canonical = (
-            F.col("__gp_cx")
-            == F.floor(F.greatest("__gp_x0", "__gc_x0") / cell)
-        ) & (
-            F.col("__gp_cy")
-            == F.floor(F.greatest("__gp_y0", "__gc_y0") / cell)
-        )
-        cand = joined.filter(_bbox_overlap("__gp", "__gc") & canonical)
         return _fan_clip_area_tail(
             cand, list(polys.columns) + list(clips.columns),
             area_col, round_dp,
@@ -1477,55 +1450,91 @@ def concave_clip_area_join_binned(
     )
 
 
+@memoized
+def _intersect_residual(a: str, b: str) -> Column:
+    """The exact :func:`polygons_intersect` test between the rings
+    ``a`` and ``b``, behind the pushdown barrier of the binned join's
+    step 4."""
+    return F.when(
+        F.spark_partition_id() >= 0, polygons_intersect(F.col(a), F.col(b))
+    )
+
+
+def _binned_candidates(
+    a: DataFrame, pa: str, b: DataFrame, pb: str, cell_deg: float | None
+) -> DataFrame:
+    """Steps 1–3 of the binned joins, shared: both bbox-carrying
+    frames (prefixes ``pa``/``pb``) explode to every grid cell their
+    bbox overlaps, ONE ``shuffle_hash`` equi-join on the cell, then
+    strict bbox overlap AND the canonical-cell rule. The cell edge
+    enters each side as its ``_cell`` column, so the expressions stay
+    keyed on names (:func:`_bin_columns`)."""
+    cell = F.lit(float(_derive_cell_deg((a, pa), (b, pb), cell_deg=cell_deg)))
+    cells_a, cells_b, on, keep = _bin_columns(pa, pb)
+
+    def binned(df: DataFrame, p: str, cells: tuple) -> DataFrame:
+        df = df.select("*", cell.alias(f"{p}_cell"))
+        return df.select("*", cells[0]).select("*", cells[1])
+
+    return (
+        binned(a, pa, cells_a).hint("shuffle_hash")
+        .join(binned(b, pb, cells_b), on, "inner")
+        .filter(keep)
+    )
+
+
+@memoized
+def _bin_columns(a: str, b: str) -> tuple:
+    """Per side, the x and y cell explodes over its ``_cell`` column;
+    the cell equi-join condition; the candidate filter."""
+    def cells(p: str, v: str) -> Column:
+        lo, hi = (F.floor(F.col(f"{p}_{v}{i}") / F.col(f"{p}_cell")) for i in "01")
+        return F.explode(F.sequence(lo, hi)).alias(f"{p}_c{v}")
+
+    def canonical(v: str) -> Column:
+        corner = F.greatest(f"{a}_{v}0", f"{b}_{v}0") / F.col(f"{a}_cell")
+        return F.col(f"{a}_c{v}") == F.floor(corner)
+
+    on = (F.col(f"{a}_cx") == F.col(f"{b}_cx")) & (
+        F.col(f"{a}_cy") == F.col(f"{b}_cy")
+    )
+    keep = _bbox_overlap(a, b) & canonical("x") & canonical("y")
+    return (cells(a, "x"), cells(a, "y")), (cells(b, "x"), cells(b, "y")), on, keep
+
+
+@memoized
+def _bbox_dim(p: str) -> Column:
+    """The larger bbox side of a :func:`_with_bbox` prefix."""
+    x, y = (F.col(f"{p}_{v}1") - F.col(f"{p}_{v}0") for v in "xy")
+    return F.greatest(x, y).alias("__dim")
+
+
 def _derive_cell_deg(
     *frames: tuple[DataFrame, str], cell_deg: float | None
 ) -> float:
     """Shared cell-edge derivation for the binned joins: the largest
-    bbox dimension across all given (frame, prefix) pairs (metadata-
-    scale aggregates), unless an explicit ``cell_deg`` is passed."""
+    bbox dimension across all given (frame, prefix) pairs, unless an
+    explicit ``cell_deg`` is passed. The canonical-cell rule makes the
+    join exact for any cell > 0; the size only sets the fan-out.
+
+    One Spark job: an observed ``max`` over the union of the frames'
+    dimension columns rides a ``noop`` write of that union (a plain
+    ``agg().collect()`` is a map-stage job plus a result job under
+    AQE, and measured slower on the benchmark's geometry joins)."""
     if cell_deg is not None:
         return cell_deg
-
-    def max_dim(df: DataFrame, p: str) -> float | None:
-        return df.agg(
-            F.max(
-                F.greatest(
-                    F.col(f"{p}_x1") - F.col(f"{p}_x0"),
-                    F.col(f"{p}_y1") - F.col(f"{p}_y0"),
-                )
-            )
-        ).collect()[0][0]
-
-    dims = [d for d in (max_dim(df, p) for df, p in frames)
-            if d is not None]
-    if not dims:
+    dims = reduce(DataFrame.union, (df.select(_bbox_dim(p)) for df, p in frames))
+    seen = Observation()
+    dims.observe(seen, F.max("__dim").alias("dim")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    dim = seen.get["dim"]
+    if dim is None:
         raise ValueError(
             "binned polygon join: no parseable rings on either side "
             "— cannot derive cell_deg"
         )
-    return max(max(dims), 1e-9)
-
-
-def _grid_binned(df: DataFrame, p: str, cell: Column) -> DataFrame:
-    """Explode a bbox-carrying frame to every grid cell its bbox
-    overlaps — step 1 of the binned joins, shared."""
-    return df.select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(f"{p}_x0") / cell),
-                F.floor(F.col(f"{p}_x1") / cell),
-            )
-        ).alias(f"{p}_cx"),
-    ).select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(f"{p}_y0") / cell),
-                F.floor(F.col(f"{p}_y1") / cell),
-            )
-        ).alias(f"{p}_cy"),
-    )
+    return max(dim, 1e-9)
 
 
 def _miter_join_fn(r: Column):
@@ -1675,8 +1684,8 @@ def concave_union_area_join(
         # in keep-all-pairs mode, whose 0.0 for absent/non-positive
         # sums is exactly the old coalesce(left-join, 0) value —
         # union = a + b − inter in one pass.
-        p = _with_geom_bbox(polys, wkt_col, "__gp")
-        c = _with_geom_bbox(clips, clip_wkt_col, "__gc")
+        p = _with_bbox(polys, wkt_col, "__gp", multi=True)
+        c = _with_bbox(clips, clip_wkt_col, "__gc", multi=True)
         keys = list(polys.columns) + list(clips.columns)
         cand = (
             p.join(
@@ -1704,27 +1713,6 @@ def concave_union_area_join(
 
     return by_geometry_class(
         op, (polys, [wkt_col]), (clips, [clip_wkt_col])
-    )
-
-
-def _with_geom_bbox(df: DataFrame, wkt: str, gcol: str) -> DataFrame:
-    """Parse a (MULTI)POLYGON WKT column into the geometry type plus
-    its GLOBAL bounding box — the multipolygon twin of _with_bbox
-    (same r13 parse fence, same rationale: one materialized parse per
-    row instead of one per referencing operator)."""
-    geom = F.when(
-        F.spark_partition_id() >= 0, parse_wkt_geometry(wkt)
-    )
-    staged = df.select("*", geom.alias(gcol))
-    verts = F.flatten(F.flatten(F.col(gcol)))
-    xs = F.transform(verts, lambda p: p["x"])
-    ys = F.transform(verts, lambda p: p["y"])
-    return staged.select(
-        "*",
-        F.array_min(xs).alias(f"{gcol}_x0"),
-        F.array_max(xs).alias(f"{gcol}_x1"),
-        F.array_min(ys).alias(f"{gcol}_y0"),
-        F.array_max(ys).alias(f"{gcol}_y1"),
     )
 
 
@@ -1795,12 +1783,12 @@ def multipolygon_intersection_join(
         # side's projection — built once per row instead of once per
         # bbox-surviving candidate pair.
         a = (
-            _with_geom_bbox(polys_a, wkt_a, "__ga")
+            _with_bbox(polys_a, wkt_a, "__ga", multi=True)
             .withColumn("__ga_f", _flat_geom_edges(F.col("__ga")))
             .withColumn("__ga_p", _geom_poly_edges(F.col("__ga")))
         )
         b = (
-            _with_geom_bbox(polys_b, wkt_b, "__gb")
+            _with_bbox(polys_b, wkt_b, "__gb", multi=True)
             .withColumn("__gb_f", _flat_geom_edges(F.col("__gb")))
             .withColumn("__gb_p", _geom_poly_edges(F.col("__gb")))
         )

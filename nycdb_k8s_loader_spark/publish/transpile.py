@@ -335,6 +335,9 @@ _TABLE_FN_CALL = re.compile(
     r"\s*\(([^()]*)\)",
     re.IGNORECASE,
 )
+#: a signed SQL numeric literal (Python's int()/float() would also
+#: take ``inf``, ``nan`` and ``1_000``)
+_NUMBER = re.compile(r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
 
 
 def rewrite_table_fn_calls(sql: str, resolve) -> str:
@@ -367,15 +370,9 @@ def rewrite_table_fn_calls(sql: str, resolve) -> str:
             if re.fullmatch(LITERAL, a):
                 args.append(masked.value(a))
                 continue
-            try:
-                args.append(int(a))
-                continue
-            except ValueError:
-                pass
-            try:
-                args.append(float(a))
-            except ValueError:
+            if not _NUMBER.fullmatch(a):
                 return m.group(0)  # non-literal arg: leave untouched
+            args.append(float(a) if any(c in a for c in ".eE") else int(a))
         view = resolve(name, args)
         if view is None:
             return m.group(0)

@@ -1,4 +1,5 @@
-"""SparkSession factory, eager stage boundaries and the loop session.
+"""SparkSession factory, eager stage boundaries, the expression memo
+and the loop session.
 
 The reference opens one psycopg2 connection per job
 (load_dataset.py:343-344 in /root/reference); our unit of execution is
@@ -17,10 +18,11 @@ releases the generation it supersedes) or its pool form
 :func:`materialize_all`; :func:`stage` names the driver-side plan
 building around them in the heavy builders. Each stage runs under its
 name as the Spark job description and, while a :func:`stage_ledger`
-collector is open, leaves a ``(name, seconds)`` record. Iterative
-loops and stateful streams plan on the caller's loop session
-(:func:`_on_loop_session`), a cached clone with a narrow shuffle
-width, so the caller's own conf is never written.
+collector is open, leaves a ``(name, seconds)`` record. Expression
+trees over fixed column names are built once per SparkContext
+(:func:`memoized`). Iterative loops and stateful streams plan on the
+caller's loop session (:func:`_on_loop_session`), a cached clone with
+a narrow shuffle width, so the caller's own conf is never written.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ import os
 import threading
 import time
 from contextlib import contextmanager
-from functools import partial
+from functools import partial, wraps
 from weakref import WeakKeyDictionary
 
 from pyspark import SparkContext
@@ -240,6 +242,61 @@ def materialize_all(*stages: tuple[str, DataFrame]) -> list[DataFrame]:
 
     nodes = [Node(run=partial(materialize, df, name)) for name, df in stages]
     return run_graph(nodes, width=len(nodes), spark=stages[0][1].sparkSession)
+
+
+# --- the per-context expression memo ----------------------------------------
+
+# SparkContext -> {(builder, args, arg types): built value}; a store dies
+# with its context, so a restarted context rebuilds from scratch
+_MEMOS: WeakKeyDictionary = WeakKeyDictionary()
+_MEMOS_LOCK = threading.Lock()
+_MEMO_ARGS = (str, int, float, bool, type(None))
+
+
+def memoized(builder):
+    """``builder`` with its result cached per live SparkContext.
+
+    Every ``F.*`` call is a JVM round trip, so a nested higher-order
+    expression costs one per node each time a query is built. A
+    builder whose tree depends only on its arguments is built once per
+    context and handed out again.
+
+    What may be memoized: builders of Columns over column NAMES
+    (``F.col``) and constants, called with positional ``str``/``int``/
+    ``float``/``bool``/``None`` arguments only — a Column or DataFrame
+    argument raises. Never a data-derived value (a count, a derived
+    cell size): the key space must stay bounded by the code's own
+    names, since entries live as long as the context. Never a Column
+    bound to one DataFrame (``df["x"]``): it resolves against that
+    frame's plan and would leak it into every later query. Unresolved
+    name-keyed Columns are plain expression trees, so sharing one
+    between queries, frames and threads is safe.
+
+    Thread-safe: two threads asking for the same key may both build,
+    and both get the first value stored. The store is keyed on the
+    SparkContext object, so ``spark.stop()`` and a new session start
+    from an empty one."""
+
+    @wraps(builder)
+    def cached(*args):
+        if not all(isinstance(a, _MEMO_ARGS) for a in args):
+            raise TypeError(
+                f"{builder.__name__}: memoized builders take names and "
+                f"constants only, got {[type(a).__name__ for a in args]}"
+            )
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return builder(*args)
+        key = (builder, args, tuple(type(a) for a in args))
+        with _MEMOS_LOCK:
+            store = _MEMOS.setdefault(sc, {})
+            if key in store:
+                return store[key]
+        built = builder(*args)
+        with _MEMOS_LOCK:
+            return store.setdefault(key, built)
+
+    return cached
 
 
 # --- the loop session -------------------------------------------------------

@@ -4933,6 +4933,65 @@ class TestBinnedPolygonJoin:
         )
         assert got == [(1, 10)]
 
+    def test_derived_cell_is_one_job(self, spark):
+        """``cell_deg=None`` derives the cell in ONE Spark job over
+        both sides, and the build launches nothing else."""
+        from nycdb_k8s_loader_spark.operators.geo import (
+            polygon_intersection_join_binned,
+        )
+
+        a = spark.createDataFrame(
+            [(1, "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")], "aid long, wa string"
+        )
+        b = spark.createDataFrame(
+            [(10, "POLYGON ((1 1, 2 1, 2 2, 1 2, 1 1))")], "bid long, wb string"
+        )
+        scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+        mark = scheduler.nextJobId()
+        out = polygon_intersection_join_binned(a, b, wkt_a="wa", wkt_b="wb")
+        assert scheduler.nextJobId() - mark == 1
+        assert [(r["aid"], r["bid"]) for r in out.collect()] == [(1, 10)]
+
+    def test_geo07_output_does_not_depend_on_the_cell(self, spark):
+        """The canonical-cell rule makes the join exact for any cell
+        edge: geo07's fixture joins to the same rows at the derived
+        cell, half and twice it, and an explicit small cell."""
+        import hashlib
+
+        from nycdb_k8s_loader_spark.operators.geo import (
+            _derive_cell_deg,
+            _with_bbox,
+            polygon_intersection_join_binned,
+        )
+        from conftest import SF_SMALL
+
+        from nycdb_k8s_loader_spark.plans.scale_queries import (
+            _district_lot_fixture,
+            _parcel_fixture,
+        )
+
+        _, lots = _district_lot_fixture(spark, SF_SMALL)
+        parcels = _parcel_fixture(spark, SF_SMALL)
+        derived = _derive_cell_deg(
+            (_with_bbox(lots, "lot_wkt", "__va"), "__va"),
+            (_with_bbox(parcels, "parcel_wkt", "__vb"), "__vb"),
+            cell_deg=None,
+        )
+        assert derived == 1.5  # geo07's lots are 1.5-unit squares
+
+        def digest(cell_deg):
+            rows = polygon_intersection_join_binned(
+                lots, parcels, wkt_a="lot_wkt", wkt_b="parcel_wkt",
+                cell_deg=cell_deg, dedup_geoms=True,
+            ).select("c_custkey", "o_orderkey").collect()
+            assert rows
+            text = "\n".join(sorted(f"{r[0]}|{r[1]}" for r in rows))
+            return hashlib.md5(text.encode()).hexdigest()
+
+        want = digest(None)
+        for cell in (derived, derived / 2, derived * 2, 0.2):
+            assert digest(cell) == want, cell
+
     def test_plan_no_broadcast_no_cartesian(self, spark):
         from nycdb_k8s_loader_spark.plans.catalog import queries
 

@@ -1,12 +1,15 @@
 """The stage primitive (``session.materialize``/``materialize_all``/
-``stage``), its ledger, and the loop session that iterative operators
-and stateful streams plan on."""
+``stage``), its ledger, the loop session that iterative operators
+and stateful streams plan on, and the per-context expression memo
+(``session.memoized``)."""
 
 from __future__ import annotations
 
 import threading
 
+import pytest
 from conftest import SF_SMALL
+from pyspark.sql import functions as F
 
 from nycdb_k8s_loader_spark import session
 
@@ -260,3 +263,122 @@ def test_memory_stream_never_writes_caller_shuffle_width(spark, tmp_path):
     assert reads > 0 and seen == {"16"}
     assert out.sparkSession is spark
     assert rows == [(k, 40) for k in range(5)]
+
+
+# --- the per-context expression memo ----------------------------------------
+
+_MEMO_LIFETIME = r"""
+from nycdb_k8s_loader_spark import session
+from nycdb_k8s_loader_spark.operators import geo
+
+def run():
+    spark = session.get_spark(master="local[1]", shuffle_partitions=1)
+    a = spark.createDataFrame(
+        [(1, "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")], "aid long, wa string")
+    b = spark.createDataFrame(
+        [(10, "POLYGON ((1 1, 2 1, 2 2, 1 2, 1 1))"),
+         (11, "POLYGON ((9 9, 10 9, 10 10, 9 10, 9 9))")], "bid long, wb string")
+    out = geo.polygon_intersection_join_binned(a, b, wkt_a="wa", wkt_b="wb")
+    rows = sorted((r["aid"], r["bid"]) for r in out.collect())
+    store = session._MEMOS[spark.sparkContext]
+    return spark, rows, store, geo._bbox_overlap("__va", "__vb")
+
+spark, first, store1, col1 = run()
+assert geo._bbox_overlap("__va", "__vb") is col1  # a hit in one context
+spark.stop()
+spark, second, store2, col2 = run()
+assert store2 is not store1 and col2 is not col1, "stale store reused"
+assert first == second == [(1, 10)], (first, second)
+spark.stop()
+print("ok")
+"""
+
+
+def test_memo_store_dies_with_its_context(tmp_path):
+    """A binned join built, run, then rebuilt after ``spark.stop()``
+    and a new session gets fresh Columns from a new store, and the
+    same rows."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _MEMO_LIFETIME], cwd=root,
+        env={**os.environ, "PYTHONPATH": root,
+             "SPARK_LOCAL_DIRS": str(tmp_path)},
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip() == "ok", proc.stderr[-3000:]
+
+
+def test_memo_two_threads_build_one_key(spark):
+    """Two threads that build the same key at once both get a usable
+    Column — the first one stored."""
+    ready = threading.Barrier(2)
+    builds = []
+
+    @session.memoized
+    def plus_one(name: str):
+        builds.append(name)
+        ready.wait(timeout=30)
+        return (F.col(name) + 1).alias("y")
+
+    got = [None, None]
+
+    def build(i: int) -> None:
+        got[i] = plus_one("x")
+
+    threads = [threading.Thread(target=build, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert builds == ["x", "x"] and got[0] is got[1]
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    for col in got:
+        assert sorted(r["y"] for r in df.select(col).collect()) == [2, 3]
+    assert plus_one("x") is got[0] and builds == ["x", "x"]
+
+
+def test_memo_keeps_one_value_per_key_under_contention(spark):
+    """More threads than cores race over the same keys with a short
+    switch interval: every thread ends up with the one stored value
+    per key (a lost update would hand threads different values)."""
+    import sys
+
+    @session.memoized
+    def token(i: int):
+        return object()
+
+    seen = [{} for _ in range(16)]
+
+    def work(t: int) -> None:
+        for i in range(200):
+            seen[t][i] = token(i)
+
+    threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert all(len({id(s[i]) for s in seen}) == 1 for i in range(200))
+
+
+def test_memo_refuses_frame_bound_arguments(spark):
+    """Only names and constants key a memoized builder: a Column
+    (possibly bound to one frame) or a DataFrame argument raises."""
+    ident = session.memoized(lambda x: x)
+    df = spark.createDataFrame([(1,)], "x long")
+    for arg in (df["x"], F.col("x"), df):
+        with pytest.raises(TypeError):
+            ident(arg)
+    assert ident(1) == 1 and ident(1.0) == 1.0
+    assert isinstance(ident(1.0), float) and isinstance(ident(1), int)

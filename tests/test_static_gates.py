@@ -235,6 +235,43 @@ def test_graph_collects_in_one_place():
     assert importers == []
 
 
+
+def test_geo_collects_in_one_place():
+    """Geometry leaves Spark in one place: geo.py has exactly one
+    driver action (a collect, a count or a write), the one job of the
+    binned joins' cell derivation."""
+    tree = ast.parse(open(os.path.join(PKG, "operators", "geo.py")).read())
+    sinks = {"collect", "toArrow", "toPandas", "toLocalIterator", "count",
+             "first", "head", "take", "save", "saveAsTable", "foreach"}
+    actions = [
+        f"{fn.name}.{call.func.attr}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr in sinks
+        and not (isinstance(call.func.value, ast.Name)
+                 and call.func.value.id == "F")
+    ]
+    assert actions == ["_derive_cell_deg.save"]
+
+
+def test_context_state_lives_in_session():
+    """Per-SparkContext state lives in session.py alone: no other
+    module reads ``SparkContext._active_spark_context`` or keeps a
+    store that outlives a call (a ``WeakKeyDictionary`` or a
+    ``functools`` cache) — name-keyed expression trees go through
+    ``session.memoized``."""
+    tokens = ("_active_spark_context", "WeakKeyDictionary", "lru_cache",
+              "functools.cache", "@cache")
+    users = sorted(
+        os.path.relpath(path, PKG)
+        for path in _modules()
+        if any(t in open(path).read() for t in tokens)
+    )
+    assert users == ["session.py"]
+
 class TestScaleGate:
     """bench_scale's structural linearity gate (round-7 verdict #2):
     shuffle-byte growth is the primary signal, wall growth gates only

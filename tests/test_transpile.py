@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import pytest
 
-from nycdb_k8s_loader_spark.publish.transpile import transpile_pg
+from nycdb_k8s_loader_spark.publish.transpile import (
+    rewrite_table_fn_calls,
+    transpile_pg,
+)
 
 
 class TestTextRewrites:
@@ -120,6 +123,32 @@ class TestTextRewrites:
     )
     def test_literals_and_comments_are_opaque(self, pg, expected):
         assert transpile_pg(pg) == expected
+
+    @pytest.mark.parametrize(
+        "arg, parsed",
+        [
+            # Python number spellings that are not SQL numeric
+            # literals: the call is left untouched
+            ("inf", None),
+            ("nan", None),
+            ("infinity", None),
+            ("1_000", None),
+            ("-2", [-2]),
+            ("2.5", [2.5]),
+            ("1e3", [1000.0]),
+            ("'x'", ["x"]),
+        ],
+    )
+    def test_table_fn_arguments_are_sql_literals(self, arg, parsed):
+        seen = []
+        sql = f"SELECT * FROM wow.f({arg}) x"
+        out = rewrite_table_fn_calls(
+            sql, lambda name, args: seen.append(args) or "v"
+        )
+        if parsed is None:
+            assert (out, seen) == (sql, [])
+        else:
+            assert (out, seen) == ("SELECT * FROM v x", [parsed])
 
     def test_vestigial_from_using_dropped(self):
         # wow_2021 sql:60: FROM <table> USING(col) with no JOIN
