@@ -20,6 +20,8 @@ Commands:
                                 <db> for <user> (dbtool.py:123-137; grants
                                 are registry metadata here — printed as the
                                 statements a Ranger/Unity deployment runs)
+    manifests <jobs_dir>        write one k8s CronJob manifest per registered
+                                dataset (k8s_build_jobs.py), print the paths
 
 User management (dbtool.py:123-162) is catalog-ACL territory with no
 OSS-Spark equivalent — `users:*` prints the statements a Ranger/Unity
@@ -202,6 +204,16 @@ def cmd_grant_schema_read(args) -> int:
     return 0
 
 
+def cmd_manifests(args) -> int:
+    """One CronJob manifest per registered dataset, each running
+    ``load <dataset>`` on its schedule (reference k8s_build_jobs.py)."""
+    from nycdb_k8s_loader_spark.scheduling import build_all_manifests
+
+    for path in build_all_manifests(args.jobs_dir):
+        print(path)
+    return 0
+
+
 def cmd_load_streaming(args, engine_factory=None) -> int:
     """Checkpointed streaming ingestion of one dataset
     (Engine.load_streaming): process new file drops under
@@ -288,6 +300,10 @@ def main(argv: list[str] | None = None) -> int:
     gr.add_argument("database")
     gr.add_argument("user")
     gr.set_defaults(fn=cmd_grant_schema_read)
+
+    mf = sub.add_parser("manifests")
+    mf.add_argument("jobs_dir")
+    mf.set_defaults(fn=cmd_manifests)
 
     args = p.parse_args(argv)
     return args.fn(args)

@@ -68,7 +68,7 @@ from nycdb_k8s_loader_spark.publish.protocol import Publisher
 from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
 from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph, script_nodes
 from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry
-from nycdb_k8s_loader_spark.sources.readers import read_source_table
+from nycdb_k8s_loader_spark.sources.readers import fetch_to_landing, read_source_table
 from nycdb_k8s_loader_spark.state.lastmod import Transport, UrlModTracker, requests_transport
 from nycdb_k8s_loader_spark.state.tracker import DatasetTracker
 
@@ -106,7 +106,7 @@ class Engine:
         target_db: str = "public",
         landing_root: str = "/tmp/nycdb_landing",
         transport: Transport = requests_transport,
-        downloader: Callable[[str, str], None] | None = None,
+        downloader: Callable[[str, str], None] = fetch_to_landing,
         notifier: Notifier | None = None,
         search_path: list[str] | None = None,
         functions: FunctionRegistry | None = None,
@@ -140,7 +140,7 @@ class Engine:
         self.publisher = self.publisher_for(target_db)
         self.landing_root = landing_root
         self.transport = transport
-        self.downloader = downloader or self._download
+        self.downloader = downloader
         self.notifier = notifier or Notifier()
         self.tracker = DatasetTracker(kv)
         # Grant metadata survives publishes in the KV store (K10;
@@ -179,12 +179,6 @@ class Engine:
         # are session-scoped and survive every publish, so this is the
         # only time the registry is applied.
         self.functions.apply(spark)
-
-    @staticmethod
-    def _download(url: str, dest: str) -> None:  # pragma: no cover - network
-        import urllib.request
-
-        urllib.request.urlretrieve(url, dest)
 
     def publisher_for(self, db: str | None) -> Publisher:
         """The Publisher for target database ``db`` (None → the

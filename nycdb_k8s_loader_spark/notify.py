@@ -36,12 +36,6 @@ def escape(text: str) -> str:
     return text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
-def hyperlink(href: str, text: str) -> str:
-    """Pre-escaped Slack hyperlink ``<url|text>``
-    (reference lib/slack.py:70-76)."""
-    return f"<{escape(href)}|{escape(text)}>"
-
-
 def _default_post(url: str, payload: dict) -> None:
     """Form-encoded webhook POST (reference lib/slack.py:16-19 posts
     ``data={"payload": json.dumps(...)}``); raises on HTTP errors."""

@@ -30,14 +30,6 @@ def normalized_text(col: str = "text") -> F.Column:
     return F.lower(F.trim(F.col(col)))
 
 
-def tokenize_distinct(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, word) posting list: split on single space,
-    drop empties (:func:`shingle_postings` of single words). Matches
-    DuckDB ``unnest(string_split(...))`` exactly so oracles are
-    byte-identical."""
-    return shingle_postings(df, 1, id_col, text_col)
-
-
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup by content hash: md5(normalized text) → groupBy →
     keep the minimum id (deterministic winner)."""
@@ -57,7 +49,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 def bands_for(
     n_docs: int,
     target_sim: float = 0.7,
-    max_hashes: int = 128,
 ) -> tuple[int, int]:
     """Corpus-size-aware MinHash banding policy → ``(num_hashes,
     bands)`` — the live DEFAULT (via :func:`_resolve_banding`) of
@@ -89,10 +80,10 @@ def bands_for(
     - ``r = clamp(round(ln n / 3), 2, 8)`` — r=2 below ~1e3 docs
       (tiny corpora want recall; FP work is bounded by n² anyway),
       r=4 at ~1e5, r=7 at ~1e9;
-    - ``b = clamp(round(target_sim^-r), 2, max_hashes // r)`` — the
-      cap bounds signature width; at the cap the effective threshold
+    - ``b = clamp(round(target_sim^-r), 2, 128 // r)`` — the cap
+      bounds signature width; at the cap the effective threshold
       drifts up (documented trade: past ~1e9 docs you accept missing
-      the bottom of the similarity range or raise ``max_hashes``);
+      the bottom of the similarity range);
     - ``num_hashes = r·b`` (bands always divide num_hashes by
       construction — the :func:`band_keys` contract).
 
@@ -107,7 +98,7 @@ def bands_for(
     if not 0.0 < target_sim < 1.0:
         raise ValueError("bands_for: target_sim must be in (0, 1)")
     r = min(8, max(2, round(math.log(max(n_docs, 2)) / 3)))
-    b = max(2, min(max_hashes // r, round(target_sim ** -r)))
+    b = max(2, min(128 // r, round(target_sim ** -r)))
     return r * b, b
 
 
@@ -177,9 +168,9 @@ def shingle_postings(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Distinct (doc, k-word-shingle) posting list — the shingled twin
-    of :func:`tokenize_distinct`, via staged selects so each array is
-    materialized once per row (see :func:`shingle_array`)."""
+    """Distinct (doc, k-word-shingle) posting list, via staged selects
+    so each array is materialized once per row (see
+    :func:`shingle_array`)."""
     return _shingle_explode(df, shingles, id_col, text_col).distinct()
 
 
@@ -364,7 +355,7 @@ MINHASH_PERMS: list[tuple[int, int]] = [
 ]
 _MERSENNE31 = 2147483647
 
-# bands_for can resolve to signatures up to max_hashes=128 wide at
+# bands_for can resolve to signatures up to 128 hashes wide at
 # billion-doc corpora; extend the permutation family deterministically
 # past the 16 hand-pinned pairs (which the DuckDB oracle SQL hardcodes
 # verbatim — NEVER reorder or regenerate those). Generator: a 64-bit

@@ -201,52 +201,19 @@ def parse_wkt_polygon(col: Column | str) -> Column:
     )
 
 
-def point_in_polygon(px: Column, py: Column, verts: Column) -> Column:
-    """Ray-casting containment test as a single Catalyst expression:
-    count edges whose span crosses the horizontal ray from the point;
-    odd crossings = inside. Built from zip_with over the vertex array
-    shifted by one (edges) + aggregate (crossing parity) — fully
-    codegen'd, O(vertices) per row, zero shuffle, no UDF.
-
-    Points exactly ON an edge are boundary-undefined (standard for
-    ray casting); callers comparing against an independent oracle must
-    keep test points off edges, as geo04 does by construction."""
-    r = _open_ring(verts)
-    a = r
-    b = _rotated(r)
-    crossings = F.zip_with(
-        a,
-        b,
-        lambda u, v: (
-            ((u["y"] > py) != (v["y"] > py))
-            & (
-                px
-                < (v["x"] - u["x"])
-                * (py - u["y"])
-                / (v["y"] - u["y"])
-                + u["x"]
-            )
-        ).cast("int"),
-    )
-    total = F.aggregate(
-        crossings, F.lit(0), lambda acc, x: acc + x
-    )
-    return (total % 2) == 1
-
-
 def _pip_edges(px: Column, py: Column, edges: Column) -> Column:
-    """:func:`point_in_polygon` over a PRECOMPUTED edge array
-    (:func:`_ring_edges` output) — the same ray-cast parity, but the
-    per-evaluation ring work (open-ring slice, rotate concat, zip)
-    is gone: one allocation-free fold over the edge structs.
+    """Ray-casting containment over a PRECOMPUTED edge array
+    (:func:`_ring_edges` output): count edges whose span crosses the
+    horizontal ray from the point; odd crossings = inside. One
+    allocation-free fold over the edge structs — no UDF, no shuffle.
+    Points exactly ON an edge are boundary-undefined (standard for
+    ray casting); callers comparing against an independent oracle
+    must keep test points off edges, as geo04 does by construction.
 
-    Join conditions are re-evaluated per CANDIDATE PAIR, so a
-    broadcast tagging join paid the ring→edges rebuild |polygons|
-    times per point (r13 measure); with edges hoisted into each
-    side's projection it is paid once per ROW. Exactly equivalent:
-    ``_ring_edges`` enumerates the same (u, v) pairs the inline
-    zip built, and NULL/degenerate rings propagate identically
-    (NULL edges → NULL parity, empty edges → 0 crossings)."""
+    Join conditions are re-evaluated per CANDIDATE PAIR, so the edges
+    are hoisted into each side's projection and paid once per ROW
+    (r13 measure). NULL edges → NULL parity, empty edges → 0
+    crossings."""
     total = F.aggregate(
         edges,
         F.lit(0),
@@ -338,14 +305,14 @@ def polygons_intersect(verts_a: Column, verts_b: Column) -> Column:
     representative vertex, so the test is:
 
         exists(edges_a, e1 -> exists(edges_b, e2 -> proper_cross))
-        OR point_in_polygon(b[0], A) OR point_in_polygon(a[0], B)
+        OR contains(A, b[0]) OR contains(B, a[0])
 
     Proper crossing is the standard double-orientation sign test
     (each segment's endpoints straddle the other's supporting line,
     both products strictly negative). Nested higher-order functions
     keep the O(|A|·|B|) edge loop INSIDE the JVM expression — no
     shuffle, no Python. Exactly-touching boundaries (shared vertex,
-    collinear overlap) are undefined, like point_in_polygon's on-edge
+    collinear overlap) are undefined, like ray casting's on-edge
     case — oracle fixtures keep geometry off those measure-zero
     configurations.
     """
@@ -648,44 +615,25 @@ def _ccw(verts: Column) -> Column:
     ).otherwise(verts)
 
 
-def convex_clip_ring(subject: Column, clip: Column) -> Column:
+def convex_clip_ring_pre(subj: Column, clip_edges: Column) -> Column:
     """Sutherland–Hodgman polygon clipping as ONE Catalyst expression:
     the subject ring (any simple polygon) clipped to a CONVEX clip
     ring, returning the intersection's vertex ring (open; empty array
-    when disjoint). The classic algorithm is a fold over the clip's
-    edges — expressed here as F.aggregate(clip_edges, subject, ...)
-    whose merge rebuilds the ring with one zip_with over
-    (prev-vertex, vertex) pairs emitting 0–2 points each (inside
-    vertex kept, boundary crossings add the intersection point) and a
-    flatten. Everything stays JVM-side codegen: no UDF, no shuffle,
-    no geometry library — the 100 TB shape is 'clip a billion parcels
-    by broadcast district rings' as a map-only stage.
+    when disjoint). The fold runs over the clip's edges —
+    F.aggregate(clip_edges, subject, ...) whose merge rebuilds the
+    ring with one zip_with over (prev-vertex, vertex) pairs emitting
+    0–2 points each (inside vertex kept, boundary crossings add the
+    intersection point) and a flatten. No UDF, no shuffle, no
+    geometry library. Vertices exactly ON a clip edge count as inside
+    (>= 0), so shared boundaries degrade to zero-area slivers rather
+    than flipping verdicts.
 
-    Both rings may arrive closed (WKT duplicate last vertex) and in
-    either winding; they are opened and CCW-normalized here. Vertices
-    exactly ON a clip edge count as inside (>= 0), so shared
-    boundaries degrade to zero-area slivers rather than flipping
-    verdicts. Convexity of the CLIP side is the algorithm's standard
-    precondition (district/boundary rings in this domain are
-    rectangles or convex simplifications; general concave∩concave is
-    the documented Sedona path)."""
-    return convex_clip_ring_pre(
-        _ccw(_open_ring(subject)),
-        _ring_edges(_ccw(_open_ring(clip))),
-    )
-
-
-def convex_clip_ring_pre(subj: Column, clip_edges: Column) -> Column:
-    """:func:`convex_clip_ring` with the per-evaluation normalization
-    hoisted out: ``subj`` must already be OPEN and CCW
-    (``_ccw(_open_ring(...))``) and ``clip_edges`` the edge array of
-    the open CCW clip ring. The clip joins evaluate the fold once per
-    candidate pair/term, so normalizing there re-ran two shoelace
-    folds plus ring slice/concat allocations per pair (r13 measure);
-    hoisted into each side's per-ROW projection the pair evaluation
-    is the Sutherland–Hodgman fold alone. Equivalent by idempotence:
-    ``_open_ring``/``_ccw`` are no-ops on already-normalized rings,
-    so pre-normalized inputs produce bit-identical output."""
+    ``subj`` must already be OPEN and CCW (``_ccw(_open_ring(...))``)
+    and ``clip_edges`` the edge array of the open CCW clip ring
+    (``_ring_edges(_ccw(_open_ring(...)))``). The clip joins evaluate
+    the fold once per candidate pair/term, so that normalization
+    lives in each side's per-ROW projection and the pair evaluation
+    is the fold alone (r13 measure)."""
 
     def signed_dist(e, v):
         # > 0 strictly left of directed edge (inside for CCW rings)
@@ -917,20 +865,6 @@ def _holes(rings: Column) -> Column:
     return F.slice(rings, 2, F.greatest(F.size(rings) - 1, F.lit(0)))
 
 
-def multipolygon_contains(px: Column, py: Column, polys: Column) -> Column:
-    """Point containment in a holed multipolygon: inside SOME
-    polygon's outer ring and not inside any of that polygon's holes.
-    Nested exists over the ray-cast primitive — one codegen'd
-    expression, O(total vertices) per row, no shuffle."""
-    return F.exists(
-        polys,
-        lambda rings: point_in_polygon(px, py, rings[0])
-        & ~F.exists(
-            _holes(rings), lambda h: point_in_polygon(px, py, h)
-        ),
-    )
-
-
 def multipolygon_area(polys: Column) -> Column:
     """Unsigned area of a holed multipolygon: Σ over polygons of
     (outer area − Σ hole areas). Valid-geometry contract: holes lie
@@ -943,31 +877,6 @@ def multipolygon_area(polys: Column) -> Column:
         - F.aggregate(
             _holes(rings), F.lit(0.0), lambda a, h: a + ring_area(h)
         ),
-    )
-
-
-def multipolygons_intersect(polys_a: Column, polys_b: Column) -> Column:
-    """Intersection predicate between two holed multipolygons as ONE
-    expression — geo05's rule generalized: (a) any edge of ANY ring
-    of A properly crosses any edge of ANY ring of B (for valid
-    geometry, crossing a hole boundary enters the polygon's interior
-    on one side, so a crossing always witnesses interior overlap), or
-    (b) no edges cross, in which case EVERY component polygon of
-    each side is entirely inside or outside each region of the other,
-    so one representative vertex PER COMPONENT decides: some
-    component of A has its first outer vertex holed-contained in B,
-    or some component of B in A.  Per-component (not the first
-    component only) is load-bearing: a multipolygon whose SECOND
-    component lies inside the other shape — a donut-with-exclave vs
-    a square around only the exclave — has no edge crossings and its
-    first component outside (ADVICE r9)."""
-    return _multipolygons_intersect_edges(
-        _flat_geom_edges(polys_a),
-        _flat_geom_edges(polys_b),
-        _geom_poly_edges(polys_a),
-        _geom_poly_edges(polys_b),
-        polys_a,
-        polys_b,
     )
 
 
@@ -997,7 +906,7 @@ def _geom_poly_edges(geom: Column) -> Column:
 
 
 def _mp_contains_edges(px: Column, py: Column, pe: Column) -> Column:
-    """:func:`multipolygon_contains` over the precomputed
+    """Point containment in a holed multipolygon over its precomputed
     :func:`_geom_poly_edges` structure: inside SOME component's outer
     edges and not inside any of that component's hole edges."""
     return F.exists(
@@ -1015,8 +924,17 @@ def _multipolygons_intersect_edges(
     polys_a: Column,
     polys_b: Column,
 ) -> Column:
-    """:func:`multipolygons_intersect` over precomputed structures:
-    ``fa``/``fb`` the flat edge arrays (:func:`_flat_geom_edges`),
+    """Intersection predicate between two holed multipolygons: (a) any
+    edge of ANY ring of A properly crosses any edge of ANY ring of B
+    (for valid geometry a crossing always witnesses interior overlap),
+    or (b) no edges cross, so every component of each side lies
+    entirely inside or outside each region of the other and one
+    representative vertex PER COMPONENT decides. Per-component (not
+    the first component only) is load-bearing: a donut-with-exclave vs
+    a square around only the exclave has no crossings and its first
+    component outside (ADVICE r9).
+
+    ``fa``/``fb`` are the flat edge arrays (:func:`_flat_geom_edges`),
     ``pa``/``pb`` the per-component edge structures
     (:func:`_geom_poly_edges`); the raw geometries supply only the
     per-component representative vertices. Hoisted into each join
@@ -1538,13 +1456,10 @@ def _derive_cell_deg(
 
 
 def _miter_join_fn(r: Column):
-    """Shared offset-line/miter-intersection lambda for the two
-    miter-buffer forms (:func:`miter_buffer_ring` expression form,
-    :func:`with_miter_buffer` staged form) — ONE home for the offset
-    normal, the line-intersection algebra, and the 1e-12 collinearity
-    fallback, so the two forms cannot drift apart.  Returns the
-    ``(prev_edge, edge) -> offset vertex struct`` callable consumed by
-    ``F.zip_with``."""
+    """Offset-line/miter-intersection lambda of :func:`with_miter_buffer`:
+    the offset normal, the line-intersection algebra, and the 1e-12
+    collinearity fallback.  Returns the ``(prev_edge, edge) -> offset
+    vertex struct`` callable consumed by ``F.zip_with``."""
 
     def offset_point(e, px, py):
         # outward unit normal of a CCW edge is (dy, -dx)/|e|
@@ -1573,45 +1488,28 @@ def _miter_join_fn(r: Column):
     return miter
 
 
-def miter_buffer_ring(verts: Column, r: Column) -> Column:
-    """ST_Buffer's polygon-offset core for a CONVEX ring, as ONE
-    Catalyst expression: every edge's supporting line moves outward
-    by ``r`` and consecutive offset lines re-intersect — the MITER
-    join (exact polygon arithmetic, no arcs; PostGIS's round-join
-    arcs are themselves k-gon approximations via quad_segs, and the
-    general concave/arc path is the documented Sedona seam).  Returns
-    the buffered vertex ring, same size as the input.
-
-    Convexity is the standard offset precondition (a concave miter
-    self-intersects); rings may arrive closed and in either winding —
-    opened and CCW-normalized here.  Collinear consecutive edges
-    (cross ≈ 0) fall back to the edge's own offset endpoint instead
-    of dividing by zero.  Closed under the rest of the geometry
-    algebra: feed the result to ring_area, point_in_polygon (the
-    within-distance-of join), or the clip operators."""
-    ring = _ccw(_open_ring(verts))
-    edges = _ring_edges(ring)
-    n = F.size(edges)
-    prev_edges = F.concat(
-        F.slice(edges, n, 1), F.slice(edges, 1, n - 1)
-    )
-    return F.zip_with(prev_edges, edges, _miter_join_fn(r))
-
-
 def with_miter_buffer(
     df: DataFrame,
     wkt_col: str,
     r: Column,
     out_col: str = "buffered",
 ) -> DataFrame:
-    """DataFrame-level staged form of :func:`miter_buffer_ring`:
-    parse → normalize → edges → miter, each level fenced into its own
-    column so every reference binds to an ATTRIBUTE.  The one-shot
-    expression form re-evaluates its nested subtrees structurally
+    """ST_Buffer's polygon-offset core for CONVEX rings: every edge's
+    supporting line moves outward by ``r`` and consecutive offset
+    lines re-intersect — the MITER join (exact polygon arithmetic, no
+    arcs; PostGIS's round-join arcs are themselves k-gon
+    approximations, and the concave/arc path is the documented Sedona
+    seam).  ``out_col`` is the buffered vertex ring, same size as the
+    input.  Convexity is the standard offset precondition (a concave
+    miter self-intersects); rings may arrive closed and in either
+    winding.  Collinear consecutive edges fall back to the edge's own
+    offset endpoint instead of dividing by zero.
+
+    Staged: parse → normalize → edges → miter, each level fenced into
+    its own column so every reference binds to an ATTRIBUTE.  A
+    one-shot expression re-evaluates its nested subtrees structurally
     (interpreted HOFs do no CSE) — measured 39.6 s for 15k rows at
-    sf0.1 vs 9.0 s staged (plan-build cost collapses too).  Use the
-    expression form only inside other expressions; use this for
-    data-scale buffering."""
+    sf0.1 vs 9.0 s staged (plan-build cost collapses too)."""
     pid = F.spark_partition_id() >= 0
     staged = (
         df.withColumn(

@@ -28,10 +28,6 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Decomposed state columns for one measure `m`:
-#   m_cnt (non-null count), m_sum, m_min, m_max
-_STATE_SUFFIXES = ("cnt", "sum", "min", "max")
-
 
 def partial_rollup(
     df: DataFrame, keys: list[str], measures: list[str]

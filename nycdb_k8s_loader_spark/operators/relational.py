@@ -27,7 +27,6 @@ def latest_per_group(
     df: DataFrame,
     group_cols: Sequence[str],
     order_cols: Sequence[str],
-    descending: bool = True,
 ) -> DataFrame:
     """Postgres ``DISTINCT ON (group) ... ORDER BY order DESC`` analog.
 
@@ -40,8 +39,9 @@ def latest_per_group(
     At scale this is the standard top-1-per-key pattern: a single hash
     shuffle on ``group_cols``; AQE handles skewed keys.
     """
-    ordering = [F.col(c).desc() if descending else F.col(c).asc() for c in order_cols]
-    w = Window.partitionBy(*group_cols).orderBy(*ordering)
+    w = Window.partitionBy(*group_cols).orderBy(
+        *[F.col(c).desc() for c in order_cols]
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -79,25 +79,10 @@ def min_where(col: Column | str, cond: Column) -> Column:
     return F.min(F.when(cond, c))
 
 
-def coalesce_int(col: Column | str, default: int = 0) -> Column:
+def coalesce_int(col: Column | str) -> Column:
     """``coalesce(x, 0)::int`` (wow_2021 sql:69-72)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(default)).cast("int")
-
-
-def ordered_json_agg(
-    pairs_struct: Column,
-    asc: bool = False,
-) -> Column:
-    """``json_agg(json_build_object(...) ORDER BY ...)`` analog
-    (wow_2021 sql:43-46).
-
-    ``pairs_struct`` must lead with the sort key(s) so struct ordering
-    gives the requested order; the result is a JSON array string built
-    with ``to_json`` at the edge (nested data is produced, never
-    stored — SURVEY.md §1.2).
-    """
-    return F.to_json(F.sort_array(F.collect_list(pairs_struct), asc=asc))
+    return F.coalesce(c, F.lit(0)).cast("int")
 
 
 def top_k_per_group(

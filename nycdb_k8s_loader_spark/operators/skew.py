@@ -40,7 +40,6 @@ def salted_join(
     key: str,
     unique_col: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join a skewed fact to a small-but-not-broadcastable dim.
 
@@ -51,16 +50,15 @@ def salted_join(
     land on N tasks instead of one. Result is row-identical to the
     unsalted join (tested), just differently partitioned.
 
-    Only ``inner``/``left`` are supported: right/full would emit each
-    unmatched dim row once per salt replica.
+    Inner join only: a right or full join would emit each unmatched
+    dim row once per salt replica.
     """
-    assert how in ("inner", "left"), "right/full would duplicate dim rows"
     left = skewed.withColumn("__salt", salt_expr(unique_col, n_salts))
     right = small.withColumn(
         "__salt",
         F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
     )
-    return left.join(right, [key, "__salt"], how).drop("__salt")
+    return left.join(right, [key, "__salt"], "inner").drop("__salt")
 
 
 def two_phase_distinct(

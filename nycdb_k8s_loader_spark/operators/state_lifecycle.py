@@ -166,29 +166,6 @@ def duplicated_gram_state_compact(
     )
 
 
-def semantic_dedup_state_compact(
-    state: DataFrame,
-    retired: DataFrame,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Retire vectors from a :func:`~..similarity.semantic_dedup_state`:
-    drop their ``kind='member'`` rows; centroids and the meta row are
-    the FROZEN quantizer and stay (re-clustering is a rebuild
-    decision — retraining centroids per takedown would churn every
-    stored assignment).  Contract: a probe against the compacted
-    state behaves exactly as if the retired vectors had never been
-    members — a batch vector whose only near-duplicate retired flips
-    to ``keep`` (pinned behaviorally in TestStateLifecycle; exact
-    frame equality with a rebuild does not apply because a rebuild
-    retrains the quantizer on the retained corpus)."""
-    r = retired.select(F.col(id_col).alias("vid")).distinct()
-    return state.filter(F.col("kind") != "member").unionByName(
-        state.filter(F.col("kind") == "member").join(
-            r.hint("shuffle_hash"), "vid", "left_anti"
-        )
-    )
-
-
 def source_token_state_compact(
     state: DataFrame,
     retired_tokens: DataFrame,

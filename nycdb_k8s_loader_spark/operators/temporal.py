@@ -27,9 +27,7 @@ the struct-wise max — a total order, so oracle hashes are stable.
 Range join — "left rows joined to right rows whose time falls in
 [start, start + width) per key": expressed as an equi-join on the key
 plus a range predicate; Catalyst executes the equi part as a hash
-join and applies the range residually. For key-less range joins at
-scale, bucketize time into width-sized bins and equi-join on
-(key, bin) ± 1 — the binning variant is ``range_join_binned``.
+join and applies the range residually.
 """
 
 from __future__ import annotations
@@ -124,27 +122,3 @@ def range_join(
         right,
         (left[key] == right[key]) & (left[left_ts] >= lo) & (left[left_ts] < hi),
     ).drop(right[key])
-
-
-def range_join_binned(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_start: str,
-    width_seconds: int,
-) -> DataFrame:
-    """Key-less interval join at scale: bucketize time into
-    ``width_seconds`` bins and equi-join each left row against its bin
-    and the preceding one, then apply the exact range filter. Turns an
-    O(n×m) theta join into a shuffle on the bin key with ≤2× fanout."""
-    bin_l = (F.unix_timestamp(F.col(left_ts)) / width_seconds).cast("long")
-    bin_r = (F.unix_timestamp(F.col(right_start)) / width_seconds).cast("long")
-    l2 = left.withColumn("__bin", F.explode(F.array(bin_l, bin_l - 1)))
-    r2 = right.withColumn("__bin", bin_r)
-    lo = F.col(right_start)
-    hi = F.col(right_start) + F.expr(f"INTERVAL {width_seconds} SECONDS")
-    return (
-        l2.join(r2, "__bin")
-        .filter((F.col(left_ts) >= lo) & (F.col(left_ts) < hi))
-        .drop("__bin")
-    )

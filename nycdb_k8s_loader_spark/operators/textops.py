@@ -25,95 +25,6 @@ def _ws_tokens(text: F.Column) -> F.Column:
     return F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit(""))) + 1
 
 
-# Fixture merge table for the toy BPE below — rank order IS the merge
-# priority (lower = earlier), the standard BPE apply contract. Small
-# but English-shaped so merged counts genuinely differ from both char
-# and whitespace counts on real-ish text.
-DEFAULT_BPE_MERGES: tuple[tuple[str, str], ...] = (
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("e", "r"),
-    ("an", "d"), ("o", "n"), ("r", "e"), ("a", "t"), ("e", "n"),
-    ("o", "r"), ("e", "s"), ("s", "t"), ("a", "r"), ("o", "u"),
-    ("l", "e"), ("i", "t"), ("i", "s"), ("in", "g"), ("a", "l"),
-    ("e", "d"), ("c", "o"), ("d", "e"), ("m", "a"), ("t", "a"),
-)
-
-
-def bpe_apply_count(text: str, ranks: dict[tuple[str, str], int]) -> int:
-    """Reference BPE apply (pure Python, driver-or-executor): split on
-    whitespace, start each word as characters, repeatedly merge the
-    LOWEST-RANK adjacent pair until none ranks, count the surviving
-    symbols.  Deterministic function of (text, merge table) — the
-    property every engine/rerun agreement claim rests on."""
-    total = 0
-    for word in text.split():
-        syms = list(word)
-        while len(syms) > 1:
-            best_rank, best_i = None, -1
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_rank, best_i = r, i
-            if best_rank is None:
-                break
-            syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        total += len(syms)
-    return total
-
-
-def bpe_token_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-    merges: tuple[tuple[str, str], ...] | None = None,
-) -> DataFrame:
-    """REAL executor-side tokenizer map producing the precomputed
-    token-count column the ``token_count_col`` contract plugs into
-    (c02 packing / c04 shards / p05/p07 mixtures): one Arrow-batched
-    ``mapInPandas`` pass appends an int64 count per row — counted
-    ONCE, reused by every token-denominated op downstream.
-
-    The tokenizer here is a toy greedy-merge BPE over a fixture merge
-    table (``DEFAULT_BPE_MERGES``); a production tokenizer (e.g. a
-    50k-merge vocabulary loaded per worker) swaps in behind the SAME
-    seam — the mapInPandas batch signature and the output schema are
-    the real wiring, the merge table is the only stub.  Per-batch
-    word-level memoization keeps the Python cost amortized (corpus
-    word frequency is Zipfian; the hot words tokenize once per batch).
-
-    Scale shape: shuffle-free map over the scan, Arrow batches both
-    ways, no driver collect; parallelism = input partitions.
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    ranks = {
-        pair: i
-        for i, pair in enumerate(
-            DEFAULT_BPE_MERGES if merges is None else merges
-        )
-    }
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, LongType(), False)]
-    )
-
-    def batches(it):
-        cache: dict[str, int] = {}
-
-        def count(text: str) -> int:
-            total = 0
-            for w in text.split():
-                n = cache.get(w)
-                if n is None:
-                    n = cache[w] = bpe_apply_count(w, ranks)
-                total += n
-            return total
-
-        for pdf in it:
-            pdf[out_col] = [count(t) for t in pdf[text_col]]
-            yield pdf
-
-    return df.mapInPandas(batches, schema)
-
-
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Char count, whitespace token count, BPE-ish token estimate
     (≈1.3 tokens per word for English-like text)."""

@@ -613,7 +613,7 @@ def _district_lot_fixture(spark, sf_dir):
         "expressed as one Catalyst fold (F.aggregate over the convex "
         "clip's edges; each step rebuilds the ring via zip_with + "
         "flatten), then measured with a shoelace aggregate "
-        "(operators/geo.py convex_clip_ring/ring_area) — no UDF, no "
+        "(operators/geo.py convex_clip_ring_pre/ring_area) — no UDF, no "
         "geometry library, clip rings broadcast, the lot side never "
         "shuffles (a billion-parcel clip is a map-only stage). The "
         "oracle states rect∩rect area as bounds arithmetic — an "
@@ -819,7 +819,7 @@ _DONUT_SQL = """
         "ring AND NOT inside that polygon's holes, as one nested-"
         "exists codegen'd expression over the parsed "
         "polygons→rings→vertices geometry "
-        "(operators/geo.py parse_wkt_geometry/multipolygon_contains). "
+        "(operators/geo.py parse_wkt_geometry/_mp_contains_edges). "
         "Boundaries broadcast; points never shuffle. Oracle: donut "
         "bounds arithmetic (in-outer AND NOT in-hole, OR in-exclave) "
         "— an independent decision procedure on rectangle rings for "
@@ -873,8 +873,8 @@ def geo08(spark: SparkSession, sf_dir: str) -> DataFrame:
         "properly crosses any ring edge of B (crossing a hole "
         "boundary enters the interior on one side), else a "
         "representative vertex decides by holed containment "
-        "(operators/geo.py multipolygons_intersect). Boundary side "
-        "broadcasts; lots never shuffle. Oracle: donut bounds "
+        "(operators/geo.py _multipolygons_intersect_edges). Boundary "
+        "side broadcasts; lots never shuffle. Oracle: donut bounds "
         "algebra — overlap(outer) AND NOT contained-in(hole), OR "
         "overlap(exclave); the fixture places lots fully inside "
         "holes (hole branch), straddling hole edges (cross branch) "
@@ -1157,14 +1157,14 @@ def geo12(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and consecutive offset lines re-intersect, all as one "
         "Catalyst zip_with over (prev-edge, edge) pairs — map-only, "
         "no UDF, no geometry library; the result ring feeds straight "
-        "back into ring_area / point_in_polygon (within-distance "
+        "back into ring_area / ray-cast containment (within-distance "
         "joins) / the clip operators. The fold is fenced behind "
         "spark_partition_id so ring_area's ~8 structural references "
         "bind to an attribute (the geo06 CollapseProject lesson). "
         "Oracle: a rectangle's miter buffer is the rectangle grown "
         "by r on each side — closed-form area and bbox. General "
         "concave/arc buffers remain the documented Sedona seam. "
-        "operators/geo.py miter_buffer_ring.",
+        "operators/geo.py with_miter_buffer.",
     tags=("geo",),
 )
 def geo13(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -85,8 +85,7 @@ def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
         "activity in the following hour (count + value sum, anchor "
         "included). Catalyst plans the key equality as the join and "
         "evaluates the range residually — matches only, no theta "
-        "blowup. (Key-less variant: operators/temporal."
-        "range_join_binned buckets time and joins bin±1.)",
+        "blowup.",
     tags=("temporal", "join", "agg"),
 )
 def q27(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -215,10 +215,8 @@ def _rewrite_json_agg(sql: str) -> str:
     """``json_agg(expr [ORDER BY k [DESC], ...]) [FILTER (WHERE p)]`` →
     Spark's ordered-collect idiom: collect structs carrying the order
     keys, array_sort with a comparator lambda, project the value back
-    out, to_json the array (the same shape operators/relational.py's
-    ordered_json_agg builds with the DataFrame API). The FILTER clause
-    moves onto collect_list — it must attach to the aggregate, not the
-    to_json wrapper. An expr already wrapped in to_json(...) (from the
+    out, to_json the array. The FILTER clause moves onto collect_list —
+    it must attach to the aggregate, not the to_json wrapper. An expr already wrapped in to_json(...) (from the
     json_build_object rewrite running first) is unwrapped so elements
     aggregate as structs, not pre-serialized strings."""
     while True:

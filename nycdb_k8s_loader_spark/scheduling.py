@@ -164,12 +164,12 @@ def build_all_manifests(
     datasets: list[str] | None = None,
     image: str = "spark-graft:latest",
 ) -> list[str]:
-    """Write one manifest per dataset (reference k8s_build_jobs.py
-    main loop); returns the written paths."""
+    """Write one manifest per dataset, every registered one by default
+    (reference k8s_build_jobs.py main loop); returns the written paths."""
+    from nycdb_k8s_loader_spark.datasets import builtin_registry
+
     os.makedirs(jobs_dir, exist_ok=True)
-    names = datasets if datasets is not None else [
-        *DATASET_SCHEDULES.keys(),
-    ]
+    names = datasets if datasets is not None else builtin_registry().names()
     written = []
     for ds in names:
         path = os.path.join(jobs_dir, f"load_dataset_{ds}.yml")

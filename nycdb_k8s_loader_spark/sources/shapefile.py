@@ -27,7 +27,6 @@ not shapefiles.
 
 from __future__ import annotations
 
-import io
 import struct
 import zipfile
 
@@ -307,98 +306,3 @@ def shapefile_string_rows(
             )
         )
     return out
-
-
-def write_shapefile_zip(
-    fields: list[tuple[str, str, int, int]],
-    records: list[tuple[list, list[list[tuple[float, float]]] | tuple[float, float] | None]],
-) -> bytes:
-    """Minimal shapefile WRITER — the parser's test twin (same role as
-    fixture_gen's xlsx writer: no GIS library exists in-container to
-    build fixtures, so tests round-trip through this). ``fields`` are
-    dbf descriptors (name, type C/N/L/D, length, decimals); each
-    record is (attribute values, geometry) where geometry is a ring
-    list (polygon), an (x, y) tuple (point), or None (null shape).
-    Returns the zip bytes holding the .shp/.shx/.dbf triple."""
-    # --- dbf ---
-    rec_size = 1 + sum(f[2] for f in fields)
-    hdr_size = 32 + 32 * len(fields) + 1
-    dbf = io.BytesIO()
-    dbf.write(
-        struct.pack(
-            "<BBBBIHH20x", 0x03, 26, 8, 14, len(records), hdr_size, rec_size
-        )
-    )
-    for name, ftype, length, dec in fields:
-        dbf.write(
-            struct.pack(
-                "<11sc4xBB14x",
-                name.encode("latin-1")[:11],
-                ftype.encode(),
-                length,
-                dec,
-            )
-        )
-    dbf.write(b"\x0d")
-    for vals, _geom in records:
-        dbf.write(b" ")
-        for (name, ftype, length, dec), v in zip(fields, vals):
-            if v is None:
-                txt = ""
-            elif ftype == "N" and dec:
-                txt = f"{float(v):.{dec}f}"
-            else:
-                txt = str(v)
-            enc = txt.encode("latin-1")[:length]
-            # numbers right-justify, text left-justifies (dbf rule)
-            pad = b" " * (length - len(enc))
-            dbf.write(pad + enc if ftype in ("N", "F") else enc + pad)
-
-    # --- shp ---
-    def shape_body(geom) -> bytes:
-        if geom is None:
-            return struct.pack("<i", SHAPE_NULL)
-        if isinstance(geom, tuple):
-            return struct.pack("<idd", SHAPE_POINT, geom[0], geom[1])
-        rings = geom
-        pts = [p for ring in rings for p in ring]
-        xs = [p[0] for p in pts]
-        ys = [p[1] for p in pts]
-        parts, acc = [], 0
-        for ring in rings:
-            parts.append(acc)
-            acc += len(ring)
-        body = struct.pack(
-            "<idddd", SHAPE_POLYGON, min(xs), min(ys), max(xs), max(ys)
-        )
-        body += struct.pack("<ii", len(rings), len(pts))
-        body += struct.pack(f"<{len(parts)}i", *parts)
-        for x, y in pts:
-            body += struct.pack("<dd", x, y)
-        return body
-
-    shp_records = b""
-    shx_records = b""
-    offset_words = 50  # 100-byte header
-    for i, (_vals, geom) in enumerate(records):
-        body = shape_body(geom)
-        shp_records += struct.pack(">ii", i + 1, len(body) // 2) + body
-        shx_records += struct.pack(">ii", offset_words, len(body) // 2)
-        offset_words += 4 + len(body) // 2
-
-    def _header(total_bytes: int) -> bytes:
-        return (
-            struct.pack(">i5i i", 9994, 0, 0, 0, 0, 0, total_bytes // 2)
-            + struct.pack("<ii", 1000, SHAPE_POLYGON)
-            + struct.pack("<8d", 0, 0, 0, 0, 0, 0, 0, 0)
-        )
-
-    shp = _header(100 + len(shp_records)) + shp_records
-    shx = _header(100 + len(shx_records)) + shx_records
-
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("layer.shp", shp)
-        zf.writestr("layer.shx", shx)
-        zf.writestr("layer.dbf", dbf.getvalue())
-    return buf.getvalue()

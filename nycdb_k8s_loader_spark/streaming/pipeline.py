@@ -412,79 +412,3 @@ def read_upsert_sink(spark: SparkSession, sink_root: str) -> DataFrame:
     pointer = os.path.join(sink_root, "_CURRENT")
     with open(pointer) as f:
         return spark.read.parquet(os.path.join(sink_root, f.read().strip()))
-
-
-
-def tws_user_profiles(
-    events: DataFrame,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Per-key running profile via Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState`` (typed state
-    variables instead of one opaque tuple): a ``ValueState`` carries
-    the running row count and a ``MapState`` is used as a persistent
-    SET of distinct event types, both surviving across micro-batches
-    in the state store.
-
-    Emits (key, n_events, n_event_types) once per key per micro-batch;
-    ``n_events`` is monotone, so the final emission per key equals the
-    batch aggregate ``COUNT(*) / COUNT(DISTINCT type)`` — the oracle
-    property, same contract as :func:`stateful_running_totals`.
-
-    Why MapState matters at scale: a running distinct-set inside an
-    applyInPandasWithState tuple would serialize the WHOLE set every
-    batch; MapState stores each member as its own state-store row, so
-    a batch touching one new type writes one row. State memory is
-    O(distinct types per key in horizon) — use the ``ttlDurationMs``
-    argument on unbounded key domains.
-
-    ENVIRONMENT GUARD: the TransformWithState Python runner speaks
-    protobuf to the JVM driver — clusters without ``google.protobuf``
-    in the Python env crash the runner at query start
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE), which is why
-    this operator is exercised by a skip-gated pytest rather than a
-    driver catalog entry; :func:`stateful_running_totals` (st02) is
-    the protobuf-free equivalent on the older API.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = f"{key_col} bigint, n_events bigint, n_event_types bigint"
-
-    class Profile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n bigint")
-            self._types = handle.getMapState(
-                "types", "t string", "one smallint"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            got = self._n.get() if self._n.exists() else None
-            n = got[0] if got else 0
-            for pdf in rows:
-                n += len(pdf)
-                for t in pdf[type_col].unique():
-                    self._types.updateValue((str(t),), (1,))
-            self._n.update((n,))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n],
-                    "n_event_types": [n_types],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        Profile(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )

@@ -175,6 +175,21 @@ class TestLoadCommand:
             cli.main(["load"])
 
 
+def test_manifests_cover_every_registered_dataset(tmp_path, capsys):
+    """``manifests`` writes a CronJob for every registered dataset,
+    unslotted ones on the yearly default (reference scheduling.py:60)."""
+    from nycdb_k8s_loader_spark.datasets import builtin_registry
+
+    jobs = tmp_path / "jobs"
+    assert cli.main(["manifests", str(jobs)]) == 0
+    assert len(capsys.readouterr().out.splitlines()) == len(
+        builtin_registry().names()
+    )
+    m = (jobs / "load_dataset_boundaries.yml").read_text()
+    assert 'schedule: "@yearly"' in m
+    assert '"load", "boundaries"' in m
+
+
 def test_staging_cleanup(spark, capsys):
     from nycdb_k8s_loader_spark.publish.protocol import staging_db_name
 

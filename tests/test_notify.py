@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import logging
 
-from nycdb_k8s_loader_spark.notify import SlackNotifier, escape, hyperlink
+from nycdb_k8s_loader_spark.notify import SlackNotifier, escape
 
 
 class Poster:
@@ -24,13 +24,6 @@ def test_escape_matches_reference_doctest():
     assert (
         escape("We just need to escape &, <, and >.")
         == "We just need to escape &amp;, &lt;, and &gt;."
-    )
-
-
-def test_hyperlink_pre_escapes():
-    assert hyperlink(href="http://boop.com", text="hi") == "<http://boop.com|hi>"
-    assert hyperlink(href="http://a?x=1&y=2", text="a<b") == (
-        "<http://a?x=1&amp;y=2|a&lt;b>"
     )
 
 

@@ -1348,8 +1348,9 @@ class TestWktPointInPolygon:
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
+            _pip_edges,
+            _ring_edges,
             parse_wkt_polygon,
-            point_in_polygon,
         )
 
         l_shape = (
@@ -1369,8 +1370,9 @@ class TestWktPointInPolygon:
         ).withColumn("wkt", F.lit(l_shape))
         out = df.select(
             "x", "y", "want",
-            point_in_polygon(
-                F.col("x"), F.col("y"), parse_wkt_polygon("wkt")
+            _pip_edges(
+                F.col("x"), F.col("y"),
+                _ring_edges(parse_wkt_polygon("wkt")),
             ).alias("got"),
         ).collect()
         for r in out:
@@ -1400,8 +1402,9 @@ class TestWktPointInPolygon:
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
+            _pip_edges,
+            _ring_edges,
             parse_wkt_polygon,
-            point_in_polygon,
             polygons_intersect,
             ring_area,
         )
@@ -1421,8 +1424,9 @@ class TestWktPointInPolygon:
             r["pid"]: r
             for r in df.select(
                 "pid",
-                point_in_polygon(
-                    F.lit(2.0), F.lit(2.0), parse_wkt_polygon("wkt")
+                _pip_edges(
+                    F.lit(2.0), F.lit(2.0),
+                    _ring_edges(parse_wkt_polygon("wkt")),
                 ).alias("contains"),
                 ring_area(parse_wkt_polygon("wkt")).alias("area"),
                 polygons_intersect(
@@ -4330,56 +4334,6 @@ class TestStateLifecycle:
                 duplicated_gram_state(corpus, ngram=3), corpus.limit(1)
             )
 
-    def test_semantic_compact_flips_retired_only_dups(self, spark):
-        from nycdb_k8s_loader_spark.operators.similarity import (
-            incremental_semantic_dedup_from_state,
-            semantic_dedup_state,
-        )
-        from nycdb_k8s_loader_spark.operators.state_lifecycle import (
-            semantic_dedup_state_compact,
-        )
-
-        def vec(x, y):
-            return [float(x), float(y), 0.0, 0.0]
-
-        corpus = spark.createDataFrame(
-            [
-                (0, vec(1, 0)), (1, vec(0.999, 0.02)),
-                (2, vec(0, 1)), (3, vec(0.02, 0.999)),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        state = semantic_dedup_state(corpus, k=2)
-        retired = spark.createDataFrame([(2,), (3,)], "vec_id long")
-        compacted = semantic_dedup_state_compact(state, retired)
-        # centroid + meta rows untouched (the frozen quantizer)
-        for kind in ("centroid", "meta"):
-            assert sorted(
-                map(str, state.filter(f"kind = '{kind}'").collect())
-            ) == sorted(
-                map(str, compacted.filter(f"kind = '{kind}'").collect())
-            )
-        batch = spark.createDataFrame(
-            [(100, vec(0.01, 1.0)), (101, vec(1.0, 0.01))],
-            "vec_id long, embedding array<double>",
-        )
-        before = {
-            r["vec_id"]: r["is_kept"]
-            for r in incremental_semantic_dedup_from_state(
-                state, batch, threshold=0.95
-            ).collect()
-        }
-        after = {
-            r["vec_id"]: r["is_kept"]
-            for r in incremental_semantic_dedup_from_state(
-                compacted, batch, threshold=0.95
-            ).collect()
-        }
-        # 100's only near-dups (2,3) retired -> flips dup->keep;
-        # 101's near-dups (0,1) retained -> stays dup
-        assert before == {100: False, 101: False}
-        assert after == {100: True, 101: False}
-
     def test_components_compact_exact_and_boundary(self, spark):
         from nycdb_k8s_loader_spark.operators.graph import (
             components_state,
@@ -4493,8 +4447,9 @@ class TestMultipolygonGeometry:
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
+            _geom_poly_edges,
+            _mp_contains_edges,
             multipolygon_area,
-            multipolygon_contains,
             parse_wkt_geometry,
         )
 
@@ -4507,20 +4462,21 @@ class TestMultipolygonGeometry:
             [(1, self.DONUT), (2, holed), (3, plain)], "gid long, w string"
         )
         g = parse_wkt_geometry("w")
+        pe = _geom_poly_edges(g)
         out = {
             r["gid"]: r
             for r in df.select(
                 "gid",
                 F.size(g).alias("n_polys"),
                 F.round(multipolygon_area(g), 6).alias("area"),
-                multipolygon_contains(
-                    F.lit(4.0), F.lit(4.0), g
+                _mp_contains_edges(
+                    F.lit(4.0), F.lit(4.0), pe
                 ).alias("at_hole_center"),
-                multipolygon_contains(
-                    F.lit(1.0), F.lit(1.0), g
+                _mp_contains_edges(
+                    F.lit(1.0), F.lit(1.0), pe
                 ).alias("in_outer"),
-                multipolygon_contains(
-                    F.lit(9.5), F.lit(0.5), g
+                _mp_contains_edges(
+                    F.lit(9.5), F.lit(0.5), pe
                 ).alias("in_exclave"),
             ).collect()
         }
@@ -4539,7 +4495,9 @@ class TestMultipolygonGeometry:
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
-            multipolygons_intersect,
+            _flat_geom_edges,
+            _geom_poly_edges,
+            _multipolygons_intersect_edges,
             parse_wkt_geometry,
         )
 
@@ -4568,12 +4526,14 @@ class TestMultipolygonGeometry:
         df = spark.createDataFrame(
             [(i, w) for i, w, _ in cases], "cid long, w string"
         ).withColumn("donut", F.lit(self.DONUT))
+        a, b = parse_wkt_geometry("donut"), parse_wkt_geometry("w")
         got = {
             r["cid"]: r["v"]
             for r in df.select(
                 "cid",
-                multipolygons_intersect(
-                    parse_wkt_geometry("donut"), parse_wkt_geometry("w")
+                _multipolygons_intersect_edges(
+                    _flat_geom_edges(a), _flat_geom_edges(b),
+                    _geom_poly_edges(a), _geom_poly_edges(b), a, b,
                 ).alias("v"),
             ).collect()
         }
@@ -4747,9 +4707,8 @@ class TestMultipolygonGeometry:
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
-            miter_buffer_ring,
-            parse_wkt_polygon,
             ring_area,
+            with_miter_buffer,
         )
 
         rows = [
@@ -4766,13 +4725,9 @@ class TestMultipolygonGeometry:
         df = spark.createDataFrame(
             rows, "pid long, wkt string, r double"
         )
-        buffered = F.when(
-            F.spark_partition_id() >= 0,
-            miter_buffer_ring(parse_wkt_polygon("wkt"), F.col("r")),
-        )
         got = {
             row["pid"]: row["a"]
-            for row in df.withColumn("__b", buffered)
+            for row in with_miter_buffer(df, "wkt", F.col("r"), "__b")
             .select("pid", ring_area(F.col("__b")).alias("a"))
             .collect()
         }
@@ -4789,16 +4744,13 @@ class TestMultipolygonGeometry:
         _ccw(_open_ring(parse(...))) in one expression and the
         non-codegen, no-CSE Project cloned the regexp/split parse tree
         ~50x — geo13 measured x5 slower). Asserts (a) plan shape: one
-        regexp_extract total; (b) result identity with the expression
-        form on the miter fixture."""
+        regexp_extract total; (b) the exact miter areas."""
         import math
 
         import pytest as _pytest
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
-            miter_buffer_ring,
-            parse_wkt_polygon,
             ring_area,
             with_miter_buffer,
         )
@@ -4820,17 +4772,8 @@ class TestMultipolygonGeometry:
             f"{plan.count('regexp_extract')} parse sites"
         )
         got = {r["pid"]: r["a"] for r in staged.collect()}
-        expr = F.when(
-            F.spark_partition_id() >= 0,
-            miter_buffer_ring(parse_wkt_polygon("wkt"), F.col("r")),
-        )
-        want = {
-            r["pid"]: r["a"]
-            for r in df.withColumn("__b", expr)
-            .select("pid", ring_area(F.col("__b")).alias("a"))
-            .collect()
-        }
-        assert got == _pytest.approx(want)
+        assert got[1] == _pytest.approx(4.5 * 2.5)
+        assert got[2] == _pytest.approx(4.5 * 2.5)
         assert got[3] == _pytest.approx(
             2 * (2 + 0.5 * math.sqrt(2)) ** 2
         )
@@ -4844,8 +4787,9 @@ class TestMultipolygonGeometry:
         from pyspark.sql import functions as F
 
         from nycdb_k8s_loader_spark.operators.geo import (
+            _geom_poly_edges,
+            _mp_contains_edges,
             multipolygon_area,
-            multipolygon_contains,
             parse_wkt_geometry,
         )
         from nycdb_k8s_loader_spark.sources.shapefile import parse_shp
@@ -4853,9 +4797,7 @@ class TestMultipolygonGeometry:
         import zipfile
         import io
 
-        from nycdb_k8s_loader_spark.sources.shapefile import (
-            write_shapefile_zip,
-        )
+        from fixture_gen import write_shapefile_zip
 
         outer = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0),
                  (0.0, 0.0)]                      # CW outer
@@ -4871,16 +4813,17 @@ class TestMultipolygonGeometry:
         assert wkt.startswith("MULTIPOLYGON")
         df = spark.createDataFrame([(wkt,)], "w string")
         g = parse_wkt_geometry("w")
+        pe = _geom_poly_edges(g)
         r = df.select(
             F.round(multipolygon_area(g), 6).alias("area"),
-            multipolygon_contains(
-                F.lit(1.5), F.lit(1.5), g
+            _mp_contains_edges(
+                F.lit(1.5), F.lit(1.5), pe
             ).alias("in_hole"),
-            multipolygon_contains(
-                F.lit(3.0), F.lit(3.0), g
+            _mp_contains_edges(
+                F.lit(3.0), F.lit(3.0), pe
             ).alias("in_outer"),
-            multipolygon_contains(
-                F.lit(11.0), F.lit(1.0), g
+            _mp_contains_edges(
+                F.lit(11.0), F.lit(1.0), pe
             ).alias("in_island"),
         ).collect()[0]
         assert r["area"] == 19.0  # 16 - 1 + 4
@@ -5154,7 +5097,10 @@ class TestConvexClipArea:
 
     def _area(self, spark, subject_wkt, clip_wkt):
         from nycdb_k8s_loader_spark.operators.geo import (
-            convex_clip_ring,
+            _ccw,
+            _open_ring,
+            _ring_edges,
+            convex_clip_ring_pre,
             parse_wkt_polygon,
             ring_area,
         )
@@ -5170,8 +5116,9 @@ class TestConvexClipArea:
         # exercised identically)
         clipped = F.when(
             F.spark_partition_id() >= 0,
-            convex_clip_ring(
-                parse_wkt_polygon("ws"), parse_wkt_polygon("wc")
+            convex_clip_ring_pre(
+                _ccw(_open_ring(parse_wkt_polygon("ws"))),
+                _ring_edges(_ccw(_open_ring(parse_wkt_polygon("wc")))),
             ),
         )
         return (
@@ -5454,9 +5401,12 @@ class TestUnclosedRings:
         finding): WKT without the duplicate closing vertex must give
         the same intersection verdicts, containment, and areas."""
         from nycdb_k8s_loader_spark.operators.geo import (
-            convex_clip_ring,
+            _ccw,
+            _open_ring,
+            _pip_edges,
+            _ring_edges,
+            convex_clip_ring_pre,
             parse_wkt_polygon,
-            point_in_polygon,
             polygons_intersect,
             ring_area,
         )
@@ -5475,8 +5425,9 @@ class TestUnclosedRings:
         # of the interpreted clip tree — ~50 s of plan/codegen)
         clipped = F.when(
             F.spark_partition_id() >= 0,
-            convex_clip_ring(
-                parse_wkt_polygon("wo"), parse_wkt_polygon("wx")
+            convex_clip_ring_pre(
+                _ccw(_open_ring(parse_wkt_polygon("wo"))),
+                _ring_edges(_ccw(_open_ring(parse_wkt_polygon("wx")))),
             ),
         )
         row = df.select(
@@ -5486,8 +5437,9 @@ class TestUnclosedRings:
             polygons_intersect(
                 parse_wkt_polygon("wo"), parse_wkt_polygon("wx")
             ).alias("open_hit"),
-            point_in_polygon(
-                F.lit(5.0), F.lit(3.0), parse_wkt_polygon("wo")
+            _pip_edges(
+                F.lit(5.0), F.lit(3.0),
+                _ring_edges(parse_wkt_polygon("wo")),
             ).alias("open_contains"),
             ring_area(parse_wkt_polygon("wo")).alias("open_area"),
             clipped.alias("__c"),
@@ -5571,68 +5523,6 @@ class TestTokenCountContract:
                            token_count_col="bpe_n")
         assert sorted(map(tuple, a.collect())) != sorted(
             map(tuple, b.collect())
-        )
-
-    def test_real_executor_side_tokenizer_feeds_packing(self, spark):
-        """r11 verdict #7 (the contract's intended production wiring,
-        end to end): a REAL tokenizer map — greedy-merge BPE over a
-        fixture merge table, run executor-side via Arrow-batched
-        mapInPandas — produces the precomputed count column, and c02
-        packing runs on it through ``token_count_col``.  Pins: (a)
-        the distributed map agrees with the pure-Python reference
-        apply row for row, (b) BPE counts differ from whitespace
-        counts (the merge table is live, not a word counter), (c)
-        packing on the tokenizer column == packing on the same counts
-        injected as a literal column (the seam carries nothing but
-        the counts)."""
-        from pyspark.sql import functions as F
-
-        from nycdb_k8s_loader_spark.operators.textops import (
-            DEFAULT_BPE_MERGES,
-            bpe_apply_count,
-            bpe_token_counts,
-            pack_sequences,
-        )
-
-        docs = self._docs(spark)
-        toked = bpe_token_counts(docs)
-        rows = {r["doc_id"]: r for r in toked.collect()}
-
-        ranks = {p: i for i, p in enumerate(DEFAULT_BPE_MERGES)}
-        for d in docs.collect():
-            assert (
-                rows[d["doc_id"]]["bpe_tokens"]
-                == bpe_apply_count(d["text"], ranks)
-            )
-        # merges fire on this fixture: counts sit strictly between
-        # word count and char count, equal to neither
-        ws = {
-            r["doc_id"]: len(r["text"].split()) for r in docs.collect()
-        }
-        assert all(rows[i]["bpe_tokens"] > ws[i] for i in ws)
-        assert any(
-            rows[i]["bpe_tokens"] < len(r["text"].replace(" ", ""))
-            for i, r in ((d["doc_id"], d) for d in docs.collect())
-        )
-
-        packed = pack_sequences(
-            toked, context_tokens=64, shard_docs=16,
-            token_count_col="bpe_tokens",
-        )
-        lut = F.create_map(
-            *[
-                F.lit(x)
-                for i in sorted(rows)
-                for x in (i, rows[i]["bpe_tokens"])
-            ]
-        )
-        literal = docs.withColumn("bpe_tokens", lut[F.col("doc_id")])
-        expected = pack_sequences(
-            literal, context_tokens=64, shard_docs=16,
-            token_count_col="bpe_tokens",
-        )
-        assert sorted(map(tuple, packed.collect())) == sorted(
-            map(tuple, expected.collect())
         )
 
 

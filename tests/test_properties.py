@@ -355,7 +355,7 @@ def test_incremental_rollup_merge_equals_direct(spark, rows):
 def test_ray_cast_matches_convex_halfplane_oracle(
     spark, seed, n_verts, n_points
 ):
-    """point_in_polygon (general ray casting) vs an INDEPENDENT
+    """Ray-cast containment (_pip_edges) vs an INDEPENDENT
     decision procedure: for convex polygons, containment equals
     'every edge cross-product has the same sign'. Random convex
     polygons (sorted-angle construction) + random points, points
@@ -364,8 +364,9 @@ def test_ray_cast_matches_convex_halfplane_oracle(
     import random
 
     from nycdb_k8s_loader_spark.operators.geo import (
+        _pip_edges,
+        _ring_edges,
         parse_wkt_polygon,
-        point_in_polygon,
     )
 
     rng = random.Random(seed)
@@ -408,8 +409,9 @@ def test_ray_cast_matches_convex_halfplane_oracle(
     ).withColumn("wkt", F.lit(wkt))
     out = df.select(
         "px", "py", "want",
-        point_in_polygon(
-            F.col("px"), F.col("py"), parse_wkt_polygon("wkt")
+        _pip_edges(
+            F.col("px"), F.col("py"),
+            _ring_edges(parse_wkt_polygon("wkt")),
         ).alias("got"),
     ).collect()
     for r in out:
@@ -565,7 +567,7 @@ def test_bands_for_policy_invariants(n, m, sim):
     divide num_hashes, signature width within the 128-perm family —
     and (b) monotone: more docs never loosens the banding (rows-per-
     band non-decreasing in n at fixed sim; band count non-decreasing
-    too EXCEPT when pinned at its max_hashes//r cap, which shrinks as
+    too EXCEPT when pinned at its 128//r cap, which shrinks as
     r grows — the documented accept-threshold-drift trade)."""
     from nycdb_k8s_loader_spark.operators.dedup import (
         MINHASH_PERMS,
@@ -633,7 +635,10 @@ def test_convex_clip_area_matches_rect_algebra(spark, rects):
     max(0, overlap_w) * max(0, overlap_h) — including touching
     edges (zero area), containment, and identity."""
     from nycdb_k8s_loader_spark.operators.geo import (
-        convex_clip_ring,
+        _ccw,
+        _open_ring,
+        _ring_edges,
+        convex_clip_ring_pre,
         parse_wkt_polygon,
         ring_area,
     )
@@ -657,8 +662,9 @@ def test_convex_clip_area_matches_rect_algebra(spark, rects):
     # PER EXAMPLE for identical executed math
     clipped = F.when(
         F.spark_partition_id() >= 0,
-        convex_clip_ring(
-            parse_wkt_polygon("ws"), parse_wkt_polygon("wc")
+        convex_clip_ring_pre(
+            _ccw(_open_ring(parse_wkt_polygon("ws"))),
+            _ring_edges(_ccw(_open_ring(parse_wkt_polygon("wc")))),
         ),
     )
     got = sorted(

@@ -393,7 +393,7 @@ class TestScheduling:
         assert '"load", "hpd_violations"' in m
 
         paths = build_all_manifests(str(tmp_path / "jobs"))
-        assert len(paths) == 36
+        assert len(paths) == 41  # every registered dataset
         assert all(p.endswith(".yml") for p in paths)
 
 

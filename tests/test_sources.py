@@ -173,17 +173,47 @@ class TestS3Fetch:
         assert s3.calls == [("oca-data", "public/oca_addresses.csv")]
         assert open(dest).read().startswith("bbl,units")
 
-    def test_missing_boto3_raises_at_the_seam(self, tmp_path):
-        """No boto3 in this container: the s3:// path must fail loudly
-        at the credential seam, not silently skip the download."""
-        try:
-            import boto3  # noqa: F401
+    def test_missing_boto3_raises_at_the_seam(self, tmp_path, monkeypatch):
+        """Without boto3 the s3:// path must fail loudly at the
+        credential seam, not silently skip the download."""
+        import sys
 
-            pytest.skip("boto3 present; the seam raise cannot trigger")
-        except ImportError:
-            pass
+        monkeypatch.setitem(sys.modules, "boto3", None)  # import fails
         with pytest.raises(NotImplementedError, match="boto3"):
             fetch_to_landing("s3://bucket/key.csv", str(tmp_path / "x.csv"))
+
+    def test_engine_default_downloader_lands_s3_sources(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The registry declares s3:// sources (oca, signature); an
+        Engine built without a downloader lands them through
+        fetch_to_landing's s3 branch (boto3 is faked, so no network)."""
+        import sys
+        import types
+
+        from nycdb_k8s_loader_spark.datasets import wow_registry
+        from nycdb_k8s_loader_spark.engine import Engine
+        from nycdb_k8s_loader_spark.state.kvstore import DictKVStore
+
+        s3 = FakeS3()
+        fake_boto3 = types.ModuleType("boto3")
+        fake_boto3.client = lambda service: s3 if service == "s3" else None
+        monkeypatch.setitem(sys.modules, "boto3", fake_boto3)
+
+        reg = wow_registry()
+        eng = Engine(
+            spark, reg, DictKVStore(), target_db="s3_default_test",
+            landing_root=str(tmp_path / "landing"),
+        )
+        paths = eng.land_sources(reg.get("signature"))
+        assert s3.calls == [
+            ("signature-data", "signature_unhp_buildings.csv"),
+            ("signature-data", "signature_unhp_loan_status.csv"),
+        ]
+        assert open(paths["signature_unhp_buildings.csv"]).read().startswith(
+            "bbl,units"
+        )
+
 
 class TestShapefile:
     """S6 closed: stdlib .shp/.dbf parsing (reference boundaries
@@ -191,9 +221,7 @@ class TestShapefile:
     via shp2pgsql; here struct-parsed to attributes + WKT)."""
 
     def _zip(self, tmp_path, fields, records):
-        from nycdb_k8s_loader_spark.sources.shapefile import (
-            write_shapefile_zip,
-        )
+        from fixture_gen import write_shapefile_zip
 
         p = tmp_path / "fix.zip"
         p.write_bytes(write_shapefile_zip(fields, records))

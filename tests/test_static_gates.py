@@ -272,6 +272,76 @@ def test_context_state_lives_in_session():
     )
     assert users == ["session.py"]
 
+
+#: Public defs kept for tests to compare against; each a reference,
+#: not a production path.
+_TEST_REFERENCES = {
+    # exact all-pairs oracle of the bucketed/blocked near-dup twins
+    "embedding_neardup_pairs",
+    # audit of semantic_dedup_sampled's agreement with the exact form
+    "semdedup_agreement",
+    # Python twin the registered SQL trigram function is checked against
+    "trigram_similarity",
+}
+
+
+def test_public_defs_have_a_non_test_caller():
+    """Every top-level public def in the package is reached from code
+    outside the tests: its name appears as code (a name, an attribute
+    or an import, not a docstring) outside its own body in the
+    package, bench.py, bench_scale.py, tools/, perfbench/ (tests
+    excluded) or __spark_entry__.py. Catalog queries (``@register``)
+    are roots; ``_TEST_REFERENCES`` are the test oracles."""
+    import glob
+
+    root = os.path.dirname(PKG)
+    callers = _modules() + [
+        os.path.join(root, f)
+        for f in ("bench.py", "bench_scale.py", "__spark_entry__.py")
+    ]
+    callers += sorted(glob.glob(os.path.join(root, "tools", "**", "*.py"),
+                                recursive=True))
+    callers += sorted(
+        p for p in glob.glob(os.path.join(root, "perfbench", "*.py"))
+        if not os.path.basename(p).startswith("test_")
+    )
+    trees = {p: ast.parse(open(p).read()) for p in callers}
+    uses: dict[str, list[tuple[str, int]]] = {}
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = (node.asname or node.name).split(".")[-1]
+            else:
+                continue
+            uses.setdefault(name, []).append((path, node.lineno))
+
+    def registered(d) -> bool:
+        for dec in d.decorator_list:
+            f = dec.func if isinstance(dec, ast.Call) else dec
+            if getattr(f, "id", getattr(f, "attr", None)) == "register":
+                return True
+        return False
+
+    unreached = sorted(
+        f"{os.path.relpath(path, PKG)}::{d.name}"
+        for path in _modules()
+        for d in trees[path].body
+        if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not d.name.startswith("_")
+        and d.name not in _TEST_REFERENCES
+        and not registered(d)
+        and not any(
+            not (p == path and d.lineno <= ln <= d.end_lineno)
+            for p, ln in uses.get(d.name, [])
+        )
+    )
+    assert unreached == []
+
+
 class TestScaleGate:
     """bench_scale's structural linearity gate (round-7 verdict #2):
     shuffle-byte growth is the primary signal, wall growth gates only

@@ -344,59 +344,6 @@ def test_foreach_batch_upsert_merges_across_batches(spark, tmp_path):
     assert snap3 == snap2
 
 
-def test_tws_user_profiles_across_batches(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API) must carry
-    ValueState + MapState across micro-batches. Skip-gated: the TWS
-    Python runner requires google.protobuf (see the operator's
-    ENVIRONMENT GUARD note)."""
-    pytest.importorskip("google.protobuf")
-    from nycdb_k8s_loader_spark.streaming.pipeline import (
-        run_available_now,
-        tws_user_profiles,
-    )
-
-    landing = tmp_path / "landing"
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    landing.mkdir()
-    (landing / "f1.csv").write_text(
-        "user_id,event_type\n1,click\n1,click\n2,view\n"
-    )
-    (landing / "f2.csv").write_text(
-        "user_id,event_type\n1,purchase\n2,view\n"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .csv(str(landing))
-    )
-    run_available_now(tws_user_profiles(src), sink, ckpt)
-    out = spark.read.parquet(sink)
-    from pyspark.sql.window import Window
-
-    final = {
-        r["user_id"]: (r["n_events"], r["n_event_types"])
-        for r in out.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy(
-                    F.col("n_events").desc()
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    assert final == {1: (3, 2), 2: (2, 1)}
-
-
 class TestStreamingIngestionE2E:
     """Engine.load_streaming (SURVEY §2.9 stretch, r4 verdict #8): the
     cron unit of work as a checkpointed stream. Two file drops → two
@@ -714,7 +661,7 @@ def test_load_streaming_shapefile_incremental(spark, tmp_path):
     from nycdb_k8s_loader_spark.datasets_catalog import catalog_defs
     from nycdb_k8s_loader_spark.engine import Engine
     from nycdb_k8s_loader_spark.registry import Registry
-    from nycdb_k8s_loader_spark.sources.shapefile import write_shapefile_zip
+    from fixture_gen import write_shapefile_zip
     from nycdb_k8s_loader_spark.state.kvstore import DictKVStore
     from nycdb_k8s_loader_spark.state.lastmod import FetchResult
 
@@ -830,10 +777,8 @@ def test_executor_parsers_match_batch_readers(spark, tmp_path):
     from nycdb_k8s_loader_spark.engine import Engine
     from nycdb_k8s_loader_spark.registry import Registry
     from nycdb_k8s_loader_spark.sources.readers import read_excel
-    from nycdb_k8s_loader_spark.sources.shapefile import (
-        read_shapefile_zip,
-        write_shapefile_zip,
-    )
+    from fixture_gen import write_shapefile_zip
+    from nycdb_k8s_loader_spark.sources.shapefile import read_shapefile_zip
 
     reg = Registry()
     for d in catalog_defs():
