@@ -1,27 +1,34 @@
 """Engine orchestration: the full per-dataset load lifecycle.
 
-Spark re-expression of /root/reference/load_dataset.py:308-381:
+Spark re-expression of /root/reference/load_dataset.py:308-381. Every
+load, batch or stream, runs one skeleton (``Engine._standard_load``):
 
-    check URLs (conditional GET) ── unchanged? → skip everything
-        │ changed
-    download to landing dir
+    load:            check URLs (conditional GET) ── unchanged? → skip
+                     download to landing dir
+    load_streaming:  new file drops → checkpointed availableNow pass
+                     → pending increment (store ∪ pending is the input)
         │
     staging namespace:  write typed source tables
-                        run SQL transforms (search-path resolved)
+                        run SQL transforms and populate hooks
                         validate staging copies
         │
-    atomic publish staging → target namespace
+    atomic publish staging → target namespace (grants kept)
         │
-    update lastmod validators + dataset tracker   (only after publish)
+    replay function DDL, after_publish hook
+        │
+    update lastmod validators (load) / commit the increment
+    (load_streaming), then the dataset tracker     (only after publish)
 
-Boundary behavior mirrors the reference exactly: 304-everywhere skips
-the Spark job entirely (work avoidance, lastmod.py:49-62 +
-load_dataset.py:352-357); state is persisted only after a successful
-publish so a crashed load retries from scratch. The reference's custom
-datasets (wow/oca/signature/good-cause, load_dataset.py:319-338) run
-the same lifecycle: they are registry entries with their own target
-schema and Python populate hooks among their scripts, so every dataset
-validates, publishes and honours the version pointer in one place.
+The two entry points differ only in where each typed table's rows come
+from and in what they persist after the publish. Boundary behavior
+mirrors the reference exactly: 304-everywhere skips the Spark job
+entirely (work avoidance, lastmod.py:49-62 + load_dataset.py:352-357);
+state is persisted only after a successful publish so a crashed load
+retries from scratch. The reference's custom datasets
+(wow/oca/signature/good-cause, load_dataset.py:319-338) run the same
+lifecycle: they are registry entries with their own target schema and
+Python populate hooks among their scripts, so every dataset validates,
+publishes and honours the version pointer in one place.
 
 Concurrency. The reference runs all of this one statement at a time on
 one connection; here every step that starts Spark jobs is a node of
@@ -55,7 +62,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from nycdb_k8s_loader_spark.functions.registry import (
     FunctionRegistry,
@@ -67,9 +74,9 @@ from nycdb_k8s_loader_spark.publish.parse_created_tables import (
 from nycdb_k8s_loader_spark.publish.protocol import Publisher
 from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
 from nycdb_k8s_loader_spark.publish.scheduler import Node, run_graph, script_nodes
-from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry
+from nycdb_k8s_loader_spark.registry import DatasetDef, Populate, Registry, TableDef
 from nycdb_k8s_loader_spark.sources.readers import fetch_to_landing, read_source_table
-from nycdb_k8s_loader_spark.state.lastmod import Transport, UrlModTracker, requests_transport
+from nycdb_k8s_loader_spark.state.lastmod import Transport, UrlModTracker, default_transport
 from nycdb_k8s_loader_spark.state.tracker import DatasetTracker
 
 log = logging.getLogger("nycdb_k8s_loader_spark")
@@ -105,7 +112,7 @@ class Engine:
         kv,
         target_db: str = "public",
         landing_root: str = "/tmp/nycdb_landing",
-        transport: Transport = requests_transport,
+        transport: Transport = default_transport,
         downloader: Callable[[str, str], None] = fetch_to_landing,
         notifier: Notifier | None = None,
         search_path: list[str] | None = None,
@@ -217,7 +224,11 @@ class Engine:
             self.notifier.safe_notify(f"{name} is unchanged; skipping load.")
             return LoadResult(dataset=name, skipped=True)
 
-        published = self._standard_load(ds)
+        dest_paths = self.land_sources(ds)
+        formats = {f.dest: f.format for f in ds.files}
+        published = self._standard_load(ds, lambda table: read_source_table(
+            self.spark, table, dest_paths, formats, csv_options=ds.csv_options,
+        ))
         with self._state_lock:
             modtracker.update_lastmods()
             self.tracker.update_tracker(name)
@@ -240,29 +251,6 @@ class Engine:
             self.downloader(f.url, dest)
             dest_paths[f.dest] = dest
         return dest_paths
-
-    def staging_nodes(
-        self, ds: DatasetDef, publisher: Publisher, staging_db: str,
-        dest_paths: dict[str, str],
-    ) -> list[Node]:
-        """One node per typed source table: read its files (format-
-        dispatched per source file: CSV scan / Excel workbook / ...)
-        and write the staging copy. Each table reads only the files
-        mapped to it (None = the whole dataset)."""
-        formats = {f.dest: f.format for f in ds.files}
-
-        def stage(table) -> None:
-            df = read_source_table(
-                self.spark, table, dest_paths, formats,
-                csv_options=ds.csv_options,
-            )
-            publisher.write_staging_table(staging_db, table.name, df)
-
-        return [
-            Node(partial(stage, t), creates=(t.name,))
-            for t in ds.tables
-            if t.schema is not None
-        ]
 
     def sql_nodes(
         self, ds: DatasetDef, staging_db: str, function_stmts: list[str]
@@ -314,16 +302,21 @@ class Engine:
                     "in the FunctionRegistry instead:\n%s", stmt[:200]
                 )
 
-    def _standard_load(self, ds: DatasetDef) -> list[str]:
-        """The load of every registry dataset (the reference's custom
-        builders included, wowutil.py:144-186): land → staging writes
-        → scripts and populate hooks → validation → grant-snapshot
-        publish → function-DDL replay → ``after_publish``."""
+    def _standard_load(
+        self, ds: DatasetDef, read_table: Callable[[TableDef], DataFrame]
+    ) -> list[str]:
+        """The one load skeleton, batch and stream alike (the
+        reference's custom builders included, wowutil.py:144-186):
+        staging writes → scripts and populate hooks → validation →
+        grant-snapshot publish → function-DDL replay →
+        ``after_publish``. The caller supplies only ``read_table``: the
+        frame each typed source table's staging copy is written from
+        (``load``: the landed files; ``load_streaming``: the stream
+        store plus its pending increment)."""
         from nycdb_k8s_loader_spark.publish.validate import validate_or_raise
 
         if ds.label:
             self.notifier.safe_notify(f"Rebuilding {ds.label}...")
-        dest_paths = self.land_sources(ds)
         publisher = self.publisher_for(ds.schema)
         function_stmts: list[str] = []
         with publisher.staging(ds.name) as staging_db:
@@ -335,6 +328,11 @@ class Engine:
             # exist. A failed check raises before anything publishes;
             # the staging ctx drops and readers keep the last good
             # version.
+            def stage(table) -> None:
+                publisher.write_staging_table(
+                    staging_db, table.name, read_table(table)
+                )
+
             def validate(table) -> None:
                 validate_or_raise(
                     table.name,
@@ -342,7 +340,11 @@ class Engine:
                     table.checks,
                 )
 
-            nodes = self.staging_nodes(ds, publisher, staging_db, dest_paths)
+            nodes = [
+                Node(partial(stage, t), creates=(t.name,))
+                for t in ds.tables
+                if t.schema is not None
+            ]
             nodes += self.sql_nodes(ds, staging_db, function_stmts)
             nodes += [
                 Node(partial(validate, t), reads=(t.name,))
@@ -365,77 +367,54 @@ class Engine:
     def load_streaming(
         self, name: str, max_files_per_trigger: int | None = None
     ) -> LoadResult:
-        """Streaming ingestion of a standard registry dataset — the
-        reference's cron unit of work as a CHECKPOINTED incremental
-        stream (SURVEY §2.9's declared stretch). Source files are
-        DROPPED into ``<landing_root>/<name>/stream/<table>/`` (by an
-        upstream fetcher, a cloud transfer job, or tests); each call:
+        """Load a registry dataset from files DROPPED into
+        ``<landing_root>/<name>/stream/<table>/`` (by an upstream
+        fetcher, a transfer job, or tests) through the same lifecycle
+        as ``load`` (``_standard_load``). What differs:
 
-        1. runs one ``availableNow`` pass per typed table —
-           ``incremental_csv_source`` (readStream + registry schema)
-           staging each micro-batch as a plain parquet dir under
-           ``_stream/<table>/pending/`` (``run_available_now_staged``),
-           with the file-source checkpoint remembering which files
-           earlier calls consumed, so a rerun processes only NEW drops;
-        2. validates the (durable store ∪ pending increment) union
-           through TableChecks, and only on success MOVES the pending
-           files into the durable store — the store therefore always
-           holds last-known-good data. A failing increment is moved to
-           ``_stream/<table>/quarantine/<n>/`` and the load aborts with
-           the quarantine path in the error: the next call republishes
-           the clean store, and the operator can inspect/fix/re-drop
-           the quarantined files. (Without this gate a corrupt drop
-           would be committed to the store AND marked consumed in the
-           checkpoint, wedging every subsequent call.)
-        3. republishes the ACCUMULATED store through the identical
-           staging → validation → atomic publish protocol as a batch
-           load — readers always see the full table, and a corrupt
-           increment aborts BEFORE any published table moves.
-
-        Incremental in compute (per-call cost ∝ new files), full-table
-        in publish semantics — the same contract the reference's
-        repeated cron loads provide, minus the re-download of
-        unchanged source files. The store/checkpoint live under
-        ``<landing_root>/<name>/_stream/`` — on a real cluster, point
-        ``landing_root`` at durable shared storage.
+        - each typed table's staging frame comes from one checkpointed
+          ``availableNow`` pass, which stages only the files earlier
+          calls did not consume as ``batch-<id>`` parquet dirs under
+          ``<landing_root>/<name>/_stream/<table>/pending/``; the frame
+          is the durable store (``data/``) plus those pending batches.
+          CSV tables stream through the typed CSV file source;
+          Excel/shapefile tables stream as opaque files whose bytes are
+          parsed on the executors (the driver never holds file
+          content). A table mixing CSV and binary formats has no single
+          stream shape and fails before anything runs;
+        - a failed check moves the pending batches to
+          ``_stream/<table>/quarantine/<n>/``: the failing table's
+          when it was streamed, every table's when a derived table
+          failed. The store keeps the last validated data, so the next
+          call republishes it, and the quarantined files can be
+          inspected and re-dropped;
+        - pending batches move into the store only after the whole
+          load has returned;
+        - there is no conditional-GET gate; the refresh is recorded as
+          ``load`` records it.
 
         ``max_files_per_trigger`` bounds every micro-batch (the file
-        sources' maxFilesPerTrigger): a 100-file backlog drains across
-        ceil(100/N) bounded triggers inside ONE availableNow pass
-        instead of a single unbounded batch — the backpressure knob a
-        large drop needs at deploy scale (round-6 brief #6).
-
-        Source formats: CSV tables stream through the typed CSV file
-        source; Excel/shapefile tables stream as OPAQUE FILES
-        (binaryFile source — same checkpointed new-files-only
-        tracking) whose bytes each micro-batch parses ON THE
-        EXECUTORS via mapInPandas (same stdlib parser cores as the
-        batch readers; the driver never materializes file content). A
-        table mixing CSV and binary formats has no single stream shape
-        and fails loudly.
+        sources' maxFilesPerTrigger), so a large backlog drains across
+        bounded triggers inside one pass. On a real cluster, point
+        ``landing_root`` at durable shared storage.
         """
         import os
 
-        from nycdb_k8s_loader_spark.publish.validate import (
-            ValidationError,
-            validate_or_raise,
-        )
+        from nycdb_k8s_loader_spark.publish.validate import ValidationError
         from nycdb_k8s_loader_spark.streaming.pipeline import (
             incremental_binary_source,
             incremental_csv_source,
+            parse_binary_files,
             run_available_now_staged,
-            run_available_now_staged_binary_distributed,
         )
 
         ds = self.registry.get(name)
-        publisher = self.publisher_for(ds.schema)
         formats = {f.dest: f.format for f in ds.files}
-        typed = [t for t in ds.tables if t.schema is not None]
-
-        def _table_format(table) -> str:
-            dests = (
-                table.files if table.files is not None else list(formats)
-            )
+        stream_formats: dict[str, str] = {}
+        for table in ds.tables:
+            if table.schema is None:
+                continue
+            dests = table.files if table.files is not None else list(formats)
             fmts = {formats.get(d, "csv") for d in dests} or {"csv"}
             if len(fmts) > 1:
                 raise ValueError(
@@ -444,140 +423,83 @@ class Engine:
                     "stream shape; split the table or use the batch "
                     "load"
                 )
-            return next(iter(fmts))
-        pending_commits: list[tuple[str, str, list[str]]] = []
-        with publisher.staging(ds.name) as staging_db:
+            stream_formats[table.name] = fmts.pop()
+        # table -> (stream root, durable store, pending batch dirs)
+        pending: dict[str, tuple[str, str, list[str]]] = {}
 
-            def stage(table) -> None:
-                stream_root = os.path.join(
-                    self.landing_root, ds.name, "_stream", table.name
+        def read_stream(table):
+            stream_root = os.path.join(
+                self.landing_root, ds.name, "_stream", table.name
+            )
+            land = os.path.join(self.landing_root, ds.name, "stream", table.name)
+            store = os.path.join(stream_root, "data")
+            pending_dir = os.path.join(stream_root, "pending")
+            os.makedirs(land, exist_ok=True)
+            os.makedirs(store, exist_ok=True)
+            fmt = stream_formats[table.name]
+            if fmt == "csv":
+                src = incremental_csv_source(
+                    self.spark, land, table.schema,
+                    max_files_per_trigger=max_files_per_trigger,
                 )
-                land = os.path.join(
-                    self.landing_root, ds.name, "stream", table.name
-                )
-                store = os.path.join(stream_root, "data")
-                pending = os.path.join(stream_root, "pending")
-                ckpt = os.path.join(stream_root, "ckpt")
-                os.makedirs(land, exist_ok=True)
-                os.makedirs(store, exist_ok=True)
-                fmt = _table_format(table)
-                if fmt == "csv":
-                    src = incremental_csv_source(
-                        self.spark, land, table.schema,
-                        max_files_per_trigger=max_files_per_trigger,
-                    )
-                    run_available_now_staged(src, pending, ckpt)
-                else:
-                    src = incremental_binary_source(
+            else:
+                src = parse_binary_files(
+                    incremental_binary_source(
                         self.spark, land,
                         max_files_per_trigger=max_files_per_trigger,
-                    )
-                    # parse on the EXECUTORS (mapInPandas) — the
-                    # driver never materializes file bytes, so an
-                    # unbounded drop backlog can't OOM it
-                    run_available_now_staged_binary_distributed(
-                        src, pending, ckpt,
-                        self._binary_row_parser(fmt, table.schema),
-                        table.schema,
-                    )
-                # pending = this call's increment plus any batches a
-                # crashed/aborted earlier call staged but never
-                # committed — both re-enter validation here
-                batch_dirs = (
-                    sorted(
-                        os.path.join(pending, d)
-                        for d in os.listdir(pending)
-                        if d.startswith("batch-")
-                    )
-                    if os.path.isdir(pending)
-                    else []
+                    ),
+                    self._binary_row_parser(fmt, table.schema),
+                    table.schema,
                 )
-                accumulated = self.spark.read.schema(table.schema).parquet(
-                    store, *batch_dirs
-                )
-                publisher.write_staging_table(
-                    staging_db, table.name, accumulated
-                )
-                if table.checks is not None:
-                    try:
-                        validate_or_raise(
-                            table.name,
-                            self.spark.table(
-                                f"`{staging_db}`.`{table.name}`"
-                            ),
-                            table.checks,
-                        )
-                    except ValidationError as err:
-                        qdir = self._quarantine_pending(
-                            stream_root, batch_dirs
-                        )
-                        err.args = (
-                            f"{err.args[0]} — increment quarantined to "
-                            f"{qdir}; the durable store keeps the last "
-                            "validated data and the next load_streaming "
-                            "call republishes it (inspect/fix/re-drop "
-                            "the quarantined files to recover the "
-                            "increment)",
-                        )
-                        raise
-                # validated — but commit only after the WHOLE load
-                # (derived-table checks + publish) succeeds, so a
-                # failure anywhere leaves the store untouched
-                pending_commits.append((stream_root, store, batch_dirs))
-            # one node per typed table (stream → staging copy →
-            # validate), then the dataset-attached SQL against the
-            # refreshed staging copies exactly as in the batch load —
-            # without it, a streaming-loaded dataset would silently
-            # drop its derived tables (e.g.
-            # hpd_registrations_grouped_by_bbl)
-            function_stmts: list[str] = []
-            nodes = [
-                Node(partial(stage, t), creates=(t.name,))
-                for t in typed
+            run_available_now_staged(
+                src, pending_dir, os.path.join(stream_root, "ckpt")
+            )
+            # pending = this call's increment plus any batches an
+            # aborted earlier call staged but never committed — both
+            # re-enter validation here
+            batch_dirs = sorted(
+                os.path.join(pending_dir, d)
+                for d in os.listdir(pending_dir)
+                if d.startswith("batch-")
+            ) if os.path.isdir(pending_dir) else []
+            pending[table.name] = (stream_root, store, batch_dirs)
+            return self.spark.read.schema(table.schema).parquet(
+                store, *batch_dirs
+            )
+
+        try:
+            published = self._standard_load(ds, read_stream)
+        except ValidationError as err:
+            # a streamed table's check indicts its own increment; a
+            # derived table's indicts every increment it read
+            failed = (
+                [pending[err.table]] if err.table in pending
+                else list(pending.values())
+            )
+            qdirs = [
+                self._quarantine_pending(root, dirs)
+                for root, _store, dirs in failed
+                if dirs
             ]
-            nodes += self.sql_nodes(ds, staging_db, function_stmts)
-            run_graph(nodes, self.spark.sparkContext.defaultParallelism, self.spark)
-            for table in ds.tables:
-                if table.schema is None and table.checks is not None:
-                    try:
-                        validate_or_raise(
-                            table.name,
-                            self.spark.table(
-                                f"`{staging_db}`.`{table.name}`"
-                            ),
-                            table.checks,
-                        )
-                    except ValidationError as err:
-                        # a derived-table check indicts the whole
-                        # increment set — quarantine every table's
-                        # pending batches so the stores stay clean
-                        qdirs = [
-                            self._quarantine_pending(root, dirs)
-                            for root, _store, dirs in pending_commits
-                            if dirs
-                        ]
-                        err.args = (
-                            f"{err.args[0]} — increments quarantined "
-                            f"to {qdirs}; the durable stores keep the "
-                            "last validated data",
-                        )
-                        raise
-            created = _created_tables(ds)
-            with self.grants.save_and_reapply(publisher.target_db, created):
-                published = publisher.publish_tables(staging_db, created)
-            # everything validated and the publish succeeded — commit
-            # the increments into the durable stores. A crash between
-            # publish and here just leaves the batches pending; the
-            # next call re-validates and re-publishes the same data
-            # (idempotent), then commits.
-            for stream_root, store, batch_dirs in pending_commits:
-                self._commit_pending(store, batch_dirs)
-        self.replay_functions(function_stmts)
+            err.args = (
+                f"{err.args[0]} — increments quarantined to {qdirs}; the "
+                "durable stores keep the last validated data and the "
+                "next load_streaming call republishes it (inspect/fix/"
+                "re-drop the quarantined files to recover the increment)",
+            )
+            raise
+        # A crash before this point leaves the batches pending; the
+        # next call re-validates and re-publishes the same data, then
+        # commits.
+        for _root, store, batch_dirs in pending.values():
+            self._commit_pending(store, batch_dirs)
+        with self._state_lock:
+            self.tracker.update_tracker(name)
         return LoadResult(dataset=name, skipped=False, published=published)
 
     @staticmethod
     def _binary_row_parser(fmt: str, schema):
-        """row_parser for the DISTRIBUTED binaryFile stage: a pure
+        """row_parser for ``parse_binary_files``: a pure
         picklable ``(path, content) -> list[string-row tuples]``
         closing over nothing but the format tag and the (picklable)
         schema, so it ships to executors under ``mapInPandas``. Routes

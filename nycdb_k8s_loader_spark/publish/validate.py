@@ -12,9 +12,7 @@ gives for crashes, extended to semantic corruption.
 Cost model: all row-shaped checks on a table (non-null, accepted
 values, key uniqueness, row count) fold into ONE aggregation pass —
 one scan, partial aggs map-side, a scalar per check back to the
-driver.  Referential checks are one left-anti join each (broadcast
-when the parent's key set is small).  Nothing here collects data —
-only violation counts and capped samples.
+driver.  Nothing here collects data — only violation counts.
 """
 
 from __future__ import annotations
@@ -144,42 +142,16 @@ def run_checks(df: DataFrame, checks: TableChecks) -> list[CheckResult]:
     return out
 
 
-def check_foreign_key(
-    child: DataFrame,
-    child_cols: list[str],
-    parent: DataFrame,
-    parent_cols: list[str],
-) -> CheckResult:
-    """Orphan rows: child keys absent from the parent (NULL child keys
-    pass — use not_null to forbid).  One left-anti join; Catalyst
-    broadcasts the parent side when its distinct key set is small."""
-    pkeys = parent.select(
-        *[F.col(p).alias(c) for c, p in zip(child_cols, parent_cols)]
-    ).distinct()
-    nn = child
-    for c in child_cols:
-        nn = nn.filter(F.col(c).isNotNull())
-    orphans = nn.join(pkeys, on=child_cols, how="left_anti").count()
-    return CheckResult(
-        f"foreign_key({','.join(child_cols)})", orphans
-    )
-
-
 def validate_or_raise(
     table: str,
     df: DataFrame,
     checks: TableChecks,
-    fk: list[tuple[list[str], DataFrame, list[str]]] | None = None,
 ) -> list[CheckResult]:
     """Run all checks; raise :class:`ValidationError` on any failure.
     Call on STAGING tables before ``publish_tables`` — the swap never
     happens for a failing dataset, so readers keep the last good
     version."""
     results = run_checks(df, checks)
-    for child_cols, parent, parent_cols in fk or []:
-        results.append(
-            check_foreign_key(df, child_cols, parent, parent_cols)
-        )
     failures = [r for r in results if not r.passed]
     if failures:
         raise ValidationError(table, failures)

@@ -84,13 +84,9 @@ DATASET_SCHEDULES: dict[str, Schedule] = {
 }
 
 
-def schedule_for(
-    dataset: str, overrides: dict[str, Schedule] | None = None
-) -> Schedule:
-    """Slot lookup: explicit override → registry map → yearly default
-    (reference get_schedule_for_dataset)."""
-    if overrides and dataset in overrides:
-        return overrides[dataset]
+def schedule_for(dataset: str) -> Schedule:
+    """Slot lookup: registry map → yearly default (reference
+    get_schedule_for_dataset)."""
     return DATASET_SCHEDULES.get(dataset, DEFAULT_SCHEDULE)
 
 
@@ -111,11 +107,7 @@ def slugify(name: str) -> str:
     return name.replace("_", "-")
 
 
-def cronjob_manifest(
-    dataset: str,
-    image: str = "spark-graft:latest",
-    overrides: dict[str, Schedule] | None = None,
-) -> str:
+def cronjob_manifest(dataset: str, image: str = "spark-graft:latest") -> str:
     """One k8s CronJob manifest (YAML text) for a dataset load —
     the reference's template with the container command swapped to
     ``spark-submit`` of our CLI. Emitted as a literal template (no
@@ -138,7 +130,7 @@ kind: CronJob
 metadata:
   name: load-dataset-{slugify(dataset)}
 spec:
-  schedule: "{schedule_for(dataset, overrides).cron}"
+  schedule: "{schedule_for(dataset).cron}"
   timeZone: "America/New_York"
   jobTemplate:
     spec:
@@ -160,18 +152,15 @@ spec:
 
 
 def build_all_manifests(
-    jobs_dir: str,
-    datasets: list[str] | None = None,
-    image: str = "spark-graft:latest",
+    jobs_dir: str, image: str = "spark-graft:latest"
 ) -> list[str]:
-    """Write one manifest per dataset, every registered one by default
-    (reference k8s_build_jobs.py main loop); returns the written paths."""
+    """Write one manifest per registered dataset (reference
+    k8s_build_jobs.py main loop); returns the written paths."""
     from nycdb_k8s_loader_spark.datasets import builtin_registry
 
     os.makedirs(jobs_dir, exist_ok=True)
-    names = datasets if datasets is not None else builtin_registry().names()
     written = []
-    for ds in names:
+    for ds in builtin_registry().names():
         path = os.path.join(jobs_dir, f"load_dataset_{ds}.yml")
         with open(path, "w") as f:
             f.write(cronjob_manifest(ds, image=image))

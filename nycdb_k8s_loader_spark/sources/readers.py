@@ -304,35 +304,42 @@ def read_source_table(
     return out
 
 
+def default_s3_client():
+    """A boto3 S3 client, created when an s3:// fetch
+    (fetch_to_landing) or change probe (state/lastmod.s3_transport)
+    has no injected one: the one seam where both take credentials. A
+    missing boto3 raises NotImplementedError here — never a silent
+    skip."""
+    try:
+        import boto3
+    except ImportError as e:
+        raise NotImplementedError(
+            "s3:// access requires boto3 (not in this container) "
+            "or an injected s3_client; alternatively read the "
+            "object directly via an s3a:// scan path"
+        ) from e
+    return boto3.client("s3")
+
+
 def fetch_to_landing(url: str, dest: str, s3_client=None) -> None:
     """Source-file fetch covering the reference's two transports (S3/S7):
     HTTP(S) via urllib (load_dataset downloads), ``s3://`` via boto3
     (ocautil.py:56-61 / signatureutil.py:59-64 pull private buckets).
 
-    ``s3_client`` is injectable for tests; when omitted, boto3 is
-    imported lazily and a missing boto3 raises NotImplementedError at
-    the exact seam a deployment would plug credentials into — never a
-    silent skip. Large objects should bypass landing entirely and be
-    read as ``s3a://`` URIs by the scan itself (read_csv accepts any
-    Hadoop-FS scheme when the connector jars are on the classpath:
-    spark.jars.packages org.apache.hadoop:hadoop-aws).
+    ``s3_client`` is injectable for tests (else
+    :func:`default_s3_client`). Large objects should bypass landing
+    entirely and be read as ``s3a://`` URIs by the scan itself
+    (read_csv accepts any Hadoop-FS scheme when the connector jars are
+    on the classpath: spark.jars.packages
+    org.apache.hadoop:hadoop-aws).
     """
     from urllib.parse import urlparse
 
     parsed = urlparse(url)
     if parsed.scheme == "s3":
-        if s3_client is None:
-            try:
-                import boto3  # noqa: F401
-
-                s3_client = boto3.client("s3")
-            except ImportError as e:
-                raise NotImplementedError(
-                    "s3:// fetch requires boto3 (not in this container) "
-                    "or an injected s3_client; alternatively read the "
-                    "object directly via an s3a:// scan path"
-                ) from e
-        s3_client.download_file(parsed.netloc, parsed.path.lstrip("/"), dest)
+        (s3_client or default_s3_client()).download_file(
+            parsed.netloc, parsed.path.lstrip("/"), dest
+        )
         return
     import urllib.request
 

@@ -7,7 +7,9 @@ GET with ``If-None-Match``/``If-Modified-Since`` answering 304 means
 "unchanged", and an unchanged *dataset* (every URL 304) lets the
 engine skip the entire Spark job (reference: load_dataset.py:352-357).
 
-The HTTP transport is injectable so tests exercise 200/304/error flows
+The transport is chosen by URL scheme (``default_transport``: an
+HTTP(S) conditional GET, or one S3 ``head_object`` for ``s3://``
+sources) and is injectable, so tests exercise 200/304/error flows
 without a network (the reference uses requests_mock the same way,
 tests/test_lastmod.py:43-68).
 """
@@ -46,7 +48,7 @@ Transport = Callable[[str, dict[str, str]], FetchResult]
 
 
 def requests_transport(url: str, headers: dict[str, str]) -> FetchResult:
-    """Default transport: a real conditional GET (stream, no body
+    """HTTP(S) transport: a real conditional GET (stream, no body
     read). The context manager closes the response so the socket goes
     back to the pool — headers are available before any body bytes,
     and probing hundreds of registry URLs must not leak a connection
@@ -59,6 +61,43 @@ def requests_transport(url: str, headers: dict[str, str]) -> FetchResult:
             etag=resp.headers.get("ETag"),
             last_modified=resp.headers.get("Last-Modified"),
         )
+
+
+def s3_transport(
+    url: str, headers: dict[str, str], s3_client=None
+) -> FetchResult:
+    """Change probe for an ``s3://`` URL: one ``head_object`` on the
+    client s3:// fetches use (injected, else
+    sources/readers.default_s3_client). 304 when the stored
+    ``If-None-Match`` equals the object's ETag, else 200 with the
+    object's ETag and LastModified (an HTTP date)."""
+    from datetime import timezone
+    from email.utils import format_datetime
+    from urllib.parse import urlparse
+
+    from nycdb_k8s_loader_spark.sources.readers import default_s3_client
+
+    parsed = urlparse(url)
+    head = (s3_client or default_s3_client()).head_object(
+        Bucket=parsed.netloc, Key=parsed.path.lstrip("/")
+    )
+    if headers.get("If-None-Match") == head["ETag"]:
+        return FetchResult(304)
+    return FetchResult(
+        200,
+        etag=head["ETag"],
+        last_modified=format_datetime(
+            head["LastModified"].astimezone(timezone.utc), usegmt=True
+        ),
+    )
+
+
+def default_transport(url: str, headers: dict[str, str]) -> FetchResult:
+    """The transport for ``url``'s scheme: ``s3://`` →
+    :func:`s3_transport`, anything else → :func:`requests_transport`."""
+    if url.startswith("s3://"):
+        return s3_transport(url, headers)
+    return requests_transport(url, headers)
 
 
 class LastmodInfo:
@@ -97,7 +136,7 @@ class UrlModTracker:
         self,
         urls: list[str],
         kv,
-        transport: Transport = requests_transport,
+        transport: Transport = default_transport,
     ) -> None:
         self.urls = urls
         self.kv = kv

@@ -60,11 +60,10 @@ def incremental_binary_source(
     file stream can read). The ``binaryFile`` source gives the same
     exactly-once new-files-only tracking the CSV stream gets from its
     checkpoint; each row is (path, modificationTime, length, content)
-    and :func:`run_available_now_staged_binary_distributed` parses the
-    bytes on the executors with the batch readers' pure cores
-    (sources/readers.excel_string_rows,
-    shapefile.shapefile_string_rows) — one ingestion semantics, two
-    physical sources."""
+    and :func:`parse_binary_files` parses the bytes on the executors
+    with the batch readers' pure cores (sources/readers.
+    excel_string_rows, shapefile.shapefile_string_rows) — one
+    ingestion semantics, two physical sources."""
     # the binaryFile format's FIXED schema — file streaming sources
     # require it stated explicitly
     reader = spark.readStream.format("binaryFile").schema(
@@ -78,38 +77,31 @@ def incremental_binary_source(
     return reader.load(landing_dir)
 
 
-def run_available_now_staged_binary_distributed(
+def parse_binary_files(
     src: DataFrame,
-    staging_dir: str,
-    checkpoint_dir: str,
     row_parser,
     schema: T.StructType,
-) -> None:
-    """EXECUTOR-side binary ingestion: each micro-batch's
-    (path, content) rows flow through ``mapInPandas`` where
-    ``row_parser(path, content) -> list[tuple[str|None, ...]]`` (pure
-    bytes → string rows, values in ``schema.fields`` order) parses the
-    file bytes Arrow-batched ON THE EXECUTORS; the string rows are
-    cast to ``schema`` and land as the same plain-parquet
-    ``batch-<id>`` staging dirs as the CSV form.
+) -> DataFrame:
+    """The typed rows inside a stream of opaque files: each
+    micro-batch's (path, content) rows flow through ``mapInPandas``,
+    where ``row_parser(path, content) -> list[tuple[str|None, ...]]``
+    (pure bytes → string rows, values in ``schema.fields`` order)
+    parses the file bytes Arrow-batched ON THE EXECUTORS; the string
+    rows are cast to ``schema``. Feed the result to
+    :func:`run_available_now_staged` like any other stream.
 
-    Why this is the only form: the driver never materializes file
-    CONTENT — a 10k-workbook backlog parses with executor parallelism
-    and per-task memory, not a driver loop. The parser must be a pure
-    picklable function (no SparkSession, no driver state); a parse
-    failure fails its task and therefore the batch LOUDLY, before
-    anything is staged — the same
-    validate-then-commit contract downstream. Overwrite-by-batch-id
-    keeps checkpoint replays idempotent.
+    The driver never materializes file CONTENT — a 10k-workbook
+    backlog parses with executor parallelism and per-task memory, not
+    a driver loop. The parser must be a pure picklable function (no
+    SparkSession, no driver state); a parse failure fails its task and
+    therefore the batch LOUDLY, before anything is staged.
 
     One binary file's rows are parsed by one task: parallelism is
-    across files, which matches the landing-zone shape (many
-    modest files). A single multi-GB archive would need a
-    splittable-format source instead — that ceiling is inherent to
-    whole-file formats, not this operator.
+    across files, which matches the landing-zone shape (many modest
+    files). A single multi-GB archive would need a splittable-format
+    source instead — that ceiling is inherent to whole-file formats,
+    not this operator.
     """
-    import os
-
     names = [f.name for f in schema.fields]
     str_schema = T.StructType(
         [T.StructField(n, T.StringType()) for n in names]
@@ -127,27 +119,11 @@ def run_available_now_staged_binary_distributed(
             else:
                 yield pd.DataFrame({n: pd.Series(dtype=object) for n in names})
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        staged = batch_df.select("path", "content").mapInPandas(
-            parse_partition, schema=str_schema
-        )
-        typed = staged.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-        typed.write.mode("overwrite").parquet(
-            os.path.join(staging_dir, f"batch-{batch_id}")
-        )
-
-    q = (
-        src.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return src.select("path", "content").mapInPandas(
+        parse_partition, schema=str_schema
+    ).select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
-    q.awaitTermination()
 
 
 def windowed_event_counts(

@@ -374,11 +374,6 @@ class TestScheduling:
         # unknown datasets fall back to yearly (reference default)
         assert schedule_for("brand_new_dataset") is DEFAULT_SCHEDULE
         assert len(DATASET_SCHEDULES) == 36
-        # overrides win
-        assert (
-            schedule_for("acris", {"acris": Schedule.DAILY_8AM})
-            is Schedule.DAILY_8AM
-        )
 
     def test_cronjob_manifests(self, tmp_path):
         from nycdb_k8s_loader_spark.scheduling import (
@@ -752,50 +747,44 @@ class TestValidationGate:
         except ValidationError as ex:
             assert ex.table == "t" and len(ex.failures) == 5
 
-    def test_foreign_key_orphans(self, spark):
-        from nycdb_k8s_loader_spark.publish.validate import (
-            check_foreign_key,
-        )
-
-        child = spark.createDataFrame(
-            [(1, 10), (2, 20), (3, 99), (4, None)], ["id", "ref"]
-        )
-        parent = spark.createDataFrame([(10,), (20,)], ["pk"])
-        r = check_foreign_key(child, ["ref"], parent, ["pk"])
-        assert r.violations == 1  # only ref=99; NULL ref passes
-
-    def test_publish_gated_on_validation(self, spark):
+    def test_publish_gated_on_validation(self, spark, tmp_path):
         """A failing staging check must abort the swap: the previously
         published table stays visible, staging is rolled back."""
-        from nycdb_k8s_loader_spark.publish.protocol import Publisher
         from nycdb_k8s_loader_spark.publish.validate import (
             TableChecks,
             ValidationError,
         )
 
-        pub = Publisher(spark, target_db="vgate_public")
-        good = lambda: spark.createDataFrame([(1, "x"), (2, "y")], ["k", "v"])
-        pub.load_and_publish(
-            "vgate_ds",
-            {"tbl": good},
-            checks={"tbl": TableChecks(unique_key=["k"], min_rows=1)},
+        reg = Registry()
+        reg.add(DatasetDef(
+            name="vgate_ds",
+            files=[SourceFile(url="http://x/tbl.csv", dest="tbl.csv")],
+            tables=[TableDef(
+                "tbl",
+                T.StructType([T.StructField("k", T.IntegerType()),
+                              T.StructField("v", T.StringType())]),
+                checks=TableChecks(unique_key=["k"], min_rows=1),
+            )],
+        ))
+        body = {"csv": "k,v\n1,x\n2,y\n"}
+        eng = Engine(
+            spark, reg, DictKVStore(), target_db="vgate_public",
+            landing_root=str(tmp_path / "landing"),
+            transport=lambda url, headers: FetchResult(200),
+            downloader=lambda url, dest: open(dest, "w").write(body["csv"]),
         )
-        assert spark.table("vgate_public.tbl").count() == 2
-
-        bad = lambda: spark.createDataFrame([(1, "x"), (1, "y")], ["k", "v"])
         try:
-            pub.load_and_publish(
-                "vgate_ds",
-                {"tbl": bad},
-                checks={"tbl": TableChecks(unique_key=["k"])},
-            )
-            assert False, "should raise"
-        except ValidationError:
-            pass
-        # last good version still published; staging cleaned up
-        assert spark.table("vgate_public.tbl").count() == 2
-        assert pub.list_staging_dbs("vgate_ds") == []
-        spark.sql("DROP DATABASE IF EXISTS vgate_public CASCADE")
+            eng.load("vgate_ds")
+            assert spark.table("vgate_public.tbl").count() == 2
+
+            body["csv"] = "k,v\n1,x\n1,y\n"  # duplicate key
+            with pytest.raises(ValidationError, match="unique_key"):
+                eng.load("vgate_ds")
+            # last good version still published; staging cleaned up
+            assert spark.table("vgate_public.tbl").count() == 2
+            assert Publisher(spark).list_staging_dbs("vgate_ds") == []
+        finally:
+            spark.sql("DROP DATABASE IF EXISTS vgate_public CASCADE")
 
     def test_empty_table_checks_do_not_crash(self, spark):
         """Zero-row staging table: sums over no rows must surface as 0

@@ -154,13 +154,28 @@ class TestHeaderNameBoundScan:
 
 
 class FakeS3:
+    """boto3 S3 client stand-in: every object has ``etag`` and one
+    fixed LastModified."""
+
     def __init__(self):
         self.calls = []
+        self.etag = '"e1"'
 
     def download_file(self, bucket, key, dest):
         self.calls.append((bucket, key))
         with open(dest, "w") as f:
             f.write("bbl,units\n1000010001,10\n")
+
+    def head_object(self, Bucket, Key):  # noqa: N803 - boto3 signature
+        import datetime
+
+        self.calls.append((Bucket, Key))
+        return {
+            "ETag": self.etag,
+            "LastModified": datetime.datetime(
+                2024, 5, 6, 7, 8, 9, tzinfo=datetime.timezone.utc
+            ),
+        }
 
 
 class TestS3Fetch:
@@ -213,6 +228,47 @@ class TestS3Fetch:
         assert open(paths["signature_unhp_buildings.csv"]).read().startswith(
             "bbl,units"
         )
+
+
+class TestS3ChangeProbe:
+    URL = "s3://oca-data/public/oca_index.csv"
+
+    def test_head_object_answers_200_then_304(self):
+        from nycdb_k8s_loader_spark.state.lastmod import s3_transport
+
+        s3 = FakeS3()
+        first = s3_transport(self.URL, {}, s3_client=s3)
+        assert (first.status_code, first.etag, first.last_modified) == (
+            200, '"e1"', "Mon, 06 May 2024 07:08:09 GMT"
+        )
+        same = s3_transport(self.URL, {"If-None-Match": '"e1"'}, s3_client=s3)
+        assert same.status_code == 304
+        s3.etag = '"e2"'
+        moved = s3_transport(self.URL, {"If-None-Match": '"e1"'}, s3_client=s3)
+        assert (moved.status_code, moved.etag) == (200, '"e2"')
+        assert s3.calls == [("oca-data", "public/oca_index.csv")] * 3
+
+    def test_default_gate_probes_s3_sources(self, monkeypatch):
+        """An Engine's default transport answers s3:// registry URLs
+        (oca, signature) through the S3 client instead of an HTTP GET;
+        the second check skips. boto3 is faked, so no network."""
+        import sys
+        import types
+
+        from nycdb_k8s_loader_spark.state.kvstore import DictKVStore
+        from nycdb_k8s_loader_spark.state.lastmod import UrlModTracker
+
+        s3 = FakeS3()
+        fake_boto3 = types.ModuleType("boto3")
+        fake_boto3.client = lambda service: s3 if service == "s3" else None
+        monkeypatch.setitem(sys.modules, "boto3", fake_boto3)
+
+        kv = DictKVStore()
+        tracker = UrlModTracker([self.URL], kv)
+        assert tracker.did_any_urls_change()
+        tracker.update_lastmods()
+        assert not UrlModTracker([self.URL], kv).did_any_urls_change()
+        assert len(s3.calls) == 2
 
 
 class TestShapefile:

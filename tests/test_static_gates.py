@@ -102,7 +102,9 @@ def test_one_load_path():
     """Every load publishes through a Publisher the Engine built with
     its external root and version pointer: inside the package only
     engine.py (and the operator CLI's staging cleanup in cli.py)
-    construct one, and a dataset cannot bring its own load function."""
+    construct one, a dataset cannot bring its own load function, and
+    batch and streaming loads run one staging → validation → publish
+    skeleton."""
     import dataclasses
     import re
 
@@ -115,6 +117,26 @@ def test_one_load_path():
     )
     assert constructs == ["cli.py", "engine.py"]
     assert "builder" not in {f.name for f in dataclasses.fields(DatasetDef)}
+
+    # batch and stream loads share one skeleton: staging is entered,
+    # validation runs, grants wrap the publish and function DDL
+    # replays at exactly one call site each, in engine.py
+    skeleton = ("staging", "validate_or_raise", "save_and_reapply",
+                "publish_tables", "replay_functions")
+    calls: dict[str, list[str]] = {name: [] for name in skeleton}
+    for path in _modules():
+        src = open(path).read()
+        for gone in ("load_and_publish",
+                     "run_available_now_staged_binary_distributed"):
+            assert not re.search(rf"\b{gone}\b", src), (path, gone)
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else (
+                    fn.id if isinstance(fn, ast.Name) else None)
+                if name in calls:
+                    calls[name].append(os.path.relpath(path, PKG))
+    assert calls == {name: ["engine.py"] for name in skeleton}
 
 
 def test_loop_fences_set_in_one_place():

@@ -425,6 +425,34 @@ class TestStreamingIngestionE2E:
                 spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
+def test_load_streaming_records_refresh(spark, tmp_path):
+    """A streaming load records its refresh in the dataset tracker,
+    exactly as a batch load does."""
+    from nycdb_k8s_loader_spark.datasets import wow_registry
+    from nycdb_k8s_loader_spark.engine import Engine
+    from nycdb_k8s_loader_spark.state.kvstore import DictKVStore
+    from nycdb_k8s_loader_spark.state.lastmod import FetchResult
+
+    eng = Engine(
+        spark, wow_registry(), DictKVStore(),
+        target_db="stream_refresh_test",
+        landing_root=str(tmp_path / "landing"),
+        transport=lambda url, headers: FetchResult(200),
+        downloader=lambda url, dest: None,
+    )
+    land = (
+        tmp_path / "landing" / "hpd_violations" / "stream" / "hpd_violations"
+    )
+    land.mkdir(parents=True)
+    (land / "b1.csv").write_text(TestStreamingIngestionE2E.B1)
+    try:
+        assert eng.tracker.get_last_refresh("hpd_violations") is None
+        eng.load_streaming("hpd_violations")
+        assert eng.tracker.get_last_refresh("hpd_violations") is not None
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS stream_refresh_test CASCADE")
+
+
 class TestStreamingIngestionValidationGate:
     """O1 for the streaming plane: a corrupt increment (duplicate
     primary keys in the accumulated table) must abort BEFORE any
