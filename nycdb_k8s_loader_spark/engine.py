@@ -27,8 +27,8 @@ state is persisted only after a successful publish so a crashed load
 retries from scratch. The reference's custom datasets
 (wow/oca/signature/good-cause, load_dataset.py:319-338) run the same
 lifecycle: they are registry entries with their own target schema and
-Python populate hooks among their scripts, so every dataset validates,
-publishes and honours the version pointer in one place.
+Python populate hooks among their scripts, so every dataset validates
+and publishes in one place.
 
 Concurrency. The reference runs all of this one statement at a time on
 one connection; here every step that starts Spark jobs is a node of
@@ -47,7 +47,10 @@ overlap and Spark interleaves them:
   path only when the statement starts, so it always sees the staging
   copy a predecessor made, never an older published one;
 - publish: one concurrent metadata flip per table (a directory
-  rename plus DROP/CREATE; publish/protocol.py).
+  rename plus DROP/CREATE; publish/protocol.py) — the only publish
+  path. Readers address ``<schema>.<table>`` directly; a reader
+  between two flips of one load can see one table new and another
+  old (there is no cross-table commit).
 
 Failure semantics are the serial ones: after the first failure nothing
 new starts, running nodes finish before the staging namespace drops,
@@ -119,7 +122,6 @@ class Engine:
         functions: FunctionRegistry | None = None,
         exporters: dict[str, Callable[[], None]] | None = None,
         publish_external_root: str | None = None,
-        versioned_publish: bool = False,
     ) -> None:
         self.spark = spark
         self.registry = registry
@@ -130,19 +132,8 @@ class Engine:
         # dirs under <root> instead of the warehouse: the data lives
         # outside the catalog's ownership.
         self.publish_external_root = publish_external_root
-        # versioned_publish opts into CROSS-TABLE-atomic publish: all
-        # of a load's tables land in one fresh version database and
-        # commit via one pointer flip in this engine's KV store — the
-        # reference's single-transaction schema swap
-        # (load_dataset.py:244-252). Readers go through
-        # self.version_pointer (read_published / the resolvers below).
-        from nycdb_k8s_loader_spark.publish.protocol import VersionPointer
-
-        self.version_pointer = (
-            VersionPointer(kv) if versioned_publish else None
-        )
         # one Publisher per target database, all with this engine's
-        # external root and version pointer (publisher_for)
+        # external root (publisher_for)
         self._publishers: dict[str, Publisher] = {}
         self.publisher = self.publisher_for(target_db)
         self.landing_root = landing_root
@@ -166,9 +157,7 @@ class Engine:
             register_reference_fns,
         )
 
-        register_reference_fns(
-            self.functions, target_db=target_db, pointer=self.version_pointer
-        )
+        register_reference_fns(self.functions, target_db=target_db)
         # Named downstream exporters (reference: the Algolia landlord-
         # index client, wowutil.py:101-110 — "not configured" is a
         # notified skip, never an error). Builders gate these through
@@ -196,21 +185,13 @@ class Engine:
             # into one new schema must share one Publisher (its
             # sequence keeps their version names apart)
             self._publishers.setdefault(db, Publisher(
-                self.spark, db,
-                external_root=self.publish_external_root,
-                version_pointer=self.version_pointer,
+                self.spark, db, external_root=self.publish_external_root,
             ))
         return self._publishers[db]
 
     def read_published(self, table: str):
-        """Read a published table the way a downstream consumer should:
-        through the version pointer when versioned publish is on (one
-        committed version, never a mid-publish mix), else the target
-        database directly."""
-        db = self.publisher.target_db
-        if self.version_pointer is not None:
-            db = self.version_pointer.resolve(db)
-        return self.spark.table(f"`{db}`.`{table}`")
+        """Read a published table of the engine's target database."""
+        return self.spark.table(f"`{self.publisher.target_db}`.`{table}`")
 
     # -- the lifecycle ---------------------------------------------------------
 
@@ -269,7 +250,6 @@ class Engine:
                 [staging_db, *filter(None, deps), *self.search_path]
             )),
             ddl_db=staging_db,
-            pointer=self.version_pointer,
         )
         nodes: list[Node] = []
         for entry in ds.sql:

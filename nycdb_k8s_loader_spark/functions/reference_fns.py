@@ -95,27 +95,18 @@ def get_assoc_addrs_from_bbl(
     )
 
 
-def register_reference_fns(
-    registry, target_db: str = "public", wow_db: str = "wow", pointer=None
-) -> None:
-    """Bind both functions to an engine's namespaces and register them
-    under the reference's names (the ``wow.`` prefix preserved as part
-    of the name, like the schema-qualified Postgres original). With a
-    ``pointer`` (publish.protocol.VersionPointer), each call reads the
-    version database the pointer names at that moment."""
-
-    def db(logical: str) -> str:
-        return pointer.resolve(logical) if pointer is not None else logical
-
+def register_reference_fns(registry, target_db: str) -> None:
+    """Register both functions under the reference's names (the
+    ``wow.`` prefix preserved as part of the name, like the
+    schema-qualified Postgres original), the owner lookup bound to an
+    engine's ``target_db``; the traversal reads the ``wow`` schema the
+    wow dataset publishes into."""
     registry.add_table_fn(
         "get_corporate_owner_info_for_regid",
         lambda spark, regid: get_corporate_owner_info_for_regid(
-            spark, regid, db=db(target_db)
+            spark, regid, db=target_db
         ),
     )
     registry.add_table_fn(
-        "wow.get_assoc_addrs_from_bbl",
-        lambda spark, bbl: get_assoc_addrs_from_bbl(
-            spark, bbl, wow_db=db(wow_db)
-        ),
+        "wow.get_assoc_addrs_from_bbl", get_assoc_addrs_from_bbl
     )

@@ -124,7 +124,8 @@ _EDGE = cell_edge_deg(_RADIUS_KM, _MAX_ABS_LAT)
         "the value-hash is float-stable; the operator also offers "
         "centroids for real use. This is the layout query behind "
         "choosing partition keys for geographically-partitioned "
-        "published tables (publish/protocol.py TableLayout).",
+        "published tables (a staged table's partition spec carries "
+        "into the published DDL, publish/protocol.py).",
     tags=("geo", "agg"),
 )
 def geo02(spark: SparkSession, sf_dir: str) -> DataFrame:

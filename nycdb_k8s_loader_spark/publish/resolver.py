@@ -56,23 +56,15 @@ class SearchPathResolver:
         spark: SparkSession,
         search_path: list[str],
         ddl_db: str | None = None,
-        pointer=None,
     ) -> None:
         self.spark = spark
         self.search_path = search_path
         self.ddl_db = ddl_db
-        # publish.protocol.VersionPointer (or None): logical search-
-        # path entries resolve to their pointed-at version database,
-        # so every read inside one statement sees ONE committed
-        # version — the reader half of cross-table atomic publish.
-        self.pointer = pointer
 
     def _resolve_one(self, name: str, local_names: set[str]) -> str:
         if name.lower() in local_names:
             return name  # CTE name — never qualify
         for db in self.search_path:
-            if self.pointer is not None:
-                db = self.pointer.resolve(db)
             if self.spark.catalog.tableExists(f"`{db}`.`{name}`"):
                 return f"`{db}`.`{name}`"
         return name  # temp view / builtin — let Spark resolve it

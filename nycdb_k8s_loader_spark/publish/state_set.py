@@ -12,33 +12,28 @@ wrapping every per-load SET SCHEMA in one transaction
 Spark-side twin: every publish writes ALL tables of the set into ONE
 fresh immutable version directory
 ``<root>/<logical>__v_<epoch>_<seq>/<table>/`` and then performs a
-single :class:`~nycdb_k8s_loader_spark.publish.protocol.VersionPointer`
+single :class:`VersionPointer`
 flip (one atomic KV write, temp-file + ``os.replace`` under
 ``ParquetKVStore``).  Readers resolve the pointer ONCE and read every
 table of the set out of that one directory — a reader interleaved
 anywhere between per-table writes sees the complete PREVIOUS set,
-never a mix (pinned in tests/test_versioned_publish.py).
+never a mix (pinned by the ``TestStateSetPublisher`` tests).
 
 Scale shape: the publish cost is one parquet write per state table —
 linear in state size, zero shuffles beyond what the state frames
 themselves carry; the flip is O(1).  Old versions stay on disk for a
-reader grace window and are pruned keep-N like version databases.
+reader grace window and are pruned keep-N.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import re
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-from nycdb_k8s_loader_spark.publish.protocol import (
-    VersionPointer,
-    parse_version_db,
-    version_db_name,
-)
 
 try:  # POSIX-only; the engine targets Linux executor hosts
     import fcntl
@@ -46,6 +41,54 @@ except ImportError:  # pragma: no cover - non-POSIX fallback
     fcntl = None  # type: ignore[assignment]
 
 _UNSET = object()
+
+
+class VersionPointer:
+    """ONE current-version pointer per logical state set — the atomic
+    commit of :class:`StateSetPublisher` (the Spark twin of the
+    reference's single transaction around all SET SCHEMAs,
+    load_dataset.py:244-252).
+
+    Backed by any str→str MutableMapping with ``get_or_none`` /
+    write-through mutation (``state.kvstore.ParquetKVStore`` persists
+    each flip via temp-file + ``os.replace`` — readers see the old
+    value or the new value, never a torn one; ``DictKVStore`` for
+    tests). The pointer is the ONLY shared mutable state: version
+    dirs themselves are immutable once pointed at.
+    """
+
+    _PREFIX = "current_db_version:"
+
+    def __init__(self, kv) -> None:
+        self.kv = kv
+
+    def current(self, logical_db: str) -> str | None:
+        get = getattr(self.kv, "get_or_none", self.kv.get)
+        return get(self._PREFIX + logical_db)
+
+    def flip(self, logical_db: str, physical_db: str) -> None:
+        """THE commit: one atomic KV write."""
+        self.kv[self._PREFIX + logical_db] = physical_db
+
+    def resolve(self, logical_db: str) -> str:
+        """What ``logical_db`` currently names — the pointed-at
+        version, or the name itself when it was never published."""
+        return self.current(logical_db) or logical_db
+
+
+def version_db_name(target_db: str, epoch: int, seq: int) -> str:
+    """``<target>__v_<epoch>_<seq>`` — lexically ordered so pruning can
+    sort; double underscore keeps it unambiguous vs user names."""
+    return f"{target_db}__v_{epoch}_{seq:06d}"
+
+
+_VERSION_DB = re.compile(r"(.+)__v_(\d+)_(\d{6})$")
+
+
+def parse_version_db(db: str) -> str | None:
+    """Logical name a version name belongs to, else None."""
+    m = _VERSION_DB.fullmatch(db)
+    return m.group(1) if m else None
 
 
 class ConcurrentPublishError(RuntimeError):
@@ -60,8 +103,7 @@ class StateSetPublisher:
 
     ``kv`` is any str→str mapping with ``get_or_none`` (DictKVStore
     for tests, ParquetKVStore for a persisted pointer).  The pointer
-    key is ``current_db_version:<logical>`` — the same namespace the
-    versioned-database publish uses, so one KV file can carry both.
+    key is ``current_db_version:<logical>``.
     """
 
     def __init__(self, root: str, kv) -> None:

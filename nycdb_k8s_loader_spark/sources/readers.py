@@ -11,15 +11,18 @@ dataset registry (/root/reference/load_dataset.py:367 via nycdb
 - Multi-file: one reader call with a path list — implicit UNION ALL
   at scan time, parallel across files (this is where Spark beats the
   reference's single-threaded COPY).
-- Excel: no core Spark reader — pandas.read_excel → createDataFrame
-  (files are small, driver-side is fine); gated behind import-try
-  because the excel engines aren't in this container.
+- Excel: no core Spark reader — the stdlib zip+XML parser
+  (sources/xlsx.py) → createDataFrame (files are small, driver-side is
+  fine). Batch and streaming loads share one parse and one
+  stringification rule.
 - S3: same CSV reader against ``s3a://`` paths when hadoop-aws is on
   the classpath; otherwise a boto3 download to a landing dir. Landing
   paths abstract this away.
 """
 
 from __future__ import annotations
+
+import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -166,33 +169,18 @@ def read_csv_union_by_name(
 
 
 def read_excel(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    sheet_name: int | str = 0,
-    skip_rows: int = 0,
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
-    """Excel scan (S5; reference loads workbooks with xlrd,
-    load_dataset.py:280-303). Driver-side by design: these workbooks
-    are small config-scale files, not data-scale.
-
-    pandas.read_excel runs when an engine (openpyxl/xlrd) is present;
-    otherwise the stdlib zip+XML parser (sources/xlsx.py) reads .xlsx
-    directly — this container ships no excel engine, so the stdlib
-    path is what actually executes here.
-    """
+    """Excel scan of a workbook's first sheet (S5; reference loads
+    workbooks with xlrd, load_dataset.py:280-303). Driver-side by
+    design: these workbooks are small config-scale files, not
+    data-scale. The stdlib zip+XML parser (sources/xlsx.py) reads the
+    .xlsx, under the same rule as :func:`excel_string_rows`."""
     from pyspark.sql import functions as F
 
-    try:
-        import pandas as pd
+    from nycdb_k8s_loader_spark.sources.xlsx import read_xlsx_rows
 
-        pdf = pd.read_excel(path, sheet_name=sheet_name, skiprows=skip_rows)
-        header_and_rows = [list(pdf.columns)] + pdf.values.tolist()
-    except ImportError:
-        from nycdb_k8s_loader_spark.sources.xlsx import read_xlsx_rows
-
-        header_and_rows = read_xlsx_rows(path, sheet_name)[skip_rows:]
-    str_rows = _stringify_sheet(header_and_rows, len(schema.fields), path)
+    str_rows = _stringify_sheet(read_xlsx_rows(path), schema, path)
     names = [f.name for f in schema.fields]
     raw = spark.createDataFrame(
         str_rows, T.StructType([T.StructField(n, T.StringType()) for n in names])
@@ -202,8 +190,29 @@ def read_excel(
     )
 
 
+#: day 0 of the 1900 date system: xlsx stores a date as serial days
+#: since this instant (43831 is 2020-01-01, .5 is noon)
+_EXCEL_EPOCH = datetime.datetime(1899, 12, 30)
+_DATETIME_TYPES = (T.DateType, T.TimestampType)
+
+
+def _cell_text(v, dtype: T.DataType) -> str | None:
+    """One cell as the text its registry type casts from: a numeric
+    cell bound for a date/timestamp field becomes ISO text (a bare
+    serial would cast to a timestamp in year 43831)."""
+    if v is None or (isinstance(v, float) and v != v):  # NaN
+        return None
+    if (
+        isinstance(dtype, _DATETIME_TYPES)
+        and isinstance(v, (int, float))
+        and not isinstance(v, bool)
+    ):
+        return str(_EXCEL_EPOCH + datetime.timedelta(days=v))
+    return str(v)
+
+
 def _stringify_sheet(
-    header_and_rows: list[list], n_fields: int, label: str
+    header_and_rows: list[list], schema: T.StructType, label: str
 ) -> list[list]:
     """Header-count check + cell stringification shared by the batch
     Excel reader and the executor-side streaming parser (one rule, two
@@ -211,29 +220,18 @@ def _stringify_sheet(
     if not header_and_rows:
         raise ValueError(f"{label}: empty sheet")
     header, rows = header_and_rows[0], header_and_rows[1:]
-    if len(header) != n_fields:
+    if len(header) != len(schema.fields):
         raise ValueError(
             f"{label}: sheet has {len(header)} columns but the "
-            f"registry schema declares {n_fields} — schema "
+            f"registry schema declares {len(schema.fields)} — schema "
             "drift; update the registry or fix the workbook"
         )
-    return [
-        [
-            None
-            if v is None or (isinstance(v, float) and v != v)  # NaN
-            else str(v)
-            for v in r
-        ]
-        for r in rows
-    ]
+    types = [f.dataType for f in schema.fields]
+    return [[_cell_text(v, t) for v, t in zip(r, types)] for r in rows]
 
 
 def excel_string_rows(
-    content: bytes,
-    schema: T.StructType,
-    sheet_name: int | str = 0,
-    skip_rows: int = 0,
-    label: str = "<workbook bytes>",
+    content: bytes, schema: T.StructType, label: str = "<workbook bytes>"
 ) -> list[list]:
     """Pure ``bytes → string rows`` Excel parser — the EXECUTOR-side
     form of :func:`read_excel` (no SparkSession, no temp file), used by
@@ -245,10 +243,7 @@ def excel_string_rows(
 
     from nycdb_k8s_loader_spark.sources.xlsx import read_xlsx_rows
 
-    header_and_rows = read_xlsx_rows(io.BytesIO(content), sheet_name)
-    return _stringify_sheet(
-        header_and_rows[skip_rows:], len(schema.fields), label
-    )
+    return _stringify_sheet(read_xlsx_rows(io.BytesIO(content)), schema, label)
 
 
 def read_source_table(

@@ -2,9 +2,9 @@
 
 The reference ingests DOF Excel workbooks through xlrd
 (/root/reference/load_dataset.py:280-303, requirements.txt pins xlrd);
-this container ships NO excel engine (openpyxl/xlrd absent, pip
-forbidden), so ``pandas.read_excel`` can never run here. An .xlsx file
-is just a zip of XML parts, all stdlib-parseable:
+the package parses workbooks itself rather than through
+``pandas.read_excel``, which needs an optional engine (openpyxl/xlrd).
+An .xlsx file is just a zip of XML parts, all stdlib-parseable:
 
     xl/workbook.xml            sheet names → r:id
     xl/_rels/workbook.xml.rels r:id → worksheet part path
@@ -13,8 +13,9 @@ is just a zip of XML parts, all stdlib-parseable:
 
 Scope: cell types s (shared string), str (formula result), inlineStr,
 b (boolean), n/default (number) — what real data workbooks contain.
-Dates are numbers in xlsx (serial days); date-typed columns are cast
-downstream via the registry schema, same as CSV. Legacy .xls (binary
+Dates are numbers in xlsx (serial days); sources/readers.py turns a
+numeric cell bound for a date or timestamp field into ISO text before
+the registry schema's cast. Legacy .xls (binary
 BIFF, what xlrd actually parses) is NOT a zip and raises a clear
 error — convert upstream.
 

@@ -393,22 +393,21 @@ class TestScheduling:
 
 
 class TestTableLayouts:
+    """A staged table's partition and bucket spec carries into the
+    published table through its DDL, whatever wrote the staged table."""
+
     def test_cobucketed_join_has_no_exchange(self, spark, tmp_path):
         """Two tables bucketed on the same key must join with ZERO
         Exchange in the plan — the co-located-join payoff that replaces
         the reference's b-tree indexes at scale."""
-        from nycdb_k8s_loader_spark.publish.protocol import (
-            Publisher,
-            TableLayout,
-        )
-
         pub = Publisher(spark, target_db="layout_test")
         a = spark.range(1000).selectExpr("id AS k", "id * 2 AS va")
         b = spark.range(1000).selectExpr("id AS k", "id * 3 AS vb")
-        layout = TableLayout(bucket_by=["k"], n_buckets=4, sort_by=["k"])
         with pub.staging("layoutds") as db:
-            pub.write_staging_table(db, "ta", a, layout)
-            pub.write_staging_table(db, "tb", b, layout)
+            for t, df in (("ta", a), ("tb", b)):
+                df.write.bucketBy(4, "k").sortBy("k").saveAsTable(
+                    f"`{db}`.`{t}`"
+                )
             pub.publish_tables(db, ["ta", "tb"])
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -423,17 +422,10 @@ class TestTableLayouts:
             pub.drop_db("layout_test")
 
     def test_partitioned_publish_prunes(self, spark, tmp_path):
-        from nycdb_k8s_loader_spark.publish.protocol import (
-            Publisher,
-            TableLayout,
-        )
-
         pub = Publisher(spark, target_db="layout_test2")
         df = spark.range(100).selectExpr("id", "id % 4 AS part")
         with pub.staging("pds") as db:
-            pub.write_staging_table(
-                db, "tp", df, TableLayout(partition_by=["part"])
-            )
+            df.write.partitionBy("part").saveAsTable(f"`{db}`.`tp`")
             pub.publish_tables(db, ["tp"])
         try:
             q = spark.table("layout_test2.tp").filter("part = 2")
@@ -462,20 +454,18 @@ class TestMoveFlip:
         )
 
     def test_publish_runs_no_spark_job(self, spark):
-        from nycdb_k8s_loader_spark.publish.protocol import TableLayout
-
         pub = Publisher(spark, target_db="flip_jobs")
         sc = spark.sparkContext
         df = spark.range(40).selectExpr("id AS k", "id % 4 AS part")
         layouts = {
-            "plain": None,
-            "parted": TableLayout(partition_by=["part"]),
-            "bucketed": TableLayout(bucket_by=["k"], n_buckets=4),
+            "plain": df.write,
+            "parted": df.write.partitionBy("part"),
+            "bucketed": df.write.bucketBy(4, "k"),
         }
         try:
             with pub.staging("flipjobs") as db:
-                for t, layout in layouts.items():
-                    pub.write_staging_table(db, t, df, layout)
+                for t, writer in layouts.items():
+                    writer.saveAsTable(f"`{db}`.`{t}`")
                 sc.setJobGroup("flip-jobs-probe", "publish_tables")
                 try:
                     pub.publish_tables(db, list(layouts))
@@ -924,7 +914,7 @@ class TestExternalPublish:
             assert spark.catalog.getTable(tbl).tableType == "EXTERNAL"
 
             # reload: a NEW version dir goes live; the old one is
-            # pruned only after the flip (keep_versions=1)
+            # pruned only after the flip
             eng.load("rentstab")
             assert spark.table(tbl).count() == 4
             loc2 = eng.publisher._table_location(

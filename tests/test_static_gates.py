@@ -309,11 +309,12 @@ _TEST_REFERENCES = {
 
 def test_public_defs_have_a_non_test_caller():
     """Every top-level public def in the package is reached from code
-    outside the tests: its name appears as code (a name, an attribute
-    or an import, not a docstring) outside its own body in the
-    package, bench.py, bench_scale.py, tools/, perfbench/ (tests
-    excluded) or __spark_entry__.py. Catalog queries (``@register``)
-    are roots; ``_TEST_REFERENCES`` are the test oracles."""
+    outside the tests: its name appears as code (a name or an
+    attribute — not a docstring, a type annotation or an import
+    alias) outside its own body in the package, bench.py,
+    bench_scale.py, tools/, perfbench/ (tests excluded) or
+    __spark_entry__.py. Catalog queries (``@register``) are roots;
+    ``_TEST_REFERENCES`` are the test oracles."""
     import glob
 
     root = os.path.dirname(PKG)
@@ -330,13 +331,22 @@ def test_public_defs_have_a_non_test_caller():
     trees = {p: ast.parse(open(p).read()) for p in callers}
     uses: dict[str, list[tuple[str, int]]] = {}
     for path, tree in trees.items():
+        annotations = {
+            id(n)
+            for node in ast.walk(tree)
+            for ann in (
+                getattr(node, "annotation", None), getattr(node, "returns", None)
+            )
+            if ann is not None
+            for n in ast.walk(ann)
+        }
         for node in ast.walk(tree):
+            if id(node) in annotations:
+                continue
             if isinstance(node, ast.Name):
                 name = node.id
             elif isinstance(node, ast.Attribute):
                 name = node.attr
-            elif isinstance(node, ast.alias):
-                name = (node.asname or node.name).split(".")[-1]
             else:
                 continue
             uses.setdefault(name, []).append((path, node.lineno))

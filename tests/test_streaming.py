@@ -795,12 +795,30 @@ def test_binary_stream_never_collects_content_on_driver(
         spark.sql("DROP DATABASE IF EXISTS stream_noc_test CASCADE")
 
 
+def _typed_rows(spark, string_rows, schema):
+    """Cast parser string rows to ``schema`` the way a stream stages
+    them."""
+    names = [f.name for f in schema.fields]
+    staged = spark.createDataFrame(
+        [tuple(r) for r in string_rows],
+        ", ".join(f"`{n}` string" for n in names),
+    )
+    return staged.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+    ).collect()
+
+
+def _dof_schema():
+    from nycdb_k8s_loader_spark.datasets_catalog import catalog_defs
+
+    ds = next(d for d in catalog_defs() if d.name == "dof_annual_sales")
+    return next(t.schema for t in ds.tables if t.name == "dof_annual_sales")
+
+
 def test_executor_parsers_match_batch_readers(spark, tmp_path):
     """The pure bytes→rows parsers behind the distributed stage
     produce EXACTLY the batch readers' typed rows for both binary
     formats — one parse rule, two execution sites."""
-    from pyspark.sql import functions as F
-
     from nycdb_k8s_loader_spark.datasets_catalog import catalog_defs
     from nycdb_k8s_loader_spark.engine import Engine
     from nycdb_k8s_loader_spark.registry import Registry
@@ -812,24 +830,8 @@ def test_executor_parsers_match_batch_readers(spark, tmp_path):
     for d in catalog_defs():
         reg.add(d)
 
-    def typed_rows(string_rows, schema):
-        names = [f.name for f in schema.fields]
-        staged = spark.createDataFrame(
-            [tuple(r) for r in string_rows],
-            ", ".join(f"`{n}` string" for n in names),
-        )
-        return staged.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        ).collect()
-
     # excel
-    xschema = next(
-        t.schema for t in reg.get("dof_annual_sales").tables
-        if t.name == "dof_annual_sales"
-    )
+    xschema = _dof_schema()
     xpath = str(tmp_path / "wb.xlsx")
     _write_xlsx(
         xpath, _DOF_HEADER,
@@ -838,7 +840,8 @@ def test_executor_parsers_match_batch_readers(spark, tmp_path):
     with open(xpath, "rb") as fh:
         content = fh.read()
     parse = Engine._binary_row_parser("excel", xschema)
-    assert sorted(typed_rows(parse(xpath, content), xschema)) == sorted(
+    got = _typed_rows(spark, parse(xpath, content), xschema)
+    assert sorted(got) == sorted(
         read_excel(spark, xpath, xschema).collect()
     )
 
@@ -858,54 +861,72 @@ def test_executor_parsers_match_batch_readers(spark, tmp_path):
     with open(zpath, "wb") as fh:
         fh.write(zbytes)
     parse = Engine._binary_row_parser("shapefile", sschema)
-    assert sorted(typed_rows(parse(zpath, zbytes), sschema)) == sorted(
+    got = _typed_rows(spark, parse(zpath, zbytes), sschema)
+    assert sorted(got) == sorted(
         read_shapefile_zip(spark, zpath, sschema).collect()
     )
 
 
-def test_load_streaming_versioned_publish(spark, tmp_path):
-    """load_streaming composes with versioned publish: each call
-    commits ALL tables (source + derived) with one pointer flip."""
-    from nycdb_k8s_loader_spark.datasets import wow_registry
+def test_read_excel_parses_like_the_stream_parser(
+    spark, tmp_path, monkeypatch
+):
+    """Batch Excel reads never go through ``pandas.read_excel``: with
+    it failing, ``read_excel`` still returns the typed rows of
+    ``excel_string_rows`` on the same workbook."""
+    import pandas as pd
+
+    from nycdb_k8s_loader_spark.sources.readers import (
+        excel_string_rows,
+        read_excel,
+    )
+
+    def no_pandas(*args, **kwargs):
+        raise RuntimeError("pandas.read_excel must not run")
+
+    monkeypatch.setattr(pd, "read_excel", no_pandas)
+    schema = _dof_schema()
+    path = str(tmp_path / "wb.xlsx")
+    _write_xlsx(
+        path, _DOF_HEADER,
+        [_dof_row("1000010001", 1250000.5), _dof_row("1000020002", None)],
+    )
+    with open(path, "rb") as fh:
+        stream_rows = _typed_rows(
+            spark, excel_string_rows(fh.read(), schema), schema
+        )
+    batch_rows = read_excel(spark, path, schema).collect()
+    assert {r["bbl"]: r for r in batch_rows} == {
+        r["bbl"]: r for r in stream_rows
+    }
+
+
+def test_excel_serial_dates_load_as_timestamps(spark, tmp_path):
+    """xlsx stores a date as serial days in the 1900 date system
+    (day 0 is 1899-12-30): numeric ``saledate`` cells load as those
+    instants through the batch and the stream parser, not as the
+    year 43831 or a cast error."""
+    import datetime
+
     from nycdb_k8s_loader_spark.engine import Engine
-    from nycdb_k8s_loader_spark.state.kvstore import DictKVStore
-    from nycdb_k8s_loader_spark.state.lastmod import FetchResult
+    from nycdb_k8s_loader_spark.sources.readers import read_excel
 
-    eng = Engine(
-        spark, wow_registry(), DictKVStore(),
-        target_db="stream_ver_test",
-        landing_root=str(tmp_path / "landing"),
-        transport=lambda url, headers: FetchResult(200, etag='"v"'),
-        downloader=lambda url, dest: None,
-        versioned_publish=True,
-    )
-    land = (
-        tmp_path / "landing" / "hpd_registrations" / "stream"
-        / "hpd_registrations"
-    )
-    land.mkdir(parents=True)
-    try:
-        (land / "a.csv").write_text(
-            "registrationid,bbl,boro\n1,BBL1,MN\n"
-        )
-        eng.load_streaming("hpd_registrations")
-        v1 = eng.version_pointer.current("stream_ver_test")
-        assert v1
-        assert eng.read_published("hpd_registrations").count() == 1
-        assert eng.read_published(
-            "hpd_registrations_grouped_by_bbl"
-        ).count() == 1
-
-        (land / "b.csv").write_text(
-            "registrationid,bbl,boro\n2,BBL2,BK\n"
-        )
-        eng.load_streaming("hpd_registrations")
-        assert eng.version_pointer.current("stream_ver_test") != v1
-        assert eng.read_published("hpd_registrations").count() == 2
-    finally:
-        for d in spark.catalog.listDatabases():
-            if d.name.startswith("stream_ver_test"):
-                spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
+    schema = _dof_schema()
+    path = str(tmp_path / "serial.xlsx")
+    rows = [_dof_row("1000010001", 100.0), _dof_row("1000020002", 200.0)]
+    rows[0][_DOF_HEADER.index("saledate")] = 43831
+    rows[1][_DOF_HEADER.index("saledate")] = 43831.5
+    _write_xlsx(path, _DOF_HEADER, rows)
+    want = {
+        "1000010001": datetime.datetime(2020, 1, 1, 0, 0),
+        "1000020002": datetime.datetime(2020, 1, 1, 12, 0),
+    }
+    batch = read_excel(spark, path, schema).collect()
+    assert {r["bbl"]: r["saledate"] for r in batch} == want
+    with open(path, "rb") as fh:
+        content = fh.read()
+    parse = Engine._binary_row_parser("excel", schema)
+    stream = _typed_rows(spark, parse(path, content), schema)
+    assert {r["bbl"]: r["saledate"] for r in stream} == want
 
 
 def test_load_streaming_rejects_mixed_format_table(spark, tmp_path):
